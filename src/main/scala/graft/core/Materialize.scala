@@ -23,8 +23,9 @@ import org.apache.spark.storage.StorageLevel
   *  - `local`: eager `localCheckpoint` (block-manager blocks, lineage
   *    truncated). Fastest; fails on executor loss.
   *  - `reliable`: `checkpoint` under `spark.graft.checkpointDir`
-  *    (HDFS/object-store path) — survives executor loss; the
-  *    dynamic-allocation / 100 TB posture.
+  *    (HDFS/object-store path) or the context's checkpoint dir —
+  *    survives executor loss; the dynamic-allocation / 100 TB posture.
+  *    Throws when neither is set.
   *  - `persist`: `MEMORY_AND_DISK` persist, eagerly populated — keeps
   *    full lineage (recompute on loss, no checkpoint write) at the cost
   *    of re-running the subtree if blocks are evicted AND lost.
@@ -60,9 +61,12 @@ object Materialize {
     mode match {
       case "reliable" =>
         if (spark.sparkContext.getCheckpointDir.isEmpty) {
-          val dir = spark.conf.getOption("spark.graft.checkpointDir")
-            .filter(_.nonEmpty)
-            .getOrElse(System.getProperty("java.io.tmpdir") + "/graft_checkpoints")
+          // a driver-local fallback would leave each executor's partitions
+          // on its own disk: not reliable, so refuse instead
+          val dir = spark.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty)
+            .getOrElse(throw new IllegalStateException(
+              "spark.graft.materialize=reliable needs a shared checkpoint directory: " +
+                "set spark.graft.checkpointDir (or SparkContext.setCheckpointDir)"))
           spark.sparkContext.setCheckpointDir(dir)
         }
         df.checkpoint(eager)

@@ -31,9 +31,9 @@ object CleanupJob {
       leftovers: Seq[String])
 
   /** Tear down everything the engine created for `db`/`resultsDir`/
-    * `warehouseDirs`. Session-scoped caches (signature stages, IVF
-    * quantizers) are released too — they are corpus artifacts and a
-    * teardown that strands them leaks block-manager memory. */
+    * `warehouseDirs`, and release every [[graft.core.ArtifactStore]]
+    * entry — a teardown that strands them leaks block-manager memory
+    * and layout temp dirs. */
   def run(
       spark: SparkSession,
       db: Option[String] = None,
@@ -84,9 +84,8 @@ object CleanupJob {
       }
     }
 
-    // session-scoped per-corpus caches
-    graft.operators.SignatureStage.releaseAll()
-    graft.operators.IvfIndex.invalidate()
+    // derived per-corpus artifacts (cached stages, models, layout copies)
+    graft.core.ArtifactStore.releaseAll()
 
     // 5. verify — list survivors, never assume
     val leftovers =

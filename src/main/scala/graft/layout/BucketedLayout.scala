@@ -119,33 +119,21 @@ object BucketedLayout {
         .cast("double").as("revenue"))
   }
 
-  /** One bucketized layout per (application, corpus dir, content
-    * version): db name + guard, so repeated queries pay the layout write
-    * once — the local analogue of "the fact tables were ingested
-    * bucketed", which is the whole point of the layout. */
-  private val prepared = scala.collection.mutable.Map.empty[(String, String), (String, String)]
-
   /** Ensure the bucketed pair exists for `sfDir`; returns the database
-    * holding `orders_b`/`lineitem_b`. Re-bucketizes when the source
-    * content changes (version signature, same scheme-agnostic listing as
-    * the other per-corpus artifacts). */
-  def ensure(spark: SparkSession, sfDir: String): String = synchronized {
-    val key = (spark.sparkContext.applicationId, sfDir)
-    val version = graft.core.TableVersion.signature(spark, sfDir, "orders.parquet")
-    prepared.get(key) match {
-      case Some((v, db)) if v == version => db
-      case _ =>
-        // identifier-safe, collision-free per (dir, version): full md5
-        // digest (a 31-bit hashCode could collide across corpora and
-        // point two layouts at one database)
-        val db = s"graft_b_${graft.core.TableVersion.md5Hex(sfDir + "#" + version)}"
-        val base = spark.conf.getOption("spark.graft.bucketDir")
-          .getOrElse(System.getProperty("java.io.tmpdir"))
-        bucketize(spark, sfDir, db, s"$base/graft_buckets/$db")
-        prepared(key) = (version, db)
-        db
+    * holding `orders_b`/`lineitem_b`. Held in the
+    * [[graft.core.ArtifactStore]] (versioned on `orders.parquet`), so
+    * repeated queries pay the layout write once per content version. */
+  def ensure(spark: SparkSession, sfDir: String): String =
+    graft.core.ArtifactStore.value(spark, sfDir, Seq("orders.parquet"), "bucketed_pair") { version =>
+      // identifier-safe, collision-free per (dir, version): full md5 digest
+      val db = s"graft_b_${graft.core.TableVersion.md5Hex(sfDir + "#" + version)}"
+      bucketize(spark, sfDir, db, s"${bucketBase(spark)}/graft_buckets/$db")
+      db
     }
-  }
+
+  private def bucketBase(spark: SparkSession): String =
+    spark.conf.getOption("spark.graft.bucketDir")
+      .getOrElse(System.getProperty("java.io.tmpdir"))
 
   /** q55 — the benched co-located fact join: lineitem ⋈ orders on the
     * order key over the bucketed layout, revenue per order. Identical
@@ -164,34 +152,24 @@ object BucketedLayout {
     * per-entity layout: every per-user computation (funnels, sessions,
     * windows, stateful features) then runs with ZERO data shuffles,
     * because the bucketed scan already satisfies the window's
-    * ClusteredDistribution(user_id). Separate guard from the join pair
-    * (its own key, its own content version). */
-  private val preparedEvents = scala.collection.mutable.Map.empty[(String, String), (String, String)]
-
-  def ensureEvents(spark: SparkSession, sfDir: String, buckets: Int = 8): String = synchronized {
-    val key = (spark.sparkContext.applicationId, sfDir)
-    val version = graft.core.TableVersion.signature(spark, sfDir, "events.parquet")
-    preparedEvents.get(key) match {
-      case Some((v, db)) if v == version => db
-      case _ =>
-        val db = s"graft_be_${graft.core.TableVersion.md5Hex(sfDir + "#" + version)}"
-        val base = spark.conf.getOption("spark.graft.bucketDir")
-          .getOrElse(System.getProperty("java.io.tmpdir"))
-        val path = s"$base/graft_buckets/$db/events_b"
-        if (!reRegister(spark, db, "events_b", path,
-            Seq("user_id"), Seq("user_id", "ts"), buckets)) {
-          spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-          Tables.events(spark, sfDir)
-            .write.mode(SaveMode.Overwrite)
-            .option("path", path)
-            .bucketBy(buckets, "user_id").sortBy("user_id", "ts")
-            .format("parquet")
-            .saveAsTable(s"$db.events_b")
-        }
-        preparedEvents(key) = (version, db)
-        db
+    * ClusteredDistribution(user_id). Its own store entry, versioned on
+    * `events.parquet`. */
+  def ensureEvents(spark: SparkSession, sfDir: String, buckets: Int = 8): String =
+    graft.core.ArtifactStore.value(spark, sfDir, Seq("events.parquet"), "bucketed_events") { version =>
+      val db = s"graft_be_${graft.core.TableVersion.md5Hex(sfDir + "#" + version)}"
+      val path = s"${bucketBase(spark)}/graft_buckets/$db/events_b"
+      if (!reRegister(spark, db, "events_b", path,
+          Seq("user_id"), Seq("user_id", "ts"), buckets)) {
+        spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+        Tables.events(spark, sfDir)
+          .write.mode(SaveMode.Overwrite)
+          .option("path", path)
+          .bucketBy(buckets, "user_id").sortBy("user_id", "ts")
+          .format("parquet")
+          .saveAsTable(s"$db.events_b")
+      }
+      db
     }
-  }
 
   /** q97 — the q84 funnel over the BUCKETED event log: identical output
     * (the oracle IS q84's), but the chained conditional-min windows and

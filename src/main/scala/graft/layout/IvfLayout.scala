@@ -18,12 +18,12 @@ import graft.operators.{IvfIndex, Similarity}
   * 100 TB the index cannot live in memory, and partition-pruned scans
   * of ~12% of the store per probe batch are what makes cold ANN
   * serving affordable. The in-memory q43 path recomputes the
-  * assignment per query; this layout pays it ONCE at write time (the
-  * z-order lazy-rewrite lifecycle, keyed by corpus version).
+  * assignment per query; this layout pays it at write time, once
+  * per corpus version.
   *
   * q194 gates the layout end-to-end: the layout-served search must
   * return row-identically what the in-memory index returns — same
-  * centroids ([[IvfIndex]] version cache), same probe fan-out
+  * centroids ([[IvfIndex.centroids]]), same probe fan-out
   * ([[Similarity.probeListPairs]]) and same scoring tail
   * ([[Similarity.ivfScoreTail]]) by construction, with the parquet
   * float round-trip the only new link — while the scan reads only the
@@ -34,23 +34,11 @@ import graft.operators.{IvfIndex, Similarity}
   */
 object IvfLayout {
 
-  private val built = scala.collection.mutable.Map.empty[(String, String), String]
-
-  /** Ensure the IVF-partitioned copy of `dir`'s embeddings; returns
-    * the layout root (`list_id=N/` Hive directories). A new corpus
-    * version REPLACES the previous one: the superseded layout directory
-    * is deleted and its map entry dropped — a long-lived driver over a
-    * refreshing corpus would otherwise leak one full store copy per
-    * version in the temp dir. */
-  def ensure(spark: SparkSession, dir: String): String = synchronized {
-    val version = IvfIndex.corpusVersion(spark, dir)
-    built.getOrElse((dir, version), {
-      built.keys.filter(_._1 == dir).toSeq.foreach { k =>
-        val staleRoot = java.nio.file.Paths.get(built(k)).getParent
-        scala.util.Try(graft.exec.Retention.deleteRecursively(staleRoot))
-        built.remove(k)
-      }
-      val out = java.nio.file.Files.createTempDirectory("graft-ivflayout").toString
+  /** Ensure the IVF-partitioned copy of `dir`'s embeddings (a temp
+    * directory in the [[graft.core.ArtifactStore]]); returns the layout
+    * root (`list_id=N/` Hive directories). */
+  def ensure(spark: SparkSession, dir: String): String =
+    graft.core.ArtifactStore.tempDir(spark, dir, Seq("embeddings.parquet"), "ivflayout") { out =>
       val emb = Tables.embeddings(spark, dir)
       val centers = IvfIndex.centroids(spark, dir, Similarity.NumLists)
       emb.select(
@@ -58,10 +46,7 @@ object IvfLayout {
           explode(graft.functions.VectorFunctions.nearest_centroids(
             col("embedding"), centers, Similarity.SpillAssign)).as("list_id"))
         .write.partitionBy("list_id").parquet(s"$out/store")
-      built((dir, version)) = s"$out/store"
-      s"$out/store"
-    })
-  }
+    } + "/store"
 
   /** The layout-served ANN search: probed lists as literal partition
     * predicates over the partitioned store, then the shared scoring

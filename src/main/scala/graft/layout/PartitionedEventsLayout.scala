@@ -21,11 +21,11 @@ import graft.core.{Sessions, Tables}
   * on the calendar table instead of the fact.
   *
   * The layout: one date-partitioned copy of `events` per corpus
-  * version (the [[ZOrderLayout]] lazy-rewrite lifecycle) plus a tiny
-  * `calendar` dimension of its distinct dates with an `is_focus` flag
-  * over a deterministic 3-day window. q188 runs the canonical pruned
-  * star join; `PartitionedEventsLayoutSpec` asserts the executed plan
-  * actually carries the dynamic-pruning filter on the scan.
+  * version plus a tiny `calendar` dimension of its distinct dates with
+  * an `is_focus` flag over a deterministic 3-day window. q188 runs the
+  * canonical pruned star join; `PartitionedEventsLayoutSpec` asserts
+  * the executed plan actually carries the dynamic-pruning filter on the
+  * scan.
   */
 object PartitionedEventsLayout {
 
@@ -34,23 +34,12 @@ object PartitionedEventsLayout {
   val FocusLo = 2
   val FocusHi = 4
 
-  private val built = scala.collection.mutable.Map.empty[(String, String), String]
-
-  /** Ensure the partitioned copy + calendar dim for `dir`; returns the
-    * layout root ( `<root>/events` partitioned by event_date,
-    * `<root>/calendar` the dim). */
-  def ensure(spark: SparkSession, dir: String): String = synchronized {
-    val version = graft.core.TableVersion.signature(spark, dir, "events.parquet")
-    built.getOrElse((dir, version), {
-      // a new corpus version replaces the old layout (delete + drop the
-      // map entry) — the IvfLayout convention; without it a long-lived
-      // driver over a refreshing corpus leaks one copy per version
-      built.keys.filter(_._1 == dir).toSeq.foreach { k =>
-        scala.util.Try(graft.exec.Retention.deleteRecursively(
-          java.nio.file.Paths.get(built(k))))
-        built.remove(k)
-      }
-      val out = java.nio.file.Files.createTempDirectory("graft-partlayout").toString
+  /** Ensure the partitioned copy + calendar dim for `dir` (a temp
+    * directory in the [[graft.core.ArtifactStore]]); returns the layout
+    * root (`<root>/events` partitioned by event_date, `<root>/calendar`
+    * the dim). */
+  def ensure(spark: SparkSession, dir: String): String =
+    graft.core.ArtifactStore.tempDir(spark, dir, Seq("events.parquet"), "partlayout") { out =>
       val ev = Tables.events(spark, dir).withColumn("event_date", to_date(col("ts")))
       ev.write.partitionBy("event_date").parquet(s"$out/events")
       // the calendar dim: |distinct dates|-sized; the min-date scalar is
@@ -65,10 +54,7 @@ object PartitionedEventsLayout {
       ev.select(col("event_date")).distinct()
         .withColumn("day_off", datediff(col("event_date"), lit(mn)).cast("long"))
         .write.parquet(s"$out/calendar")
-      built((dir, version)) = out
-      out
-    })
-  }
+    }
 
   /** q188 — the canonical DPP star join: the date-partitioned fact
     * joined to the calendar dim filtered to the focus window, on the

@@ -88,30 +88,18 @@ object ZOrderLayout {
   private[layout] def morton(a: Column, b: Column): Column =
     spread16(a).bitwiseOR(shiftleft(spread16(b), 1))
 
-  // one z-ordered copy per (events content version), built lazily
-  private val built = scala.collection.mutable.Map.empty[(String, String), String]
-
   /** Integer micro view of the two clustered dimensions: user_id and
     * value in cents (the q85 cents convention — value is a 2-dp
     * currency-like double in the fixture). */
   private def dims(df: DataFrame): DataFrame =
     df.withColumn("value_cents", floor(col("value") * 100 + lit(0.5)).cast("long"))
 
-  /** Ensure the z-ordered copy of `events` for `dir`; returns its
-    * path. The rewrite: rank both dims against collected min/max,
-    * interleave, ONE global sort by z, [[ZFiles]] files. */
-  def ensure(spark: SparkSession, dir: String): String = synchronized {
-    val version = graft.core.TableVersion.signature(spark, dir, "events.parquet")
-    built.getOrElse((dir, version), {
-      // a new corpus version replaces the old copy (delete + drop the
-      // map entry) — the IvfLayout convention; without it a long-lived
-      // driver over a refreshing corpus leaks one copy per version
-      built.keys.filter(_._1 == dir).toSeq.foreach { k =>
-        scala.util.Try(graft.exec.Retention.deleteRecursively(
-          java.nio.file.Paths.get(built(k))))
-        built.remove(k)
-      }
-      val out = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+  /** Ensure the z-ordered copy of `events` for `dir` (a temp directory
+    * in the [[graft.core.ArtifactStore]]); returns its path. The rewrite:
+    * rank both dims against collected min/max, interleave, ONE global
+    * sort by z, [[ZFiles]] files. */
+  def ensure(spark: SparkSession, dir: String): String =
+    graft.core.ArtifactStore.tempDir(spark, dir, Seq("events.parquet"), "zorder") { out =>
       val ev = dims(Tables.events(spark, dir))
       val r = ev.agg(
         min("user_id"), max("user_id"), min("value_cents"), max("value_cents")).collect()(0)
@@ -126,10 +114,7 @@ object ZOrderLayout {
         .sortWithinPartitions("z")
         .drop("z")
         .write.mode("overwrite").parquet(out)
-      built((dir, version)) = out
-      out
-    })
-  }
+    }
 
   /** q181 — the Z-ORDER RANGE GATE: a two-dimensional range aggregate
     * over the z-ordered copy, hash-matched against the oracle on the

@@ -21,7 +21,7 @@ import graft.core.{Sessions, Tables, TableVersion}
   * Landing convention: one immutable directory per (corpus, content
   * version) under `spark.graft.export.dir` (default: the JVM temp dir),
   * namespaced per corpus and evicting stale version dirs on rebuild —
-  * the [[SignatureStage]] persistence rule, which is itself the
+  * the [[graft.core.ArtifactStore]] version rule, which is itself the
   * versioned-bucket posture of [[graft.exec.VersionedStore]]: a corpus
   * rewrite never overwrites a landed export in place, it lands a new
   * version and retires the old one.
@@ -110,12 +110,7 @@ object Export {
         .partitionBy("shard")
       if (fmt == "jsonl") writer.json(dataPath.toString)
       else writer.parquet(dataPath.toString)
-      // one live version per corpus — the SignatureStage eviction rule
-      if (fs.exists(root)) {
-        fs.listStatus(root)
-          .filter(st => st.isDirectory && st.getPath.getName != version)
-          .foreach(st => fs.delete(st.getPath, true))
-      }
+      graft.core.ArtifactStore.keepOnlyVersion(spark, root, version)
     }
     dataPath.toString
   }

@@ -1,12 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{ArtifactStore, Tables}
 
 /** IVF coarse-quantizer index: the BUILD half of the IVF ANN operator,
   * deliberately outside the query path (an index is built once per corpus
@@ -23,11 +21,8 @@ import graft.core.Tables
   * distributed top-k (heap per partition, no full sort, no shuffle of the
   * corpus).
   *
-  * Centroids are cached per (corpus, nlist) in a JVM-wide map, and —
-  * under the shared derived-stage persistence switch — written to
-  * storage next to the corpus keyed by its version signature, so later
-  * sessions load the trained quantizer instead of refitting (see
-  * [[centroids]]).
+  * The trained quantizer lives in the [[graft.core.ArtifactStore]];
+  * this object keeps its centroid text format (see [[centroids]]).
   */
 object IvfIndex {
 
@@ -35,53 +30,29 @@ object IvfIndex {
   val SampleSize = 4096
   val LloydIters = 10
 
-  /** Keyed by (dir, nlist); the value carries the corpus-version signature
-    * it was built against, so a version change REPLACES the entry instead
-    * of stranding the old centroid array forever (one live index per
-    * corpus, however many times the corpus is rewritten). */
-  private val cache = new ConcurrentHashMap[(String, Int), (String, Array[Array[Double]])]()
-
-  /** The centroid table for (corpus dir, nlist): built on first use,
-    * cached thereafter. The cached value folds in a corpus-version
-    * signature (max file mtime + file count under the embeddings table)
-    * so a rewritten corpus at the same path invalidates the quantizer
-    * instead of silently degrading recall in a long-lived session.
-    *
-    * With `spark.graft.signatures.persist=true` (the one derived-stage
-    * persistence switch, shared with [[SignatureStage]]) the trained
-    * quantizer is ALSO written next to the corpus, keyed by the same
-    * version signature — so a FRESH session (or another cluster) loads
-    * the index instead of re-running the sample + Lloyd fit, the way a
-    * faiss deployment ships its trained quantizer with the shard. Stale
-    * version files for this corpus are evicted on persist; IO failures
-    * degrade to cache-only. */
-  def centroids(spark: SparkSession, dir: String, k: Int): Array[Array[Double]] = {
-    val version = corpusVersion(spark, dir)
-    cache.compute((dir, k), (_, prev) =>
-      if (prev != null && prev._1 == version) prev
-      else (version, loadPersisted(spark, dir, version, k).getOrElse {
+  /** The trained quantizer for (corpus dir, nlist), held in the
+    * [[graft.core.ArtifactStore]] and versioned on the embeddings table.
+    * With `spark.graft.signatures.persist=true` it is also written under
+    * the store's `ivf` root as `<version>/centroids_<k>.txt`, one line per
+    * centroid of comma-separated `Double.toString` components (exact
+    * round-trip), and loaded from there before refitting, so a fresh
+    * session or another cluster skips the sample + Lloyd fit. IO
+    * failures degrade to the in-memory entry. */
+  def centroids(spark: SparkSession, dir: String, k: Int): Array[Array[Double]] =
+    ArtifactStore.value(spark, dir, Seq("embeddings.parquet"), s"ivf_centroids_$k") { version =>
+      loadPersisted(spark, dir, version, k).getOrElse {
         val c = build(spark, dir, k)
         persistCentroids(spark, dir, version, k, c)
         c
-      }))._2
-  }
+      }
+    }
 
-  private def persistEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.signatures.persist").exists(_.trim.toBoolean)
-
-  /** Mirror of SignatureStage's root rules: inside the corpus dir by
-    * default; a shared override root is namespaced per corpus before any
-    * eviction runs. */
   private def ivfRoot(spark: SparkSession, dir: String): HPath =
-    spark.conf.getOption("spark.graft.signatures.dir")
-      .map(r => new HPath(r, s"corpus_${graft.core.TableVersion.md5Hex(dir)}/ivf"))
-      .getOrElse(new HPath(dir, "_graft/ivf"))
+    ArtifactStore.persistRoot(spark, dir, "ivf")
 
-  /** Centroid file format: one line per centroid, comma-separated
-    * `Double.toString` components (round-trips exactly via parseDouble). */
   private def loadPersisted(
       spark: SparkSession, dir: String, version: String, k: Int): Option[Array[Array[Double]]] = {
-    if (!persistEnabled(spark)) return None
+    if (!ArtifactStore.persistEnabled(spark)) return None
     scala.util.Try {
       val p = new HPath(ivfRoot(spark, dir), s"$version/centroids_$k.txt")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -99,29 +70,17 @@ object IvfIndex {
   private def persistCentroids(
       spark: SparkSession, dir: String, version: String, k: Int,
       cs: Array[Array[Double]]): Unit = {
-    if (!persistEnabled(spark)) return
+    if (!ArtifactStore.persistEnabled(spark)) return
     scala.util.Try {
       val root = ivfRoot(spark, dir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val p = new HPath(root, s"$version/centroids_$k.txt")
-      val out = fs.create(p, true)
+      val out = fs.create(new HPath(root, s"$version/centroids_$k.txt"), true)
       try out.write(cs.map(_.mkString(",")).mkString("\n").getBytes("UTF-8"))
       finally out.close()
-      // evict stale versions of THIS corpus' index (root is corpus-scoped)
-      fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName != version)
-        .foreach(st => fs.delete(st.getPath, true))
+      ArtifactStore.keepOnlyVersion(spark, root, version)
     }
     ()
   }
-
-  /** Cheap corpus signature over the embeddings table files — see
-    * [[graft.core.TableVersion]] (Hadoop FS listing, scheme-agnostic). */
-  private[graft] def corpusVersion(spark: SparkSession, dir: String): String =
-    graft.core.TableVersion.signature(spark, dir, "embeddings.parquet")
-
-  /** Drop cached indexes (tests / corpus refresh). */
-  def invalidate(): Unit = cache.clear()
 
   private def build(spark: SparkSession, dir: String, k: Int): Array[Array[Double]] =
     centroidsOf(Tables.embeddings(spark, dir), k)

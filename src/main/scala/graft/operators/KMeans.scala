@@ -175,24 +175,12 @@ object KMeans {
   /** Final centroids after [[Iters]] Lloyd rounds over `dir`'s corpus —
     * the trained coarse quantizer the STREAMING assignment
     * ([[graft.streaming.AssignStream]], q135) broadcasts to the ingest
-    * path; cached per (application, corpus dir, content version), the
-    * [[IvfIndex]]/[[Pca.model]] convention. Identical arithmetic to the
-    * q130 trajectory, so the streamed assignments are exactly round
-    * [[Iters]]+1's assignment against the q130-final centroids. */
-  private val centCache = scala.collection.mutable.Map
-    .empty[(String, String, String), Seq[(Int, Array[Long])]]
-
+    * path; held in the [[graft.core.ArtifactStore]]. Identical arithmetic
+    * to the q130 trajectory, so the streamed assignments are exactly
+    * round [[Iters]]+1's assignment against the q130-final centroids. */
   private[graft] def trainedCentroids(spark: SparkSession, dir: String): Seq[(Int, Array[Long])] =
-    synchronized {
-      val version = graft.core.TableVersion.signature(spark, dir, "embeddings.parquet")
-      centCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, version), {
-        val q = quantized(spark, dir).persist()
-        try {
-          var cents = seedCentroids(q, K)
-          (1 to Iters).foreach { _ => cents = updateCentroids(assigned(q, cents)) }
-          cents
-        } finally { q.unpersist(); () }
-      })
+    graft.core.ArtifactStore.value(spark, dir, Seq("embeddings.parquet"), "kmeans_centroids") { _ =>
+      trainOn(quantized(spark, dir))
     }
 
   /** q177 — SIMPLIFIED SILHOUETTE of the trained quantizer (the
@@ -388,13 +376,6 @@ object KMeans {
        |${rounds.mkString(",\n")}""".stripMargin
   }
 
-  /** Final centroids of the [[Iters]]-round trajectory over ANY
-    * quantized (vec_id, em) frame — the frozen-index entry q170's
-    * incremental maintenance reuses (same arithmetic as
-    * [[trainedCentroids]], caller-keyed caching). */
-  private val sliceCentCache = scala.collection.mutable.Map
-    .empty[(String, String, String, String), Seq[(Int, Array[Long])]]
-
   /** The [[Iters]]-round training loop over ANY quantized (vec_id, em)
     * frame, uncached — [[trainedCentroidsOf]]'s body, also run at
     * TVF-resolution time where no corpus dir exists to key a cache. */
@@ -407,14 +388,14 @@ object KMeans {
     } finally { q.unpersist(); () }
   }
 
+  /** Final centroids of the [[Iters]]-round trajectory over a slice of
+    * `dir`'s quantized corpus — the frozen-index entry q170's incremental
+    * maintenance reuses; stored under the caller's `tag`. */
   private[graft] def trainedCentroidsOf(
       spark: SparkSession, dir: String, tag: String,
       input: => DataFrame): Seq[(Int, Array[Long])] =
-    synchronized {
-      val version = graft.core.TableVersion.signature(spark, dir, "embeddings.parquet")
-      sliceCentCache.getOrElseUpdate(
-        (spark.sparkContext.applicationId, dir, version, tag), trainOn(input))
-    }
+    graft.core.ArtifactStore.value(spark, dir, Seq("embeddings.parquet"),
+      s"kmeans_centroids_$tag") { _ => trainOn(input) }
 
   private def oracleSql: String = {
     val unions = (1 to Iters).map(n => s"SELECT * FROM r$n").mkString(" UNION ALL ")

@@ -137,47 +137,29 @@ object Margin {
     * regime at production nlist sizing). */
   val MarginRecallFloor = 0.7
 
-  /** Per-corpus-version MATERIALIZED assignment store (round-11
-    * verdict item 5 — the q194 storage-layer lever applied to the
-    * miner): `(vec_id, rank)` rows partitioned by `list_id`, where
-    * rank is the vector's position in its nearest-centroid order,
-    * covering the widest fan-out either miner direction needs
-    * (max(probe, spill)). Built ONCE per corpus version — the
-    * [[graft.layout.IvfLayout]] lazy-rewrite lifecycle, with the same
-    * stale-version eviction — so the per-run cost of candidate
-    * generation drops from FOUR full-corpus nearest-centroid passes
-    * (n·k distance kernels each) to two 2-column parquet scans whose
-    * rank filter prunes at the row-group level. [[NearestCentroids]]'
-    * sorted insert is prefix-stable (slots 0..n−1 never depend on the
-    * slots above), so `rank < n` over the maxN store reproduces the
-    * n-wide assignment EXACTLY — the q200 gate's hash is unchanged by
-    * construction. */
-  private val stores = scala.collection.mutable.Map.empty[(String, String), String]
-
+  /** Per-corpus-version MATERIALIZED assignment store: `(vec_id, rank)`
+    * rows partitioned by `list_id`, where rank is the vector's position
+    * in its nearest-centroid order, covering the widest fan-out either
+    * miner direction needs (max(probe, spill)). A temp directory in the
+    * [[graft.core.ArtifactStore]], built once per corpus version, so
+    * candidate generation is two 2-column parquet scans whose rank filter
+    * prunes at the row-group level instead of four full-corpus
+    * nearest-centroid passes. [[NearestCentroids]]' sorted insert is
+    * prefix-stable (slots 0..n−1 never depend on the slots above), so
+    * `rank < n` over the maxN store reproduces the n-wide assignment
+    * EXACTLY — the q200 gate's hash is unchanged by construction. */
   private[operators] def assignStore(spark: SparkSession, dir: String): String =
-    synchronized {
-      val version = IvfIndex.corpusVersion(spark, dir)
-      stores.getOrElse((dir, version), {
-        // a new corpus version REPLACES the previous store (no leak)
-        stores.keys.filter(_._1 == dir).toSeq.foreach { k =>
-          val stale = java.nio.file.Paths.get(stores(k)).getParent
-          scala.util.Try(graft.exec.Retention.deleteRecursively(stale))
-          stores.remove(k)
-        }
-        val out = java.nio.file.Files.createTempDirectory("graft-marginassign").toString
-        val emb = Tables.embeddings(spark, dir)
-        val k = Similarity.semClustersFor(emb.count())
-        val centers = IvfIndex.centroids(spark, dir, k)
-        val maxN = math.max(MarginProbeLists, Similarity.SpillAssign)
-        emb.select(col("vec_id"),
-            posexplode(graft.functions.VectorFunctions.nearest_centroids(
-              col("embedding"), centers, maxN)))
-          .toDF("vec_id", "rank", "list_id")
-          .write.partitionBy("list_id").parquet(s"$out/store")
-        stores((dir, version)) = s"$out/store"
-        s"$out/store"
-      })
-    }
+    graft.core.ArtifactStore.tempDir(spark, dir, Seq("embeddings.parquet"), "marginassign") { out =>
+      val emb = Tables.embeddings(spark, dir)
+      val k = Similarity.semClustersFor(emb.count())
+      val centers = IvfIndex.centroids(spark, dir, k)
+      val maxN = math.max(MarginProbeLists, Similarity.SpillAssign)
+      emb.select(col("vec_id"),
+          posexplode(graft.functions.VectorFunctions.nearest_centroids(
+            col("embedding"), centers, maxN)))
+        .toDF("vec_id", "rank", "list_id")
+        .write.partitionBy("list_id").parquet(s"$out/store")
+    } + "/store"
 
   /** Rank-filtered side of the store: ids only — the join fan-out
     * never carries vectors (see [[ivfMinedPairs]]). */
@@ -280,8 +262,8 @@ object Margin {
     // [[graft.core.JobOverlap]], not the global EC: the dedicated pool
     // carries the submitting thread's job group / FAIR pool so these
     // sub-jobs stay cancellable with their query (round-15 advisor).
-    // The store build inside [[assignStore]] is synchronized, so the
-    // prod arm racing the exact arm is safe.
+    // [[assignStore]] builds once per key, so the prod arm racing the
+    // exact arm is safe.
     import graft.core.JobOverlap
     val exactF = JobOverlap.submit(spark.sparkContext)(
       minedPairs(Tables.embeddings(spark, dir)).select("a_id", "b_id"))

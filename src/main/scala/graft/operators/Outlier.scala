@@ -122,7 +122,7 @@ object Outlier {
 
   /** The collected (source, Σ-vector) centroid table — the BOUNDED
     * (|sources| × dim) trained artifact the streaming screen (q195)
-    * ships to the stream via [[graft.core.ModelCache]]. */
+    * ships to the stream via [[graft.core.ArtifactStore]]. */
   private[graft] def sourceCentroids(spark: SparkSession,
       dir: String): Seq[(String, Seq[Long])] =
     centroidsOver(quantizedOver(

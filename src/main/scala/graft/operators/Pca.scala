@@ -42,19 +42,12 @@ object Pca {
     * matrix-vector product — driver-trivial, oracle-unrollable. */
   val PowerIters = 24
 
-  /** Driver-side model cache, keyed per (application, corpus dir,
-    * content version) — the [[IvfIndex]] convention: the two corpus
-    * passes run once per corpus version and q133/q134 (and any later
-    * consumer of the component) share the dim-bounded result. */
-  private val modelCache = scala.collection.mutable.Map
-    .empty[(String, String, String), (Array[Long], Array[Long])]
-
-  /** (micro means, dominant component) for `dir`'s embeddings. */
+  /** (micro means, dominant component) for `dir`'s embeddings, held in
+    * the [[graft.core.ArtifactStore]]: the two corpus passes run once per
+    * corpus version and q133/q134 share the dim-bounded result. */
   private[graft] def model(spark: SparkSession, dir: String): (Array[Long], Array[Long]) =
-    synchronized {
-      val version = graft.core.TableVersion.signature(spark, dir, "embeddings.parquet")
-      modelCache.getOrElseUpdate(
-        (spark.sparkContext.applicationId, dir, version), computeModel(spark, dir))
+    graft.core.ArtifactStore.value(spark, dir, Seq("embeddings.parquet"), "pca_model") { _ =>
+      computeModel(spark, dir)
     }
 
   /** q133 — DOMINANT PRINCIPAL COMPONENT: (i, loading_micro) per

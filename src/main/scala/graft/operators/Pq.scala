@@ -138,22 +138,14 @@ object Pq {
     } finally { q.unpersist(); () }
   }
 
-  /** The trained (seed + one Lloyd round) codebook, cached per
-    * (application, corpus dir, content version) — the
-    * [[KMeans.trainedCentroids]] convention, shared by the q140 ADC
-    * search so training happens once per corpus however many searches
-    * run. */
-  private val bookCache = scala.collection.mutable.Map
-    .empty[(String, String, String), Seq[(Int, Seq[(Int, Array[Long])])]]
-
+  /** The trained (seed + one Lloyd round) codebook, held in the
+    * [[graft.core.ArtifactStore]] and shared by the q140 ADC search, so
+    * training happens once per corpus version however many searches run. */
   private[graft] def trainedBook(spark: SparkSession, dir: String): Seq[(Int, Seq[(Int, Array[Long])])] =
-    synchronized {
-      val version = graft.core.TableVersion.signature(spark, dir, "embeddings.parquet")
-      bookCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, version), {
-        val q = subVectors(spark, dir).persist()
-        try updateBook(assigned(q, seedBook(KMeans.quantized(spark, dir))))
-        finally { q.unpersist(); () }
-      })
+    graft.core.ArtifactStore.value(spark, dir, Seq("embeddings.parquet"), "pq_codebook") { _ =>
+      val q = subVectors(spark, dir).persist()
+      try updateBook(assigned(q, seedBook(KMeans.quantized(spark, dir))))
+      finally { q.unpersist(); () }
     }
 
   /** Probe count / result size for the q140 ADC search (the q29/q43

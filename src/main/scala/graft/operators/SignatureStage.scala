@@ -1,44 +1,21 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.TableVersion
+import graft.core.{ArtifactStore, TableVersion}
 
-/** Managed per-corpus cache of dedup-family intermediates: the "signature
-  * table" a production dedup pipeline materializes once and reuses across
-  * every near-dup job over the same corpus.
-  *
-  * q26 (exact Jaccard), q27 (MinHash+LSH), q28 (SimHash) and q38 (dedup
-  * APPLY) all start from the same tokenize → shingle → hash pipeline;
-  * recomputing it per query multiplies the most expensive map stage in
-  * the family by four. Stages registered here are built once per
-  * (corpus dir, content version), cached and materialized, and shared —
-  * locally that is a Spark `.cache()`; the 100 TB deployment writes the
-  * same table to storage next to the corpus (exactly like
-  * [[IvfIndex.centroids]] for the ANN family).
-  *
-  * Lifecycle is explicit, not leak-by-default:
-  *  - the cache key folds in a [[TableVersion]] content signature, so a
-  *    rewritten corpus EVICTS (unpersists) every stale stage instead of
-  *    stranding it in the block manager;
-  *  - [[release]] / [[releaseAll]] unpersist on demand (end of a session,
-  *    retention cleanup, specs) — after release no cached RDDs remain
-  *    (asserted by `DedupSpec`).
+/** The stage format of the dedup family's shared intermediates (the
+  * tokenize → shingle → hash tables q26/q27/q28/q38 and their siblings
+  * start from): a stage is `.cache()`d and materialized once, and with
+  * `spark.graft.signatures.persist=true` also written as parquet under
+  * `<root>/<version>/<name>`, root = [[ArtifactStore.persistRoot]] of
+  * kind `signatures`, and loaded from there before building, so a fresh
+  * session reuses it. Keying, versioning on `documents.parquet`,
+  * replacement and release are the [[ArtifactStore]]'s. Persist failures
+  * degrade to cache-only, never fail the query.
   */
 object SignatureStage {
-
-  private final case class CorpusEntry(version: String, stages: mutable.Map[String, DataFrame])
-
-  /** Keyed by (applicationId, corpus dir): cached DataFrames are bound to
-    * a SparkContext, so a restarted application must never see another
-    * context's entries. */
-  private val cache = mutable.Map.empty[(String, String), CorpusEntry]
-
-  private def key(spark: SparkSession, dir: String): (String, String) =
-    (spark.sparkContext.applicationId, dir)
 
   /** Physical bucket layout for a persisted stage: when set, the stage
     * is persisted as a BUCKETED+SORTED table instead of flat parquet, so
@@ -53,18 +30,8 @@ object SignatureStage {
     * Build functions must derive only from the corpus under `dir`. */
   private[operators] def stage(spark: SparkSession, dir: String, name: String,
       buckets: Option[BucketSpec] = None)(
-      build: => DataFrame): DataFrame = synchronized {
-    val k = key(spark, dir)
-    val version = TableVersion.signature(spark, dir, "documents.parquet")
-    val live = cache.get(k) match {
-      case Some(e) if e.version == version => e
-      case stale =>
-        stale.foreach(e => e.stages.values.foreach(df => scala.util.Try(df.unpersist())))
-        val e = CorpusEntry(version, mutable.Map.empty)
-        cache(k) = e
-        e
-    }
-    live.stages.getOrElseUpdate(name, {
+      build: => DataFrame): DataFrame =
+    ArtifactStore.frame(spark, dir, Seq("documents.parquet"), name) { version =>
       val df = loadPersisted(spark, dir, version, name, buckets).getOrElse {
         val built = build
         persist(spark, dir, version, name, built, buckets).getOrElse(built)
@@ -72,37 +39,10 @@ object SignatureStage {
       val cached = df.cache()
       cached.count() // materialize: later queries read blocks, never re-plan
       cached
-    })
-  }
-
-  /** Storage persistence (the 100 TB shape): with
-    * `spark.graft.signatures.persist=true`, stages are ALSO written as
-    * parquet under `<root>/<version>/<name>` — root defaults to
-    * `<dir>/_graft/signatures`; `spark.graft.signatures.dir` (for
-    * corpora on read-only storage) overrides it, namespaced per corpus
-    * as `<override>/corpus_<hash(dir)>` so several corpora can share
-    * one override root without stale-version eviction for corpus A
-    * deleting corpus B's persisted stages — and loaded-if-present
-    * before building, so a fresh session (new
-    * applicationId, or a new cluster entirely) reuses the materialized
-    * table instead of recomputing the corpus-sized shingle pass. The
-    * version directory carries the [[TableVersion]] signature: a corpus
-    * rewrite naturally misses the lookup, rebuilds under the new
-    * version, and the stale version dirs are deleted on the next
-    * persist. Off by default so correctness runs never write next to a
-    * corpus they don't own; a deployment owns its corpus dir and turns
-    * it on. Write failures degrade to cache-only, never fail the query. */
-  private def persistEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.signatures.persist").exists(_.trim.toBoolean)
+    }
 
   private def persistRoot(spark: SparkSession, dir: String): HPath =
-    spark.conf.getOption("spark.graft.signatures.dir")
-      // eviction deletes every non-current version dir under the root,
-      // so a SHARED root must be subdivided per corpus before eviction
-      // is safe — the default root lives inside the corpus dir and is
-      // already exclusive
-      .map(r => new HPath(r, s"corpus_${TableVersion.md5Hex(dir)}"))
-      .getOrElse(new HPath(dir, "_graft/signatures"))
+    ArtifactStore.persistRoot(spark, dir, "signatures")
 
   /** Catalog identifier for a bucketed persisted stage. Bucket METADATA
     * lives in the session catalog (parquet files alone don't carry it),
@@ -127,7 +67,7 @@ object SignatureStage {
   private def loadPersisted(
       spark: SparkSession, dir: String, version: String, name: String,
       buckets: Option[BucketSpec]): Option[DataFrame] = {
-    if (!persistEnabled(spark)) return None
+    if (!ArtifactStore.persistEnabled(spark)) return None
     scala.util.Try {
       val p = new HPath(new HPath(persistRoot(spark, dir), version), name)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -147,7 +87,7 @@ object SignatureStage {
   private def persist(
       spark: SparkSession, dir: String, version: String, name: String,
       df: DataFrame, buckets: Option[BucketSpec]): Option[DataFrame] = {
-    if (!persistEnabled(spark)) return None
+    if (!ArtifactStore.persistEnabled(spark)) return None
     scala.util.Try {
       val root = persistRoot(spark, dir)
       val p = new HPath(new HPath(root, version), name)
@@ -167,25 +107,8 @@ object SignatureStage {
             .saveAsTable(ident)
           spark.table(ident)
       }
-      // evict stale on-disk versions — same rule as the in-memory cache:
-      // one live version per corpus, rewrites don't strand old tables
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName != version)
-        .foreach(st => fs.delete(st.getPath, true))
+      ArtifactStore.keepOnlyVersion(spark, root, version)
       reread
     }.toOption
-  }
-
-  /** Unpersist and forget every stage cached for `dir`. */
-  def release(spark: SparkSession, dir: String): Unit = synchronized {
-    cache.remove(key(spark, dir))
-      .foreach(e => e.stages.values.foreach(df => scala.util.Try(df.unpersist(blocking = true))))
-  }
-
-  /** Unpersist and forget every cached stage (all corpora). */
-  def releaseAll(): Unit = synchronized {
-    cache.values.foreach(e => e.stages.values.foreach(df => scala.util.Try(df.unpersist(blocking = true))))
-    cache.clear()
   }
 }

@@ -42,11 +42,10 @@ object ClassifyStream {
     Sessions.prepare(spark)
     // batch-train, truncate to the K largest-|w| tokens (bounded collect
     // by construction), ship hashed keys + weights + prior. Trained once
-    // per CORPUS VERSION (ModelCache) — the production model lifetime;
-    // re-training per drain was fixture-only overhead.
+    // per corpus version (ArtifactStore), never per drain.
     val (keys: Array[Long], weights: Array[Long], prior: Long) =
-      graft.core.ModelCache.perVersion(spark, dir, "documents.parquet",
-          "nbTruncatedHashed") {
+      graft.core.ArtifactStore.value(spark, dir, Seq("documents.parquet"),
+          "nbTruncatedHashed") { _ =>
         val kw = Classify.truncatedModel(spark, dir)
           .select(xxhash64(col("token")).as("k"), col("w_micro"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)

@@ -44,7 +44,7 @@ object DecontaminateStream {
   /** The eval slice's sorted shingle-hash probe array: built from the
     * batch signature stage (one corpus pass, already cached per corpus
     * version), bounded by the SAME limit the batch join's broadcast
-    * decision uses, and cached per CORPUS VERSION (ModelCache) — the
+    * decision uses, and held per corpus version in the ArtifactStore — the
     * probe set is the shipped artifact of an offline job in production,
     * so rebuilding the explode+distinct+sort per drain was fixture-only
     * overhead. Shared with [[AdmissionStream]], whose contamination
@@ -57,8 +57,8 @@ object DecontaminateStream {
         .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
         .getOrElse(Dedup.BroadcastShingleLimit),
       Int.MaxValue - 1L).toInt
-    graft.core.ModelCache.perVersion(spark, dir, "documents.parquet",
-        s"decontamProbe-$limit") {
+    graft.core.ArtifactStore.value(spark, dir, Seq("documents.parquet"),
+        s"decontamProbe-$limit") { _ =>
       val hs = Dedup.shingleSigs(spark, dir).filter(isEval)
         .select(explode(col("hs")).as("h")).distinct()
         .as[Long].limit(limit + 1).collect()

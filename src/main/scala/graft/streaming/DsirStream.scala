@@ -45,12 +45,10 @@ object DsirStream {
     * ones. AvailableNow drain (the shared graft streaming pattern). */
   def q132StreamDsir(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    // batch-train, then ship: B rows collected once per CORPUS VERSION
-    // (ModelCache), never per query run or microbatch — the production
-    // model lifetime, where training is an offline job and the stream
-    // only ever sees the shipped artifact
+    // batch-train, then ship: B rows collected once per corpus version
+    // (ArtifactStore), never per query run or microbatch
     val model: Map[Long, Long] =
-      graft.core.ModelCache.perVersion(spark, dir, "documents.parquet", "dsirModel") {
+      graft.core.ArtifactStore.value(spark, dir, Seq("documents.parquet"), "dsirModel") { _ =>
         Sampling.dsirModel(spark, dir)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       }

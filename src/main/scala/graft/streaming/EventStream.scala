@@ -180,10 +180,10 @@ object EventStream {
           spark.conf.getOption("spark.graft.streaming.rocksdb.trackTotalNumberOfRows")
             .getOrElse("false")
       ).map { case (k, v) =>
-        // RuntimeConfig returns registered defaults, so remember only
-        // EXPLICIT prior settings (contains distinguishes them)
-        (k, v, if (spark.conf.isModifiable(k) && sparkConfExplicit(spark, k))
-          Some(spark.conf.get(k)) else None)
+        // remember only EXPLICIT prior settings, so an unset key is
+        // unset again afterwards (these keys are not registered SQLConf
+        // entries, so isModifiable would reject them)
+        (k, v, if (sparkConfExplicit(spark, k)) Some(spark.conf.get(k)) else None)
       }
     rocksTuning.foreach { case (k, v, _) => spark.conf.set(k, v) }
     try body finally {

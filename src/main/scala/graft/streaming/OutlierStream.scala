@@ -16,7 +16,7 @@ import graft.operators.Outlier
   *
   * Batch-train, ship to the stream: the centroid table is a BOUNDED
   * |sources| × dim artifact, collected once per corpus version
-  * ([[graft.core.ModelCache]] — never retrained per micro-batch) and
+  * ([[graft.core.ArtifactStore]] — never retrained per micro-batch) and
   * joined as a broadcast local relation. The arriving vector's source
   * rides a stream-static enrichment join (the q79 shape) against the
   * id→source projection. Scoring is [[Outlier.centroidCosMicro]] — the
@@ -33,8 +33,8 @@ object OutlierStream {
     // keyed on BOTH inputs: the centroids depend on embeddings AND the
     // vec_id→source mapping in documents — a documents-only refresh
     // must invalidate the artifact too
-    val cents = graft.core.ModelCache.perVersionMulti(
-      spark, dir, Seq("embeddings.parquet", "documents.parquet"), "outlierCentroids") {
+    val cents = graft.core.ArtifactStore.value(
+      spark, dir, Seq("embeddings.parquet", "documents.parquet"), "outlierCentroids") { _ =>
       Outlier.sourceCentroids(spark, dir)
     }
     import spark.implicits._

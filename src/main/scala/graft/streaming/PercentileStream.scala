@@ -8,7 +8,7 @@ import graft.operators.{ScoreNorm, TextOps}
 
 /** STREAMING PERCENTILE SCREEN: the q218 cross-source score calibration
   * served at ingest — the per-source value-grain CDF is built ONCE per
-  * corpus version ([[graft.core.ModelCache]]; a calibration artifact an
+  * corpus version ([[graft.core.ArtifactStore]]; a calibration artifact an
   * offline job publishes) and shipped to the stream as one literal map,
   * so every arriving document gets its within-source percentile with
   * row-local arithmetic: no state store, no watermark, no shuffle. This
@@ -29,7 +29,7 @@ object PercentileStream {
   def q224StreamPercentileScreen(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     val cdf: Map[String, Long] =
-      graft.core.ModelCache.perVersion(spark, dir, "documents.parquet", "scoreCdf") {
+      graft.core.ArtifactStore.value(spark, dir, Seq("documents.parquet"), "scoreCdf") { _ =>
         ScoreNorm.cdfOf(graft.core.Tables.documents(spark, dir))
           .collect()
           .map(r => s"${r.getString(0)}:${r.getLong(1)}" -> r.getLong(2))

@@ -107,8 +107,8 @@ object TransitionStream {
     // the frozen model: |types|²-bounded by construction, cached per
     // corpus version, shipped as one broadcast
     val model: Map[String, Long] =
-      graft.core.ModelCache.perVersion(spark, dir, "events.parquet",
-          "transitionModel") {
+      graft.core.ArtifactStore.value(spark, dir, Seq("events.parquet"),
+          "transitionModel") { _ =>
         Trajectory.q239TransitionMatrix(spark, dir)
           .select("from_type", "to_type", "p_micro").collect()
           .map(r => s"${r.getString(0)}>${r.getString(1)}" -> r.getLong(2))

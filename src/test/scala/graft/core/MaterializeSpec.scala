@@ -43,13 +43,35 @@ class MaterializeSpec extends SparkSpec {
     try {
       val m = Materialize.once(frame)
       assert(m.orderBy("id").collect().length == 3)
-      // the checkpoint actually landed in the configured dir
-      val landed = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      // the checkpoint landed in the context's dir: the configured one, or
+      // the one an earlier suite already set (a context keeps its first)
+      val cp = spark.sparkContext.getCheckpointDir
+      assert(cp.nonEmpty, "reliable mode must leave a checkpoint dir set")
+      val landed = java.nio.file.Files.walk(java.nio.file.Paths.get(
+        new org.apache.hadoop.fs.Path(cp.get).toUri.getPath))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(landed > 0, s"no checkpoint files under $dir")
+      assert(landed > 0, s"no checkpoint files under ${cp.get}")
     } finally {
       spark.conf.unset("spark.graft.materialize")
       spark.conf.unset("spark.graft.checkpointDir")
+    }
+  }
+
+  test("reliable mode without any checkpoint dir throws and names the key") {
+    val sc = spark.sparkContext
+    // the context keeps its checkpoint dir for life; clear it for this case
+    val setDir = sc.getClass.getMethod("checkpointDir_$eq", classOf[Option[_]])
+    val prev = sc.getCheckpointDir
+    setDir.invoke(sc, None)
+    spark.conf.set("spark.graft.materialize", "reliable")
+    spark.conf.unset("spark.graft.checkpointDir")
+    try {
+      val e = intercept[IllegalStateException](Materialize.once(frame))
+      assert(e.getMessage.contains("spark.graft.checkpointDir"))
+      assert(sc.getCheckpointDir.isEmpty, "no fallback dir may be set")
+    } finally {
+      setDir.invoke(sc, prev)
+      spark.conf.unset("spark.graft.materialize")
     }
   }
 }

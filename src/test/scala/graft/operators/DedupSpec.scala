@@ -108,7 +108,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("signature-stage caches are shared across the family and fully released") {
-    SignatureStage.releaseAll()
+    graft.core.ArtifactStore.releaseAll()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // running the whole family must add only SignatureStage-owned caches…
     Dedup.q26NgramJaccard(spark, sf).collect()
@@ -120,7 +120,7 @@ class DedupSpec extends SparkSpec {
     assert(sigs.storageLevel.useMemory || sigs.storageLevel.useDisk,
       "shared signature table should be cached while the stage is live")
     // …and releasing the stage must leave the block manager as it was
-    SignatureStage.releaseAll()
+    graft.core.ArtifactStore.releaseAll()
     assert(sigs.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     assert(cand.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     assert(verified.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
@@ -152,7 +152,7 @@ class DedupSpec extends SparkSpec {
       assert(second.storageLevel.useMemory || second.storageLevel.useDisk)
       assert(second.count() == first.count())
     } finally {
-      SignatureStage.release(spark, tmp.getPath)
+      graft.core.ArtifactStore.release(spark, tmp.getPath)
       dst.delete(); tmp.delete()
     }
   }
@@ -202,7 +202,7 @@ class DedupSpec extends SparkSpec {
       // fresh session would (release wipes the in-memory cache; the
       // throwing thunk proves the reload comes from storage)
       Dedup.shingleHashes(spark, tmp.getPath).count()
-      graft.operators.SignatureStage.release(spark, tmp.getPath)
+      graft.core.ArtifactStore.release(spark, tmp.getPath)
       val reloaded = graft.operators.SignatureStage.stage(spark, tmp.getPath, "shingle_h",
         Some(graft.operators.SignatureStage.BucketSpec(Seq("h"), Dedup.ShingleHashBuckets))) {
         throw new AssertionError("bucketed stage must reload, not rebuild")
@@ -228,7 +228,7 @@ class DedupSpec extends SparkSpec {
       spark.conf.unset("spark.graft.decontam.broadcastShingleLimit")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      graft.operators.SignatureStage.release(spark, tmp.getPath)
+      graft.core.ArtifactStore.release(spark, tmp.getPath)
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }
@@ -251,7 +251,7 @@ class DedupSpec extends SparkSpec {
       // a fresh session has a new applicationId and an empty in-memory
       // cache — release() reproduces that state; the rebuilt stage must
       // come from disk, proven by a build thunk that would fail the test
-      SignatureStage.release(spark, tmp.getPath)
+      graft.core.ArtifactStore.release(spark, tmp.getPath)
       var rebuilt = false
       val second = SignatureStage.stage(spark, tmp.getPath, "shingle_sigs") {
         rebuilt = true
@@ -269,7 +269,7 @@ class DedupSpec extends SparkSpec {
         s"stale persisted versions must be deleted: before=$versionsBefore after=$versionsAfter")
     } finally {
       spark.conf.unset("spark.graft.signatures.persist")
-      SignatureStage.release(spark, tmp.getPath)
+      graft.core.ArtifactStore.release(spark, tmp.getPath)
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
       }
@@ -294,7 +294,7 @@ class DedupSpec extends SparkSpec {
     try {
       Dedup.shingleSigs(spark, a.getPath).count() // persists A under the shared root
       Dedup.shingleSigs(spark, b.getPath).count() // B's eviction must not touch A
-      SignatureStage.release(spark, a.getPath)
+      graft.core.ArtifactStore.release(spark, a.getPath)
       var rebuilt = false
       SignatureStage.stage(spark, a.getPath, "shingle_sigs") {
         rebuilt = true
@@ -305,7 +305,7 @@ class DedupSpec extends SparkSpec {
     } finally {
       spark.conf.unset("spark.graft.signatures.persist")
       spark.conf.unset("spark.graft.signatures.dir")
-      Seq(a, b).foreach(d => SignatureStage.release(spark, d.getPath))
+      Seq(a, b).foreach(d => graft.core.ArtifactStore.release(spark, d.getPath))
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }

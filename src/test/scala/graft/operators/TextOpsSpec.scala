@@ -375,7 +375,7 @@ class TextOpsSpec extends SparkSpec {
       assert(first.size == TextOps.BpeTrainRounds.toLong)
       // wipe the in-memory cache; the throwing thunks prove both
       // artifacts come back from the persisted parquet, not a rebuild
-      SignatureStage.release(spark, tmp.getPath)
+      graft.core.ArtifactStore.release(spark, tmp.getPath)
       val merges = SignatureStage.stage(spark, tmp.getPath,
         s"bpe_merges_r${TextOps.BpeTrainRounds}") {
         throw new AssertionError("persisted merge table must reload, not retrain")
@@ -391,7 +391,7 @@ class TextOpsSpec extends SparkSpec {
       assert(TextOps.q252BpeEncode(spark, tmp.getPath).count() > 0)
     } finally {
       spark.conf.unset("spark.graft.signatures.persist")
-      SignatureStage.release(spark, tmp.getPath)
+      graft.core.ArtifactStore.release(spark, tmp.getPath)
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }

@@ -54,6 +54,20 @@ class EventStreamSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.streaming.stateStoreProvider")
   }
 
+  test("a user's explicit RocksDB conf value survives a RocksDB drain") {
+    val key = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
+    spark.conf.set(key, "true")
+    spark.conf.set("spark.graft.streaming.stateStoreProvider", "rocksdb")
+    try {
+      EventStream.q44StreamSessions(spark, sf).collect()
+      assert(spark.conf.getOption(key).contains("true"),
+        "the drain's RocksDB tuning must restore the user's explicit value")
+    } finally {
+      spark.conf.unset(key)
+      spark.conf.unset("spark.graft.streaming.stateStoreProvider")
+    }
+  }
+
   test("stream-static enrich join equals the batch star join, event-complete") {
     import org.apache.spark.sql.functions._
     val streamed = EventStream.q79StreamEnrich(spark, sf).collect()
