@@ -20,164 +20,45 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.q12RevenueByNation(spark, "/root/testdata/sf0.001")
 
+  /** Every query module, in registry order: a key two modules share
+    * resolves to the later module, as a chain of map `++` would. */
+  def modules: Seq[QueryModule] = Seq(
+    operators.Relational, operators.TextOps, operators.Dedup, operators.Similarity,
+    operators.Multimodal, operators.Audio, operators.Temporal, operators.Skew,
+    operators.Sampling, operators.Corpus, operators.Privacy, operators.Retrieval,
+    operators.Audit, operators.Classify, operators.Analytics, operators.BloomPrune,
+    operators.Quantize, operators.KMeans, operators.Pq, operators.Sq,
+    operators.Matryoshka, operators.Pca, operators.HeavyHitters,
+    operators.QuantileSketch, operators.Propagate, operators.Cms, operators.IvfMaintain,
+    operators.Taxonomy, operators.Cdc, operators.HllRollup, operators.Curriculum,
+    operators.Margin, operators.Purge, operators.WeakLabels, operators.LangSegments,
+    operators.Trajectory, operators.Outlier, operators.Mixture, operators.Drift,
+    operators.Linkage, operators.RandomProjection, operators.ScoreNorm,
+    operators.Sharding, operators.Curation, operators.Export, operators.Admission,
+    layout.BucketedLayout, layout.ZOrderLayout, layout.PartitionedEventsLayout,
+    layout.IvfLayout, sources.JsonlIngest, streaming.EventStream, streaming.FunnelStream,
+    streaming.IngestStream, streaming.DedupStream, streaming.BudgetStream,
+    streaming.DsirStream, streaming.AssignStream, streaming.PqEncodeStream,
+    streaming.HeavyHittersStream, streaming.ClassifyStream, streaming.AnomalyStream,
+    streaming.DecodeStream, streaming.DecontaminateStream, streaming.CmsStream,
+    streaming.QuantileStream, streaming.CdcStream, streaming.RouteStream,
+    streaming.OutlierStream, streaming.DriftStream, streaming.WeakLabelStream,
+    streaming.TrajectoryStream, streaming.JlEncodeStream, streaming.PercentileStream,
+    streaming.AdmissionStream, streaming.PurgeStream, streaming.TransitionStream)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++
-      operators.TextOps.queries ++
-      operators.Dedup.queries ++
-      operators.Similarity.queries ++
-      operators.Multimodal.queries ++
-      operators.Audio.queries ++
-      operators.Temporal.queries ++
-      operators.Skew.queries ++
-      operators.Sampling.queries ++
-      operators.Corpus.queries ++
-      operators.Privacy.queries ++
-      operators.Retrieval.queries ++
-      operators.Audit.queries ++
-      operators.Classify.queries ++
-      operators.Analytics.queries ++
-      operators.BloomPrune.queries ++
-      operators.Quantize.queries ++
-      operators.KMeans.queries ++
-      operators.Pq.queries ++
-      operators.Sq.queries ++
-      operators.Matryoshka.queries ++
-      operators.Pca.queries ++
-      operators.HeavyHitters.queries ++
-      operators.QuantileSketch.queries ++
-      operators.Propagate.queries ++
-      operators.Cms.queries ++
-      operators.IvfMaintain.queries ++
-      operators.Taxonomy.queries ++
-      operators.Cdc.queries ++
-      operators.HllRollup.queries ++
-      operators.Curriculum.queries ++
-      operators.Margin.queries ++
-      operators.Purge.queries ++
-      operators.WeakLabels.queries ++
-      operators.LangSegments.queries ++
-      operators.Trajectory.queries ++
-      operators.Outlier.queries ++
-      operators.Mixture.queries ++
-      operators.Drift.queries ++
-      operators.Linkage.queries ++
-      operators.RandomProjection.queries ++
-      operators.ScoreNorm.queries ++
-      operators.Sharding.queries ++
-      operators.Curation.queries ++
-      operators.Export.queries ++
-      operators.Admission.queries ++
-      layout.BucketedLayout.queries ++
-      layout.ZOrderLayout.queries ++
-      layout.PartitionedEventsLayout.queries ++
-      layout.IvfLayout.queries ++
-      sources.JsonlIngest.queries ++
-      streaming.EventStream.queries ++
-      streaming.FunnelStream.queries ++
-      streaming.IngestStream.queries ++
-      streaming.DedupStream.queries ++
-      streaming.BudgetStream.queries ++
-      streaming.DsirStream.queries ++
-      streaming.AssignStream.queries ++
-      streaming.PqEncodeStream.queries ++
-      streaming.HeavyHittersStream.queries ++
-      streaming.ClassifyStream.queries ++
-      streaming.AnomalyStream.queries ++
-      streaming.DecodeStream.queries ++
-      streaming.DecontaminateStream.queries ++
-      streaming.CmsStream.queries ++
-      streaming.QuantileStream.queries ++
-      streaming.CdcStream.queries ++
-      streaming.RouteStream.queries ++
-      streaming.OutlierStream.queries ++
-      streaming.DriftStream.queries ++
-      streaming.WeakLabelStream.queries ++
-      streaming.TrajectoryStream.queries ++
-      streaming.JlEncodeStream.queries ++
-      streaming.PercentileStream.queries ++
-      streaming.AdmissionStream.queries ++
-      streaming.PurgeStream.queries ++
-      streaming.TransitionStream.queries
+    modules.foldLeft(Map.empty[String, (SparkSession, String) => DataFrame])(_ ++ _.queries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    operators.Relational.oracles ++
-      operators.TextOps.oracles ++
-      operators.Dedup.oracles ++
-      operators.Similarity.oracles ++
-      operators.Multimodal.oracles ++
-      operators.Audio.oracles ++
-      operators.Temporal.oracles ++
-      operators.Skew.oracles ++
-      operators.Sampling.oracles ++
-      operators.Corpus.oracles ++
-      operators.Privacy.oracles ++
-      operators.Retrieval.oracles ++
-      operators.Audit.oracles ++
-      operators.Classify.oracles ++
-      operators.Analytics.oracles ++
-      operators.BloomPrune.oracles ++
-      operators.Quantize.oracles ++
-      operators.KMeans.oracles ++
-      operators.Pq.oracles ++
-      operators.Sq.oracles ++
-      operators.Matryoshka.oracles ++
-      operators.Pca.oracles ++
-      operators.HeavyHitters.oracles ++
-      operators.QuantileSketch.oracles ++
-      operators.Propagate.oracles ++
-      operators.Cms.oracles ++
-      operators.IvfMaintain.oracles ++
-      operators.Taxonomy.oracles ++
-      operators.Cdc.oracles ++
-      operators.HllRollup.oracles ++
-      operators.Curriculum.oracles ++
-      operators.Margin.oracles ++
-      operators.Purge.oracles ++
-      operators.WeakLabels.oracles ++
-      operators.LangSegments.oracles ++
-      operators.Trajectory.oracles ++
-      operators.Outlier.oracles ++
-      operators.Mixture.oracles ++
-      operators.Drift.oracles ++
-      operators.Linkage.oracles ++
-      operators.RandomProjection.oracles ++
-      operators.ScoreNorm.oracles ++
-      operators.Sharding.oracles ++
-      operators.Curation.oracles ++
-      operators.Export.oracles ++
-      operators.Admission.oracles ++
-      layout.BucketedLayout.oracles ++
-      layout.ZOrderLayout.oracles ++
-      layout.PartitionedEventsLayout.oracles ++
-      layout.IvfLayout.oracles ++
-      sources.JsonlIngest.oracles ++
-      streaming.EventStream.oracles ++
-      streaming.FunnelStream.oracles ++
-      streaming.IngestStream.oracles ++
-      streaming.DedupStream.oracles ++
-      streaming.BudgetStream.oracles ++
-      streaming.DsirStream.oracles ++
-      streaming.AssignStream.oracles ++
-      streaming.PqEncodeStream.oracles ++
-      streaming.HeavyHittersStream.oracles ++
-      streaming.ClassifyStream.oracles ++
-      streaming.AnomalyStream.oracles ++
-      streaming.DecodeStream.oracles ++
-      streaming.DecontaminateStream.oracles ++
-      streaming.CmsStream.oracles ++
-      streaming.QuantileStream.oracles ++
-      streaming.CdcStream.oracles ++
-      streaming.RouteStream.oracles ++
-      streaming.OutlierStream.oracles ++
-      streaming.DriftStream.oracles ++
-      streaming.WeakLabelStream.oracles ++
-      streaming.TrajectoryStream.oracles ++
-      streaming.JlEncodeStream.oracles ++
-      streaming.PercentileStream.oracles ++
-      streaming.AdmissionStream.oracles ++
-      streaming.PurgeStream.oracles ++
-      streaming.TransitionStream.oracles
+    modules.foldLeft(Map.empty[String, String])(_ ++ _.oracles)
+}
+
+/** A module of the query surface: its queries, and the DuckDB oracle SQL
+  * of each query that has one. */
+trait QueryModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracles: Map[String, String]
 }

@@ -47,17 +47,28 @@ object Materialize {
     * then each compute partitions — the round-15 lazy-checkpoint
     * negative result — but iterative loops that may not consume every
     * round keep the option). */
-  def once(df: DataFrame, eager: Boolean = true): DataFrame = {
+  def once(df: DataFrame, eager: Boolean = true): DataFrame =
+    run(df, eager, mode(df))
+
+  /** [[once]] for a site whose CORRECTNESS needs the lineage cut, not just
+    * reuse — e.g. offsets collected from one execution of a sort, which a
+    * recomputed sort could invalidate. `persist` keeps lineage, so here it
+    * runs as `local`; `local` and `reliable` both truncate and stay. */
+  def truncated(df: DataFrame): DataFrame =
+    run(df, eager = true, mode(df) match { case "persist" => "local"; case m => m })
+
+  private def mode(df: DataFrame): String = {
+    val conf = df.sparkSession.conf
+    conf.getOption("spark.graft.materialize").map(_.trim.toLowerCase).getOrElse {
+      // checkpointDir alone implies the reliable posture (back-compat
+      // with truncateLineage's original contract)
+      if (conf.getOption("spark.graft.checkpointDir").exists(_.nonEmpty)) "reliable"
+      else "local"
+    }
+  }
+
+  private def run(df: DataFrame, eager: Boolean, mode: String): DataFrame = {
     val spark = df.sparkSession
-    val mode = spark.conf.getOption("spark.graft.materialize")
-      .map(_.trim.toLowerCase)
-      .getOrElse {
-        // checkpointDir alone implies the reliable posture (back-compat
-        // with truncateLineage's original contract)
-        if (spark.conf.getOption("spark.graft.checkpointDir").exists(_.nonEmpty))
-          "reliable"
-        else "local"
-      }
     mode match {
       case "reliable" =>
         if (spark.sparkContext.getCheckpointDir.isEmpty) {

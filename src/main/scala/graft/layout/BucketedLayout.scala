@@ -23,7 +23,7 @@ import graft.core.Tables
   * small to match the fixtures. Bucket pruning additionally turns
   * point-lookups on the key into single-bucket scans.
   */
-object BucketedLayout {
+object BucketedLayout extends graft.QueryModule {
 
   val FactKey = "o_orderkey"
 

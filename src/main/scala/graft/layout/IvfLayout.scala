@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Sessions, Tables}
-import graft.operators.{IvfIndex, Similarity}
+import graft.operators.{IvfIndex, Similarity, VectorSearch}
 
 /** IVF-PARTITIONED EMBEDDING LAYOUT (SURVEY §2 layout family, beside
   * bucketing q55, z-order q181 and DPP q188): the embedding store
@@ -24,7 +24,7 @@ import graft.operators.{IvfIndex, Similarity}
   * q194 gates the layout end-to-end: the layout-served search must
   * return row-identically what the in-memory index returns — same
   * centroids ([[IvfIndex.centroids]]), same probe fan-out
-  * ([[Similarity.probeListPairs]]) and same scoring tail
+  * ([[VectorSearch.probeLists]]) and same scoring tail
   * ([[Similarity.ivfScoreTail]]) by construction, with the parquet
   * float round-trip the only new link — while the scan reads only the
   * probed partitions (`IvfLayoutSpec` asserts the executed plan's
@@ -32,7 +32,7 @@ import graft.operators.{IvfIndex, Similarity}
   * convention: deterministic corpus facts plus literal booleans the
   * oracle asserts.
   */
-object IvfLayout {
+object IvfLayout extends graft.QueryModule {
 
   /** Ensure the IVF-partitioned copy of `dir`'s embeddings (a temp
     * directory in the [[graft.core.ArtifactStore]]); returns the layout
@@ -40,11 +40,7 @@ object IvfLayout {
   def ensure(spark: SparkSession, dir: String): String =
     graft.core.ArtifactStore.tempDir(spark, dir, Seq("embeddings.parquet"), "ivflayout") { out =>
       val emb = Tables.embeddings(spark, dir)
-      val centers = IvfIndex.centroids(spark, dir, Similarity.NumLists)
-      emb.select(
-          col("vec_id"), col("embedding"),
-          explode(graft.functions.VectorFunctions.nearest_centroids(
-            col("embedding"), centers, Similarity.SpillAssign)).as("list_id"))
+      Similarity.spilled(emb, IvfIndex.centroids(spark, dir, Similarity.NumLists))
         .write.partitionBy("list_id").parquet(s"$out/store")
     } + "/store"
 
@@ -55,10 +51,8 @@ object IvfLayout {
     val root = ensure(spark, dir)
     val emb = Tables.embeddings(spark, dir)
     val centers = IvfIndex.centroids(spark, dir, Similarity.NumLists)
-    val probed = Similarity.probeListPairs(spark, emb, centers)
-      .map(_._2).distinct.sorted
     val store = spark.read.parquet(root)
-      .filter(col("list_id").isin(probed: _*))
+      .filter(col("list_id").isin(probedLists(spark, dir): _*))
       .select(col("vec_id"), col("embedding"),
         col("list_id").cast("int").as("list_id"))
     Similarity.ivfScoreTail(store, Similarity.ivfProbes(spark, emb, centers))
@@ -68,7 +62,7 @@ object IvfLayout {
   private[graft] def probedLists(spark: SparkSession, dir: String): Seq[Int] = {
     val emb = Tables.embeddings(spark, dir)
     val centers = IvfIndex.centroids(spark, dir, Similarity.NumLists)
-    Similarity.probeListPairs(spark, emb, centers).map(_._2).distinct.sorted
+    VectorSearch.probeLists(emb, centers, Similarity.NumProbeLists).map(_._2).distinct.sorted
   }
 
   /** q194 — the layout gate: layout-served results compared
@@ -93,7 +87,7 @@ object IvfLayout {
         === 0L).as("results_match"),
       lit(probed.size < Similarity.NumLists).as("pruned"),
       lit(probed.size <=
-        Similarity.NumProbes * Similarity.NumProbeLists).as("scan_bounded"))
+        VectorSearch.NumProbes * Similarity.NumProbeLists).as("scan_bounded"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -108,5 +102,5 @@ object IvfLayout {
     "q194_ivf_layout_serve" ->
       s"""SELECT CAST(count(*) AS BIGINT) AS n_probes,
          |  TRUE AS results_match, TRUE AS pruned, TRUE AS scan_bounded
-         |FROM embeddings WHERE vec_id < ${Similarity.NumProbes}""".stripMargin)
+         |FROM embeddings WHERE vec_id < ${VectorSearch.NumProbes}""".stripMargin)
 }

@@ -27,7 +27,7 @@ import graft.core.{Sessions, Tables}
   * the executed plan actually carries the dynamic-pruning filter on the
   * scan.
   */
-object PartitionedEventsLayout {
+object PartitionedEventsLayout extends graft.QueryModule {
 
   /** Focus window: day offsets [FocusLo, FocusHi] from the corpus'
     * minimum event date — deterministic, so the oracle replays it. */

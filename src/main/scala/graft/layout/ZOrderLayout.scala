@@ -34,7 +34,7 @@ import graft.core.{Sessions, Tables}
   * — while `ZOrderLayoutSpec` asserts the pruning property itself:
   * for a value-band predicate, far fewer z-files intersect than
   * single-column-sorted files. */
-object ZOrderLayout {
+object ZOrderLayout extends graft.QueryModule {
 
   /** Output file count of the z-ordered rewrite (a 100 TB table
     * z-orders per partition; this is the per-partition unit). */

@@ -76,7 +76,7 @@ import graft.core.{Sessions, Tables}
   * `sql/sample_athena_queries.sql:113-119` (the duplicate check run
   * as a post-hoc sweep there, at the door here).
   */
-object Admission {
+object Admission extends graft.QueryModule {
 
   /** Arriving-batch fixture rule: doc_id ≡ 3 (mod 11) — ~9% of the
     * corpus plays the day's ingest; disjoint from no other rule by

@@ -13,7 +13,7 @@ import graft.core.{Sessions, Tables}
   * `sql/sample_athena_queries.sql` is exactly this kind of reporting
   * surface, expressed over Athena).
   */
-object Analytics {
+object Analytics extends graft.QueryModule {
 
   /** q83 — PIVOT cross-tab: order count + revenue per
     * (priority row, status column). Pivot values are DECLARED, not

@@ -30,7 +30,7 @@ import graft.core.{Sessions, Tables}
   * every audio query; waveforms are deliberately short (≤ 640 samples) so
   * the oracle replay stays cheap — the plan shape is length-independent.
   */
-object Audio {
+object Audio extends graft.QueryModule {
 
   /** An encoded audio asset: real WAV bytes + typed metadata. */
   case class AudioAsset(

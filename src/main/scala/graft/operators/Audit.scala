@@ -18,7 +18,7 @@ import graft.core.{Sessions, Tables}
   * carries 8-byte ids, never payloads). Everything reduces to a handful
   * of scalar counts — no corpus-sized intermediate ever materializes.
   */
-object Audit {
+object Audit extends graft.QueryModule {
 
   /** Expected embedding dimensionality for the corpus. */
   val ExpectedDim = 64

@@ -25,7 +25,7 @@ import graft.functions.BloomMightContainLong
   * local harness, and not for every worthy join on a cluster). This
   * operator is the explicit form: caller-sized bloom, unconditional.
   */
-object BloomPrune {
+object BloomPrune extends graft.QueryModule {
 
   /** `fact LEFT SEMI JOIN dim ON fact(factKey) = dim(dimKey)` with a
     * bloom pre-filter on the fact side.

@@ -26,7 +26,7 @@ import graft.core.{Sessions, Tables}
   * re-materializing from scratch and folding at ingest can never
   * disagree.
   */
-object Cdc {
+object Cdc extends graft.QueryModule {
 
   /** The materialized current state over ANY raw events frame — q185's
     * body and the `cdc_apply()` TVF's. One row per key ever seen:

@@ -26,7 +26,7 @@ import graft.core.{Sessions, Tables}
   * every published double is one int-derived division — so float addition
   * order can never flip a verdict in either engine.
   */
-object Classify {
+object Classify extends graft.QueryModule {
 
   /** Truncated-model size for the streaming scorer (top-K by |weight|,
     * ties by token) — fixed, so the model ships at any corpus scale. */
@@ -271,11 +271,10 @@ object Classify {
       }
       val schema = StructType(sorted.schema.fields :+ StructField(rankCol, LongType, nullable = false))
       val out = sorted.sparkSession.createDataFrame(ranked, schema)
-      // eager materialization: truncates lineage too — a recomputed
-      // sort could land different range boundaries, and the collected
-      // offsets would then be stale; after this the ranks can never
-      // silently shift
-      graft.core.Materialize.once(out)
+      // lineage truncated in every materialize mode: a recomputed sort
+      // could land different range boundaries, and the collected offsets
+      // would then be stale; after this the ranks can never silently shift
+      graft.core.Materialize.truncated(out)
     } finally sorted.unpersist()
   }
 
@@ -333,7 +332,7 @@ object Classify {
     * made q175 the slowest bench entry at 4.4 s; the q193/q168
     * checkpoint pattern). */
   private[graft] def calibrationOf(scores: DataFrame): DataFrame = {
-    val snap = graft.core.Materialize.once(scores)
+    val snap = graft.core.Materialize.truncated(scores)
     val n = snap.count()
     withGlobalRank(snap, Seq(col("score_micro"), col("doc_id")), "rk")
       .withColumn("decile", ntileOfRank(col("rk"), n, CalibBins))

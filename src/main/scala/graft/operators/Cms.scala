@@ -36,7 +36,7 @@ import graft.core.{Sessions, Tables}
   * (`conv(substring(md5(…)))` ↔ DuckDB strpos-nibble arithmetic), so
   * the oracle rebuilds the identical sketch. All-integer end-to-end.
   */
-object Cms {
+object Cms extends graft.QueryModule {
 
   /** Sketch width (counters per row) and depth (hash rows). */
   val W = 1024

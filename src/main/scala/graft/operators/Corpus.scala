@@ -11,7 +11,7 @@ import graft.core.{Sessions, Tables}
   * downstream stages (dedup signatures, embeddings, packing) recompute
   * only the changed slice instead of the corpus).
   */
-object Corpus {
+object Corpus extends graft.QueryModule {
 
   /** Content diff of two (doc_id, text) corpus versions: one row per
     * doc_id that differs — `added` (only in v2), `removed` (only in v1),

@@ -40,7 +40,7 @@ import graft.core.{Sessions, Tables}
   * materialized ledger IS the curation run's record (a deployment
   * writes it next to the corpus), not a fixture shortcut.
   */
-object Curation {
+object Curation extends graft.QueryModule {
 
   /** Quality floor in score ten-thousandths: q23's "low" tier boundary
     * (score < 0.4) — the screen drops exactly the docs q23 tiers low. */

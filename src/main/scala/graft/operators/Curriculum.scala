@@ -23,7 +23,7 @@ import graft.core.{Sessions, Tables}
   * bounds, and each shard's quality band — non-overlapping and
   * monotone by construction, which the oracle checks value-for-value.
   */
-object Curriculum {
+object Curriculum extends graft.QueryModule {
 
   /** Number of curriculum shards. */
   val Shards = 8

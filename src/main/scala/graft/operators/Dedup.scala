@@ -19,7 +19,7 @@ import graft.core.{Sessions, Tables}
   * clusters, not vocabulary frequencies. A residual guard (`MaxBucket`)
   * caps any degenerate bucket.
   */
-object Dedup {
+object Dedup extends graft.QueryModule {
 
   /** Distinct 5-word shingles per document: the unit of near-dup
     * comparison. Built with sequence+transform+slice (all codegen'd

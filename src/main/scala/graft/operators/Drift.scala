@@ -35,7 +35,7 @@ import graft.core.Sessions
   * scale), and the contribution is one sign-split truncating division
   * of their product.
   */
-object Drift {
+object Drift extends graft.QueryModule {
 
   /** Closed bucket spine: scores 0..10000 in [[BucketWidth]] bands →
     * buckets 0..10 (11 of them, the add-one smoothing denominator). */

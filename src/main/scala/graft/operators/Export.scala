@@ -33,7 +33,7 @@ import graft.core.{Sessions, Tables, TableVersion}
   * aggregate joined against the manifest's shard-grain rows. Nothing
   * driver-sized anywhere.
   */
-object Export {
+object Export extends graft.QueryModule {
 
   /** Landed data subdirectory inside a version dir (so the `_SUCCESS`
     * marker of the partitioned write is scoped to the data tree).

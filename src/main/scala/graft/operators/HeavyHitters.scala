@@ -23,7 +23,7 @@ import graft.functions.MisraGriesAgg
   * entries per map buffer, the driver holds ≤ SketchK candidate strings,
   * and the recount's shuffle carries only candidate rows.
   */
-object HeavyHitters {
+object HeavyHitters extends graft.QueryModule {
 
   /** Sketch width: per-buffer state bound AND the frequency floor's
     * denominator (floor = N/SketchK). */

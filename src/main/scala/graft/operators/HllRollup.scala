@@ -32,7 +32,7 @@ import graft.core.{Sessions, Tables}
   * the union is |types|-sized; exact counts are the audit twin, as
   * everywhere in the sketch family.
   */
-object HllRollup {
+object HllRollup extends graft.QueryModule {
 
   /** The rollup gate over ANY raw events frame — q187's body and the
     * `hll_rollup()` TVF's. */

@@ -32,7 +32,7 @@ import graft.core.{Sessions, Tables}
   * with the corpus family ([[Corpus.DroppedFromV1Mod]]): v1 = vectors
   * whose id ≢ rem, delta = the recrawl's additions.
   */
-object IvfMaintain {
+object IvfMaintain extends graft.QueryModule {
 
   /** v1 membership rule — the [[Corpus.DroppedFromV1Mod]] convention on
     * vec_id, so the "old index" slice is oracle-reconstructible. */

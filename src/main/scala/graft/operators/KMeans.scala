@@ -38,7 +38,7 @@ import graft.core.{Sessions, Tables}
   * operator — this is part of the similarity-search scale family
   * (SURVEY §2.9) alongside [[IvfIndex]].
   */
-object KMeans {
+object KMeans extends graft.QueryModule {
 
   /** Cluster count — [[IvfIndex]]-small so the per-round broadcast is a
     * few KB; a deployment sizes this to its quantizer. */

@@ -28,7 +28,7 @@ import graft.core.{Sessions, Tables}
   * Parity: window starts, scores and counts are integers; the share is
   * one truncating division; ties break to the lexicographically LAST
   * language on both engines (the [[TextOps.languageId]] convention). */
-object LangSegments {
+object LangSegments extends graft.QueryModule {
 
   /** Window width in tokens (fixture docs run 10–99 tokens → 1–10
     * windows; a deployment sizes this to its segmenter granularity). */

@@ -41,7 +41,7 @@ import graft.core.{Sessions, Tables}
   * the τ gate as an integer cross-multiply (`1e6·inter ≥ τµ·union`), so
   * no float ever orders or filters; ties break (jac DESC, old_id ASC)
   * via row_number on both engines. */
-object Linkage {
+object Linkage extends graft.QueryModule {
 
   /** Linkage acceptance threshold (Jaccard, micros): below this a new
     * record is a birth, not a match. Lower than the 0.6 dedup threshold

@@ -36,7 +36,7 @@ import graft.core.{Sessions, Tables}
   * truncating integer division of positive integers — no float ever
   * crosses an ordering boundary in either engine.
   */
-object Margin {
+object Margin extends graft.QueryModule {
 
   /** Neighborhood size of the margin denominator (top-K cosine sums on
     * each side — K=4 is the LASER operating point's order). */

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Sessions
+import VectorSearch.{NumProbes, TopK}
 
 /** EMBEDDING TRUNCATION ABLATION (Matryoshka-style): how much top-k
   * recall survives when the 64-dim store is cut to its first d'
@@ -34,21 +35,12 @@ import graft.core.Sessions
   * sweep entry is a filter+window over the same (probe, vec) frame,
   * never a rescan. The full-dim branch doubles as the exact baseline,
   * so no separate exact twin runs. */
-object Matryoshka {
+object Matryoshka extends graft.QueryModule {
 
   /** Prefix lengths swept (the full 64 closes the table at recall 1 —
     * the identity row that proves the sweep converges). */
   val Dims: Seq[Int] = Seq(8, 16, 32, 64)
   val FullDim = 64
-
-  /** Probe/result sizes — the family convention (q140/q162/q173). */
-  val NumProbes: Int = Pq.NumProbes
-  val TopK: Int = Pq.TopK
-
-  private def d2Prefix(a: Column, b: Column, d: Int): Column =
-    aggregate(
-      zip_with(slice(a, 1, d), slice(b, 1, d), (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, x) => acc + x)
 
   /** q174 — the truncation sweep: per prefix length, the summed exact
     * top-[[TopK]] hits across [[NumProbes]] probes and the integer
@@ -71,23 +63,15 @@ object Matryoshka {
     * sweep reduces in one conditional aggregate — one scan, one
     * shuffle, no self-join, however many dims the sweep has. */
   private[graft] def sweepOver(spark: SparkSession, q: DataFrame): DataFrame = {
-    import spark.implicits._
-    val probes = q.filter(col("vec_id") < NumProbes).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toSeq
-    val pDf = broadcast(probes.toDF("probe_id", "pv"))
+    val pDf = VectorSearch.intProbeFrame(spark, VectorSearch.intProbes(q))
     // one scan: all sweep distances are row-local prefix sums
-    val scored = q.crossJoin(pDf)
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id") +: col("vec_id") +:
-          Dims.map(d => d2Prefix(col("em"), col("pv"), d).as(s"d$d")): _*)
+    val scored = VectorSearch.exactScan(q, pDf,
+      Dims.map(d => VectorSearch.l2Prefix(col("em"), col("pv"), d).as(s"d$d")))
     // every sweep rank over ONE probe-keyed Exchange: the windows share
     // the partitioning and differ only in sort key, so Spark plans one
     // shuffle feeding chained Sort+Window nodes
-    import org.apache.spark.sql.expressions.Window
     val ranked = Dims.foldLeft(scored) { (df, d) =>
-      df.withColumn(s"rk$d", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col(s"d$d"), col("vec_id"))))
+      VectorSearch.topK(df, col(s"d$d"), None, rank = s"rk$d")
     }
     // a hit at dim d = inside BOTH d's top-k and the full-dim top-k; the
     // whole sweep reduces in one conditional aggregate, no self-join

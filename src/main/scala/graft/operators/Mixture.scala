@@ -36,7 +36,7 @@ import graft.core.{Sessions, Tables}
   * to 1e-4 bits, weights are integer micros renormalized by truncating
   * division — both engines do identical integer arithmetic end-to-end.
   */
-object Mixture {
+object Mixture extends graft.QueryModule {
 
   /** Reweighting rounds (trajectory w₀…w₃ published). */
   val Rounds = 3

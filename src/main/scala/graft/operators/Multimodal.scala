@@ -42,7 +42,7 @@ import graft.core.{Sessions, Tables}
   * deliberately small (≤ 15×13) so the oracle replay stays cheap — the
   * plan shape is size-independent.
   */
-object Multimodal {
+object Multimodal extends graft.QueryModule {
 
   // ---------------------------------------------------------------------
   // Image fixtures: deterministic pixels, real codecs

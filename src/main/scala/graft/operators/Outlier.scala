@@ -37,7 +37,7 @@ import graft.core.{Sessions, Tables}
   * centroid subtraction that the oracle replays identically anyway but
   * buys no extra detection power at audit grain.
   */
-object Outlier {
+object Outlier extends graft.QueryModule {
 
   /** A vector whose centroid cosine is below this (micro units) points
     * away from its own source's mean direction — the outlier line.

@@ -29,7 +29,7 @@ import graft.core.Sessions
   * [[PowerIters]] matrix-vector rounds — in unrolled SQL from the same
   * constants, so the result hash-matches, not approximately-matches.
   */
-object Pca {
+object Pca extends graft.QueryModule {
 
   /** Embedding dimensionality of the corpus fixtures. */
   val Dim = 64

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Sessions
+import VectorSearch.{NumProbes, TopK}
 
 /** Product-quantization codebook training + distortion audit — the PQ
   * half of IVF-PQ, the storage-side ANN standard (Jégou, Douze &
@@ -34,7 +35,7 @@ import graft.core.{Sessions, Tables}
   * (vector → [[M]] codes) is a broadcast-literal argmin — the same
   * map-only posture as [[KMeans.assigned]], streaming-safe.
   */
-object Pq {
+object Pq extends graft.QueryModule {
 
   /** Subspaces (64-dim fixture vectors → 8 dims per subspace). */
   val M = 8
@@ -148,11 +149,6 @@ object Pq {
       finally { q.unpersist(); () }
     }
 
-  /** Probe count / result size for the q140 ADC search (the q29/q43
-    * conventions). */
-  val NumProbes = 8
-  val TopK = 5
-
   /** Corpus-level recall floor for the q140 gate. With random-ish
     * fixture embeddings (distances concentrate — the hard regime for
     * any quantized index), the ADC SHORTLIST at [[shortlistFor]]'s 10%
@@ -168,15 +164,6 @@ object Pq {
     * meaningful at every fixture SF. */
   def shortlistFor(n: Long): Int = math.max(50L, n / 10L).toInt
 
-  /** ADC shortlist per probe: encoded corpus (vec_id → [[M]] codes)
-    * scored against each probe through a per-(probe, sub, code)
-    * distance lookup table — the PQ search trick (Jégou et al. §IV):
-    * the probe is compared to [[K]] centroids per subspace ONCE (LUT =
-    * probes × [[M]] × [[K]] int64 cells, built driver-side from two
-    * bounded frames), and every corpus vector's approximate distance is
-    * then [[M]] lookups + adds, independent of dimension. One
-    * (probe, vec)-grain aggregate over the LUT-replicated code stream
-    * — linear in corpus × probes. */
   /** The per-(probe, sub, code) int64 distance lookup table — probes ×
     * [[M]] × [[K]] cells, built driver-side from two bounded frames. */
   private def lutRows(
@@ -195,72 +182,59 @@ object Pq {
       (pid, s, j, d)
     }
 
+  /** ADC shortlist per probe: encoded corpus (vec_id → [[M]] codes)
+    * scored against each probe through a per-(probe, sub, code)
+    * distance lookup table — the PQ search trick (Jégou et al. §IV):
+    * the probe is compared to [[K]] centroids per subspace ONCE (LUT =
+    * probes × [[M]] × [[K]] int64 cells, built driver-side from two
+    * bounded frames), and every corpus vector's approximate distance is
+    * then [[M]] lookups + adds, independent of dimension. One
+    * (probe, vec)-grain aggregate over the LUT-replicated code stream
+    * — linear in corpus × probes. */
   private[graft] def adcShortlist(spark: SparkSession, dir: String, r: Int): DataFrame = {
     import spark.implicits._
     val book = trainedBook(spark, dir)
-    val q = KMeans.quantized(spark, dir)
-    // probe set = vec_id < NumProbes, the q29 convention (ids are dense
-    // from 0 in every fixture; the oracle counts the same predicate)
-    val probes = q.filter(col("vec_id") < NumProbes).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val lutDf = lutRows(probes.toSeq, book).toDF("probe_id", "sub", "code", "pd")
+    val probes = VectorSearch.intProbes(KMeans.quantized(spark, dir))
+    val lutDf = lutRows(probes, book).toDF("probe_id", "sub", "code", "pd")
     val encoded = assigned(subVectors(spark, dir), book)
       .select(col("vec_id"), col("sub"), col("code"))
     val adc = encoded.join(broadcast(lutDf), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("probe_id"))
+      .filter(VectorSearch.notSelf())
       .groupBy("probe_id", "vec_id")
       .agg(sum(col("pd")).as("adc_d"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("probe_id").orderBy(col("adc_d"), col("vec_id"))
-    adc.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= r)
-      .select(col("probe_id"), col("vec_id"))
+    shortlistOf(adc, r)
   }
 
+  /** The `r` lowest-ADC-distance candidates per probe. */
+  private def shortlistOf(adc: DataFrame, r: Int): DataFrame =
+    VectorSearch.topK(adc, col("adc_d"), Some(r), neighbor = "vec_id")
+      .select(col("probe_id"), col("vec_id"))
+
+  /** The exact stage shared by [[adcTopK]] and [[ivfPqSearch]]: fetch the
+    * shortlist's true vectors by key, pay one exact integer-L2 distance
+    * per candidate (never corpus-sized) and keep the final top-[[TopK]]. */
+  private def rerank(shortlist: DataFrame, q: DataFrame, probes: DataFrame): DataFrame =
+    VectorSearch.topK(
+      shortlist.join(q, Seq("vec_id")).join(probes, Seq("probe_id"))
+        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+          VectorSearch.l2(col("em"), col("pv")).as("d")),
+      col("d")).select(col("probe_id"), col("neighbor_id"), col("d"))
+
   /** The PRODUCTION PQ search: ADC shortlist → exact re-rank of the R
-    * candidates (fetch the R true vectors by key, pay R exact distances
-    * instead of n) → final top-[[TopK]]. This two-stage shape is how
-    * IVF-PQ deployments answer queries; the exact stage is bounded by
-    * the shortlist, never corpus-sized. */
+    * candidates → final top-[[TopK]]. This two-stage shape is how
+    * IVF-PQ deployments answer queries. */
   private[graft] def adcTopK(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val q = KMeans.quantized(spark, dir)
     val n = q.count()
-    val probes = q.filter(col("vec_id") < NumProbes).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toSeq
-    val pDf = broadcast(probes.toDF("probe_id", "pv"))
-    val shortlist = adcShortlist(spark, dir, shortlistFor(n))
-    val reranked = shortlist
-      .join(q, Seq("vec_id"))
-      .join(pDf, Seq("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        aggregate(zip_with(col("em"), col("pv"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("d"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("probe_id").orderBy(col("d"), col("vec_id"))
-    reranked.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TopK)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("d"))
+    val pDf = VectorSearch.intProbeFrame(spark, VectorSearch.intProbes(q))
+    rerank(adcShortlist(spark, dir, shortlistFor(n)), q, pDf)
   }
 
   /** Exact integer-L2 top-k twin over the micro-quantized corpus (the
     * recall reference — one corpus scan, probe literals broadcast). */
   private[graft] def exactTopK(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val q = KMeans.quantized(spark, dir)
-    val probes = q.filter(col("vec_id") < NumProbes).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toSeq
-    val pDf = broadcast(probes.toDF("probe_id", "pv"))
-    val scored = q.crossJoin(pDf)
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        aggregate(zip_with(col("em"), col("pv"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("d"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("probe_id").orderBy(col("d"), col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TopK)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("d"))
+    Sq.l2TopKOf(spark, q, q, "em")
   }
 
   /** q140 — the PQ-ADC SEARCH GATE (q43 convention): [[adcTopK]]
@@ -270,18 +244,22 @@ object Pq {
     * exact twin exists only inside the gate. */
   def q140PqAdc(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    val adc = adcTopK(spark, dir).select(col("probe_id"), col("neighbor_id"))
-    val exact = exactTopK(spark, dir).select(col("probe_id"), col("neighbor_id"))
-    val hits = adc.join(exact, Seq("probe_id", "neighbor_id"), "left_semi")
-      .groupBy("probe_id").agg(count(lit(1)).as("n_hits"))
-    val perProbe = exact.groupBy("probe_id").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("probe_id"), "left_outer")
-      .select(col("probe_id"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / col("n_exact")).as("recall"))
-    perProbe.agg(
+    recallPerProbe(adcTopK(spark, dir), exactTopK(spark, dir)).agg(
       count(lit(1)).as("n_probes"),
       sum(lit(TopK)).cast("long").as("n_exact_results"),
       (min(col("recall")) >= AdcRecallFloor).as("recall_ok"))
+  }
+
+  /** `(probe_id, recall)`: the share of each probe's exact top-k that
+    * the approximate top-k found. */
+  private def recallPerProbe(approx: DataFrame, exact: DataFrame): DataFrame = {
+    val hits = approx.select(col("probe_id"), col("neighbor_id"))
+      .join(exact, Seq("probe_id", "neighbor_id"), "left_semi")
+      .groupBy("probe_id").agg(count(lit(1)).as("n_hits"))
+    exact.groupBy("probe_id").agg(count(lit(1)).as("n_exact"))
+      .join(hits, Seq("probe_id"), "left_outer")
+      .select(col("probe_id"),
+        (coalesce(col("n_hits"), lit(0L)).cast("double") / col("n_exact")).as("recall"))
   }
 
   /** Coarse lists a probe visits in the q143 IVF-PQ search (of
@@ -311,8 +289,7 @@ object Pq {
     val book = trainedBook(spark, dir)
     val q = KMeans.quantized(spark, dir)
     val n = q.count()
-    val probes = q.filter(col("vec_id") < NumProbes).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toSeq
+    val probes = VectorSearch.intProbes(q)
     // probe → its NprobeLists nearest coarse lists (ties → lower id),
     // computed driver-side from the k×dim model
     val routes = probes.flatMap { case (pid, pv) =>
@@ -329,7 +306,7 @@ object Pq {
     val assignedLists = KMeans.assigned(q, cents)
       .select(col("vec_id"), col("cluster"))
     val visited = assignedLists.join(routeDf, Seq("cluster"))
-      .filter(col("vec_id") =!= col("probe_id"))
+      .filter(VectorSearch.notSelf())
       .select("probe_id", "vec_id")
     val lutDf = broadcast(lutRows(probes, book).toDF("probe_id", "sub", "code", "pd"))
     val encoded = assigned(subVectors(spark, dir), book)
@@ -339,22 +316,8 @@ object Pq {
       .join(lutDf, Seq("probe_id", "sub", "code"))
       .groupBy("probe_id", "vec_id")
       .agg(sum(col("pd")).as("adc_d"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("probe_id").orderBy(col("adc_d"), col("vec_id"))
-    val shortlist = adc.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= shortlistFor(n))
-      .select("probe_id", "vec_id")
-    val pDf = broadcast(probes.toDF("probe_id", "pv"))
-    val reranked = shortlist
-      .join(q, Seq("vec_id"))
-      .join(pDf, Seq("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        aggregate(zip_with(col("em"), col("pv"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("d"))
-    val w2 = Window.partitionBy("probe_id").orderBy(col("d"), col("vec_id"))
-    val topk = reranked.withColumn("rk", row_number().over(w2))
-      .filter(col("rk") <= TopK)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("d"))
+    val topk = rerank(shortlistOf(adc, shortlistFor(n)), q,
+      VectorSearch.intProbeFrame(spark, probes))
     val fracs = visited.groupBy("probe_id")
       .agg((count(lit(1)).cast("double") / n).as("scan_frac"))
     (topk, fracs)
@@ -368,16 +331,7 @@ object Pq {
   def q143IvfPq(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     val (topk, fracs) = ivfPqSearch(spark, dir)
-    val approx = topk.select(col("probe_id"), col("neighbor_id"))
-    val exact = exactTopK(spark, dir).select(col("probe_id"), col("neighbor_id"))
-    val hits = approx.join(exact, Seq("probe_id", "neighbor_id"), "left_semi")
-      .groupBy("probe_id").agg(count(lit(1)).as("n_hits"))
-    val perProbe = exact.groupBy("probe_id").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("probe_id"), "left_outer")
-      .select(col("probe_id"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / col("n_exact")).as("recall"))
-      .join(fracs, Seq("probe_id"))
-    perProbe.agg(
+    recallPerProbe(topk, exactTopK(spark, dir)).join(fracs, Seq("probe_id")).agg(
       count(lit(1)).as("n_probes"),
       sum(lit(TopK)).cast("long").as("n_exact_results"),
       (min(col("recall")) >= AdcRecallFloor).as("recall_ok"),

@@ -16,7 +16,7 @@ import graft.core.{Sessions, Tables}
   * regexes avoid lookarounds and backreferences so they run identically
   * on Java's engine and RE2 (and stay in the linear-time subset).
   */
-object Privacy {
+object Privacy extends graft.QueryModule {
 
   /** Conservative PII patterns (shared verbatim with the oracle SQL —
     * RE2/Java-common subset: no lookaround, no backrefs). */

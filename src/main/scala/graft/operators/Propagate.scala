@@ -38,7 +38,7 @@ import graft.core.{Sessions, Tables}
   * to documents that HAVE neighbors (isolated docs are fixed points by
   * definition), keeping the result graph-sized.
   */
-object Propagate {
+object Propagate extends graft.QueryModule {
 
   /** The propagation over ANY (doc_id, text) frame and near-dup pair
     * set (callers choose the pair detector; q168 uses the cached

@@ -27,7 +27,7 @@ import graft.core.{Sessions, Tables}
   * the deterministic `doc_id % TombstoneMod = 0` subset; a deployment
   * passes its real request table.
   */
-object Purge {
+object Purge extends graft.QueryModule {
 
   /** Fixture tombstone rule — deterministic stand-in for the external
     * deletion-request table. */

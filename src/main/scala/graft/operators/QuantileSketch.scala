@@ -30,7 +30,7 @@ import graft.functions.QuantileSketchAgg
   * shuffle carries K·log(n)-item buffers per group, not rows); the
   * verify join is (groups × 3) estimates against the event scan —
   * audit-only, like every gate's exact twin. */
-object QuantileSketch {
+object QuantileSketch extends graft.QueryModule {
 
   /** Audited percentiles. The rank tolerance is the LARGER of a fixed
     * ±(n/20 + 1) floor and the sketch's own documented worst-case

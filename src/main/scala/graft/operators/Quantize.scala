@@ -20,7 +20,7 @@ import graft.core.{Sessions, Tables}
   * The only doubles that survive to the output are single divisions /
   * sqrts of exact integers — bit-identical in both engines.
   */
-object Quantize {
+object Quantize extends graft.QueryModule {
 
   /** Per-vector int8 quantization error columns over an `embedding`
     * array<float> column: `dim`, `scale`, and `sum_e2` (Σ per-element

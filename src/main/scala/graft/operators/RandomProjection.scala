@@ -29,7 +29,7 @@ import graft.core.{Sessions, Tables}
   * and every emitted value is integer-derived, so the DuckDB oracle
   * replays the ENTIRE operator value-for-value (stronger than the
   * q30/q49 verdict gates: nothing here is engine-local). */
-object RandomProjection {
+object RandomProjection extends graft.QueryModule {
 
   /** Output dimensionality of the sketch. */
   val JlDim = 16

@@ -22,7 +22,7 @@ import graft.core.{Sessions, Tables}
   * in [[oracles]] (the driver sorts columns by name before hashing).
   * Every query ends in a fully-deterministic ORDER BY (all ties broken).
   */
-object Relational {
+object Relational extends graft.QueryModule {
 
   /** q01 — ungrouped COUNT(*) (SURVEY A1; reference
     * `sql/sample_athena_queries.sql:6-7`, `test_pipeline.py:117`). */

@@ -26,7 +26,7 @@ import graft.core.{Sessions, Tables}
   * engine's aggregation order can never flip a rank tie, and ranking on
   * the exact micro total (then doc_id) is fully deterministic across
   * engines. */
-object Retrieval {
+object Retrieval extends graft.QueryModule {
 
   /** BM25 constants (the classic defaults). Every constant reaches BOTH
     * engines as a parsed DECIMAL LITERAL derived from these two values —
@@ -108,16 +108,12 @@ object Retrieval {
   /** The ranking tail over an already-scored `(query_id, doc_id, micro)`
     * frame — split out so q251 can score ONCE and rank twice (its two
     * systems share the sparse side). */
-  private def rankScores(agg: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(col("micro").desc, col("doc_id"))
-    agg
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+  private def rankScores(agg: DataFrame, k: Int): DataFrame =
+    VectorSearch.topK(agg, col("micro").desc, Some(k), "query_id", "doc_id")
       .select(
         col("query_id"), col("rnk").cast("long").as("rnk"), col("doc_id"),
         round(col("micro") / lit(1000000.0), 4).as("score"))
       .orderBy("query_id", "rnk")
-  }
 
   /** q70 — BM25 over [[QuerySet]], sourced from the shared
     * [[TextOps.tokenStage]]: the occurrence stream, document lengths AND
@@ -247,13 +243,11 @@ object Retrieval {
     val queryIds = queries.map(_._1).distinct
     val probes = emb.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("probe_vec"))
-    val denseW = Window.partitionBy("query_id").orderBy(col("cos_raw").desc, col("doc_id"))
-    val dense = graft.core.Tables.fanoutIfHeavy(emb.sparkSession, emb)
-      .crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        Similarity.cosine(col("probe_vec"), col("embedding")).as("cos_raw"))
-      .withColumn("cos_rnk", row_number().over(denseW))
+    val dense = VectorSearch.topK(
+        VectorSearch.exactScan(Tables.fanoutIfHeavy(emb.sparkSession, emb), probes,
+          Seq(Similarity.cosine(col("probe_vec"), col("embedding")).as("cos_raw")),
+          "query_id", "doc_id"),
+        col("cos_raw").desc, None, "query_id", "doc_id", "cos_rnk")
       .select(col("query_id"), col("doc_id"), col("cos_rnk"))
     // fuse: candidate-sized full-outer join; absent list → no contribution
     val fused = sparse.join(dense, Seq("query_id", "doc_id"), "full_outer")
@@ -262,10 +256,7 @@ object Retrieval {
         col("cos_rnk").cast("long").as("cos_rnk"),
         (coalesce(expr(s"1000000 div ($RrfK + bm25_rnk)"), lit(0L)) +
           coalesce(expr(s"1000000 div ($RrfK + cos_rnk)"), lit(0L))).as("rrf_micro"))
-    val w = Window.partitionBy("query_id").orderBy(col("rrf_micro").desc, col("doc_id"))
-    fused
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    VectorSearch.topK(fused, col("rrf_micro").desc, Some(k), "query_id", "doc_id")
       .select(col("query_id"), col("rnk").cast("long").as("rnk"), col("doc_id"),
         col("rrf_micro"), col("bm25_rnk"), col("cos_rnk"))
       .orderBy("query_id", "rnk")

@@ -20,7 +20,7 @@ import graft.core.{Sessions, Tables}
   * map-only or one-window — no extra shuffles beyond their semantics,
   * and both are exactly reproducible in the oracle engine, so the gate
   * is a hash compare, not a statistical bound. */
-object Sampling {
+object Sampling extends graft.QueryModule {
 
   /** Bucket 0-99 from the first 4 hex chars of the content hash —
     * uniform (md5), deterministic, engine-portable. */

@@ -32,7 +32,7 @@ import graft.core.{Sessions, Tables}
   * (avgrank − ½)/n mid-rank, cross-multiplied) — over integer counts
   * of the integer score; zero-token docs are excluded on both engines
   * (the q131 convention). */
-object ScoreNorm {
+object ScoreNorm extends graft.QueryModule {
 
   /** q218 — per-doc within-source percentile of the q23 quality score. */
   def q218ScorePercentiles(spark: SparkSession, dir: String): DataFrame = {

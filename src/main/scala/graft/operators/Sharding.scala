@@ -28,7 +28,7 @@ import graft.core.{Sessions, Tables}
   * so ~300 ring points cannot birthday-collide); ring nodes hash the
   * literal string "s:v", documents hash `CAST(doc_id AS STRING)`; the
   * successor index and every fraction are exact integer arithmetic. */
-object Sharding {
+object Sharding extends graft.QueryModule {
 
   /** Shard count before the resize. */
   val Shards = 8

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.core.{Sessions, Tables}
+import VectorSearch.{NumProbes, TopK}
 
 /** Similarity search over the `embeddings` table (SURVEY §2.9): exact
   * brute-force cosine top-k as the correctness baseline, and a
@@ -24,7 +25,7 @@ import graft.core.{Sessions, Tables}
   * driver-side from a fixed seed and broadcast as literals — no state,
   * reproducible across runs and clusters.
   */
-object Similarity {
+object Similarity extends graft.QueryModule {
 
   /** Left-fold dot product in double over two float-array columns —
     * the composable reference form, kept for spec cross-validation of
@@ -45,9 +46,16 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.cosine_sim(a, b)
 
-  /** Number of brute-force probe vectors (vec_id < NumProbes). */
-  val NumProbes = 8
-  val TopK = 5
+  /** The `cos_raw` score of a candidate against its probe. */
+  private def cosRaw: Seq[Column] =
+    Seq(cosine(col("probe_vec"), col("embedding")).as("cos_raw"))
+
+  /** Top-[[TopK]] of scored `(probe_id, neighbor_id, cos_raw)` candidates
+    * in the q29 output shape (cosine rounded at 6). */
+  private def cosineTopK(scored: DataFrame): DataFrame =
+    VectorSearch.topK(scored, col("cos_raw").desc)
+      .select(col("probe_id"), col("neighbor_id"), round(col("cos_raw"), 6).as("cosine"))
+      .orderBy(col("probe_id"), col("cosine").desc, col("neighbor_id"))
 
   /** q29 — exact brute-force cosine top-k: for each probe vector, the 5
     * nearest neighbors by cosine over the whole corpus. The probe side
@@ -55,25 +63,12 @@ object Similarity {
   def q29CosineTopK(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     val emb = Tables.embeddings(spark, dir)
-    val probes = emb.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-    // size-gated corpus-side fanout (round-15 verdict item 4 — decided
-    // with data, see Tables.fanoutIfHeavy): a one-row-group embeddings
-    // scan runs this kernel on ONE task; past ~2 MB the 32-way kernel
-    // beats the round-robin pass, below it the exchange costs more than
-    // the tens-of-ms kernel it parallelizes.
-    val scored = graft.core.Tables.fanoutIfHeavy(spark, emb).crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id"),
-        col("vec_id").as("neighbor_id"),
-        cosine(col("probe_vec"), col("embedding")).as("cos_raw"))
-    val w = Window.partitionBy("probe_id").orderBy(col("cos_raw").desc, col("neighbor_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      .select(col("probe_id"), col("neighbor_id"), round(col("cos_raw"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("cosine").desc, col("neighbor_id"))
+    // size-gated corpus-side fanout (see Tables.fanoutIfHeavy): a
+    // one-row-group embeddings scan runs this kernel on ONE task; past
+    // ~2 MB the 32-way kernel beats the round-robin pass, below it the
+    // exchange costs more than the tens-of-ms kernel it parallelizes.
+    cosineTopK(VectorSearch.exactScan(
+      Tables.fanoutIfHeavy(spark, emb), VectorSearch.probes(emb), cosRaw))
   }
 
   /** Random hyperplanes for sign-LSH, fixed seed — deterministic across
@@ -107,28 +102,16 @@ object Similarity {
     val planes = hyperplanes(NumPlanes, 64)
     // the bucket assignment + scoring kernel parallelize together off
     // the size-gated fanout (the q29 rationale; no-op at fixture size)
-    val bucketed = graft.core.Tables.fanoutIfHeavy(spark, emb)
+    val bucketed = Tables.fanoutIfHeavy(spark, emb)
       .withColumn("bucket", lshBucket(col("embedding"), planes))
     // probe-side bucket expansion: all masks with ≤2 bits set
     val flips: Seq[Int] = 0 +:
       (0 until NumPlanes).map(1 << _) ++:
       (for (i <- 0 until NumPlanes; j <- i + 1 until NumPlanes)
         yield (1 << i) | (1 << j))
-    val probes = bucketed.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"),
-        explode(array(flips.map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
-    val scored = bucketed.join(broadcast(probes), Seq("bucket"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id"),
-        col("vec_id").as("neighbor_id"),
-        cosine(col("probe_vec"), col("embedding")).as("cos_raw"))
-    val w = Window.partitionBy("probe_id").orderBy(col("cos_raw").desc, col("neighbor_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      .select(col("probe_id"), col("neighbor_id"), round(col("cos_raw"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("cosine").desc, col("neighbor_id"))
+    val probes = VectorSearch.probes(bucketed, extra = Seq(
+      explode(array(flips.map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket")))
+    cosineTopK(VectorSearch.scored(bucketed.join(broadcast(probes), Seq("bucket")), cosRaw))
   }
 
   /** Corpus-level recall floor for the q30 sign-LSH gate — the spec
@@ -144,17 +127,21 @@ object Similarity {
     * use [[annLshTopK]]. */
   def q30AnnLsh(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    val exact = q29CosineTopK(spark, dir).select("probe_id", "neighbor_id")
-    val ann = annLshTopK(spark, dir)
-      .select(col("probe_id"), col("neighbor_id"), lit(1L).as("hit"))
-    exact.join(ann, Seq("probe_id", "neighbor_id"), "left")
+    recallOf(q29CosineTopK(spark, dir), annLshTopK(spark, dir))
+      .select(col("n_probes"), col("n_exact_results"),
+        (col("recall") >= LshRecallFloor).as("recall_ok"))
+  }
+
+  /** One row: probe count, exact-result count and corpus-level recall of
+    * the `approx` top-k against the `exact` one — the ANN gates' shape. */
+  private def recallOf(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.select("probe_id", "neighbor_id")
+      .join(approx.select(col("probe_id"), col("neighbor_id"), lit(1L).as("hit")),
+        Seq("probe_id", "neighbor_id"), "left")
       .agg(
         countDistinct(col("probe_id")).as("n_probes"),
         count(lit(1)).as("n_exact_results"),
         (sum(coalesce(col("hit"), lit(0L))).cast("double") / count(lit(1))).as("recall"))
-      .select(col("n_probes"), col("n_exact_results"),
-        (col("recall") >= LshRecallFloor).as("recall_ok"))
-  }
 
   /** Near-dup cosine threshold. The fixture corpus has no true embedding
     * duplicates (measured max pairwise cosine ≈ 0.51), so the threshold
@@ -321,48 +308,28 @@ object Similarity {
     // spill assignment: each vector appears in its SpillAssign nearest
     // lists — the index is spill× the corpus, but each probe still scans
     // only its nprobe lists
-    val assigned = emb.select(
+    ivfScoreTail(spilled(emb, centers), ivfProbes(spark, emb, centers))
+  }
+
+  /** `(vec_id, embedding, list_id)`: each vector in its [[SpillAssign]]
+    * nearest lists — the IVF index over any `(vec_id, embedding)` store. */
+  private[graft] def spilled(store: DataFrame, centers: Array[Array[Double]]): DataFrame =
+    store.select(
       col("vec_id"), col("embedding"),
       explode(graft.functions.VectorFunctions.nearest_centroids(
         col("embedding"), centers, SpillAssign)).as("list_id"))
-    ivfScoreTail(assigned, ivfProbes(spark, emb, centers))
-  }
 
-  /** Probe → probed-list fan-out pairs: each probe vector's
-    * [[NumProbeLists]] nearest centroids, computed driver-side over
-    * the collected probe vectors (a fixed tiny set) — shared by the
-    * in-memory index ([[ivfTopK]]) and the partitioned-store serving
-    * path ([[graft.layout.IvfLayout]]), so the two can never probe
-    * different lists. */
-  private[graft] def probeListPairs(spark: SparkSession, emb: DataFrame,
-      centers: Array[Array[Double]],
-      nprobe: Int = NumProbeLists): Seq[(Long, Int)] = {
-    val probeRows = emb.filter(col("vec_id") < NumProbes)
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    def dist2(a: Array[Float], c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - c(i); s += d * d; i += 1 }
-      s
-    }
-    probeRows.toSeq.flatMap { case (pid, vec) =>
-      centers.zipWithIndex
-        .map { case (c, li) => (li, dist2(vec, c)) }
-        .sortBy(_._2).take(nprobe)
-        .map { case (li, _) => (pid, li) }
-    }
-  }
-
-  /** The (probe_id, probe_vec, list_id) probe frame of [[ivfTopK]]. */
+  /** The (probe_id, probe_vec, list_id) probe frame of [[ivfTopK]]: each
+    * probe fanned out to its `nprobe` nearest lists
+    * ([[VectorSearch.probeLists]], shared with the partitioned-store
+    * serving path of [[graft.layout.IvfLayout]]). */
   private[graft] def ivfProbes(spark: SparkSession, emb: DataFrame,
       centers: Array[Array[Double]],
       nprobe: Int = NumProbeLists): DataFrame = {
     import spark.implicits._
-    val probeLists =
-      probeListPairs(spark, emb, centers, nprobe).toDF("probe_id", "list_id")
-    emb.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      .join(probeLists, Seq("probe_id"))
+    val probeLists = VectorSearch.probeLists(emb, centers, nprobe)
+      .map { case (p, l, _) => (p, l) }.toDF("probe_id", "list_id")
+    VectorSearch.probes(emb).join(probeLists, Seq("probe_id"))
   }
 
   /** The bucketed scoring join + spill-dedup + rank tail over ANY
@@ -371,23 +338,12 @@ object Similarity {
     * through this SAME tail. */
   private[graft] def ivfScoreTail(assigned: DataFrame,
       probes: DataFrame): DataFrame = {
-    val scored = assigned.join(broadcast(probes), Seq("list_id"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id"),
-        col("vec_id").as("neighbor_id"),
-        cosine(col("probe_vec"), col("embedding")).as("cos_raw"))
-      // a spilled vector can reach the same probe through two lists —
-      // collapse before ranking (map-side-combining max, not distinct,
-      // so the dedup shuffles one row per (probe, neighbor))
+    // a spilled vector can reach the same probe through two lists —
+    // collapse before ranking (map-side-combining max, not distinct, so
+    // the dedup shuffles one row per (probe, neighbor))
+    cosineTopK(VectorSearch.scored(assigned.join(broadcast(probes), Seq("list_id")), cosRaw)
       .groupBy("probe_id", "neighbor_id")
-      .agg(max(col("cos_raw")).as("cos_raw"))
-    val w = Window.partitionBy("probe_id").orderBy(col("cos_raw").desc, col("neighbor_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      .select(col("probe_id"), col("neighbor_id"), round(col("cos_raw"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("cosine").desc, col("neighbor_id"))
+      .agg(max(col("cos_raw")).as("cos_raw")))
   }
 
   /** Corpus-level recall floor the IVF search is gated on (the spec
@@ -405,14 +361,7 @@ object Similarity {
     * callers use [[ivfTopK]] directly (no exact twin, no verdict). */
   def q43AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    val exact = q29CosineTopK(spark, dir).select("probe_id", "neighbor_id")
-    val ivf = ivfTopK(spark, dir)
-      .select(col("probe_id"), col("neighbor_id"), lit(1L).as("hit"))
-    exact.join(ivf, Seq("probe_id", "neighbor_id"), "left")
-      .agg(
-        countDistinct(col("probe_id")).as("n_probes"),
-        count(lit(1)).as("n_exact_results"),
-        (sum(coalesce(col("hit"), lit(0L))).cast("double") / count(lit(1))).as("recall"))
+    recallOf(q29CosineTopK(spark, dir), ivfTopK(spark, dir))
       .select(col("n_probes"), col("n_exact_results"),
         (col("recall") >= IvfRecallFloor).as("recall_ok"))
   }
@@ -449,23 +398,8 @@ object Similarity {
   private[graft] def filteredExactTopK(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val allowed = metaStore(spark, dir).filter(col("source") === FilterSource)
-    val probes = emb.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-    val scored = graft.core.Tables.fanoutIfHeavy(spark, allowed)
-      .crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(
-        col("probe_id"),
-        col("vec_id").as("neighbor_id"),
-        cosine(col("probe_vec"), col("embedding")).as("cos_raw"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cos_raw").desc, col("neighbor_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= TopK)
-      .select(col("probe_id"), col("neighbor_id"),
-        round(col("cos_raw"), 6).as("cosine"))
-      .orderBy(col("probe_id"), col("cosine").desc, col("neighbor_id"))
+    cosineTopK(VectorSearch.exactScan(
+      Tables.fanoutIfHeavy(spark, allowed), VectorSearch.probes(emb), cosRaw))
   }
 
   /** PRODUCTION filtered ANN: the q43 IVF search with the metadata
@@ -502,11 +436,7 @@ object Similarity {
     val boost = (nVec + nAllowed - 1L) / nAllowed
     val effNprobe =
       math.min(NumLists.toLong, NumProbeLists.toLong * boost).toInt
-    val assigned = store.select(
-      col("vec_id"), col("embedding"),
-      explode(graft.functions.VectorFunctions.nearest_centroids(
-        col("embedding"), centers, SpillAssign)).as("list_id"))
-    ivfScoreTail(assigned, ivfProbes(spark, emb, centers, effNprobe))
+    ivfScoreTail(spilled(store, centers), ivfProbes(spark, emb, centers, effNprobe))
   }
 
   /** q209 — the FILTERED-ANN gate (the q43 convention): the filtered
@@ -516,20 +446,12 @@ object Similarity {
     * corpus). Production callers use [[ivfFilteredTopK]] directly. */
   def q209FilteredAnn(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    val exact = filteredExactTopK(spark, dir).select("probe_id", "neighbor_id")
-    val prod = ivfFilteredTopK(spark, dir)
-      .select(col("probe_id"), col("neighbor_id"), lit(1L).as("hit"))
     val facts = metaStore(spark, dir)
       .agg(
         count(lit(1)).as("n_vectors"),
         sum(when(col("source") === FilterSource, 1L).otherwise(0L))
           .as("n_allowed"))
-    exact.join(prod, Seq("probe_id", "neighbor_id"), "left")
-      .agg(
-        countDistinct(col("probe_id")).as("n_probes"),
-        count(lit(1)).as("n_exact_results"),
-        (sum(coalesce(col("hit"), lit(0L))).cast("double") / count(lit(1)))
-          .as("recall"))
+    recallOf(filteredExactTopK(spark, dir), ivfFilteredTopK(spark, dir))
       .crossJoin(broadcast(facts))
       .select(col("n_probes"), col("n_exact_results"), col("n_allowed"),
         (col("recall") >= FilteredRecallFloor).as("recall_ok"),
@@ -815,20 +737,10 @@ object Similarity {
     * `hard_negatives(lo, hi, k)` TVF body. */
   private[graft] def hardNegatives(emb: DataFrame, lo: Double, hi: Double,
       k: Int): DataFrame = {
-    val probes = emb.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("anchor_id"), col("embedding").as("probe_vec"))
-    val scored = graft.core.Tables.fanoutIfHeavy(emb.sparkSession, emb)
-      .crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("anchor_id"))
-      .select(
-        col("anchor_id"),
-        col("vec_id").as("negative_id"),
-        cosine(col("probe_vec"), col("embedding")).as("cos_raw"))
+    val banded = VectorSearch.exactScan(Tables.fanoutIfHeavy(emb.sparkSession, emb),
+        VectorSearch.probes(emb, "anchor_id"), cosRaw, "anchor_id", "negative_id")
       .filter(col("cos_raw") >= lo && col("cos_raw") < hi)
-    val w = Window.partitionBy("anchor_id").orderBy(col("cos_raw").desc, col("negative_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    VectorSearch.topK(banded, col("cos_raw").desc, Some(k), "anchor_id", "negative_id")
       .select(col("anchor_id"), col("rnk").cast("long").as("rnk"),
         col("negative_id"), round(col("cos_raw"), 6).as("cosine"))
       .orderBy("anchor_id", "rnk")
@@ -919,52 +831,24 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
     val corpusN = emb.count()
     val centers = IvfIndex.centroids(spark, dir, NumLists)
-    val assigned = emb.select(
-      col("vec_id"), col("embedding"),
-      explode(graft.functions.VectorFunctions.nearest_centroids(
-        col("embedding"), centers, SpillAssign)).as("list_id"))
-    val probeRows = emb.filter(col("vec_id") < NumProbes)
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    def dist2(a: Array[Float], c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - c(i); s += d * d; i += 1 }
-      s
-    }
     import spark.implicits._
     // every probe's centroid ranking once — nprobe=n is then lrank ≤ n
-    val probeListRanks = probeRows.flatMap { case (pid, vec) =>
-      centers.zipWithIndex
-        .map { case (c, li) => (li, dist2(vec, c)) }
-        .sortBy(_._2).take(NprobeSweep.max)
-        .zipWithIndex.map { case ((li, _), r) => (pid, li, r + 1) }
-    }.toSeq.toDF("probe_id", "list_id", "lrank")
-    val probes = emb.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
-      .join(probeListRanks, Seq("probe_id"))
+    val probeListRanks = VectorSearch.probeLists(emb, centers, NprobeSweep.max)
+      .toDF("probe_id", "list_id", "lrank")
+    val probes = VectorSearch.probes(emb).join(probeListRanks, Seq("probe_id"))
     // one scored candidate stream, each with its BEST list rank
-    val cand = assigned.join(broadcast(probes), Seq("list_id"))
-      .filter(col("vec_id") =!= col("probe_id"))
+    val cand = spilled(emb, centers).join(broadcast(probes), Seq("list_id"))
+      .filter(VectorSearch.notSelf())
       .groupBy(col("probe_id"), col("vec_id").as("neighbor_id"))
       .agg(min(col("lrank")).as("lrank"),
         max(cosine(col("probe_vec"), col("embedding"))).as("cos_raw"))
     // the exact twin (q29 arithmetic) as a (probe, neighbor) top-k set
-    val exactScored = graft.core.Tables.fanoutIfHeavy(emb.sparkSession, emb)
-      .crossJoin(broadcast(
-        emb.filter(col("vec_id") < NumProbes)
-          .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("probe_vec"), col("embedding")).as("cos_raw"))
-    val wEx = Window.partitionBy("probe_id").orderBy(col("cos_raw").desc, col("neighbor_id"))
-    val exact = exactScored.withColumn("rnk", row_number().over(wEx))
-      .filter(col("rnk") <= TopK).select("probe_id", "neighbor_id")
+    val exact = VectorSearch.topK(VectorSearch.exactScan(
+        Tables.fanoutIfHeavy(emb.sparkSession, emb), VectorSearch.probes(emb), cosRaw),
+      col("cos_raw").desc).select("probe_id", "neighbor_id")
     // per-nprobe branch: filter by rank, re-rank, intersect with exact
     val branches = NprobeSweep.map { n =>
-      val w = Window.partitionBy("probe_id").orderBy(col("cos_raw").desc, col("neighbor_id"))
-      val topkN = cand.filter(col("lrank") <= n)
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= TopK)
+      val topkN = VectorSearch.topK(cand.filter(col("lrank") <= n), col("cos_raw").desc)
       val hits = topkN.join(exact, Seq("probe_id", "neighbor_id"), "left_semi")
         .agg(count(lit(1)).as("sum_hits")).select(lit(n).as("nprobe"), col("sum_hits"))
       val maxCand = cand.filter(col("lrank") <= n)

@@ -16,7 +16,7 @@ import graft.core.{Sessions, Tables}
   * 10% of the fact table": the hot key's rows spread over `saltBuckets`
   * reducers instead of melting one.
   */
-object Skew {
+object Skew extends graft.QueryModule {
 
   /** Inner equi-join with a salted key: the (big, skewed) left side gets
     * a per-row salt derived from xxhash64 over ALL of its columns; the

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Sessions
+import VectorSearch.{NumProbes, TopK}
 
 /** SCALAR-QUANTIZED (SQ8) similarity search — the third leg of the
   * quantized-retrieval family: q88 measures what int8 storage costs in
@@ -36,12 +37,7 @@ import graft.core.{Sessions, Tables}
   * window, identical to the exact baseline's. At 100 TB the asymmetric
   * scan reads 1/4 the bytes of the float store — that byte ratio, not
   * the op count, is what SQ buys. */
-object Sq {
-
-  /** Probe/result sizes — shared with the PQ gates so the recall
-    * numbers are comparable across the family. */
-  val NumProbes: Int = Pq.NumProbes
-  val TopK: Int = Pq.TopK
+object Sq extends graft.QueryModule {
 
   /** Truncate-toward-zero integer division of `a` by positive `b`:
     * `(a − a % b) / b`. Spark's `%` keeps the dividend's sign, so the
@@ -64,46 +60,17 @@ object Sq {
         transform(em, e => tdiv(tdiv(e * 127, col("sc")) * col("sc"), lit(127L))))
   }
 
-  private def d2(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, x) => acc + x)
-
-  /** The PRODUCTION SQ8 search: asymmetric top-[[TopK]] per probe over
-    * the reconstructed store (full-precision probe vs int8-coded
+  /** Exact int-L2 top-[[TopK]] `(probe_id, neighbor_id, d)` of `q`'s
+    * probes over the `vec` column of `store`: `q`'s own `em` (the exact
+    * twin, the recall reference) or [[reconstructedOf]]'s `recon` (the
+    * PRODUCTION SQ8 search — full-precision probe vs the int8-coded
     * database side). */
-  private[graft] def sqTopK(spark: SparkSession, dir: String): DataFrame =
-    sqTopKOf(spark, KMeans.quantized(spark, dir))
-
-  private[graft] def sqTopKOf(spark: SparkSession, q: DataFrame): DataFrame = {
-    import spark.implicits._
-    val r = reconstructedOf(q)
-    val probes = q.filter(col("vec_id") < NumProbes).collect()
-      .map(row => (row.getLong(0), row.getSeq[Long](1).toArray)).toSeq
-    val pDf = broadcast(probes.toDF("probe_id", "pv"))
-    val scored = r.crossJoin(pDf)
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), d2(col("recon"), col("pv")).as("d"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("probe_id").orderBy(col("d"), col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TopK)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("d"))
-  }
-
-  /** Exact int-L2 top-k twin over a quantized frame (the recall
-    * reference inside [[sqGateOver]]). */
-  private def exactTopKOf(spark: SparkSession, q: DataFrame): DataFrame = {
-    import spark.implicits._
-    val probes = q.filter(col("vec_id") < NumProbes).collect()
-      .map(row => (row.getLong(0), row.getSeq[Long](1).toArray)).toSeq
-    val pDf = broadcast(probes.toDF("probe_id", "pv"))
-    val scored = q.crossJoin(pDf)
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), d2(col("em"), col("pv")).as("d"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("probe_id").orderBy(col("d"), col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= TopK)
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
+  private[graft] def l2TopKOf(spark: SparkSession, q: DataFrame, store: DataFrame,
+      vec: String): DataFrame = {
+    val pDf = VectorSearch.intProbeFrame(spark, VectorSearch.intProbes(q))
+    VectorSearch.topK(
+      VectorSearch.exactScan(store, pDf, Seq(VectorSearch.l2(col(vec), col("pv")).as("d"))),
+      col("d")).select(col("probe_id"), col("neighbor_id"), col("d"))
   }
 
   /** q173 — the SQ8 SEARCH GATE, per probe: exact-result count, SQ-hit
@@ -118,8 +85,8 @@ object Sq {
   /** The gate over ANY quantized (vec_id, em) frame — also the
     * `sq_search()` TVF body. */
   private[graft] def sqGateOver(spark: SparkSession, q: DataFrame): DataFrame = {
-    val sq = sqTopKOf(spark, q)
-    val exact = exactTopKOf(spark, q)
+    val sq = l2TopKOf(spark, q, reconstructedOf(q), "recon")
+    val exact = l2TopKOf(spark, q, q, "em")
     val hits = sq.select(col("probe_id"), col("neighbor_id"))
       .join(exact, Seq("probe_id", "neighbor_id"), "left_semi")
       .groupBy("probe_id").agg(count(lit(1)).as("n_hits"))

@@ -28,7 +28,7 @@ import graft.core.{Sessions, Tables}
   * filters (`sql/sample_athena_queries.sql:33-44`); taxonomy routing is
   * the §2.9 extension family's curation leg.
   */
-object Taxonomy {
+object Taxonomy extends graft.QueryModule {
 
   /** Topic lexicons in TIE-BREAK ORDER (first listed wins a tie). The
     * fixture vocabulary is the synthetic query-engine wordlist, so the

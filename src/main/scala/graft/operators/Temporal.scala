@@ -18,7 +18,7 @@ import graft.core.{Sessions, Tables}
   * recent right row onto each left row) — O(n log n) per key instead of
   * the O(n·m) range join a naive `ON l.ts >= r.ts` would plan.
   */
-object Temporal {
+object Temporal extends graft.QueryModule {
 
   /** Generic as-of join: for each left row, the latest right row with
     * `rightTime <= leftTime` within the same key (inclusive, LEFT

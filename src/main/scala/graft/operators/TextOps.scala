@@ -17,7 +17,7 @@ import graft.core.{Sessions, Tables}
   * holds at 100 TB: per-document work scales linearly, and the only
   * synchronization points are the roll-ups.
   */
-object TextOps {
+object TextOps extends graft.QueryModule {
 
   /** Whitespace tokens with empties dropped — `split` + higher-order
     * `filter`, mirrored exactly by `list_filter(string_split(...))` on the

@@ -27,7 +27,7 @@ import graft.core.{Sessions, Tables}
   * structs per SESSION — state bounded by session length, never by
   * user history. Ties order by (ts, event_id) on both engines, so the
   * string is deterministic. */
-object Trajectory {
+object Trajectory extends graft.QueryModule {
 
   /** Session gap, minutes (fixture-calibrated: 480 min yields
     * multi-event sessions — mean 2.1, max 15 — on the synthetic

@@ -33,7 +33,7 @@ import graft.core.{Sessions, Tables}
   * ratios are truncating divisions of non-negative integers, and the
   * vote/agreement logic is pure integer CASE arithmetic in both
   * engines. */
-object WeakLabels {
+object WeakLabels extends graft.QueryModule {
 
   /** LF thresholds (fixture-calibrated: token count p10/50/90 =
     * 21/56/88; TTR micros p10/50/90 ≈ 321k/462k/750k; filler micros

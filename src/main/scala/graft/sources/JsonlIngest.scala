@@ -19,7 +19,7 @@ import graft.core.{Sessions, Tables, TableVersion}
   * Schema is explicit, never inferred: at 100 TB, inference is a full
   * extra pass over the corpus before the first real one.
   */
-object JsonlIngest {
+object JsonlIngest extends graft.QueryModule {
 
   val CorruptMod = 41L
   val CorruptRem = 3L

@@ -47,7 +47,7 @@ import graft.operators.{Admission, Dedup}
   * [[Admission.verdictsOver]] — the shared expression, so stream ≡
   * batch by construction and both gate on the same full-value oracle.
   */
-object AdmissionStream {
+object AdmissionStream extends graft.QueryModule {
 
   /** q235 — the q234 admission verdicts produced by the streaming
     * screen: identical rows, identical oracle. */

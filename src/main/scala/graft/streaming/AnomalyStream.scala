@@ -22,7 +22,7 @@ import graft.operators.Analytics
   * day never produces a false drop alarm — the reason a naive batch
   * q155 over a live table pages on every midnight rollover and this
   * shape doesn't. */
-object AnomalyStream {
+object AnomalyStream extends graft.QueryModule {
 
   /** q161 — streamed day counts (closed days only) → q155 verdicts. */
   def q161StreamAnomaly(spark: SparkSession, dir: String): DataFrame = {

@@ -26,7 +26,7 @@ import graft.operators.KMeans
   * Cites: Lloyd 1982; the ingest-side companion of SURVEY §2.9's
   * similarity-search family (q130/q43/q69).
   */
-object AssignStream {
+object AssignStream extends graft.QueryModule {
 
   /** q135 — each arriving embedding quantized and assigned to its
     * nearest trained centroid: (vec_id, cluster, d). */

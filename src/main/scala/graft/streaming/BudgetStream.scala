@@ -28,7 +28,7 @@ import graft.operators.{Sampling, TextOps}
   * DuckDB-checkable: the oracle is q121's windowed SQL verbatim — a full
   * hash-match, stronger than the verdict-gate form the engine-hash
   * streaming queries need. */
-object BudgetStream {
+object BudgetStream extends graft.QueryModule {
 
   // private[streaming], not private: the Catalyst-generated deserializer
   // constructs these from outside the object (janino rejects a

@@ -26,7 +26,7 @@ import graft.core.Sessions
   * q166 convention for converging update streams through an
   * append-mode file drain).
   */
-object CdcStream {
+object CdcStream extends graft.QueryModule {
 
   private[graft] case class OpRow(
       user_id: Long, event_id: Long, ts_us: Long, del: Boolean, cents: Long)

@@ -24,7 +24,7 @@ import graft.operators.{Classify, TextOps}
   * Scoring is stateless row-local column math — no watermark, no state
   * store, the firehose never shuffles. Admission keeps predicted-HQ
   * documents (score ≥ 0, the same decision line as q151's `pred_hq`). */
-object ClassifyStream {
+object ClassifyStream extends graft.QueryModule {
 
   /** q152 — streamed admission over `dir`'s documents table.
     *

@@ -33,7 +33,7 @@ import graft.operators.{Cms, Dedup}
   * (`sql/sample_athena_queries.sql` is exact GROUP BYs); this is the
   * §2.9 extension family's streaming leg.
   */
-object CmsStream {
+object CmsStream extends graft.QueryModule {
 
   private[streaming] case class CellRow(cell: Int)
   private[streaming] case class CellCount(cell: Int, n: Long)

@@ -25,7 +25,7 @@ import graft.operators.Multimodal.{ImageAsset, ImageFixture}
   * the generating formula against the whole in-stream encode→decode
   * chain, per document.
   */
-object DecodeStream {
+object DecodeStream extends graft.QueryModule {
 
   /** q148 — each arriving payload decoded and audited: (doc_id, format,
     * width, height, n_pixels, sum_gray) from the real decoded raster. */

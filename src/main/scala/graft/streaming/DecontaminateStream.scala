@@ -39,7 +39,7 @@ import graft.operators.Dedup
   * ([[Dedup.shingleArray]]), so the row-local membership count IS
   * `count(DISTINCT shared)`.
   */
-object DecontaminateStream {
+object DecontaminateStream extends graft.QueryModule {
 
   /** The eval slice's sorted shingle-hash probe array: built from the
     * batch signature stage (one corpus pass, already cached per corpus

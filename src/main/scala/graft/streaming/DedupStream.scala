@@ -39,7 +39,7 @@ import graft.operators.Dedup
   * of candidates is batch work over the flagged minority
   * ([[Dedup.jaccardPairs]]), exactly as q27 verifies the batch candidates.
   */
-object DedupStream {
+object DedupStream extends graft.QueryModule {
 
   private[streaming] val docSchema = StructType(Seq(
     StructField("doc_id", LongType),

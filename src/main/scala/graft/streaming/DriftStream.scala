@@ -26,7 +26,7 @@ import graft.operators.{Corpus, Drift, KMeans, SnapshotFixture}
   * oracle machinery gates this query value-for-value (reference = the
   * v1 snapshot, live = the full corpus).
   */
-object DriftStream {
+object DriftStream extends graft.QueryModule {
 
   private[streaming] case class BucketRow(bucket: Long)
   private[streaming] case class BucketCount(bucket: Long, n: Long)

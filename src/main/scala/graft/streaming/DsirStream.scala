@@ -28,7 +28,7 @@ import graft.operators.{Sampling, TextOps}
   * drained stream is directly DuckDB-hash-checkable — the oracle replays
   * model training AND per-doc scoring from SQL (no verdict gate
   * needed). */
-object DsirStream {
+object DsirStream extends graft.QueryModule {
 
   /** Unigram + adjacent-bigram feature array from a token array. */
   private def featureArray(toks: Column): Column =

@@ -21,7 +21,7 @@ import graft.core.Sessions
   * then stops — the cron-driven incremental pattern (the reference's
   * daily batch, made exactly-once).
   */
-object EventStream {
+object EventStream extends graft.QueryModule {
 
   /** Normalize an events frame's `ts` to micro-precision TimestampType,
     * whatever the physical layout was: raw int64 nanos (the driver's

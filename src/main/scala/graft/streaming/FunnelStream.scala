@@ -27,7 +27,7 @@ import graft.core.Sessions
   * funnel equals the batch funnel exactly and the oracle is q84's SQL
   * verbatim.
   */
-object FunnelStream {
+object FunnelStream extends graft.QueryModule {
 
   /** `ts` is event time in MICROS ([[EventStream.normalizeTs]] grain). */
   case class EventRow(ts: Long, user_id: Long, event_type: String)

@@ -33,7 +33,7 @@ import graft.operators.TextOps
   * each shard's latest version, so multi-batch drains converge to the
   * final state without needing an end-of-stream hook.
   */
-object HeavyHittersStream {
+object HeavyHittersStream extends graft.QueryModule {
 
   /** Token-hash shard count (parallelism of the sketch stage). */
   val Shards = 8

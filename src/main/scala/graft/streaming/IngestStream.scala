@@ -16,7 +16,7 @@ import graft.sources.JsonlIngest
   * the drained landing — the production split of duties: the stream
   * moves and tags bytes, batch analytics read the result.
   */
-object IngestStream {
+object IngestStream extends graft.QueryModule {
 
   /** q108 — drain the JSONL corpus through the quarantine-tagging stream
     * and report per-source line counts + valid character mass; corrupt

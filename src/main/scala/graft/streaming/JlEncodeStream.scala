@@ -21,7 +21,7 @@ import graft.operators.RandomProjection
   * batch projection of every vector, so the query carries a FULL value
   * oracle (the same LCG sign bit and `list_dot_product` left fold as
   * q217's). */
-object JlEncodeStream {
+object JlEncodeStream extends graft.QueryModule {
 
   /** q219 — each arriving embedding's k-dim JL sketch, one row per
     * output dimension. */

@@ -25,7 +25,7 @@ import graft.operators.Outlier
   * machinery gates this query value-for-value. Stateless row-local
   * math: no watermark, no state store.
   */
-object OutlierStream {
+object OutlierStream extends graft.QueryModule {
 
   /** q195 — streamed outlier screen over `dir`'s embeddings. */
   def q195StreamOutlierScreen(spark: SparkSession, dir: String): DataFrame = {

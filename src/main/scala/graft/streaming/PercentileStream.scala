@@ -23,7 +23,7 @@ import graft.operators.{ScoreNorm, TextOps}
   * corpus drops — inner-join semantics, the frozen-calibration
   * contract), so the query carries q218's full value oracle verbatim
   * (the q62/q167 shared-text convention). */
-object PercentileStream {
+object PercentileStream extends graft.QueryModule {
 
   /** q224 — each arriving document's within-source score percentile. */
   def q224StreamPercentileScreen(spark: SparkSession, dir: String): DataFrame = {

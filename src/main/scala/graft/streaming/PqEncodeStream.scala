@@ -27,7 +27,7 @@ import graft.operators.{KMeans, Pq}
   * Cites: Jégou, Douze & Schmid 2011 §II-III (codebook + encode);
   * completes the ingest half of SURVEY §2.9's PQ family (q136/q140).
   */
-object PqEncodeStream {
+object PqEncodeStream extends graft.QueryModule {
 
   /** q141 — each arriving embedding quantized and PQ-encoded:
     * (vec_id, codes_packed: the M=8 4-bit codes folded big-endian into

@@ -22,7 +22,7 @@ import graft.operators.Purge
   * full post-purge table — the q202 `documents` surface at row grain
   * rather than count grain.
   */
-object PurgeStream {
+object PurgeStream extends graft.QueryModule {
 
   /** q238 — at-ingest tombstone screen over `dir`'s documents: the
     * surviving (doc_id, source, n_chars) rows. */

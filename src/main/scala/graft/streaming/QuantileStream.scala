@@ -28,7 +28,7 @@ import graft.operators.QuantileSketch
   * batch recount) + the rank-budget verdicts on the STREAMED
   * estimates. Estimates are summary- and arrival-order-internal; the
   * bound is the contract, exactly as in q182. */
-object QuantileStream {
+object QuantileStream extends graft.QueryModule {
 
   private[streaming] case class EvRow(event_type: String, cents: Long)
   private[streaming] case class EstOut(

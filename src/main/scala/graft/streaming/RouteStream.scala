@@ -19,7 +19,7 @@ import graft.operators.Taxonomy
   * column expression as batch), so the drained admission equals the
   * batch tagging minus the 'none' rows, and the q184 oracle machinery
   * gates this query at per-document grain. */
-object RouteStream {
+object RouteStream extends graft.QueryModule {
 
   /** q190 — streamed routing over `dir`'s documents table. */
   def q190StreamTopicRoute(spark: SparkSession, dir: String): DataFrame = {

@@ -19,7 +19,7 @@ import graft.operators.Trajectory
   * gate the assembly; the emission set follows the q44 convention
   * (sessions whose last event is at least gap + watermark-delay before
   * the stream's max timestamp). */
-object TrajectoryStream {
+object TrajectoryStream extends graft.QueryModule {
 
   /** q208 — streamed session assembly over `dir`'s event firehose. */
   def q208StreamTrajectories(spark: SparkSession, dir: String): DataFrame = {

@@ -39,7 +39,7 @@ import graft.operators.Trajectory
   * constants/definitions with [[Trajectory.rareOver]], so both gate on
   * the same full-value oracle.
   */
-object TransitionStream {
+object TransitionStream extends graft.QueryModule {
 
   private[streaming] case class Ev(
       user_id: Long, event_id: Long, ts_us: Long, event_type: String)

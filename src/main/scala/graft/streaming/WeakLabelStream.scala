@@ -17,7 +17,7 @@ import graft.operators.WeakLabels
   * SAME expression chain as batch), so the drained stream equals the
   * batch per-document label frame and the shared CTE chain
   * ([[WeakLabels.perDocOracleSql]]) gates it at per-document grain. */
-object WeakLabelStream {
+object WeakLabelStream extends graft.QueryModule {
 
   /** q204 — streamed LF voting over `dir`'s documents table. */
   def q204StreamWeakLabels(spark: SparkSession, dir: String): DataFrame = {

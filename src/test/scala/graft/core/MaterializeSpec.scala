@@ -36,6 +36,17 @@ class MaterializeSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.materialize")
   }
 
+  test("truncated runs persist mode as a local checkpoint; other modes unchanged") {
+    spark.conf.set("spark.graft.materialize", "persist")
+    try {
+      val m = Materialize.truncated(frame)
+      assert(executed(m).toString.contains("Scan ExistingRDD"))
+      assert(!executed(m).toString.contains("InMemoryTableScan"))
+      assert(m.orderBy("id").collect().map(_.getString(1)).toSeq == Seq("a", "b", "c"))
+    } finally spark.conf.unset("spark.graft.materialize")
+    assert(executed(Materialize.truncated(frame)).toString.contains("Scan ExistingRDD"))
+  }
+
   test("reliable mode checkpoints under spark.graft.checkpointDir") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec").toString
     spark.conf.set("spark.graft.materialize", "reliable")

@@ -1,7 +1,7 @@
 package graft.layout
 
 import graft.SparkSpec
-import graft.operators.Similarity
+import graft.operators.{Similarity, VectorSearch}
 
 class IvfLayoutSpec extends SparkSpec {
 
@@ -51,7 +51,7 @@ class IvfLayoutSpec extends SparkSpec {
 
   test("q194's verdict row is all-green") {
     val r = IvfLayout.q194IvfLayoutServe(spark, sf).collect()(0)
-    assert(r.getLong(0) == Similarity.NumProbes)
+    assert(r.getLong(0) == VectorSearch.NumProbes)
     assert(r.getBoolean(1) && r.getBoolean(2) && r.getBoolean(3))
   }
 }

@@ -162,6 +162,25 @@ class ClassifySpec extends SparkSpec {
     }
   }
 
+  test("withGlobalRank output no longer reaches the sort under persist mode") {
+    import spark.implicits._
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    val df = (1 to 200).map(i => (i.toLong, (i % 13).toLong)).toDF("id", "key")
+      .repartition(5)
+    spark.conf.set("spark.graft.materialize", "persist")
+    try {
+      val ranked = Classify.withGlobalRank(df, Seq(col("key"), col("id")), "rk")
+      // every RDD a lost block would be recomputed from; the only shuffle
+      // upstream of the ranks is the range-partitioned sort itself
+      def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+      val shuffles = lineage(ranked.queryExecution.toRdd)
+        .flatMap(_.dependencies).filter(_.isInstanceOf[ShuffleDependency[_, _, _]])
+      assert(shuffles.isEmpty, s"ranks can still recompute the sort: $shuffles")
+      assert(ranked.select("rk").as[Long].collect().sorted.toSeq == (1L to 200L))
+    } finally spark.conf.unset("spark.graft.materialize")
+  }
+
   test("q175: calibration deciles partition the corpus; rates ride the score order") {
     val rows = Classify.q175NbCalibration(spark, sf).collect()
     assert(rows.length == Classify.CalibBins)

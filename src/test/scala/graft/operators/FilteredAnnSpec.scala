@@ -27,7 +27,7 @@ class FilteredAnnSpec extends SparkSpec {
 
   test("q209 verdict row is all-green and the filter actually prunes") {
     val r = Similarity.q209FilteredAnn(spark, sf).collect()(0)
-    assert(r.getLong(r.fieldIndex("n_probes")) == Similarity.NumProbes)
+    assert(r.getLong(r.fieldIndex("n_probes")) == VectorSearch.NumProbes)
     assert(r.getBoolean(r.fieldIndex("recall_ok")))
     assert(r.getBoolean(r.fieldIndex("filter_selective")))
     val n = graft.core.Tables.embeddings(spark, sf).count()

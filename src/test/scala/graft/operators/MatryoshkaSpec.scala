@@ -12,13 +12,13 @@ class MatryoshkaSpec extends SparkSpec {
     assert(rows.keySet == Matryoshka.Dims.map(_.toLong).toSet)
     // the full-dim branch intersects itself: recall exactly 1
     val full = rows(Matryoshka.FullDim.toLong)
-    assert(full._2 == Matryoshka.NumProbes.toLong * Matryoshka.TopK)
+    assert(full._2 == VectorSearch.NumProbes.toLong * VectorSearch.TopK)
     assert(full._3 == 1000000L)
     // every row's hits bound and micro arithmetic
     rows.foreach { case (d, (np, hits, micro)) =>
-      assert(np == Matryoshka.NumProbes.toLong)
-      assert(hits >= 0 && hits <= np * Matryoshka.TopK)
-      assert(micro == hits * 1000000L / (np * Matryoshka.TopK), s"dim $d micro")
+      assert(np == VectorSearch.NumProbes.toLong)
+      assert(hits >= 0 && hits <= np * VectorSearch.TopK)
+      assert(micro == hits * 1000000L / (np * VectorSearch.TopK), s"dim $d micro")
     }
     // driver replay of one truncated branch: recompute d=8 hits from the
     // quantized store with the same (distance, vec_id) tie-break
@@ -31,8 +31,8 @@ class MatryoshkaSpec extends SparkSpec {
           while (i < d) { val df = v(i) - em(pid)(i); s += df * df; i += 1 }
           (s, vid)
         }
-        .sorted.take(Matryoshka.TopK).map(_._2)
-    val expectedHits = (0L until Matryoshka.NumProbes.toLong).map { pid =>
+        .sorted.take(VectorSearch.TopK).map(_._2)
+    val expectedHits = (0L until VectorSearch.NumProbes.toLong).map { pid =>
       (topk(8, pid).toSet & topk(Matryoshka.FullDim, pid).toSet).size.toLong
     }.sum
     assert(rows(8L)._2 == expectedHits, "d=8 branch replay")

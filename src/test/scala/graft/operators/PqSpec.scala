@@ -57,11 +57,11 @@ class PqSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1)))
     val exact = Pq.exactTopK(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    assert(adc.length == Pq.NumProbes * Pq.TopK)
-    assert(exact.length == Pq.NumProbes * Pq.TopK)
+    assert(adc.length == VectorSearch.NumProbes * VectorSearch.TopK)
+    assert(exact.length == VectorSearch.NumProbes * VectorSearch.TopK)
     val exactSet = exact.toSet
     val recalls = adc.groupBy(_._1).map { case (_, hits) =>
-      hits.count(exactSet.contains).toDouble / Pq.TopK
+      hits.count(exactSet.contains).toDouble / VectorSearch.TopK
     }
     // the gate floor holds with margin — if the measured minimum decays
     // toward the floor after a fixture change, re-pin before it flaps
@@ -71,17 +71,17 @@ class PqSpec extends SparkSpec {
 
     val gate = Pq.q140PqAdc(spark, sf).collect()
     assert(gate.length == 1)
-    assert(gate.head.getLong(0) == Pq.NumProbes)
-    assert(gate.head.getLong(1) == Pq.NumProbes * Pq.TopK)
+    assert(gate.head.getLong(0) == VectorSearch.NumProbes)
+    assert(gate.head.getLong(1) == VectorSearch.NumProbes * VectorSearch.TopK)
     assert(gate.head.getBoolean(2), "gate verdict false")
   }
 
   test("q143: IVF-PQ finds the neighbors while touching a bounded corpus slice") {
     val (topk, fracs) = Pq.ivfPqSearch(spark, sf)
     val tk = topk.collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(tk.length == Pq.NumProbes * Pq.TopK)
+    assert(tk.length == VectorSearch.NumProbes * VectorSearch.TopK)
     val fr = fracs.collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(fr.length == Pq.NumProbes)
+    assert(fr.length == VectorSearch.NumProbes)
     // the index must not degenerate into a full scan
     assert(fr.forall(_._2 <= Pq.MaxScanFraction),
       s"scan fractions ${fr.map(_._2).max} over bound")
@@ -89,7 +89,7 @@ class PqSpec extends SparkSpec {
     val exactSet = Pq.exactTopK(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recalls = tk.groupBy(_._1).map { case (_, hits) =>
-      hits.count(exactSet.contains).toDouble / Pq.TopK
+      hits.count(exactSet.contains).toDouble / VectorSearch.TopK
     }
     assert(recalls.min >= Pq.AdcRecallFloor,
       s"min per-probe recall ${recalls.min} under floor")

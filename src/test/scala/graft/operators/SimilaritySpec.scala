@@ -7,9 +7,9 @@ class SimilaritySpec extends SparkSpec {
   test("brute-force top-k returns TopK neighbors per probe, sorted") {
     val rows = Similarity.q29CosineTopK(spark, sf).collect()
     val byProbe = rows.groupBy(_.getLong(0))
-    assert(byProbe.size == Similarity.NumProbes)
+    assert(byProbe.size == VectorSearch.NumProbes)
     byProbe.foreach { case (_, rs) =>
-      assert(rs.length == Similarity.TopK)
+      assert(rs.length == VectorSearch.TopK)
       val cosines = rs.map(_.getDouble(2)).toSeq
       assert(cosines == cosines.sorted.reverse, "descending cosine order per probe")
     }
@@ -34,11 +34,11 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.count(ann.contains).toDouble / exact.size
     // single-probe sign-LSH: modest recall expected, zero means broken
-    assert(recall >= Similarity.LshRecallFloor, s"recall@${Similarity.TopK} = $recall")
+    assert(recall >= Similarity.LshRecallFloor, s"recall@${VectorSearch.TopK} = $recall")
     // the q30 gate row reports the same comparison in-plan
     val gate = Similarity.q30AnnLsh(spark, sf).collect()
     assert(gate.length == 1 && gate.head.getBoolean(2), s"gate verdict: ${gate.toSeq}")
-    assert(gate.head.getLong(0) == Similarity.NumProbes)
+    assert(gate.head.getLong(0) == VectorSearch.NumProbes)
     assert(gate.head.getLong(1) == exact.size)
   }
 
@@ -265,7 +265,7 @@ class SimilaritySpec extends SparkSpec {
     val gate = Similarity.q43AnnIvf(spark, sf).collect()
     assert(gate.length == 1 && gate.head.getBoolean(2),
       s"gate verdict must confirm recall ≥ ${Similarity.IvfRecallFloor}: ${gate.toSeq}")
-    assert(gate.head.getLong(0) == Similarity.NumProbes)
+    assert(gate.head.getLong(0) == VectorSearch.NumProbes)
     assert(gate.head.getLong(1) == exact.size)
     // operating point: recall ≥ 0.8 at nprobe × spill / nlist =
     // 4 × 2 / 32 = 25% expected scan fraction — spill-to-2nd-nearest
@@ -273,7 +273,7 @@ class SimilaritySpec extends SparkSpec {
     // buying recall with index size instead of scan budget
     assert(Similarity.NumProbeLists.toDouble * Similarity.SpillAssign / Similarity.NumLists
       <= 0.25, "expected scan fraction must stay ≤ 25%")
-    assert(recall >= 0.8, s"IVF recall@${Similarity.TopK} = $recall")
+    assert(recall >= 0.8, s"IVF recall@${VectorSearch.TopK} = $recall")
   }
 
   test("native cosine expression is bit-identical to the fold form") {
@@ -337,7 +337,7 @@ class SimilaritySpec extends SparkSpec {
     val rows = Similarity.q156HardNegatives(spark, sf).collect()
     assert(rows.nonEmpty)
     val byAnchor = rows.groupBy(_.getLong(0))
-    assert(byAnchor.keySet == (0L until Similarity.NumProbes).toSet)
+    assert(byAnchor.keySet == (0L until VectorSearch.NumProbes).toSet)
     byAnchor.foreach { case (a, rs) =>
       assert(rs.length <= Similarity.HnK)
       // driver replay of the band + ranking
@@ -385,8 +385,8 @@ class SimilaritySpec extends SparkSpec {
     val rows = Similarity.q162NprobeSweep(spark, sf).collect()
     assert(rows.map(_.getLong(0)).toSeq == Similarity.NprobeSweep.map(_.toLong))
     rows.foreach { r =>
-      assert(r.getLong(1) == Similarity.NumProbes.toLong)
-      assert(r.getLong(2) == (Similarity.NumProbes * Similarity.TopK).toLong)
+      assert(r.getLong(1) == VectorSearch.NumProbes.toLong)
+      assert(r.getLong(2) == (VectorSearch.NumProbes * VectorSearch.TopK).toLong)
       assert(r.getBoolean(3), s"nprobe ${r.getLong(0)}: recall below floor")
       assert(r.getBoolean(4), s"nprobe ${r.getLong(0)}: recall not monotone")
       assert(r.getBoolean(5), s"nprobe ${r.getLong(0)}: candidate set not bounded")

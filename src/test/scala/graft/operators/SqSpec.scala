@@ -30,9 +30,9 @@ class SqSpec extends SparkSpec {
 
   test("q173: SQ8 search recalls the exact top-k on the fixture corpus") {
     val rows = Sq.q173SqAdc(spark, sf).collect()
-    assert(rows.length == Sq.NumProbes)
+    assert(rows.length == VectorSearch.NumProbes)
     rows.foreach { r =>
-      assert(r.getLong(1) == Sq.TopK.toLong)
+      assert(r.getLong(1) == VectorSearch.TopK.toLong)
       // SQ8 at 4x compression should be near-exact; the fixture measures 1.0
       assert(r.getLong(3) >= 800000L,
         s"probe ${r.getLong(0)} recall ${r.getLong(3)} below the SQ8 expectation")
