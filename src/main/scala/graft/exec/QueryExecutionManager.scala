@@ -2,11 +2,21 @@ package graft.exec
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import scala.concurrent.{ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.CommandResult
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
+
+import graft.core.Plans.planNodes
 
 /** Query-execution lifecycle manager (SURVEY §3.3): reproduces the
   * observable Athena API the reference drives —
@@ -29,6 +39,9 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
   import QueryExecutionManager._
 
   private val states = new ConcurrentHashMap[String, ExecutionState]()
+  /** Released when an execution leaves RUNNING: by its submit Future's
+    * `finally`, or by a successful [[cancel]]. */
+  private val finished = new ConcurrentHashMap[String, CountDownLatch]()
 
   Files.createDirectories(Paths.get(resultsDir))
 
@@ -50,6 +63,8 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     * it) — under FIFO the pool property is recorded but inert. */
   def submit(sql: String, workgroup: String = DefaultWorkgroup): String = {
     val id = UUID.randomUUID().toString
+    val latch = new CountDownLatch(1)
+    finished.put(id, latch)
     states.put(id, ExecutionState(id, sql, Status.Running, None, workgroup))
     Future {
       // job group is thread-local on the SparkContext: set it on the
@@ -77,6 +92,7 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
         // artifacts — a cancelled execution must not surface results
         if (Option(states.get(id)).exists(_.status == Status.Cancelled))
           deleteArtifacts(id)
+        latch.countDown()
       }
     }
     id
@@ -99,19 +115,20 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     states.computeIfPresent(id, (_, s) =>
       if (s.status == Status.Running) { transitioned = true; s.copy(status = Status.Cancelled) }
       else s)
-    if (transitioned) spark.sparkContext.cancelJobGroup(id)
+    if (transitioned) {
+      spark.sparkContext.cancelJobGroup(id)
+      Option(finished.get(id)).foreach(_.countDown())
+    }
     transitioned
   }
 
-  /** Blocking helper for clients that want the poll loop collapsed. */
+  /** Blocking helper for clients that want the poll loop collapsed:
+    * wakes as soon as the execution leaves RUNNING and returns its
+    * state — still RUNNING if `timeoutMs` passes first (null for an
+    * unknown id). */
   def await(id: String, timeoutMs: Long = 60000L): ExecutionState = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var st = states.get(id)
-    while (st != null && st.status == Status.Running && System.currentTimeMillis() < deadline) {
-      Thread.sleep(50L)
-      st = states.get(id)
-    }
-    st
+    Option(finished.get(id)).foreach(_.await(timeoutMs, TimeUnit.MILLISECONDS))
+    states.get(id)
   }
 
   /** One page of `get_query_results`: header + stringified cells (the
@@ -128,7 +145,9 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     * over the artifact, not the O(P²) rescans that `offset(start)` over
     * a CSV costs (each page re-reading every row before it). Pre-parquet
     * artifacts (or a query whose own schema uses the index column name)
-    * fall back to the CSV offset path. */
+    * fall back to the CSV offset path. Each page is one Spark job: the
+    * page schema comes from the metadata sidecar (no footer inference)
+    * and its rows are ordered within one partition (no range sort). */
   def resultsPage(id: String, maxRows: Int = 1000, pageToken: Option[String] = None)
       : Option[ResultPage] = {
     // malformed/negative tokens are invalid requests, not crashes —
@@ -150,15 +169,16 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
   /** The lazy frame for one page — exposed for plan-shape specs (the
     * O(P)-walk property IS the pushed row-index predicate). */
   private[exec] def pageFrame(id: String, start: Int, maxRows: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
     val pages = Paths.get(resultsDir, s"$id$PagesSuffix")
     val csv = Paths.get(resultsDir, s"$id.csv")
-    if (Files.exists(pages)) {
-      val df = spark.read.parquet(pages.toString)
-      Some(df.filter(col(RowIdx) >= start.toLong && col(RowIdx) < start.toLong + maxRows)
-        .orderBy(RowIdx).drop(RowIdx))
+    // the sidecar is written last: pages without one are not a finished
+    // execution's
+    if (Files.exists(pages)) metadata(id).map { meta =>
+      val schema = DataType.fromJson(meta.get("schema").toString).asInstanceOf[StructType]
+      inRowOrder(readPages(pages.toString, schema)
+        .filter(col(RowIdx) >= start.toLong && col(RowIdx) < start.toLong + maxRows))
     } else if (Files.exists(csv)) {
-      val df = spark.read.option("header", "true").csv(csv.toString)
+      val df = spark.read.options(CsvHeader).csv(csv.toString)
       Some(df.offset(start).limit(maxRows))
     } else None
   }
@@ -168,14 +188,18 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     * `data_pipeline_stack.py:161` `publishCloudWatchMetrics`): rows
     * produced, wall time, and bytes actually scanned by the plan's file
     * sources. */
-  def stats(id: String): Option[ExecutionStats] = {
-    val p = Paths.get(resultsDir, s"$id.csv.metadata")
-    if (!Files.exists(p)) return None
-    val meta = Files.readString(p)
+  def stats(id: String): Option[ExecutionStats] = metadata(id).flatMap { meta =>
     def num(field: String): Option[Long] =
-      (s""""$field":(-?\\d+)""").r.findFirstMatchIn(meta).map(_.group(1).toLong)
+      Option(meta.get(field)).filter(_.isIntegralNumber).map(_.asLong)
     for (n <- num("rowCount"); d <- num("durationMs"); b <- num("bytesScanned"))
       yield ExecutionStats(n, d, b)
+  }
+
+  /** The parsed `.metadata` sidecar; None until it is fully written. */
+  private def metadata(id: String): Option[JsonNode] = {
+    val p = Paths.get(resultsDir, s"$id.csv.metadata")
+    if (!Files.exists(p)) None
+    else Try(Json.readTree(Files.readString(p))).toOption.filter(_.isObject)
   }
 
   /** Convenience full-result walk over [[resultsPage]] — test/demo scale
@@ -197,41 +221,37 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     Files.deleteIfExists(Paths.get(resultsDir, s"$id.csv.metadata"))
   }
 
-  /** Two passes over the plan, zero result pinning: pass 1 executes the
-    * query's OWN physical plan (`toRdd.count`) — that run populates the
-    * plan's SQLMetrics, which is where the true bytes-scanned figure
-    * lives — and pass 2 writes the row-indexed parquet page artifact.
-    * The CSV twin is then derived from the parquet (a local file copy,
-    * not a third plan execution). The previous shape (`cache()` the
-    * result between count and write) pinned an unbounded result set in
-    * executor memory — exactly the thing this surface must never do at
-    * 100 TB; two plan executions cost time, not correctness or memory.
-    * The two executions CAN disagree on rows for a non-deterministic
-    * query (LIMIT without ORDER BY), so the metadata rowCount is taken
-    * from the WRITTEN artifact — re-read locally, already loaded for the
-    * CSV twin — never from the metrics pass. */
+  /** One execution of the query's plan, and no shuffle after it. The
+    * row-indexed parquet page artifact is written as a command whose
+    * executed plan is kept ([[writeOnce]]): that write IS the execution.
+    * Its write node's `numOutputRows` is the metadata rowCount — the
+    * rows actually written, so a non-deterministic query (LIMIT without
+    * ORDER BY) cannot disagree with its own artifact — and `scanBytes`
+    * over the same executed plan is bytesScanned. The CSV twin is read
+    * back from the pages with the known schema and ordered within its
+    * one partition: a local sort over the artifact, not a second run of
+    * the plan. Nothing is cached between the two, so a result set is
+    * never pinned in executor memory. A query whose own schema uses the
+    * index column name is written CSV-only, through the same one write. */
   private def writeArtifacts(id: String, sql: String, df: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
     val t0 = System.nanoTime()
-    val exec = df.queryExecution
-    exec.toRdd.count() // metrics pass only: populates SQLMetrics for scanBytes
-    val bytesScanned = scanBytes(exec.executedPlan)
     val target = Paths.get(resultsDir, s"$id.csv").toString
-    val pages = Paths.get(resultsDir, s"$id$PagesSuffix").toString
-    val n = if (df.columns.contains(RowIdx)) {
-      // index-column collision: serve this execution CSV-only
-      df.coalesce(1).write.option("header", "true").mode("overwrite").csv(target)
-      spark.read.option("header", "true").csv(target).count()
+    val written = if (df.columns.contains(RowIdx)) {
+      writeOnce(df.coalesce(1), "csv", target, CsvHeader)
     } else {
       // single partition ⇒ monotonically_increasing_id is 0..n-1 in
       // artifact row order, the paging key
-      df.coalesce(1).withColumn(RowIdx, monotonically_increasing_id())
-        .write.mode("overwrite").parquet(pages)
-      val written = spark.read.parquet(pages)
-      written.orderBy(RowIdx).drop(RowIdx)
-        .coalesce(1).write.option("header", "true").mode("overwrite").csv(target)
-      written.count()
+      val pages = Paths.get(resultsDir, s"$id$PagesSuffix").toString
+      val write = writeOnce(
+        df.coalesce(1).withColumn(RowIdx, monotonically_increasing_id()), "parquet", pages)
+      inRowOrder(readPages(pages, df.schema))
+        .write.options(CsvHeader).mode("overwrite").csv(target)
+      write
     }
+    val n = planNodes(written).collectFirst {
+      case w: DataWritingCommandExec => w.metrics("numOutputRows").value
+    }.getOrElse(throw new IllegalStateException(s"no write node in\n$written"))
+    val bytesScanned = scanBytes(written)
     val durationMs = (System.nanoTime() - t0) / 1000000L
     val schemaJson = df.schema.json
     val meta =
@@ -242,6 +262,26 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
          |"completedAt":"${java.time.Instant.now()}"}""".stripMargin
     Files.writeString(Paths.get(resultsDir, s"$id.csv.metadata"), meta)
   }
+
+  /** Runs `df`'s plan exactly once, as an overwrite of `path` in
+    * `format`, and returns the executed write plan — its SQLMetrics are
+    * populated by that one run. */
+  private def writeOnce(df: DataFrame, format: String, path: String,
+      options: Map[String, String] = Map.empty): SparkPlan = {
+    val cmd = DataSource(spark, format, options = options + ("path" -> path))
+      .planForWriting(SaveMode.Overwrite, df.queryExecution.commandExecuted)
+    spark.sessionState.executePlan(cmd).commandExecuted
+      .asInstanceOf[CommandResult].commandPhysicalPlan
+  }
+
+  /** The page artifact, read with the schema its execution recorded. */
+  private def readPages(pages: String, schema: StructType): DataFrame =
+    spark.read.schema(schema.add(RowIdx, LongType)).parquet(pages)
+
+  /** Page-artifact rows in artifact order, index column dropped: one
+    * partition sorted locally, so no range-sampling job and no exchange. */
+  private def inRowOrder(pages: DataFrame): DataFrame =
+    pages.coalesce(1).sortWithinPartitions(RowIdx).drop(RowIdx)
 }
 
 object QueryExecutionManager {
@@ -249,6 +289,8 @@ object QueryExecutionManager {
   /** Row-index column of the parquet page artifact. */
   private[exec] val RowIdx = "__graft_row"
   private[exec] val PagesSuffix = ".pages.parquet"
+  private val CsvHeader = Map("header" -> "true")
+  private val Json = new ObjectMapper()
 
   /** Workgroup a submission lands in when none is named — the
     * reference's own default workgroup name. */
@@ -259,19 +301,9 @@ object QueryExecutionManager {
   private[exec] def poolName(workgroup: String): String = s"graft_wg_$workgroup"
 
   /** Sum of "size of files read" over every file-source scan in an
-    * EXECUTED plan, recursing through AQE stage boundaries (a
-    * `plan.collect` misses scans inside materialized query stages —
-    * same trap as `BucketedLayout.collectExchanges`). */
-  private[exec] def scanBytes(plan: org.apache.spark.sql.execution.SparkPlan): Long = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def nodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case other => other +: other.children.flatMap(nodes)
-    }
-    nodes(plan).flatMap(_.metrics.get("filesSize")).map(_.value).sum
-  }
+    * EXECUTED plan, including scans inside AQE query stages. */
+  private[exec] def scanBytes(plan: SparkPlan): Long =
+    planNodes(plan).flatMap(_.metrics.get("filesSize")).map(_.value).sum
 
   /** Engine metrics for one finished execution (the CloudWatch-workgroup
     * analogue): see [[QueryExecutionManager.stats]]. */

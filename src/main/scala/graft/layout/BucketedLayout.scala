@@ -2,10 +2,9 @@ package graft.layout
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.Exchange
 
-import graft.core.Tables
+import graft.core.{Plans, Tables}
 
 /** Physical-layout manager: bucketed fact tables for shuffle-free
   * co-located joins (the 100 TB design lever the flat parquet fixtures
@@ -83,19 +82,12 @@ object BucketedLayout extends graft.QueryModule {
   }
 
   /** Exchange nodes in an executed plan, INCLUDING those hidden inside
-    * AQE query stages — `plan.collect` alone misses them because
-    * [[QueryStageExec]] is a leaf whose materialized subtree hangs off
-    * `.plan`, not `children` (a silent false-negative for any
-    * "is this shuffle-free?" assertion). */
-  def collectExchanges(plan: SparkPlan): Seq[String] = plan match {
-    case a: AdaptiveSparkPlanExec => collectExchanges(a.executedPlan)
-    // recurse through stage boundaries; the stage wrapper itself is only
-    // a shuffle if its materialized subtree starts with an Exchange
-    // (ResultQueryStage wraps the final stage and is not a shuffle)
-    case q: QueryStageExec => collectExchanges(q.plan)
-    case e: Exchange => e.nodeName +: e.children.flatMap(collectExchanges)
-    case p => p.children.flatMap(collectExchanges)
-  }
+    * AQE query stages (see [[Plans.planNodes]]) — a silent false-negative
+    * for any "is this shuffle-free?" assertion otherwise. A query stage
+    * wrapper is not itself an exchange: only the Exchange node its
+    * materialized subtree starts with counts. */
+  def collectExchanges(plan: SparkPlan): Seq[String] =
+    Plans.planNodes(plan).collect { case e: Exchange => e.nodeName }
 
   /** The co-located join: order revenue rollup over the bucketed pair.
     * With both sides bucketed+sorted on the key, Catalyst plans

@@ -108,13 +108,7 @@ class PlanAuditSpec extends SparkSpec {
     * stages — `plan.collect` alone misses their subtrees). */
   private def parquetScans(p: org.apache.spark.sql.execution.SparkPlan): Int = {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    p match {
-      case a: AdaptiveSparkPlanExec => parquetScans(a.executedPlan)
-      case q: QueryStageExec => parquetScans(q.plan)
-      case s: FileSourceScanExec => 1 + s.children.map(parquetScans).sum
-      case o => o.children.map(parquetScans).sum
-    }
+    graft.core.Plans.planNodes(p).count(_.isInstanceOf[FileSourceScanExec])
   }
 
   test("map-side text operators shuffle only for their output sort (q67, q68)") {
@@ -194,14 +188,11 @@ class PlanAuditSpec extends SparkSpec {
     // two scans of the (narrow) embeddings table, never more
     val (df, _) = executed("q113_hybrid_rrf")
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansByPath(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => scansByPath(a.executedPlan)
-      case q: QueryStageExec => scansByPath(q.plan)
-      case s: FileSourceScanExec =>
-        s.relation.location.rootPaths.map(_.toString) ++ s.children.flatMap(scansByPath)
-      case o => o.children.flatMap(scansByPath)
-    }
+    def scansByPath(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+      graft.core.Plans.planNodes(p).flatMap {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+        case _ => Nil
+      }
     val paths = scansByPath(df.queryExecution.executedPlan)
     assert(!paths.exists(_.contains("documents")),
       s"q113 scans documents.parquet (expected token-stage reuse): $paths")
@@ -239,14 +230,11 @@ class PlanAuditSpec extends SparkSpec {
     // reuse; zero scans = someone "fixed" the exception back onto the
     // stage + window form, reintroducing the corpus-wide exchange.
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansByPath(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => scansByPath(a.executedPlan)
-      case q: QueryStageExec => scansByPath(q.plan)
-      case s: FileSourceScanExec =>
-        s.relation.location.rootPaths.map(_.toString) ++ s.children.flatMap(scansByPath)
-      case o => o.children.flatMap(scansByPath)
-    }
+    def scansByPath(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+      graft.core.Plans.planNodes(p).flatMap {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+        case _ => Nil
+      }
     val (df159, _) = executed("q159_bigram_lm")
     val paths159 = scansByPath(df159.queryExecution.executedPlan)
     assert(paths159.count(_.contains("documents")) == 1,
@@ -272,14 +260,11 @@ class PlanAuditSpec extends SparkSpec {
     // each reads `documents` exactly once, never re-tokenizing or
     // re-shingling text (those come from the shared stages)
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scansByPath(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => scansByPath(a.executedPlan)
-      case q: QueryStageExec => scansByPath(q.plan)
-      case s: FileSourceScanExec =>
-        s.relation.location.rootPaths.map(_.toString) ++ s.children.flatMap(scansByPath)
-      case o => o.children.flatMap(scansByPath)
-    }
+    def scansByPath(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+      graft.core.Plans.planNodes(p).flatMap {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+        case _ => Nil
+      }
     Seq("q119_vocab_coverage", "q120_source_overlap").foreach { q =>
       val (df, _) = executed(q)
       val paths = scansByPath(df.queryExecution.executedPlan)

@@ -2,11 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.execution.FilterExec
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.Plans.planNodes
 import graft.functions.BloomMightContainLong
 
 class BloomPruneSpec extends SparkSpec {
@@ -70,15 +70,9 @@ class BloomPruneSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val df = BloomPrune.bloomSemiJoin(li, urgent, "l_orderkey", "o_orderkey")
       df.collect()
-      def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => p +: flatten(a.executedPlan)
-        case q: QueryStageExec => p +: flatten(q.plan)
-        case other => other +: other.children.flatMap(flatten)
-      }
-      val all = flatten(df.queryExecution.executedPlan)
+      val all = planNodes(df.queryExecution.executedPlan)
       val belowShuffle = all.collect { case s: ShuffleExchangeLike => s }
-        .exists(s => flatten(s).exists {
+        .exists(s => planNodes(s).exists {
           case f: FilterExec => f.condition.toString.contains("bloom_might_contain")
           case _ => false
         })

@@ -176,14 +176,12 @@ class DedupSpec extends SparkSpec {
     // InMemoryTableScan's subtree hangs off relation.cachedPlan, not
     // children — without this case the bucketed scan is invisible)
     def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        flatten(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q +: flatten(q.plan)
-      case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        i +: flatten(i.relation.cachedPlan)
-      case o => o +: o.children.flatMap(flatten)
-    }
+        : Seq[org.apache.spark.sql.execution.SparkPlan] =
+      graft.core.Plans.planNodes(p).flatMap {
+        case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+          i +: flatten(i.relation.cachedPlan)
+        case o => Seq(o)
+      }
     def smjSides(df: org.apache.spark.sql.DataFrame) =
       flatten(df.queryExecution.executedPlan).collectFirst {
         case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => Seq(j.left, j.right)

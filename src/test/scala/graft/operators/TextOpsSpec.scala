@@ -262,17 +262,9 @@ class TextOpsSpec extends SparkSpec {
     // prints each InMemoryTableScan's cached-relation DEFINITION, whose
     // "Scan parquet" lines are not executed reads
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    def nodes(p: SparkPlan)(pf: PartialFunction[SparkPlan, Int]): Int = {
-      val self = pf.applyOrElse(p, (_: SparkPlan) => 0)
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case o => o.children
-      }
-      self + kids.map(nodes(_)(pf)).sum
-    }
+    def nodes(p: SparkPlan)(pf: PartialFunction[SparkPlan, Int]): Int =
+      graft.core.Plans.planNodes(p).map(pf.applyOrElse(_, (_: SparkPlan) => 0)).sum
     val executed = df.queryExecution.executedPlan
     assert(nodes(executed) { case _: FileSourceScanExec => 1 } == 0,
       s"q92 must read the ngram_counts stage, not re-scan the corpus\n$plan")
