@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-provided synthetic tables (`TESTDATA.md`): a
   * TPC-H-ish star schema plus `events` (append log), `documents` (text
@@ -28,26 +30,32 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame       = load(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "lineitem")
-  /** `events.parquet`'s `ts` physical type is whatever the driver's
-    * generator emitted for the round — TIMESTAMP(NANOS) through round 7
-    * (which Spark's vectorized reader rejects outright,
-    * PARQUET_TYPE_ILLEGAL — read as raw longs and truncate: integer
-    * `div`, exactly DuckDB's TIMESTAMP_NS→TIMESTAMP cast), plain
-    * TIMESTAMP(MICROS)/NTZ from round 8. Detect from the actual file
-    * schema and normalize to micro-precision TimestampType either way,
-    * so every consumer is layout-agnostic. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
   def documents(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
+
+  /** `events` with `ts` as micro-precision TimestampType, whatever the
+    * file stores (see [[normalizeTs]]), so every consumer is
+    * layout-agnostic. */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeTs(eventsFile(spark, dir))
+
+  /** `events.parquet` as stored. A TIMESTAMP(NANOS) `ts`, which Spark's
+    * vectorized reader rejects outright (PARQUET_TYPE_ILLEGAL), reads as
+    * raw int64 nanos. The streaming source declares this schema. */
+  private[graft] def eventsFile(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.parquet(s"$dir/events.parquet")
+  }
+
+  /** The one event-time rule, shared by [[events]] and every streaming
+    * reader: raw int64 nanos truncate with integer `div` (exactly
+    * DuckDB's TIMESTAMP_NS→TIMESTAMP cast); TIMESTAMP(MICROS)/NTZ is an
+    * instant-preserving cast under the UTC session. */
+  private[graft] def normalizeTs(df: DataFrame): DataFrame =
+    df.schema("ts").dataType match {
+      case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case _ => df.withColumn("ts", col("ts").cast("timestamp"))
+    }
 
   /** Round-robin fan-out of a scan BEFORE CPU-heavy per-row work
     * (shingle+hash pipelines, media decode, per-embedding encode).

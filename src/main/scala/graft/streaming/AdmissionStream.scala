@@ -105,10 +105,7 @@ object AdmissionStream extends graft.QueryModule {
     val (storeSigs, guarded, storeBuckets) = JobOverlap.await(sigsChainF)
     val storeFps = JobOverlap.await(storeFpsF)
 
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     // one row-local projection: quality columns, fingerprint, shingle
     // hashes, contamination count, signature, band buckets — then the
     // two stream-static probes; emitted rows are (doc × bucket) grain

@@ -35,11 +35,7 @@ object AssignStream extends graft.QueryModule {
     // batch-train once per corpus version (cached); the stream only
     // ever sees the k×dim literal
     val cents = KMeans.trainedCentroids(spark, dir)
-    val fileSchema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val stream = spark.readStream
-      .schema(fileSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val stream = EventStream.embeddingsStream(spark, dir)
       .select(col("vec_id"), transform(col("embedding"), KMeans.quantizeCol _).as("em"))
     val scored = KMeans.assigned(graft.core.Tables.fanout(spark, stream), cents)
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"), col("d"))

@@ -74,10 +74,7 @@ object BudgetStream extends graft.QueryModule {
   def q124StreamTokenBudget(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Sessions.prepare(spark)
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val admitted = graft.core.Tables.fanout(spark, stream)
       .select(col("doc_id"), col("source"),
         size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))

@@ -34,10 +34,10 @@ object ClassifyStream extends graft.QueryModule {
     * `transform(toks, xxhash64)` probes the identical key space), and
     * scoring is one [[graft.functions.SortedKeyWeightSum]] probe —
     * O(log K) long compares per token occurrence inside whole-stage
-    * codegen. The previous literal-map form
-    * (`element_at(typedLit(map), t)`) paid a linear O(K) string scan
-    * per occurrence (Catalyst's GetMapValue has no literal fast path),
-    * which the 10× sweep surfaced as this drain's dominant cost. */
+    * codegen. A literal-map form (`element_at(typedLit(map), t)`) pays
+    * a linear O(K) string scan per occurrence (Catalyst's GetMapValue
+    * has no literal fast path); at the 10× fixture that scan measured
+    * as this drain's dominant cost. */
   def q152StreamNbQuality(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     // batch-train, truncate to the K largest-|w| tokens (bounded collect
@@ -58,10 +58,7 @@ object ClassifyStream extends graft.QueryModule {
       }
     val keysBc = spark.sparkContext.broadcast(keys)
     val weightsBc = spark.sparkContext.broadcast(weights)
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val toks = TextOps.tokens(coalesce(col("text"), lit("")))
     val scored = graft.core.Tables.fanout(spark, stream).select(
       col("doc_id"), col("source"),
@@ -89,13 +86,7 @@ object ClassifyStream extends graft.QueryModule {
     * largest-total emission (monotone versioning, the q145 move). */
   def q166StreamNbTrain(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    val base = spark.conf.getOption("spark.graft.streamResultsDir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val root = s"$base/graft_nbtrain_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val toks = TextOps.tokens(coalesce(col("text"), lit("")))
     val filler = size(filter(toks,
       t => Classify.FillerTokens.map(lit(_) === t).reduce(_ || _)))
@@ -107,23 +98,11 @@ object ClassifyStream extends graft.QueryModule {
       .agg(
         sum(when(col("hq"), 1L).otherwise(0L)).as("cp"),
         sum(when(not(col("hq")), 1L).otherwise(0L)).as("cn"))
-    val outSchema = counts.schema
-    EventStream.withStreamStatePartitions(spark) {
-      val q = counts.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-        .option("checkpointLocation", s"$root/checkpoint")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(s"$root/data")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     // latest emission per token = the largest running total (counts are
     // monotone under updates)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("token").orderBy((col("cp") + col("cn")).desc)
-    val landed = spark.read.schema(outSchema).parquet(s"$root/data")
+    val landed = EventStream.drainToFiles(spark, counts, update = true)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("token", "cp", "cn")

@@ -77,10 +77,7 @@ object CmsStream extends graft.QueryModule {
   def q172StreamCms(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     import spark.implicits._
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val increments = graft.core.Tables.fanout(spark, stream)
       .select(explode(Dedup.shingleArray(coalesce(col("text"), lit("")))).as("s"))
       .select(posexplode(array(Cms.bucketCols(col("s")): _*)).as(Seq("r", "b")))

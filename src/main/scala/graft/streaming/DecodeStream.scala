@@ -32,10 +32,7 @@ object DecodeStream extends graft.QueryModule {
   def q148StreamDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Sessions.prepare(spark)
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val decoded = graft.core.Tables.fanout(spark, stream)
       .select(col("doc_id"), col("n_chars"))
       .as[(Long, Long)]

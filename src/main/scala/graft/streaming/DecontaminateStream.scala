@@ -74,10 +74,7 @@ object DecontaminateStream extends graft.QueryModule {
   def q167StreamDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     val evalBc = spark.sparkContext.broadcast(evalProbe(spark, dir))
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     // fan out before the per-doc shingle+hash+binary-search screen (the
     // micro-batch's dominant cost — see Tables.fanout)
     val screened = graft.core.Tables.fanout(spark, stream)

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 import graft.core.Sessions
 import graft.operators.Dedup
@@ -40,13 +39,6 @@ import graft.operators.Dedup
   * ([[Dedup.jaccardPairs]]), exactly as q27 verifies the batch candidates.
   */
 object DedupStream extends graft.QueryModule {
-
-  private[streaming] val docSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
 
   // private[streaming], not private: the Catalyst-generated deserializer
   // constructs this class from outside the object (janino rejects a
@@ -91,10 +83,7 @@ object DedupStream extends graft.QueryModule {
     * gate). */
   def streamScreen(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     // fan the raw documents out before the in-flight minhash — the
     // per-doc signature compute is the micro-batch's dominant cost and
     // must not ride a single under-split scan task
@@ -106,12 +95,12 @@ object DedupStream extends graft.QueryModule {
     // distinct AFTER the drain (a doc may collide in several bands): the
     // drained frame is batch data, so no second stateful operator rides
     // the stream.
-    // State partitions 8 (round-16 sweep): the biggest fixture state in
-    // the bench (~0.5M band-bucket keys) — the per-group screen compute
-    // and commits parallelize past the global default of 4 (warm drain
-    // 2.91 → 2.40 s at sf0.1/32 cores; 16 adds nothing) while the
-    // small-state drains stay at 4 (q77/q208 measured flat-to-worse at
-    // 8, the commit fan-out cost).
+    // State partitions 8: the biggest fixture state in the bench (~0.5M
+    // band-bucket keys) — the per-group screen compute and commits
+    // parallelize past the global default of 4 (warm drain 2.91 → 2.40 s
+    // at sf0.1/32 cores; 16 adds nothing) while the small-state drains
+    // stay at 4 (q77/q208 measured flat-to-worse at 8, the commit
+    // fan-out cost).
     EventStream.drainToFiles(spark, flagged, statePartsHint = Some("8")).distinct()
   }
 

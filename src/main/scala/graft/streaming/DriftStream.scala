@@ -64,10 +64,7 @@ object DriftStream extends graft.QueryModule {
   def q197StreamScoreDrift(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     import spark.implicits._
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val hits = graft.core.Tables.fanout(spark, stream)
       .select(Drift.bucketOf(coalesce(col("text"), lit(""))).as("bucket"))
       .as[BucketRow]

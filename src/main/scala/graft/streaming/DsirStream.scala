@@ -53,10 +53,7 @@ object DsirStream extends graft.QueryModule {
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       }
     val modelLit = typedLit(model)
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val feats = featureArray(TextOps.tokens(col("text")))
     val scored = graft.core.Tables.fanout(spark, stream).select(
       col("doc_id"), col("source"),

@@ -2,12 +2,16 @@ package graft.streaming
 
 import java.util.UUID
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.core.Sessions
+import graft.core.{Sessions, Tables}
 
 /** Structured-Streaming face of the event log (SURVEY §2.8: the reference
   * is batch-append only, so streaming is the idiomatic incremental
@@ -20,88 +24,98 @@ import graft.core.Sessions
   * the batch query. `Trigger.AvailableNow` drains everything available
   * then stops — the cron-driven incremental pattern (the reference's
   * daily batch, made exactly-once).
+  *
+  * Home of the streaming family's one source per table
+  * ([[documentsStream]], [[embeddingsStream]], [[eventsStream]]) and its
+  * one drain ([[drainToFiles]]).
   */
 object EventStream extends graft.QueryModule {
 
-  /** Normalize an events frame's `ts` to micro-precision TimestampType,
-    * whatever the physical layout was: raw int64 nanos (the driver's
-    * TIMESTAMP(NANOS) fixtures through round 7, read under
-    * `nanosAsLong`) truncate with integer `div` — exactly DuckDB's
-    * TIMESTAMP_NS→TIMESTAMP cast; TIMESTAMP(MICROS)/NTZ (round 8 on)
-    * is an instant-preserving cast under the UTC session. Shared by
-    * every streaming reader and mirrored by [[graft.core.Tables.events]]
-    * on the batch side, so the two can never disagree about event time. */
-  private[streaming] def normalizeTs(df: DataFrame): DataFrame =
-    df.schema("ts").dataType match {
-      case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ => df.withColumn("ts", col("ts").cast("timestamp"))
-    }
+  /** One table of `dir` as a file stream under a declared schema. */
+  private def parquetStream(spark: SparkSession, dir: String, table: String,
+      schema: StructType): DataFrame =
+    spark.readStream
+      .schema(schema)
+      .option("pathGlobFilter", s"$table.parquet")
+      .parquet(dir)
 
-  /** The events stream for `dir`, `ts` already normalized: the source
-    * schema comes from the actual parquet footer (a streaming source
-    * needs a declared schema; deriving it from the file keeps the
-    * declaration layout-agnostic instead of hardcoding one round's
-    * fixture types). */
-  private[streaming] def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    normalizeTs(
-      spark.readStream
-        .schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-  }
+  /** The documents stream for `dir`. */
+  private[streaming] def documentsStream(spark: SparkSession, dir: String): DataFrame =
+    parquetStream(spark, dir, "documents", StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("text", StringType),
+      StructField("lang", StringType),
+      StructField("source", StringType),
+      StructField("n_chars", LongType))))
+
+  /** The embeddings stream for `dir`, declared with the file's own footer
+    * schema. */
+  private[streaming] def embeddingsStream(spark: SparkSession, dir: String): DataFrame =
+    parquetStream(spark, dir, "embeddings", Tables.embeddings(spark, dir).schema)
+
+  /** The events stream for `dir`, `ts` already normalized
+    * ([[Tables.normalizeTs]]): the source declares the file's own footer
+    * schema, so the declaration follows whatever layout the file has. */
+  private[streaming] def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    Tables.normalizeTs(parquetStream(spark, dir, "events", Tables.eventsFile(spark, dir).schema))
 
   val WindowDuration = "15 minutes"
   val WatermarkDelay = "1 minute"
 
-  /** Drain an append-mode streaming result through the FILE sink and read
-    * the emitted rows back. The memory sink would hold the entire result
-    * on the driver — fine for tiny aggregates, wrong as a posture: at
-    * 100 TB the emitted stream is itself large, and the production shape
-    * is exactly this (parquet sink + downstream batch read), with the
-    * checkpoint making the drain resumable/exactly-once. Driver memory
-    * stays O(1) regardless of result size.
+  /** The streaming family's one drain: run `frame` to completion
+    * (`Trigger.AvailableNow`) into parquet files and read the emitted
+    * rows back as a batch frame. Append mode uses the file sink; `update`
+    * mode (which the file sink cannot take) appends each micro-batch's
+    * emissions to parquet through `foreachBatch`, and the caller keeps
+    * the latest emission per key. Either way driver memory stays O(1)
+    * however large the result (the memory sink would hold all of it on
+    * the driver).
     *
-    * Output lands under `spark.graft.streamResultsDir` (default: the JVM
-    * temp dir) — locally a scratch path, on a cluster an object-store
-    * prefix subject to the results retention job. */
-  private[streaming] def drainToFiles(spark: SparkSession, transformed: DataFrame,
-      statePartsHint: Option[String] = None): DataFrame = {
+    * Lifetime: each drain writes `<root>/{data,checkpoint}` under a fresh
+    * `<spark.graft.streamResultsDir>/graft_stream_<uuid>` root (default:
+    * the JVM temp dir). The root is registered with the Hadoop
+    * FileSystem's delete-on-exit before the query starts, so it goes when
+    * the JVM exits. The checkpoint is one-shot (a fresh root is never
+    * resumed), so it is deleted as soon as the query ends; `data` backs
+    * the returned frame and lives until exit. */
+  private[streaming] def drainToFiles(spark: SparkSession, frame: DataFrame,
+      statePartsHint: Option[String] = None, update: Boolean = false): DataFrame = {
     val base = spark.conf.getOption("spark.graft.streamResultsDir")
       .getOrElse(System.getProperty("java.io.tmpdir"))
-    val root = s"$base/graft_stream_${UUID.randomUUID().toString.replace("-", "")}"
-    val schema = transformed.schema
+    val unqualified = new Path(base, s"graft_stream_${UUID.randomUUID().toString.replace("-", "")}")
+    val fs = unqualified.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(unqualified)
+    fs.mkdirs(root)
+    fs.deleteOnExit(root)
+    val data = new Path(root, "data").toString
+    val checkpoint = new Path(root, "checkpoint")
+    val writer = frame.writeStream
+      .option("checkpointLocation", checkpoint.toString)
+      .trigger(Trigger.AvailableNow())
+    val sink =
+      if (update) writer.outputMode("update").foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(data)
+      }
+      else writer.outputMode("append").format("parquet").option("path", data)
     withStreamStatePartitions(spark, statePartsHint) {
-      try {
-        transformed.writeStream
-          .outputMode("append")
-          .format("parquet")
-          .option("path", s"$root/data")
-          .option("checkpointLocation", s"$root/checkpoint")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-      } finally {
-        // eagerly unload this drain's state-store providers. Every drain
-        // uses a fresh one-shot checkpoint, so once the query terminates
-        // its loaded providers can never be reused — but the StateStore
-        // singleton keeps them (for the heap-backed default provider,
-        // the FULL state map) on the JVM heap until the ~60 s
-        // maintenance cycle notices. Across a 140-row bench sweep those
-        // corpses stack on top of the legitimately-cached stages and
-        // turn the biggest-state stream (q114, ~0.5M band-bucket keys
-        // at sf0.1) into the GC victim — the round-7 bench recorded the
-        // q114 gate at 166 s under memory+CPU pressure where an idle
-        // JVM runs it in ~3.5 s. stop() clears loadedProviders and
-        // halts the maintenance thread; the next stateful drain
-        // restarts both lazily.
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      try sink.start().awaitTermination()
+      finally {
+        // Unload this drain's state-store providers now. The StateStore
+        // singleton otherwise keeps them (for the heap-backed provider,
+        // the FULL state map) until its ~60 s maintenance cycle, and
+        // across a 140-row sweep those dead stores stacked up and made
+        // the biggest-state drain (q114, ~0.5M band-bucket keys at
+        // sf0.1) the GC victim: its gate measured 166 s under memory
+        // pressure against ~3.5 s in an idle JVM. stop() also halts the
+        // maintenance thread; the next stateful drain restarts both.
+        StateStore.stop()
+        // a failed delete leaves the checkpoint to the exit hook
+        Try(fs.delete(checkpoint, true))
       }
     }
     // explicit schema: a drain that emits zero rows leaves no data files,
     // and the read must still return an empty, correctly-typed frame
-    spark.read.schema(schema).parquet(s"$root/data")
+    spark.read.schema(frame.schema).parquet(data)
   }
 
   /** Run `body` (a stream start + drain) with the STATE partition count
@@ -116,7 +130,7 @@ object EventStream extends graft.QueryModule {
     * stream's first checkpoint, which is also why it must be a deliberate
     * knob rather than whatever the session happened to have.
     *
-    * Default 4 (was 8): a stream-stream join keeps FOUR state stores per
+    * Default 4: a stream-stream join keeps FOUR state stores per
     * partition and commits each per micro-batch, so per-batch commit IO
     * is 4× the partition count regardless of state volume. Measured on
     * the q77 drain at sf0.1 (the heaviest join state in the bench):
@@ -129,10 +143,9 @@ object EventStream extends graft.QueryModule {
   private[streaming] def withStreamStatePartitions[T](spark: SparkSession,
       drainHint: Option[String] = None)(body: => T): T = {
     // precedence: explicit session conf (a deployment's global sizing) >
-    // the drain's own hint (a per-operator optimum the round-16 sweep
-    // measured: q114's ~0.5M-key state wants 8 where the join/trajectory
-    // drains plateau at 4 — see the partition-sweep table in
-    // OPTIMIZATION_r16.md) > the default 4.
+    // the drain's own hint (a per-operator optimum: q114's ~0.5M-key
+    // state measured best at 8 where the join/trajectory drains plateau
+    // at 4) > the default 4.
     val parts = spark.conf.getOption("spark.graft.streamStatePartitions")
       .orElse(drainHint).getOrElse("4")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -140,48 +153,34 @@ object EventStream extends graft.QueryModule {
     val prevProvider = spark.conf.getOption(ProviderClassConf)
     spark.conf.set("spark.sql.shuffle.partitions", parts)
     spark.conf.set(ProviderClassConf, provider)
-    // RocksDB store-lifecycle tuning (round-15 verdict item 2 — the twin
-    // rows re-paid provider commit setup per drain). Measured on the warm
-    // q77 drain at sf0.1 (4 partitions × 4 join stores × 2 batches):
+    // RocksDB defaults for the drain, each applied only where the
+    // session leaves Spark's own key unset (an explicit value is honoured
+    // and left untouched) and unset again afterwards. Measured on the
+    // warm q77 drain at sf0.1 (4 partitions × 4 join stores × 2 batches):
     //  - changelog checkpointing ON: a commit writes the batch's change
     //    set instead of zipping + fsyncing a FULL snapshot per store per
-    //    batch (the probe showed commitTime ≈ 1.6 s/batch, of which
-    //    fileSync 0.63 s + saveZip 0.40 s) — drain 3.83 → 2.87 s. This is
-    //    also the right 100 TB posture: snapshot upload moves to the
-    //    background maintenance cadence, commits stay O(changed keys).
-    //    Recovery replays changelog over the last snapshot —
-    //    StreamRecoverySpec's rocksdb kill/resume round-trip proves it.
+    //    batch (commitTime ≈ 1.6 s/batch, of which fileSync 0.63 s +
+    //    saveZip 0.40 s) — drain 3.83 → 2.87 s. Snapshot upload moves to
+    //    the background maintenance cadence, so commits stay O(changed
+    //    keys); recovery replays the changelog over the last snapshot
+    //    (StreamRecoverySpec's rocksdb kill/resume round-trip).
     //  - row tracking OFF: every put stops paying a read-back get that
     //    exists only to keep the numRowsTotal metric exact (drain
-    //    3.83 → 3.63 s alone; nothing in the engine consumes the metric).
-    // Both are overridable per deployment via the same conf keys through
-    // `spark.graft.streaming.rocksdb.*`.
-    val rocksTuning: Seq[(String, String, Option[String])] =
+    //    3.83 → 3.63 s alone; nothing in the engine reads the metric).
+    val rocksDefaults =
       if (!provider.contains("RocksDB")) Seq.empty
       else Seq(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          spark.conf.getOption("spark.graft.streaming.rocksdb.changelogCheckpointing")
-            .getOrElse("true"),
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
-          spark.conf.getOption("spark.graft.streaming.rocksdb.trackTotalNumberOfRows")
-            .getOrElse("false")
-      ).map { case (k, v) =>
-        // remember only EXPLICIT prior settings, so an unset key is
-        // unset again afterwards (these keys are not registered SQLConf
-        // entries, so isModifiable would reject them)
-        (k, v, if (sparkConfExplicit(spark, k)) Some(spark.conf.get(k)) else None)
-      }
-    rocksTuning.foreach { case (k, v, _) => spark.conf.set(k, v) }
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
+        .filterNot { case (k, _) => sparkConfExplicit(spark, k) }
+    rocksDefaults.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       prevProvider match {
         case Some(v) => spark.conf.set(ProviderClassConf, v)
         case None => spark.conf.unset(ProviderClassConf)
       }
-      rocksTuning.foreach {
-        case (k, _, Some(old)) => spark.conf.set(k, old)
-        case (k, _, None) => spark.conf.unset(k)
-      }
+      rocksDefaults.foreach { case (k, _) => spark.conf.unset(k) }
     }
   }
 
@@ -197,13 +196,13 @@ object EventStream extends graft.QueryModule {
     * `spark.graft.streaming.stateStoreProvider` = `hdfs` (default) |
     * `rocksdb`. The HDFS-backed store keeps every version of state on
     * the executor JVM heap — at the fixtures' state sizes it is the
-    * faster floor (measured: see BENCH `*_rocksdb` twin rows), which is
-    * why it stays the default HERE; at 100 TB-ingest state sizes the
-    * heap-resident store is the first thing to fall over (GC pressure,
-    * OOM at millions of keys per partition), and a deployment flips this
-    * knob to `rocksdb` for off-heap, spill-to-disk state with
-    * changelog checkpointing. The knob exists so that flip is one conf,
-    * not a code change. */
+    * faster floor (measured: the `*_rocksdb` twin rows of the bench run
+    * slower), which is why it stays the default HERE; at 100 TB-ingest
+    * state sizes the heap-resident store is the first thing to fall over
+    * (GC pressure, OOM at millions of keys per partition), and a
+    * deployment flips this knob to `rocksdb` for off-heap, spill-to-disk
+    * state with changelog checkpointing. The knob exists so that flip is
+    * one conf, not a code change. */
   private[streaming] def providerClass(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.streaming.stateStoreProvider")
       .map(_.trim.toLowerCase).getOrElse("hdfs") match {
@@ -216,7 +215,7 @@ object EventStream extends graft.QueryModule {
   /** Windowed counts/sums per event type with a watermark; append mode —
     * emits exactly the windows the watermark has closed. */
   def windowedAgg(stream: DataFrame): DataFrame =
-    normalizeTs(stream)
+    Tables.normalizeTs(stream)
       .withWatermark("ts", WatermarkDelay)
       // group on the window struct itself — append mode requires the
       // event-time window column as a grouping key for watermark eviction
@@ -233,8 +232,7 @@ object EventStream extends graft.QueryModule {
     * DataFrame. */
   def q34StreamWindows(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    val stream = eventsStream(spark, dir)
-    drainToFiles(spark, windowedAgg(stream)).orderBy("window_start", "event_type")
+    drainToFiles(spark, windowedAgg(eventsStream(spark, dir))).orderBy("window_start", "event_type")
   }
 
   /** q44 — streaming gap-based sessionization via the NATIVE
@@ -256,13 +254,6 @@ object EventStream extends graft.QueryModule {
     drainToFiles(spark, sessions).orderBy("user_id", "session_start")
   }
 
-  private val docSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** q48 — STREAMING exact dedup: the streaming sibling of the batch
     * hash-group dedup (q24). Documents arrive as a stream; each is
     * fingerprinted (md5 of trimmed text) and `dropDuplicates` keeps the
@@ -280,11 +271,7 @@ object EventStream extends graft.QueryModule {
     * scheduling order, which no deterministic oracle should depend on. */
   def q48StreamDedup(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val deduped = stream
+    val deduped = documentsStream(spark, dir)
       .select(md5(trim(col("text"))).as("fp"))
       .dropDuplicates("fp")
     drainToFiles(spark, deduped).orderBy("fp")

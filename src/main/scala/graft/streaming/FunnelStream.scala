@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.core.Sessions
 
@@ -29,7 +26,7 @@ import graft.core.Sessions
   */
 object FunnelStream extends graft.QueryModule {
 
-  /** `ts` is event time in MICROS ([[EventStream.normalizeTs]] grain). */
+  /** `ts` is event time in MICROS ([[graft.core.Tables.normalizeTs]] grain). */
   case class EventRow(ts: Long, user_id: Long, event_type: String)
 
   /** Stage timestamps in micros; -1 = not reached. */
@@ -60,37 +57,22 @@ object FunnelStream extends graft.QueryModule {
 
   /** q98 — drain the stateful funnel over `dir`'s events, then roll the
     * final per-user stage flags up to the q84 report shape. The drain is
-    * `foreachBatch` parquet-append (driver O(1)); the read-back keeps
+    * update-mode ([[EventStream.drainToFiles]]); the read-back keeps
     * each user's furthest emission (stage flags only ever advance). */
   def q98StreamFunnel(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     import spark.implicits._
-    val base = spark.conf.getOption("spark.graft.streamResultsDir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val root = s"$base/graft_funnel_${UUID.randomUUID().toString.replace("-", "")}"
     val events = EventStream.eventsStream(spark, dir)
       .select(unix_micros(col("ts")).as("ts"), col("user_id"), col("event_type"))
       .as[EventRow]
     val funnel = events
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(updateState)
-    val outSchema = funnel.toDF().schema
-    EventStream.withStreamStatePartitions(spark) {
-      val q = funnel.toDF().writeStream
-        .outputMode(OutputMode.Update())
-        .option("checkpointLocation", s"$root/checkpoint")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(s"$root/data")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     val stage = col("has_view").cast("int") + col("has_click").cast("int") +
       col("has_purchase").cast("int")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(stage.desc)
-    spark.read.schema(outSchema).parquet(s"$root/data")
+    EventStream.drainToFiles(spark, funnel.toDF(), update = true)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .agg(

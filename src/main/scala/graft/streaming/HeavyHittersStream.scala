@@ -80,10 +80,7 @@ object HeavyHittersStream extends graft.QueryModule {
     * gate adds the batch recount verdicts. */
   private[streaming] def streamCandidates(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val toks = graft.core.Tables.fanout(spark, stream)
       .select(explode(TextOps.tokens(col("text"))).as("token"))
       .select(pmod(xxhash64(col("token")), lit(Shards)).cast("int").as("shard"), col("token"))

@@ -27,11 +27,7 @@ object JlEncodeStream extends graft.QueryModule {
     * output dimension. */
   def q219StreamJlEncode(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    val fileSchema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val stream = spark.readStream
-      .schema(fileSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val stream = EventStream.embeddingsStream(spark, dir)
     val sketched = graft.core.Tables.fanout(spark, stream)
       .select(col("vec_id"),
         RandomProjection.jlProject(col("embedding"), RandomProjection.JlDim).as("p"))

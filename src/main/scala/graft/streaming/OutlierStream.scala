@@ -41,11 +41,7 @@ object OutlierStream extends graft.QueryModule {
     val centDf = cents.toDF("source", "cv")
     val src = graft.core.Tables.documents(spark, dir)
       .select(col("doc_id").as("vec_id"), col("source"))
-    val fileSchema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val stream = spark.readStream
-      .schema(fileSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val stream = EventStream.embeddingsStream(spark, dir)
     val admitted = Outlier.quantizeCols(graft.core.Tables.fanout(spark, stream))
       .join(src, Seq("vec_id"))
       .join(broadcast(centDf), Seq("source"))

@@ -36,10 +36,7 @@ object PercentileStream extends graft.QueryModule {
           .toMap
       }
     val cdfLit = typedLit(cdf)
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val toks = TextOps.tokens(coalesce(col("text"), lit("")))
     val screened = graft.core.Tables.fanout(spark, stream)
       .filter(size(toks) > 0)

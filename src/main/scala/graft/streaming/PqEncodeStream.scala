@@ -39,11 +39,7 @@ object PqEncodeStream extends graft.QueryModule {
     // batch-train once per corpus version (cached); the stream only
     // ever sees the codebook literal
     val book = Pq.trainedBook(spark, dir)
-    val fileSchema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val stream = spark.readStream
-      .schema(fileSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val stream = EventStream.embeddingsStream(spark, dir)
       .select(col("vec_id"), transform(col("embedding"), KMeans.quantizeCol _).as("em"))
     val encoded = Pq.encodeColumns(graft.core.Tables.fanout(spark, stream), book)
     EventStream.drainToFiles(spark, encoded).orderBy("vec_id")

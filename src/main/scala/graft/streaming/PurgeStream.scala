@@ -29,10 +29,7 @@ object PurgeStream extends graft.QueryModule {
   def q238StreamPurge(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     val tomb = graft.core.Materialize.once(Purge.tombstones(spark, dir))
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val screened = Tables.fanout(spark, stream)
       .join(broadcast(tomb), col("doc_id") === col("t_id"), "left")
       .filter(col("t_id").isNull)

@@ -58,11 +58,7 @@ object QuantileStream extends graft.QueryModule {
   def q183StreamQuantiles(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     import spark.implicits._
-    val stream = spark.readStream
-      .schema(Tables.events(spark, dir).schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val rows = EventStream.normalizeTs(stream)
+    val rows = EventStream.eventsStream(spark, dir)
       .select(col("event_type"),
         floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
       .as[EvRow]

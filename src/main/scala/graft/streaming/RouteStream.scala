@@ -24,10 +24,7 @@ object RouteStream extends graft.QueryModule {
   /** q190 — streamed routing over `dir`'s documents table. */
   def q190StreamTopicRoute(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val routed = Taxonomy.tagged(graft.core.Tables.fanout(spark, stream))
       .filter(col("topic") =!= "none")
     EventStream.drainToFiles(spark, routed).orderBy("doc_id")

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.util.UUID
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.core.Sessions
 
@@ -22,7 +19,7 @@ import graft.core.Sessions
 object UserStatsStream {
 
   /** `ts` is event time in MICROS (the engine's normalized event-time
-    * grain — [[EventStream.normalizeTs]] handles whatever the file
+    * grain — [[graft.core.Tables.normalizeTs]] handles whatever the file
     * carried). */
   case class EventRow(event_id: Long, ts: Long, user_id: Long,
       event_type: String, value: Double)
@@ -45,17 +42,12 @@ object UserStatsStream {
   }
 
   /** Run the stateful stream over `dir`'s events to completion and return
-    * the final per-user stats. Update output mode can't use the file sink
-    * directly, so the drain is `foreachBatch` appending each micro-batch's
-    * state emissions to parquet — driver memory stays O(1) however many
-    * users/batches there are (the memory-sink form held every emission on
-    * the driver), and the read-back keeps the latest emission per key. */
+    * the final per-user stats: an update-mode drain
+    * ([[EventStream.drainToFiles]]) whose read-back keeps the latest
+    * emission per key. */
   def run(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
     import spark.implicits._
-    val base = spark.conf.getOption("spark.graft.streamResultsDir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val root = s"$base/graft_ustats_${UUID.randomUUID().toString.replace("-", "")}"
     val events = EventStream.eventsStream(spark, dir)
       .select(col("event_id"), unix_micros(col("ts")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -63,22 +55,10 @@ object UserStatsStream {
     val stats = events
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(updateState)
-    val outSchema = stats.toDF().schema
-    EventStream.withStreamStatePartitions(spark) {
-      val q = stats.toDF().writeStream
-        .outputMode(OutputMode.Update())
-        .option("checkpointLocation", s"$root/checkpoint")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(s"$root/data")
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     // latest emission per user = final state
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("n_events").desc)
-    spark.read.schema(outSchema).parquet(s"$root/data")
+    EventStream.drainToFiles(spark, stats.toDF(), update = true)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("user_id", "n_events", "total_value", "last_ts_us")

@@ -22,10 +22,7 @@ object WeakLabelStream extends graft.QueryModule {
   /** q204 — streamed LF voting over `dir`'s documents table. */
   def q204StreamWeakLabels(spark: SparkSession, dir: String): DataFrame = {
     Sessions.prepare(spark)
-    val stream = spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    val stream = EventStream.documentsStream(spark, dir)
     val voted = WeakLabels.labeled(graft.core.Tables.fanout(spark, stream))
     EventStream.drainToFiles(spark, voted).orderBy("doc_id")
   }
