@@ -42,21 +42,31 @@ object Sessions {
         .config("spark.ui.enabled", "false")
         .getOrCreate())
 
-  /** Idempotently apply graft runtime settings to an externally created
-    * session (the driver's Verify/Bench mains build their own session, so
-    * every query entry point routes through here first). */
-  def prepare(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+  /** The session settings graft's plans assume. */
+  private val settings = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // TypedImperativeAggregate (SimhashAgg) runs through
     // ObjectHashAggregateExec, which falls back to sort-based aggregation
     // after 128 distinct groups by default — pathological for
     // one-group-per-document aggregates. Measured 2.4x slowdown at sf0.1.
-    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-    graft.functions.Dialect.register(spark)
-    graft.functions.TableFunctions.register(spark)
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1000000",
+    // a TIMESTAMP(NANOS) parquet column, which Spark's vectorized reader
+    // rejects outright (PARQUET_TYPE_ILLEGAL), reads as raw int64 nanos;
+    // Tables.normalizeTs turns it into event time. Set here, not per
+    // read, so every parquet read on the session sees the same rule.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** Apply graft's session settings and install its SQL functions (the
+    * scalar list and the TVF list, through
+    * [[graft.functions.FunctionCatalog.install]]). Call it once, on a
+    * session you built yourself — [[local]] already has; query code never
+    * calls it. Calling it again rewrites the same values. */
+  def prepare(spark: SparkSession): SparkSession = {
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    graft.functions.FunctionCatalog.install(spark)
     spark
   }
 }

@@ -39,13 +39,11 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame =
     normalizeTs(eventsFile(spark, dir))
 
-  /** `events.parquet` as stored. A TIMESTAMP(NANOS) `ts`, which Spark's
-    * vectorized reader rejects outright (PARQUET_TYPE_ILLEGAL), reads as
-    * raw int64 nanos. The streaming source declares this schema. */
-  private[graft] def eventsFile(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** `events.parquet` as stored. A TIMESTAMP(NANOS) `ts` reads as raw
+    * int64 nanos (`spark.sql.legacy.parquet.nanosAsLong`, set by
+    * [[Sessions.prepare]]). The streaming source declares this schema. */
+  private[graft] def eventsFile(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/events.parquet")
-  }
 
   /** The one event-time rule, shared by [[events]] and every streaming
     * reader: raw int64 nanos truncate with integer `div` (exactly
@@ -98,6 +96,9 @@ object Tables {
     else ds.repartition(n)
   }
 
+  /** The estimated size above which [[fanoutIfHeavy]] fans out. */
+  final val ProbeFanoutMinBytes = 2L << 20
+
   /** [[fanout]] additionally gated on the frame's ESTIMATED size (logical
     * plan stats — file-size-derived for scans, no job): fan out only when
     * the under-parallelized side is big enough that the per-row kernel
@@ -105,18 +106,14 @@ object Tables {
     * probe-broadcast cosine scorers (q29 family) are exactly at this
     * margin — measured at 32 cores: sf0.1 (0.8 MB, kernel tens of ms)
     * the exchange LOSES 0.48 → 0.62 s warm, at the 10× tree (5 MB) it
-    * WINS 0.824 → 0.585 s median — so the gate defaults to 2 MB
-    * (`spark.graft.probeFanoutMinBytes`), between the two measured
-    * regimes. At deployment scale the scan has thousands of splits and
-    * [[fanout]]'s partition-count condition already makes this a no-op. */
-  def fanoutIfHeavy[T](spark: SparkSession, ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
-    val minBytes = spark.conf.getOption("spark.graft.probeFanoutMinBytes")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(2L << 20)
-    if (ds.isStreaming || ds.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes)
+    * WINS 0.824 → 0.585 s median — so the gate is 2 MB
+    * ([[ProbeFanoutMinBytes]]), between the two measured regimes. At
+    * deployment scale the scan has thousands of splits and [[fanout]]'s
+    * partition-count condition already makes this a no-op. */
+  def fanoutIfHeavy[T](spark: SparkSession, ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] =
+    if (ds.isStreaming || ds.queryExecution.optimizedPlan.stats.sizeInBytes >= ProbeFanoutMinBytes)
       fanout(spark, ds)
     else ds
-  }
 
   /** Register every table as a temp view named exactly like its file, for
     * the SQL entry points (and the dialect-shim demos) that address tables

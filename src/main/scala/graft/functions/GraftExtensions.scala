@@ -1,106 +1,19 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, ExpressionInfo, Literal, SortOrder, StringInstr}
-import org.apache.spark.sql.catalyst.expressions.aggregate.ListAgg
 
-/** Session-extension installer: the config-driven way to get the graft
-  * dialect + native functions into ANY SparkSession —
+/** Session-extension installer: the config-driven way to get graft's SQL
+  * functions into ANY SparkSession —
   *
   * {{{
   *   spark.sql.extensions=graft.functions.GraftExtensions
   * }}}
   *
-  * Registers the same surface as [[Dialect.register]] (which remains for
-  * programmatic/late installation): the Presto dialect shims (`strpos`,
-  * `string_agg`) and the graft-native functions (`cosine_sim`,
-  * `simhash_agg`). Everything injected is a native Catalyst expression —
-  * codegen-eligible, partial-agg-eligible; no UDF wrappers anywhere on
-  * this path. */
+  * Injects the same two lists [[graft.core.Sessions.prepare]] installs
+  * ([[Dialect.functions]] and [[TableFunctions.builders]]), through
+  * [[FunctionCatalog.inject]]. Everything injected is a native Catalyst
+  * expression or an operator plan; no UDF wrappers anywhere on this
+  * path. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("strpos"),
-      info("strpos", "strpos(str, substr) - 1-based position of substr in str, 0 if absent (Presto dialect)"),
-      { exprs: Seq[Expression] => StringInstr(exprs(0), exprs(1)) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("string_agg"),
-      info("string_agg", "string_agg(expr[, sep]) - concatenate values ordered by value (Presto dialect)"),
-      { exprs: Seq[Expression] =>
-        val (child, delim) = exprs match {
-          case Seq(c) => (c, Literal(","))
-          case Seq(c, d) => (c, d)
-          case _ => throw new IllegalArgumentException("string_agg expects 1 or 2 arguments")
-        }
-        ListAgg(child, delim, Seq(SortOrder(child, Ascending)))
-      }))
-
-    // the Presto/Athena migration pack — shared builders with Dialect
-    ext.injectFunction((
-      FunctionIdentifier("date_parse"),
-      info("date_parse", "date_parse(str, mysqlFmt) - parse with a MySQL-style format, translated to a Java pattern (Presto dialect)"),
-      Dialect.dateParseBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("from_iso8601_timestamp"),
-      info("from_iso8601_timestamp", "from_iso8601_timestamp(str) - parse an ISO 8601 timestamp (Presto dialect)"),
-      Dialect.fromIso8601Builder))
-    ext.injectFunction((
-      FunctionIdentifier("approx_distinct"),
-      info("approx_distinct", "approx_distinct(col[, maxStdErr]) - HLL++ distinct estimate, default error 0.023 (Presto dialect)"),
-      Dialect.approxDistinctBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("arbitrary"),
-      info("arbitrary", "arbitrary(col) - any value of the group (Presto dialect)"),
-      Dialect.arbitraryBuilder))
-
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors (codegen)"),
-      { exprs: Seq[Expression] => CosineSimilarity(exprs(0), exprs(1)) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("simhash_agg"),
-      info("simhash_agg", "simhash_agg(hash) - 64-bit SimHash signature over a group of hashes"),
-      { exprs: Seq[Expression] => SimhashAgg(exprs(0)) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(hashArray) - row-local 64-bit SimHash signature (codegen)"),
-      { exprs: Seq[Expression] => Simhash64(exprs(0)) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      info("rolling_hash", "rolling_hash(text) - polynomial fingerprint of the UTF-8 bytes, (acc*31+b) mod 1e9+7 (codegen)"),
-      { exprs: Seq[Expression] => RollingHash64(exprs(0)) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("deflate_ratio"),
-      info("deflate_ratio", "deflate_ratio(text) - compressed/original byte ratio over UTF-8 bytes (quality signal)"),
-      { exprs: Seq[Expression] => DeflateRatio(exprs(0)) }))
-
-    TableFunctions.builders.foreach { case (name, builder) =>
-      ext.injectTableFunction((
-        FunctionIdentifier(name),
-        info(name, s"$name(...) - graft LLM-pipeline table function (see TableFunctions)"),
-        builder))
-    }
-
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      info("minhash_sigs", "minhash_sigs(hashArray, n) - all n MinHash permutation minima in one pass (codegen)"),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(h, Literal(n: Int, org.apache.spark.sql.types.IntegerType)) =>
-            MinhashSigs(h, n)
-          case _ => throw new IllegalArgumentException(
-            "minhash_sigs expects (array<bigint>, <int literal>)")
-        }
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit = FunctionCatalog.inject(ext)
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.{col, count, explode, expr, lit, size}
+
+import graft.operators._
 
 /** SQL table functions over the LLM-pipeline operator family.
   *
@@ -111,9 +112,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * as the Scala call does, because it IS the same plan.
   *
   * Arguments must be literals (they parameterize plan construction at
-  * analysis time). `sem_dedup` additionally trains its capped-sample
-  * quantizer during resolution — a bounded (≤4096-row) job, the same
-  * cost the Scala entry pays.
+  * analysis time); [[Args]] reads and checks them, and each function's
+  * signature fixes its arity (see [[Fn]]). `sem_dedup` additionally
+  * trains its capped-sample quantizer during resolution — a bounded
+  * (≤4096-row) job, the same cost the Scala entry pays.
   */
 object TableFunctions {
 
@@ -121,79 +123,49 @@ object TableFunctions {
     * [[graft.operators.Similarity.semClustersFor]] (a resolution-time
     * count over the named table, metadata-cheap on parquet; the same
     * bounded index-build work as the quantizer fit itself). */
-  private def semClusters(emb: org.apache.spark.sql.DataFrame): Int =
-    graft.operators.Similarity.semClustersFor(emb.count())
+  private def semClusters(emb: DataFrame): Int = Similarity.semClustersFor(emb.count())
 
-  // derived from the builder list so the idempotence check can never
-  // cover only a stale subset of the registered functions
-  private lazy val names = builders.map(_._1)
+  /** A table function whose builder runs `f` against the session
+    * resolving the query and hands the frame's analyzed plan to the outer
+    * analyzer (idempotent on resolved subtrees). */
+  private def tvf(name: String, sig: String)(f: (SparkSession, Args) => DataFrame): Fn[LogicalPlan] =
+    new Fn[LogicalPlan](name, sig, "graft LLM-pipeline table function (see TableFunctions)")(
+      a => f(SparkSession.active, a).queryExecution.analyzed)
 
-  /** Idempotent per-session registration (the table-function analogue of
-    * [[Dialect.register]]; [[graft.core.Sessions.prepare]] routes through
-    * here). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.tableFunctionRegistry
-    if (names.forall(n => reg.functionExists(FunctionIdentifier(n)))) return
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
+  private def docs(spark: SparkSession): DataFrame = spark.table("documents")
+  private def emb(spark: SparkSession): DataFrame = spark.table("embeddings")
+  private def events(spark: SparkSession): DataFrame = spark.table("events")
+  private def table(spark: SparkSession, a: Args, i: Int): DataFrame = spark.table(a.string(i))
 
-  /** The builders, exposed for [[GraftExtensions]] to inject
-    * config-driven (`spark.sql.extensions`) with identical semantics. */
-  private[graft] val builders: Seq[(String, Seq[Expression] => LogicalPlan)] = Seq(
-    "bm25" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(q, k) =>
-          val terms = string(q, "bm25(query, k)")
-            .split("\\s+").filter(_.nonEmpty).distinct.toSeq
-          require(terms.nonEmpty, "bm25: query must contain at least one term")
-          plan(spark => graft.operators.Retrieval.bm25TopK(
-            spark.table("documents"), terms.map(0L -> _), int(k, "bm25(query, k)")))
-        case _ => throw new IllegalArgumentException(
-          "bm25 expects (query string, k)")
-      }
+  private def tokens(docs: DataFrame): DataFrame =
+    TextOps.tokenized(docs).filter(col("token").isNotNull)
+  private def nTok(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"),
+      size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
+  private def jaccard(docs: DataFrame, threshold: Double): DataFrame =
+    Dedup.jaccardPairs(Dedup.sigsOf(docs), threshold)
+  private def vecSources(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("vec_id"), col("source"))
+  private def steps(spark: SparkSession): DataFrame =
+    events(spark).select("user_id", "ts", "event_id", "event_type")
+  private def customerNation(spark: SparkSession): DataFrame =
+    spark.table("customer").join(spark.table("nation"), col("c_nationkey") === col("n_nationkey"))
+
+  /** The table functions, each declared once; [[FunctionCatalog]]
+    * installs them on a prepared session and injects them through
+    * [[GraftExtensions]]. */
+  private[graft] val builders: Seq[Fn[LogicalPlan]] = Seq(
+    tvf("bm25", "query string, k") { (s, a) =>
+      val terms = a.string(0).split("\\s+").filter(_.nonEmpty).distinct.toSeq
+      require(terms.nonEmpty, "bm25: query must contain at least one term")
+      Retrieval.bm25TopK(docs(s), terms.map(0L -> _), a.int(1))
     },
-    "corpus_datasheet" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Corpus.corpusDatasheet(spark.table("documents")))
-        case _ => throw new IllegalArgumentException("corpus_datasheet expects no arguments")
-      }
-    },
-    "inverted_index" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(k) =>
-          plan(spark => graft.operators.Retrieval.invertedIndexAudit(
-            graft.operators.TextOps.tokenized(spark.table("documents"))
-              .filter(org.apache.spark.sql.functions.col("token").isNotNull),
-            int(k, "inverted_index(k)")))
-        case _ => throw new IllegalArgumentException("inverted_index expects (k)")
-      }
-    },
-    "bpe_merges" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(k) =>
-          plan(spark => graft.operators.TextOps.bpeMergeCounts(
-            graft.operators.TextOps.tokenized(spark.table("documents"))
-              .filter(org.apache.spark.sql.functions.col("token").isNotNull),
-            int(k, "bpe_merges(k)")))
-        case _ => throw new IllegalArgumentException("bpe_merges expects (k)")
-      }
-    },
-    "vocab_coverage" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(v) =>
-          plan { spark =>
-            val docs = spark.table("documents")
-            graft.operators.TextOps.vocabCoverage(
-              graft.operators.TextOps.tokenized(docs)
-                .filter(org.apache.spark.sql.functions.col("token").isNotNull),
-              docs.select("doc_id", "source", "lang"),
-              int(v, "vocab_coverage(v)"))
-          }
-        case _ => throw new IllegalArgumentException("vocab_coverage expects (v)")
-      }
+    tvf("corpus_datasheet", "")((s, _) => Corpus.corpusDatasheet(docs(s))),
+    tvf("inverted_index", "k")((s, a) => Retrieval.invertedIndexAudit(tokens(docs(s)), a.int(0))),
+    tvf("bpe_merges", "k")((s, a) => TextOps.bpeMergeCounts(tokens(docs(s)), a.int(0))),
+    tvf("vocab_coverage", "v") { (s, a) =>
+      val d = docs(s)
+      TextOps.vocabCoverage(tokens(d), d.select("doc_id", "source", "lang"), a.int(0))
     },
     // NOTE (round-15 advisor): resolving this TVF EXECUTES jobs — the
     // operator body eagerly materializes its distinct (source, shingle)
@@ -202,585 +174,123 @@ object TableFunctions {
     // measured worse (concurrent consumers recompute partitions), and
     // the materialized frame is distinct-shingle grain, far below the
     // corpus the explode scans.
-    "source_overlap" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan { spark =>
-            val docs = spark.table("documents")
-            graft.operators.Dedup.sourceOverlap(
-              graft.operators.Dedup.sigsOf(docs), docs.select("doc_id", "source"))
-          }
-        case _ => throw new IllegalArgumentException("source_overlap expects no arguments")
-      }
+    tvf("source_overlap", "") { (s, _) =>
+      val d = docs(s)
+      Dedup.sourceOverlap(Dedup.sigsOf(d), d.select("doc_id", "source"))
     },
-    "dup_clusters" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(thr) =>
-          plan { spark =>
-            val pairs = graft.operators.Dedup.jaccardPairs(
-              graft.operators.Dedup.sigsOf(spark.table("documents")),
-              dbl(thr, "dup_clusters(threshold)")).select("d1", "d2")
-            graft.operators.Dedup.clusterHistogram(
-              graft.operators.Dedup.minLabelComponents(spark, pairs))
-          }
-        case _ => throw new IllegalArgumentException("dup_clusters expects (threshold)")
-      }
+    tvf("dup_clusters", "threshold") { (s, a) =>
+      Dedup.clusterHistogram(Dedup.minLabelComponents(s,
+        jaccard(docs(s), a.double(0)).select("d1", "d2")))
     },
-    "mix_manifest" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(b) =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.{col, size}
-            val docs = spark.table("documents")
-            graft.operators.Sampling.mixManifest(
-              docs.select(col("doc_id"), col("source"),
-                size(graft.operators.TextOps.tokens(col("text"))).cast("long").as("n_tok")),
-              graft.operators.Sampling.MixAlpha,
-              long(b, "mix_manifest(budget)"))
-          }
-        case _ => throw new IllegalArgumentException("mix_manifest expects (budget)")
-      }
+    tvf("mix_manifest", "budget")((s, a) =>
+      Sampling.mixManifest(nTok(docs(s)), Sampling.MixAlpha, a.long(0))),
+    tvf("split_leakage", "") { (s, _) =>
+      val d = docs(s)
+      Dedup.splitLeakage(Dedup.prefixJaccardPairs(Dedup.sigsOf(d), 0.6), Sampling.splitAssign(d))
     },
-    "split_leakage" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan { spark =>
-            val docs = spark.table("documents")
-            graft.operators.Dedup.splitLeakage(
-              graft.operators.Dedup.prefixJaccardPairs(
-                graft.operators.Dedup.sigsOf(docs), 0.6),
-              graft.operators.Sampling.splitAssign(docs))
-          }
-        case _ => throw new IllegalArgumentException("split_leakage expects no arguments")
-      }
+    tvf("token_budget", "budget")((s, a) => Sampling.tokenBudgetFill(nTok(docs(s)), a.long(0))),
+    tvf("zipf_slope", "k")((s, a) => TextOps.zipfSlope(tokens(docs(s)), a.int(0))),
+    tvf("hybrid_rrf", "query string, probe_id, k")((s, a) =>
+      Retrieval.hybridRrf(docs(s), emb(s), a.string(0), a.long(1), a.int(2))),
+    tvf("source_cap", "cap")((s, a) => Sampling.sourceCap(docs(s), a.int(0))),
+    tvf("sem_dedup", "threshold") { (s, a) =>
+      val e = emb(s)
+      Similarity.semDedup(e, IvfIndex.centroidsOf(e, semClusters(e)), a.double(0))
     },
-    "token_budget" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(b) =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.{col, size}
-            val docs = spark.table("documents")
-            graft.operators.Sampling.tokenBudgetFill(
-              docs.select(col("doc_id"), col("source"),
-                size(graft.operators.TextOps.tokens(col("text"))).cast("long").as("n_tok")),
-              long(b, "token_budget(budget)"))
-          }
-        case _ => throw new IllegalArgumentException("token_budget expects (budget)")
-      }
+    tvf("decontaminate", "eval_table")((s, a) =>
+      Dedup.decontaminate(s, Dedup.sigsOf(docs(s)), Dedup.sigsOf(table(s, a, 0)))),
+    tvf("eval_leak", "eval_table")((s, a) =>
+      Dedup.evalLeakOver(Dedup.sigsOf(table(s, a, 0)),
+        Dedup.sigsOf(docs(s)).select(col("doc_id"), explode(col("hs")).as("h")))),
+    tvf("corpus_diff", "v1 table, v2 table")((s, a) => Corpus.diff(table(s, a, 0), table(s, a, 1))),
+    tvf("near_dup_pairs", "threshold")((s, a) => jaccard(docs(s), a.double(0))),
+    tvf("containment", "threshold") { (s, a) =>
+      val t = a.double(0)
+      require(t >= 0.0 && t <= 1.0, "containment: threshold must be in [0, 1]")
+      Dedup.containmentPairs(Dedup.sigsOf(docs(s)), math.round(t * 1e6), Dedup.ContainMinShingles)
     },
-    "zipf_slope" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(k) =>
-          plan(spark => graft.operators.TextOps.zipfSlope(
-            graft.operators.TextOps.tokenized(spark.table("documents"))
-              .filter(org.apache.spark.sql.functions.col("token").isNotNull),
-            int(k, "zipf_slope(k)")))
-        case _ => throw new IllegalArgumentException("zipf_slope expects (k)")
-      }
+    tvf("token_fertility", "")((s, _) => TextOps.tokenFertility(docs(s))),
+    tvf("sem_decontaminate", "")((s, _) => Similarity.semDecontaminate(emb(s), docs(s))),
+    tvf("dedup_apply", "threshold") { (s, a) =>
+      Dedup.minLabelComponents(s, jaccard(docs(s), a.double(0)).select("d1", "d2"))
+        .select(col("doc_id"), col("keeper"), (col("doc_id") === col("keeper")).as("is_keeper"))
+        .orderBy("doc_id")
     },
-    "hybrid_rrf" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(q, probe, k) =>
-          plan(spark => graft.operators.Retrieval.hybridRrf(
-            spark.table("documents"), spark.table("embeddings"),
-            string(q, "hybrid_rrf(query, probe_id, k)"),
-            long(probe, "hybrid_rrf(query, probe_id, k)"),
-            int(k, "hybrid_rrf(query, probe_id, k)")))
-        case _ => throw new IllegalArgumentException(
-          "hybrid_rrf expects (query string, probe_id, k)")
-      }
+    tvf("temperature_mix", "alpha")((s, a) => Sampling.temperatureMix(docs(s), a.double(0))),
+    tvf("corpus_drift", "v1 table, v2 table") { (s, a) =>
+      def cells(i: Int, out: String) =
+        table(s, a, i).groupBy("source", "lang").agg(count(lit(1)).as(out))
+      Corpus.drift(cells(0, "n1").join(cells(1, "n2"), Seq("source", "lang"), "full_outer")
+        .na.fill(0L, Seq("n1", "n2")))
     },
-    "source_cap" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(cap) =>
-          plan(spark => graft.operators.Sampling.sourceCap(
-            spark.table("documents"), int(cap, "source_cap(cap)")))
-        case _ => throw new IllegalArgumentException("source_cap expects (cap)")
-      }
-    },
-    "sem_dedup" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(thr) =>
-          plan { spark =>
-            val emb = spark.table("embeddings")
-            graft.operators.Similarity.semDedup(
-              emb,
-              graft.operators.IvfIndex.centroidsOf(emb, semClusters(emb)),
-              dbl(thr, "sem_dedup(threshold)"))
-          }
-        case _ => throw new IllegalArgumentException("sem_dedup expects (threshold)")
-      }
-    },
-    "decontaminate" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(evalTable) =>
-          plan { spark =>
-            val sigs = graft.operators.Dedup.sigsOf _
-            graft.operators.Dedup.decontaminate(
-              spark,
-              sigs(spark.table("documents")),
-              sigs(spark.table(string(evalTable, "decontaminate(eval_table)"))))
-          }
-        case _ => throw new IllegalArgumentException(
-          "decontaminate expects (eval_table name)")
-      }
-    },
-    "eval_leak" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(evalTable) =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.{col, explode}
-            val sigs = graft.operators.Dedup.sigsOf _
-            graft.operators.Dedup.evalLeakOver(
-              sigs(spark.table(string(evalTable, "eval_leak(eval_table)"))),
-              sigs(spark.table("documents"))
-                .select(col("doc_id"), explode(col("hs")).as("h")))
-          }
-        case _ => throw new IllegalArgumentException(
-          "eval_leak expects (eval_table name)")
-      }
-    },
-    "corpus_diff" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(v1, v2) =>
-          plan(spark => graft.operators.Corpus.diff(
-            spark.table(string(v1, "corpus_diff(v1, v2)")),
-            spark.table(string(v2, "corpus_diff(v1, v2)"))))
-        case _ => throw new IllegalArgumentException(
-          "corpus_diff expects (v1 table name, v2 table name)")
-      }
-    },
-    "near_dup_pairs" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(thr) =>
-          plan(spark => graft.operators.Dedup.jaccardPairs(
-            graft.operators.Dedup.sigsOf(spark.table("documents")),
-            dbl(thr, "near_dup_pairs(threshold)")))
-        case _ => throw new IllegalArgumentException("near_dup_pairs expects (threshold)")
-      }
-    },
-    "containment" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(thr) =>
-          val t = dbl(thr, "containment(threshold)")
-          require(t >= 0.0 && t <= 1.0, "containment: threshold must be in [0, 1]")
-          plan(spark => graft.operators.Dedup.containmentPairs(
-            graft.operators.Dedup.sigsOf(spark.table("documents")),
-            math.round(t * 1e6), graft.operators.Dedup.ContainMinShingles))
-        case _ => throw new IllegalArgumentException("containment expects (threshold)")
-      }
-    },
-    "token_fertility" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.TextOps.tokenFertility(spark.table("documents")))
-        case _ => throw new IllegalArgumentException("token_fertility expects no arguments")
-      }
-    },
-    "sem_decontaminate" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Similarity.semDecontaminate(
-            spark.table("embeddings"), spark.table("documents")))
-        case _ => throw new IllegalArgumentException("sem_decontaminate expects no arguments")
-      }
-    },
-    "dedup_apply" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(thr) =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.col
-            val pairs = graft.operators.Dedup.jaccardPairs(
-              graft.operators.Dedup.sigsOf(spark.table("documents")),
-              dbl(thr, "dedup_apply(threshold)")).select("d1", "d2")
-            graft.operators.Dedup.minLabelComponents(spark, pairs)
-              .select(col("doc_id"), col("keeper"),
-                (col("doc_id") === col("keeper")).as("is_keeper"))
-              .orderBy("doc_id")
-          }
-        case _ => throw new IllegalArgumentException("dedup_apply expects (threshold)")
-      }
-    },
-    "temperature_mix" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(alpha) =>
-          plan(spark => graft.operators.Sampling.temperatureMix(
-            spark.table("documents"), dbl(alpha, "temperature_mix(alpha)")))
-        case _ => throw new IllegalArgumentException("temperature_mix expects (alpha)")
-      }
-    },
-    "corpus_drift" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(v1, v2) =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.{count, lit}
-            def cells(table: String, out: String) =
-              spark.table(table)
-                .groupBy("source", "lang").agg(count(lit(1)).as(out))
-            graft.operators.Corpus.drift(
-              cells(string(v1, "corpus_drift(v1, v2)"), "n1")
-                .join(cells(string(v2, "corpus_drift(v1, v2)"), "n2"),
-                  Seq("source", "lang"), "full_outer")
-                .na.fill(0L, Seq("n1", "n2")))
-          }
-        case _ => throw new IllegalArgumentException(
-          "corpus_drift expects (v1 table name, v2 table name)")
-      }
-    },
-    "chunk" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(size, stride) =>
-          plan(spark => graft.operators.TextOps.chunkOverlap(
-            spark.table("documents"),
-            int(size, "chunk(size, stride)"), int(stride, "chunk(size, stride)")))
-        case _ => throw new IllegalArgumentException("chunk expects (size, stride)")
-      }
-    },
-    "pii_redact" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.col
-            graft.operators.Privacy.redact(spark.table("documents"), col("text"))
-          }
-        case _ => throw new IllegalArgumentException("pii_redact expects no arguments")
-      }
-    },
-    "lm_score" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.TextOps.unigramLogprob(spark.table("documents")))
-        case _ => throw new IllegalArgumentException("lm_score expects no arguments")
-      }
-    },
-    "scd2" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(v1, v2) =>
-          plan(spark => graft.operators.Corpus.scd2(
-            spark.table(string(v1, "scd2(v1, v2)")),
-            spark.table(string(v2, "scd2(v1, v2)"))))
-        case _ => throw new IllegalArgumentException(
-          "scd2 expects (v1 table name, v2 table name)")
-      }
-    },
-    "quantize_error" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.col
-            graft.operators.Quantize.int8Error(
-              spark.table("embeddings"), col("embedding"))
-          }
-        case _ => throw new IllegalArgumentException("quantize_error expects no arguments")
-      }
-    },
-    "novelty" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(ref) =>
-          plan { spark =>
-            import graft.operators.{Corpus, Dedup, TextOps}
-            Corpus.novelty(
-              Dedup.shingles(spark.table("documents"), TextOps.BoilerK),
-              Dedup.shingles(spark.table(string(ref, "novelty(reference_table)")),
-                TextOps.BoilerK))
-          }
-        case _ => throw new IllegalArgumentException(
-          "novelty expects (reference_table name)")
-      }
-    },
+    tvf("chunk", "size, stride")((s, a) => TextOps.chunkOverlap(docs(s), a.int(0), a.int(1))),
+    tvf("pii_redact", "")((s, _) => Privacy.redact(docs(s), col("text"))),
+    tvf("lm_score", "")((s, _) => TextOps.unigramLogprob(docs(s))),
+    tvf("scd2", "v1 table, v2 table")((s, a) => Corpus.scd2(table(s, a, 0), table(s, a, 1))),
+    tvf("quantize_error", "")((s, _) => Quantize.int8Error(emb(s), col("embedding"))),
+    tvf("novelty", "reference_table")((s, a) =>
+      Corpus.novelty(Dedup.shingles(docs(s), TextOps.BoilerK),
+        Dedup.shingles(table(s, a, 0), TextOps.BoilerK))),
     // like sem_dedup's quantizer fit, the bounded sketch pass runs at
     // resolution time (state <= SketchK entries; the recount is the plan)
-    "heavy_hitters" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan { spark =>
-            import org.apache.spark.sql.functions._
-            import graft.operators.{Dedup, HeavyHitters, TextOps}
-            val sh = Dedup.shingles(spark.table("documents"), TextOps.BoilerK)
-            val (cands, total) = HeavyHitters.candidates(sh, "s")
-            val floor = total / HeavyHitters.SketchK
-            import spark.implicits._
-            sh.join(broadcast(cands.toDF("s")), Seq("s"))
-              .groupBy("s")
-              .agg(count(lit(1)).as("n_docs"), min("doc_id").as("first_doc"))
-              .filter(col("n_docs") > floor)
-              .select(col("s").as("shingle"), col("n_docs"), col("first_doc"),
-                lit(floor).as("floor_docs"))
-          }
-        case _ => throw new IllegalArgumentException("heavy_hitters expects no arguments")
-      }
+    tvf("heavy_hitters", "") { (s, _) =>
+      import org.apache.spark.sql.functions.{broadcast, min}
+      import s.implicits._
+      val sh = Dedup.shingles(docs(s), TextOps.BoilerK)
+      val (cands, total) = HeavyHitters.candidates(sh, "s")
+      val floor = total / HeavyHitters.SketchK
+      sh.join(broadcast(cands.toDF("s")), Seq("s"))
+        .groupBy("s")
+        .agg(count(lit(1)).as("n_docs"), min("doc_id").as("first_doc"))
+        .filter(col("n_docs") > floor)
+        .select(col("s").as("shingle"), col("n_docs"), col("first_doc"), lit(floor).as("floor_docs"))
     },
-    "span_dedup" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Dedup.spanDedup(
-            spark.table("documents"), graft.operators.Dedup.SpanWindow))
-        case Seq(w) =>
-          plan(spark => graft.operators.Dedup.spanDedup(
-            spark.table("documents"), int(w, "span_dedup(window_tokens)")))
-        case _ => throw new IllegalArgumentException("span_dedup expects () or (window_tokens)")
-      }
+    tvf("span_dedup", "[window_tokens]")((s, a) =>
+      Dedup.spanDedup(docs(s), if (a.size == 0) Dedup.SpanWindow else a.int(0))),
+    tvf("weighted_sample", "k")((s, a) => Sampling.weightedSample(docs(s), a.int(0))),
+    tvf("cooccurrence", "support")((s, a) => TextOps.cooccurrence(docs(s), a.double(0))),
+    tvf("k_anonymity", "k")((s, a) =>
+      Privacy.kAnonymity(customerNation(s), Seq("c_mktsegment", "n_name"), a.long(0))),
+    tvf("winsorize", "p")((s, a) => Analytics.winsorizedStats(s.table("orders"), a.double(0))),
+    tvf("cohort_retention", "")((s, _) => Analytics.cohortRetention(events(s))),
+    tvf("funnel", "")((s, _) => Analytics.funnelOver(events(s))),
+    tvf("nb_quality", "")((s, _) => Classify.nbQualityOver(docs(s))),
+    tvf("ingest_anomaly", "")((s, _) => Analytics.ingestAnomaly(events(s))),
+    tvf("hard_negatives", "lo, hi, k") { (s, a) =>
+      val (lo, hi) = (a.double(0), a.double(1))
+      require(lo < hi, "hard_negatives: lo must be < hi")
+      Similarity.hardNegatives(emb(s), lo, hi, a.int(2))
     },
-    "weighted_sample" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(k) =>
-          plan(spark => graft.operators.Sampling.weightedSample(
-            spark.table("documents"), int(k, "weighted_sample(k)")))
-        case _ => throw new IllegalArgumentException("weighted_sample expects (k)")
-      }
+    tvf("embedding_diversity", "")((s, _) =>
+      Similarity.embeddingDiversity(emb(s), vecSources(docs(s)))),
+    tvf("quality_propagation", "jaccard threshold") { (s, a) =>
+      val d = docs(s)
+      Propagate.qualityPropagation(d, jaccard(d, a.double(0)))
     },
-    "cooccurrence" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(sup) =>
-          plan(spark => graft.operators.TextOps.cooccurrence(
-            spark.table("documents"), dbl(sup, "cooccurrence(support)")))
-        case _ => throw new IllegalArgumentException("cooccurrence expects (support)")
-      }
+    tvf("cms_sketch", "")((s, _) => Cms.cmsAudit(docs(s))),
+    tvf("edit_verify", "jaccard threshold") { (s, a) =>
+      val d = docs(s)
+      Dedup.editVerify(jaccard(d, a.double(0)), d)
     },
-    "k_anonymity" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(k) =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.col
-            graft.operators.Privacy.kAnonymity(
-              spark.table("customer").join(spark.table("nation"),
-                col("c_nationkey") === col("n_nationkey")),
-              Seq("c_mktsegment", "n_name"), int(k, "k_anonymity(k)").toLong)
-          }
-        case _ => throw new IllegalArgumentException("k_anonymity expects (k)")
-      }
-    },
-    "winsorize" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(p) =>
-          plan(spark => graft.operators.Analytics.winsorizedStats(
-            spark.table("orders"), dbl(p, "winsorize(p)")))
-        case _ => throw new IllegalArgumentException("winsorize expects (p)")
-      }
-    },
-    "cohort_retention" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Analytics.cohortRetention(spark.table("events")))
-        case _ => throw new IllegalArgumentException("cohort_retention expects no arguments")
-      }
-    },
-    "funnel" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Analytics.funnelOver(spark.table("events")))
-        case _ => throw new IllegalArgumentException("funnel expects no arguments")
-      }
-    },
-    "nb_quality" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Classify.nbQualityOver(spark.table("documents")))
-        case _ => throw new IllegalArgumentException("nb_quality expects no arguments")
-      }
-    },
-    "ingest_anomaly" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Analytics.ingestAnomaly(spark.table("events")))
-        case _ => throw new IllegalArgumentException("ingest_anomaly expects no arguments")
-      }
-    },
-    "hard_negatives" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(lo, hi, k) =>
-          val l = dbl(lo, "hard_negatives(lo, hi, k)")
-          val h = dbl(hi, "hard_negatives(lo, hi, k)")
-          require(l < h, "hard_negatives: lo must be < hi")
-          plan(spark => graft.operators.Similarity.hardNegatives(
-            spark.table("embeddings"), l, h, int(k, "hard_negatives(lo, hi, k)")))
-        case _ => throw new IllegalArgumentException(
-          "hard_negatives expects (lo, hi, k)")
-      }
-    },
-    "embedding_diversity" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.col
-            graft.operators.Similarity.embeddingDiversity(
-              spark.table("embeddings"),
-              spark.table("documents")
-                .select(col("doc_id").as("vec_id"), col("source")))
-          }
-        case _ => throw new IllegalArgumentException(
-          "embedding_diversity expects no arguments")
-      }
-    },
-    "quality_propagation" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(thr) =>
-          plan { spark =>
-            val docs = spark.table("documents")
-            graft.operators.Propagate.qualityPropagation(docs,
-              graft.operators.Dedup.jaccardPairs(
-                graft.operators.Dedup.sigsOf(docs),
-                dbl(thr, "quality_propagation(threshold)")))
-          }
-        case _ => throw new IllegalArgumentException(
-          "quality_propagation expects (jaccard threshold)")
-      }
-    },
-    "cms_sketch" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Cms.cmsAudit(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "cms_sketch expects no arguments")
-      }
-    },
-    "edit_verify" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(thr) =>
-          plan { spark =>
-            val docs = spark.table("documents")
-            graft.operators.Dedup.editVerify(
-              graft.operators.Dedup.jaccardPairs(
-                graft.operators.Dedup.sigsOf(docs),
-                dbl(thr, "edit_verify(threshold)")),
-              docs)
-          }
-        case _ => throw new IllegalArgumentException(
-          "edit_verify expects (jaccard threshold)")
-      }
-    },
-    "sorted_neighborhood" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Dedup.snPairs(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "sorted_neighborhood expects no arguments")
-      }
-    },
-    "sq_search" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Sq.sqGateOver(spark,
-            graft.operators.KMeans.quantizedOf(spark.table("embeddings"))))
-        case _ => throw new IllegalArgumentException(
-          "sq_search expects no arguments")
-      }
-    },
-    "truncation_sweep" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Matryoshka.sweepOver(spark,
-            graft.operators.KMeans.quantizedOf(spark.table("embeddings"))))
-        case _ => throw new IllegalArgumentException(
-          "truncation_sweep expects no arguments")
-      }
-    },
-    "nb_calibration" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Classify.nbCalibrationOver(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "nb_calibration expects no arguments")
-      }
-    },
-    "dp_release" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Privacy.dpRelease(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "dp_release expects no arguments")
-      }
-    },
-    "langid_confusion" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.TextOps.langidConfusion(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "langid_confusion expects no arguments")
-      }
-    },
-    "source_quality_shrunk" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Classify.shrunkQualityOver(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "source_quality_shrunk expects no arguments")
-      }
-    },
-    "quantile_sketch" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.QuantileSketch.gateOver(spark.table("events")))
-        case _ => throw new IllegalArgumentException(
-          "quantile_sketch expects no arguments")
-      }
-    },
-    "z_range" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(uLo, uHi, cLo, cHi) =>
-          plan(spark => graft.layout.ZOrderLayout.rangeAggOverEvents(
-            spark.table("events"),
-            long(uLo, "z_range(u_lo, u_hi, cents_lo, cents_hi)"),
-            long(uHi, "z_range(u_lo, u_hi, cents_lo, cents_hi)"),
-            long(cLo, "z_range(u_lo, u_hi, cents_lo, cents_hi)"),
-            long(cHi, "z_range(u_lo, u_hi, cents_lo, cents_hi)")))
-        case _ => throw new IllegalArgumentException(
-          "z_range expects (user_lo, user_hi, cents_lo, cents_hi)")
-      }
-    },
-    "cms_probe" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case grams if grams.nonEmpty =>
-          plan(spark => graft.operators.Cms.probe(
-            spark.table("documents"),
-            grams.map(g => string(g, "cms_probe(ngram, ...)"))))
-        case _ => throw new IllegalArgumentException(
-          "cms_probe expects at least one n-gram string")
-      }
-    },
-    "ivf_maintain" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.IvfMaintain.maintainFromEmbeddings(
-            spark.table("embeddings")))
-        case _ => throw new IllegalArgumentException(
-          "ivf_maintain expects no arguments")
-      }
-    },
-    "topic_tag" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Taxonomy.tagged(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "topic_tag expects no arguments")
-      }
-    },
-    "cdc_apply" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Cdc.applyOver(spark.table("events")))
-        case _ => throw new IllegalArgumentException(
-          "cdc_apply expects no arguments")
-      }
-    },
-    "hll_rollup" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.HllRollup.rollupOver(spark.table("events")))
-        case _ => throw new IllegalArgumentException(
-          "hll_rollup expects no arguments")
-      }
-    },
+    tvf("sorted_neighborhood", "")((s, _) => Dedup.snPairs(docs(s))),
+    tvf("sq_search", "")((s, _) => Sq.sqGateOver(s, KMeans.quantizedOf(emb(s)))),
+    tvf("truncation_sweep", "")((s, _) => Matryoshka.sweepOver(s, KMeans.quantizedOf(emb(s)))),
+    tvf("nb_calibration", "")((s, _) => Classify.nbCalibrationOver(docs(s))),
+    tvf("dp_release", "")((s, _) => Privacy.dpRelease(docs(s))),
+    tvf("langid_confusion", "")((s, _) => TextOps.langidConfusion(docs(s))),
+    tvf("source_quality_shrunk", "")((s, _) => Classify.shrunkQualityOver(docs(s))),
+    tvf("quantile_sketch", "")((s, _) => QuantileSketch.gateOver(events(s))),
+    tvf("z_range", "user_lo, user_hi, cents_lo, cents_hi")((s, a) =>
+      graft.layout.ZOrderLayout.rangeAggOverEvents(
+        events(s), a.long(0), a.long(1), a.long(2), a.long(3))),
+    tvf("cms_probe", "ngram, ...")((s, a) => Cms.probe(docs(s), (0 until a.size).map(a.string))),
+    tvf("ivf_maintain", "")((s, _) => IvfMaintain.maintainFromEmbeddings(emb(s))),
+    tvf("topic_tag", "")((s, _) => Taxonomy.tagged(docs(s))),
+    tvf("cdc_apply", "")((s, _) => Cdc.applyOver(events(s))),
+    tvf("hll_rollup", "")((s, _) => HllRollup.rollupOver(events(s))),
     // resolution runs the global-rank sort eagerly (the ivf_maintain /
     // sem_dedup resolution-time-job convention)
-    "curriculum_shards" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Curriculum.shardsOver(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "curriculum_shards expects no arguments")
-      }
-    },
+    tvf("curriculum_shards", "")((s, _) => Curriculum.shardsOver(docs(s))),
     // NOTE (round-15 advisor): resolving this TVF EXECUTES the full n²
     // cosine kernel — minedPairs rides marginRankTail, whose scored
     // candidate frame is eagerly materialized (Materialize.once) because
@@ -790,472 +300,91 @@ object TableFunctions {
     // Deliberate: the lazy checkpoint measured worse on both miners
     // (round-15 log §1); a deployment that must EXPLAIN cheaply points
     // the TVF at the IVF-blocked miner instead.
-    "margin_pairs" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Margin.minedPairs(spark.table("embeddings")))
-        case _ => throw new IllegalArgumentException(
-          "margin_pairs expects no arguments")
-      }
+    tvf("margin_pairs", "")((s, _) => Margin.minedPairs(emb(s))),
+    tvf("embedding_outliers", "")((s, _) => Outlier.scoresOver(emb(s), vecSources(docs(s)))),
+    tvf("domain_reweight", "")((s, _) => Mixture.reweightDocs(docs(s))),
+    tvf("score_drift", "v1 table, v2 table")((s, a) => Drift.psiOver(table(s, a, 0), table(s, a, 1))),
+    tvf("skew_report", "")((s, _) => Skew.skewReport(events(s), "user_id")),
+    tvf("retrieval_eval", "")((s, _) => Retrieval.evalDocs(docs(s))),
+    tvf("template_spans", "")((s, _) => TextOps.templateSpansOver(docs(s))),
+    tvf("purge_audit", "")((s, _) => Purge.auditOver(s, docs(s), emb(s))),
+    tvf("weak_labels", "")((s, _) => WeakLabels.labeled(docs(s))),
+    tvf("weak_label_matrix", "")((s, _) => WeakLabels.matrixOver(docs(s))),
+    tvf("code_switch", "")((s, _) => LangSegments.segmentsOver(docs(s))),
+    tvf("phrase_tags", "")((s, _) => Taxonomy.phraseTagsOver(s, docs(s))),
+    tvf("trajectories", "")((s, _) => Trajectory.assembled(steps(s))),
+    tvf("record_link", "registry table, crawl table")((s, a) =>
+      Linkage.linkTables(table(s, a, 0), table(s, a, 1))),
+    tvf("phrase_search", "two-word phrase") { (s, a) =>
+      import s.implicits._
+      // normalize BEFORE joining: the bigram table is built with
+      // single-space concat_ws, so a phrase with a double space or
+      // stray edge whitespace would pass the two-word validation
+      // yet silently return zero hits
+      val norm = a.string(0).trim.split("\\s+")
+      require(norm.length == 2, "phrase_search expects a two-word phrase")
+      Retrieval.phraseHits(docs(s), Seq(norm.mkString(" ")).toDF("phrase"))
     },
-    "embedding_outliers" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Outlier.scoresOver(
-            spark.table("embeddings"),
-            spark.table("documents").select(
-              org.apache.spark.sql.functions.col("doc_id").as("vec_id"),
-              org.apache.spark.sql.functions.col("source"))))
-        case _ => throw new IllegalArgumentException(
-          "embedding_outliers expects no arguments")
-      }
+    tvf("pref_pairs", "threshold") { (s, a) =>
+      val d = docs(s)
+      Dedup.prefPairsOver(
+        Dedup.minLabelComponents(s, jaccard(d, a.double(0)).select("d1", "d2"))
+          .select(col("doc_id"), col("keeper").as("grp")),
+        Dedup.qualityMicroOf(d))
     },
-    "domain_reweight" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Mixture.reweightDocs(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "domain_reweight expects no arguments")
-      }
+    tvf("cluster_safe_split", "threshold") { (s, a) =>
+      val d = docs(s)
+      Sampling.clusterSafeSplitOver(s, d, jaccard(d, a.double(0)).select("d1", "d2"))
     },
-    "score_drift" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(v1, v2) =>
-          plan(spark => graft.operators.Drift.psiOver(
-            spark.table(string(v1, "score_drift(v1, v2)")),
-            spark.table(string(v2, "score_drift(v1, v2)"))))
-        case _ => throw new IllegalArgumentException(
-          "score_drift expects (v1 table, v2 table)")
-      }
+    tvf("curation_manifest", "")((s, _) =>
+      Curation.manifestOver(graft.core.Materialize.once(
+        Curation.tableLedger(s, docs(s)).drop("text")))),
+    tvf("curation_ledger", "")((s, _) => Curation.ledgerOutcomes(Curation.tableLedger(s, docs(s)))),
+    tvf("dedup_weights", "threshold") { (s, a) =>
+      val d = docs(s)
+      Dedup.softWeightsOver(
+        Dedup.minLabelComponents(s, jaccard(d, a.double(0)).select("d1", "d2")), d)
     },
-    "skew_report" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Skew.skewReport(
-            spark.table("events"), "user_id"))
-        case _ => throw new IllegalArgumentException(
-          "skew_report expects no arguments")
-      }
+    tvf("jl_distortion", "")((s, _) => RandomProjection.distortionOver(emb(s))),
+    tvf("score_percentiles", "")((s, _) => ScoreNorm.percentilesOver(docs(s))),
+    tvf("score_ks", "v1 table, v2 table")((s, a) => ScoreNorm.ksOver(table(s, a, 0), table(s, a, 1))),
+    tvf("tiered_link", "registry table, crawl table")((s, a) =>
+      Linkage.tieredLink(
+        table(s, a, 0).select(col("doc_id").as("old_id"), col("text")),
+        table(s, a, 1).select(col("doc_id").as("new_id"), col("text")))),
+    tvf("shard_rebalance", "")((s, _) => Sharding.rebalanceOver(docs(s))),
+    tvf("lf_agreement", "")((s, _) => WeakLabels.agreementOver(docs(s))),
+    tvf("l_diversity", "l")((s, a) =>
+      Privacy.lDiversity(customerNation(s), Seq("c_mktsegment", "n_name"),
+        expr("(CAST(round(c_acctbal * 100) AS BIGINT) + 100000) div 100000"), a.long(0))),
+    tvf("bootstrap_ci", "")((s, _) => Sampling.bootstrapCi(docs(s))),
+    tvf("incremental_admission", "")((s, _) => Admission.tableVerdicts(s, docs(s))),
+    tvf("cross_modal_audit", "")((s, _) => Audit.tableCrossModal(s, docs(s))),
+    tvf("training_export", "")((s, _) => Curation.tableExport(s, docs(s), emb(s))),
+    tvf("bpe_train", "[rounds]") { (s, a) =>
+      val rounds = if (a.size == 0) TextOps.BpeTrainRounds else a.int(0)
+      if (rounds < 1 || rounds > 1000) throw new IllegalArgumentException(
+        s"bpe_train: rounds must be in [1, 1000], got $rounds")
+      TextOps.tableBpeTrain(docs(s), rounds)
     },
-    "retrieval_eval" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Retrieval.evalDocs(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "retrieval_eval expects no arguments")
-      }
+    tvf("bpe_encode", "")((s, _) => TextOps.tableBpeEncode(docs(s))),
+    tvf("retrieval_quality", "")((s, _) => Retrieval.tableQuality(docs(s), emb(s))),
+    tvf("budget_waterfill", "")((s, _) => Sampling.waterfillOver(docs(s))),
+    tvf("cluster_prune", "") { (s, _) =>
+      val q = KMeans.quantizedOf(emb(s))
+      KMeans.pruneOver(q, KMeans.trainOn(q))
     },
-    "template_spans" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.TextOps.templateSpansOver(
-            spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "template_spans expects no arguments")
-      }
-    },
-    "purge_audit" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Purge.auditOver(
-            spark, spark.table("documents"), spark.table("embeddings")))
-        case _ => throw new IllegalArgumentException(
-          "purge_audit expects no arguments")
-      }
-    },
-    "weak_labels" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.WeakLabels.labeled(spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "weak_labels expects no arguments")
-      }
-    },
-    "weak_label_matrix" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.WeakLabels.matrixOver(
-            spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "weak_label_matrix expects no arguments")
-      }
-    },
-    "code_switch" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.LangSegments.segmentsOver(
-            spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "code_switch expects no arguments")
-      }
-    },
-    "phrase_tags" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Taxonomy.phraseTagsOver(
-            spark, spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "phrase_tags expects no arguments")
-      }
-    },
-    "trajectories" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Trajectory.assembled(
-            spark.table("events").select(
-              org.apache.spark.sql.functions.col("user_id"),
-              org.apache.spark.sql.functions.col("ts"),
-              org.apache.spark.sql.functions.col("event_id"),
-              org.apache.spark.sql.functions.col("event_type"))))
-        case _ => throw new IllegalArgumentException(
-          "trajectories expects no arguments")
-      }
-    },
-    "record_link" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(reg, crawl) =>
-          plan(spark => graft.operators.Linkage.linkTables(
-            spark.table(string(reg, "record_link(registry, crawl)")),
-            spark.table(string(crawl, "record_link(registry, crawl)"))))
-        case _ => throw new IllegalArgumentException(
-          "record_link expects (registry table, crawl table)")
-      }
-    },
-    "phrase_search" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(p) =>
-          plan { spark =>
-            import spark.implicits._
-            // normalize BEFORE joining: the bigram table is built with
-            // single-space concat_ws, so a phrase with a double space or
-            // stray edge whitespace would pass the two-word validation
-            // yet silently return zero hits
-            val norm = string(p, "phrase_search(phrase)").trim.split("\\s+")
-            require(norm.length == 2,
-              "phrase_search expects a two-word phrase")
-            graft.operators.Retrieval.phraseHits(
-              spark.table("documents"), Seq(norm.mkString(" ")).toDF("phrase"))
-          }
-        case _ => throw new IllegalArgumentException(
-          "phrase_search expects (two-word phrase)")
-      }
-    },
-    "pref_pairs" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(thr) =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.col
-            val docs = spark.table("documents")
-            val pairs = graft.operators.Dedup.jaccardPairs(
-              graft.operators.Dedup.sigsOf(docs),
-              dbl(thr, "pref_pairs(threshold)")).select("d1", "d2")
-            graft.operators.Dedup.prefPairsOver(
-              graft.operators.Dedup.minLabelComponents(spark, pairs)
-                .select(col("doc_id"), col("keeper").as("grp")),
-              graft.operators.Dedup.qualityMicroOf(docs))
-          }
-        case _ => throw new IllegalArgumentException("pref_pairs expects (threshold)")
-      }
-    },
-    "cluster_safe_split" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(thr) =>
-          plan { spark =>
-            val docs = spark.table("documents")
-            graft.operators.Sampling.clusterSafeSplitOver(spark, docs,
-              graft.operators.Dedup.jaccardPairs(
-                graft.operators.Dedup.sigsOf(docs),
-                dbl(thr, "cluster_safe_split(threshold)")).select("d1", "d2"))
-          }
-        case _ => throw new IllegalArgumentException(
-          "cluster_safe_split expects (threshold)")
-      }
-    },
-    "curation_manifest" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan { spark =>
-            graft.operators.Curation.manifestOver(
-              graft.core.Materialize.once(
-                graft.operators.Curation.tableLedger(spark, spark.table("documents"))
-                  .drop("text")))
-          }
-        case _ => throw new IllegalArgumentException(
-          "curation_manifest expects no arguments")
-      }
-    },
-    "curation_ledger" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan { spark =>
-            graft.operators.Curation.ledgerOutcomes(
-              graft.operators.Curation.tableLedger(spark, spark.table("documents")))
-          }
-        case _ => throw new IllegalArgumentException(
-          "curation_ledger expects no arguments")
-      }
-    },
-    "dedup_weights" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(thr) =>
-          plan { spark =>
-            val docs = spark.table("documents")
-            val pairs = graft.operators.Dedup.jaccardPairs(
-              graft.operators.Dedup.sigsOf(docs),
-              dbl(thr, "dedup_weights(threshold)")).select("d1", "d2")
-            graft.operators.Dedup.softWeightsOver(
-              graft.operators.Dedup.minLabelComponents(spark, pairs), docs)
-          }
-        case _ => throw new IllegalArgumentException("dedup_weights expects (threshold)")
-      }
-    },
-    "jl_distortion" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.RandomProjection.distortionOver(
-            spark.table("embeddings")))
-        case _ => throw new IllegalArgumentException(
-          "jl_distortion expects no arguments")
-      }
-    },
-    "score_percentiles" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.ScoreNorm.percentilesOver(
-            spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "score_percentiles expects no arguments")
-      }
-    },
-    "score_ks" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(v1, v2) =>
-          plan(spark => graft.operators.ScoreNorm.ksOver(
-            spark.table(string(v1, "score_ks(v1, v2)")),
-            spark.table(string(v2, "score_ks(v1, v2)"))))
-        case _ => throw new IllegalArgumentException(
-          "score_ks expects (v1 table, v2 table)")
-      }
-    },
-    "tiered_link" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(reg, crawl) =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.col
-            graft.operators.Linkage.tieredLink(
-              spark.table(string(reg, "tiered_link(registry, crawl)"))
-                .select(col("doc_id").as("old_id"), col("text")),
-              spark.table(string(crawl, "tiered_link(registry, crawl)"))
-                .select(col("doc_id").as("new_id"), col("text")))
-          }
-        case _ => throw new IllegalArgumentException(
-          "tiered_link expects (registry table, crawl table)")
-      }
-    },
-    "shard_rebalance" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Sharding.rebalanceOver(
-            spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "shard_rebalance expects no arguments")
-      }
-    },
-    "lf_agreement" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.WeakLabels.agreementOver(
-            spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "lf_agreement expects no arguments")
-      }
-    },
-    "l_diversity" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq(l) =>
-          plan { spark =>
-            import org.apache.spark.sql.functions.{col, expr}
-            graft.operators.Privacy.lDiversity(
-              spark.table("customer").join(spark.table("nation"),
-                col("c_nationkey") === col("n_nationkey")),
-              Seq("c_mktsegment", "n_name"),
-              expr("(CAST(round(c_acctbal * 100) AS BIGINT) + 100000) div 100000"),
-              long(l, "l_diversity(l)"))
-          }
-        case _ => throw new IllegalArgumentException("l_diversity expects (l)")
-      }
-    },
-    "bootstrap_ci" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Sampling.bootstrapCi(
-            spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "bootstrap_ci expects no arguments")
-      }
-    },
-    "incremental_admission" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Admission.tableVerdicts(
-            spark, spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "incremental_admission expects no arguments")
-      }
-    },
-    "cross_modal_audit" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Audit.tableCrossModal(
-            spark, spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "cross_modal_audit expects no arguments")
-      }
-    },
-    "training_export" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Curation.tableExport(
-            spark, spark.table("documents"), spark.table("embeddings")))
-        case _ => throw new IllegalArgumentException(
-          "training_export expects no arguments")
-      }
-    },
-    "bpe_train" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.TextOps.tableBpeTrain(
-            spark.table("documents"), graft.operators.TextOps.BpeTrainRounds))
-        case Seq(k) =>
-          // validated BEFORE the Int narrowing: a 2^32-scale literal
-          // would otherwise truncate to 0/negative and crash obscurely
-          val r = long(k, "bpe_train(rounds)")
-          if (r < 1 || r > 1000) throw new IllegalArgumentException(
-            s"bpe_train: rounds must be in [1, 1000], got $r")
-          plan(spark => graft.operators.TextOps.tableBpeTrain(
-            spark.table("documents"), r.toInt))
-        case _ => throw new IllegalArgumentException(
-          "bpe_train expects () or (rounds)")
-      }
-    },
-    "bpe_encode" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.TextOps.tableBpeEncode(
-            spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "bpe_encode expects no arguments")
-      }
-    },
-    "retrieval_quality" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Retrieval.tableQuality(
-            spark.table("documents"), spark.table("embeddings")))
-        case _ => throw new IllegalArgumentException(
-          "retrieval_quality expects no arguments")
-      }
-    },
-    "budget_waterfill" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Sampling.waterfillOver(
-            spark.table("documents")))
-        case _ => throw new IllegalArgumentException(
-          "budget_waterfill expects no arguments")
-      }
-    },
-    "cluster_prune" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan { spark =>
-            val q = graft.operators.KMeans.quantizedOf(spark.table("embeddings"))
-            graft.operators.KMeans.pruneOver(q, graft.operators.KMeans.trainOn(q))
-          }
-        case _ => throw new IllegalArgumentException(
-          "cluster_prune expects no arguments")
-      }
-    },
-    "transition_matrix" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Trajectory.transitionsOver(
-            spark.table("events")
-              .select("user_id", "ts", "event_id", "event_type")))
-        case _ => throw new IllegalArgumentException(
-          "transition_matrix expects no arguments")
-      }
-    },
-    "flow_mining" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Trajectory.flowsOver(
-            spark.table("events")
-              .select("user_id", "ts", "event_id", "event_type")))
-        case _ => throw new IllegalArgumentException(
-          "flow_mining expects no arguments")
-      }
-    },
-    "rare_transitions" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan(spark => graft.operators.Trajectory.rareOver(
-            spark.table("events")
-              .select("user_id", "ts", "event_id", "event_type")))
-        case _ => throw new IllegalArgumentException(
-          "rare_transitions expects no arguments")
-      }
-    },
-    "source_ablation" -> { exprs: Seq[Expression] =>
-      exprs match {
-        case Seq() =>
-          plan { spark =>
-            import org.apache.spark.sql.functions._
-            val docs = spark.table("documents")
-            val toks = graft.operators.TextOps.tokens(col("text"))
-            graft.operators.Mixture.ablationOver(graft.operators.Mixture.sourceLoss(
-              docs.select(col("doc_id"), explode(toks).as("token"))
-                .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")),
-              docs.agg(sum(size(toks)).cast("long").as("n_total")),
-              docs.select("doc_id", "source")))
-          }
-        case _ => throw new IllegalArgumentException(
-          "source_ablation expects no arguments")
-      }
+    tvf("transition_matrix", "")((s, _) => Trajectory.transitionsOver(steps(s))),
+    tvf("flow_mining", "")((s, _) => Trajectory.flowsOver(steps(s))),
+    tvf("rare_transitions", "")((s, _) => Trajectory.rareOver(steps(s))),
+    tvf("source_ablation", "") { (s, _) =>
+      import org.apache.spark.sql.functions.sum
+      val d = docs(s)
+      val toks = TextOps.tokens(col("text"))
+      Mixture.ablationOver(Mixture.sourceLoss(
+        d.select(col("doc_id"), explode(toks).as("token"))
+          .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")),
+        d.agg(sum(size(toks)).cast("long").as("n_total")),
+        d.select("doc_id", "source")))
     })
-
-  /** Build the operator frame against the session resolving the query
-    * and hand its analyzed plan to the outer analyzer (idempotent on
-    * resolved subtrees). */
-  private def plan(f: SparkSession => DataFrame): LogicalPlan =
-    f(SparkSession.active).queryExecution.analyzed
-
-  private def value(e: Expression, sig: String): Any = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(s"$sig: arguments must be literals")
-    val v = e.eval()
-    if (v == null) throw new IllegalArgumentException(s"$sig: argument is NULL")
-    v
-  }
-
-  private def string(e: Expression, sig: String): String = value(e, sig).toString
-
-  private def int(e: Expression, sig: String): Int = value(e, sig) match {
-    case n: java.lang.Number => n.intValue()
-    case other => throw new IllegalArgumentException(
-      s"$sig: expected an integer, got $other")
-  }
-
-  private def long(e: Expression, sig: String): Long = value(e, sig) match {
-    case n: java.lang.Number => n.longValue()
-    case other => throw new IllegalArgumentException(
-      s"$sig: expected an integer, got $other")
-  }
-
-  private def dbl(e: Expression, sig: String): Double = value(e, sig) match {
-    case n: java.lang.Number => n.doubleValue()
-    case d: org.apache.spark.sql.types.Decimal => d.toDouble
-    case other => throw new IllegalArgumentException(
-      s"$sig: expected a number, got $other")
-  }
 }

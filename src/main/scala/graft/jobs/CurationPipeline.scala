@@ -23,12 +23,12 @@ object CurationPipeline {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "/tmp/graft-curated"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
+    val spark = graft.core.Sessions.prepare(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .appName("graft-curation-pipeline")
-      .getOrCreate()
+      .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     run(spark, dir, out)
     spark.stop()

@@ -11,10 +11,12 @@ import graft.core.{Sessions, Tables}
   * functions (strpos, string_agg, cosine_sim, simhash_agg), runs the
   * statement, prints up to maxRows (default 20).
   *
-  * `--plain` skips the programmatic dialect registration — the session
+  * `--plain` builds a raw session that skips [[Sessions.prepare]] — it
   * then only has whatever `spark.sql.extensions` injected, which makes
   * this the diagnostic for the config-driven [[graft.functions.GraftExtensions]]
   * path (e.g. run with -Dspark.sql.extensions=graft.functions.GraftExtensions).
+  * It also lacks graft's session settings, so a TIMESTAMP(NANOS)
+  * `events.parquet` does not read there.
   */
 object SqlShell {
 

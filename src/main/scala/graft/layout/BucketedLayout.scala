@@ -135,7 +135,6 @@ object BucketedLayout extends graft.QueryModule {
     * That is the 100 TB answer for a fact-fact join queried repeatedly:
     * the per-query shuffle of both tables disappears. */
   def q55ColocatedJoin(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Sessions.prepare(spark)
     val db = ensure(spark, dir)
     colocatedOrderRevenue(spark, db).orderBy("o_orderkey")
   }
@@ -171,7 +170,6 @@ object BucketedLayout extends graft.QueryModule {
     * moves it to (one-time) ingest, the q55 story applied to per-entity
     * analytics instead of a join. */
   def q97FunnelBucketed(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.Sessions.prepare(spark)
     val db = ensureEvents(spark, dir)
     graft.operators.Analytics.funnelOver(spark.table(s"$db.events_b"))
   }

@@ -3,7 +3,7 @@ package graft.layout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 import graft.operators.{IvfIndex, Similarity, VectorSearch}
 
 /** IVF-PARTITIONED EMBEDDING LAYOUT (SURVEY §2 layout family, beside
@@ -71,7 +71,6 @@ object IvfLayout extends graft.QueryModule {
     * of the store's lists; `scan_bounded` = it never exceeds
     * probes × nprobe. */
   def q194IvfLayoutServe(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val mem = Similarity.ivfTopK(spark, dir)
     val served = servedTopK(spark, dir)
     val probed = probedLists(spark, dir)

@@ -3,7 +3,7 @@ package graft.layout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** DATE-PARTITIONED fact layout + DYNAMIC PARTITION PRUNING (SURVEY §2
   * layout family, beside bucketing (q55) and z-order (q181)): the
@@ -62,7 +62,6 @@ object PartitionedEventsLayout extends graft.QueryModule {
     * partition filter on the fact scan (spec-asserted); the answer is
     * layout-independent and the oracle replays it from the raw table. */
   def q188DppJoin(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val root = ensure(spark, dir)
     val fact = spark.read.parquet(s"$root/events")
     val dim = spark.read.parquet(s"$root/calendar")

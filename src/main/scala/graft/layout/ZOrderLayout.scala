@@ -3,7 +3,7 @@ package graft.layout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Z-ORDER (Morton) DATA LAYOUT — multi-dimensional clustering for
   * min/max pruning (Morton 1966; the technique behind Delta/Iceberg
@@ -127,7 +127,6 @@ object ZOrderLayout extends graft.QueryModule {
   val CentsLo = 10000L; val CentsHi = 20000L
 
   def q181ZorderRange(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // the z copy already carries value_cents, so no dims() re-derive
     rangeAggOver(spark.read.parquet(ensure(spark, dir)),
       UserLo, UserHi, CentsLo, CentsHi)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** INCREMENTAL ADMISSION — the continuous-ingest front door of the
   * curation pipeline. The composed pipeline (q228/q229) answers "curate
@@ -206,7 +206,6 @@ object Admission extends graft.QueryModule {
     * shingle stage exactly as q62 does, filtered to the arriving
     * side. */
   def q234IncrementalAdmission(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val base = screenCols(Tables.fanout(spark, Tables.documents(spark, dir)))
     val arrive = base.filter(isArriving)
     val storeFps = base.filter(!isArriving).select("fp").distinct()

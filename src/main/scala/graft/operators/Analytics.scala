@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Reporting analytics over the warehouse tables: PIVOT cross-tabs,
   * ordered-funnel conversion, and fixed-window time-series smoothing —
@@ -23,7 +23,6 @@ object Analytics extends graft.QueryModule {
     * learn the column set — never acceptable on a 100 TB fact table.
     */
   def q83Pivot(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val statuses = Seq("F", "O", "P")
     val out = Tables.orders(spark, dir)
       .groupBy("o_orderpriority")
@@ -47,7 +46,6 @@ object Analytics extends graft.QueryModule {
     * shuffles it twice more; at a 100 TB event log the window form is
     * the only acceptable plan. */
   def q84Funnel(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     funnelOver(Tables.events(spark, dir))
   }
 
@@ -98,7 +96,6 @@ object Analytics extends graft.QueryModule {
     * costs nothing at that grain. The fact table itself is touched once,
     * by the partial-aggregated GROUP BY. */
   def q85MovingAvg(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val daily = Tables.orders(spark, dir)
       .groupBy(col("o_orderdate").cast("date").as("order_date"))
       .agg(
@@ -133,7 +130,6 @@ object Analytics extends graft.QueryModule {
     * per-group sort the window needs is the irreducible cost of exact
     * order statistics (q41's interpolated percentiles pay it too). */
   def q89Winsorized(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     winsorizedStats(Tables.orders(spark, dir), 0.05)
   }
 
@@ -187,7 +183,6 @@ object Analytics extends graft.QueryModule {
     * engines). No window, no sort: a regression is just a GROUP BY when
     * written as sufficient statistics. */
   def q93RevenueTrend(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val x = datediff(col("o_orderdate").cast("date"),
       lit("2000-01-01").cast("date")).cast("long")
     val y = round(col("o_totalprice") * 100).cast("long")
@@ -221,7 +216,6 @@ object Analytics extends graft.QueryModule {
     * but both engines derive it from identical integers — bit-identical
     * either side of the (measure-zero) boundary. */
   def q96ValueOutliers(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val w = Window.partitionBy("event_type")
     val y = round(col("value") * 100).cast("long")
     val staged = Tables.events(spark, dir)
@@ -285,7 +279,6 @@ object Analytics extends graft.QueryModule {
   }
 
   def q102CohortRetention(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     cohortRetention(Tables.events(spark, dir))
   }
 
@@ -337,7 +330,6 @@ object Analytics extends graft.QueryModule {
     * event log — the per-(event_type, day) arrival monitor a recrawl
     * pipeline publishes next to the q150 curation dashboard. */
   def q155IngestAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     ingestAnomaly(Tables.events(spark, dir))
   }
 

@@ -6,7 +6,7 @@ import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, Audi
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Audio-column plumbing (SURVEY §2.9, the audio face of the multimodal
   * family): PCM payloads as opaque `binary` WAV bytes with typed metadata,
@@ -241,7 +241,6 @@ object Audio extends graft.QueryModule {
     * All-integer except the final mean, an exact int64/int64 division
     * both engines compute identically in binary64. */
   def q110AudioStats(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     decodeAudio(audioAssets(spark, dir)).toDF()
       .groupBy("sample_rate")
       .agg(
@@ -259,7 +258,6 @@ object Audio extends graft.QueryModule {
   /** q111 — real decode + 64-sample framing: per-asset frame counts,
     * total energy and the rolling energy fingerprint. */
   def q111AudioFrames(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     frameAudio(audioAssets(spark, dir)).toDF()
       .orderBy("doc_id")
   }
@@ -278,7 +276,6 @@ object Audio extends graft.QueryModule {
     * identical frame/energy/gradient arithmetic — a codec, framing, or
     * bit-order drift breaks the hash. */
   def q153AudioFpDedup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     fingerprintAudio(audioAssets(spark, dir)).toDF()
       .groupBy("n_frames", "grad_bits")
       .agg(count(lit(1)).as("n_assets"), min(col("doc_id")).as("keeper_doc"))

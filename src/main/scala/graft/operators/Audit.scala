@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Cross-table corpus integrity audit — the pre-training data-quality
   * gate: referential integrity between the text corpus and its embedding
@@ -60,7 +60,6 @@ object Audit extends graft.QueryModule {
     * all-zero report; detection of each issue class is spec'd on planted
     * dirty fixtures in `AuditSpec`). */
   def q72IntegrityAudit(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     integrity(Tables.documents(spark, dir), Tables.embeddings(spark, dir))
   }
 
@@ -82,7 +81,6 @@ object Audit extends graft.QueryModule {
     * sparse by construction — AQE broadcasts it), then one tiny
     * (source)-grain aggregate. */
   def q150CurationDashboard(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
     val dupDocs = docs
@@ -143,7 +141,6 @@ object Audit extends graft.QueryModule {
     * (the q72 move), so nothing corpus-sized is ever recomputed or
     * collected. */
   def q163FilterCorrelation(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val st = TextOps.tokenStage(spark, dir)
     val base = st.groupBy("doc_id")
       .agg(max(col("dl")).as("dl"), countDistinct(col("token")).as("dt"),
@@ -258,7 +255,6 @@ object Audit extends graft.QueryModule {
     * caption exclusion rides the cached verified-pair artifact
     * pair-locally. */
   def q246CrossModalAudit(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val docs = Tables.documents(spark, dir)
     // perceptual clusters over the PRESENT referenced assets — the real
     // encode→decode→dHash chain off the staged asset artifact

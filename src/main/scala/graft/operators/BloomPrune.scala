@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 import graft.functions.BloomMightContainLong
 
 /** Runtime bloom-filter pruning for fact⋈dim semi-joins — the middle
@@ -56,7 +56,6 @@ object BloomPrune extends graft.QueryModule {
     * the urgent key set (~20% of orders — too big to broadcast at scale,
     * ideal for a bloom) prunes the lineitem scan before its shuffle. */
   def q87BloomSemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val urgent = Tables.orders(spark, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey")

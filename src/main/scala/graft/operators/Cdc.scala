@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** CHANGELOG MATERIALIZATION (CDC apply, latest-wins): fold an ordered
   * upsert/delete changelog down to current state — the lakehouse MERGE
@@ -51,7 +51,6 @@ object Cdc extends graft.QueryModule {
 
   /** q185 — current state of the event-log changelog. */
   def q185CdcApply(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     applyOver(Tables.events(spark, dir)).orderBy("user_id")
   }
 

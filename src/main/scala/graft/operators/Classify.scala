@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Trained document-quality classification (SURVEY §2.9 extension): the
   * fastText-style "train a cheap classifier, score the whole corpus"
@@ -142,7 +142,6 @@ object Classify extends graft.QueryModule {
     * hash. Uses the growth snapshot (changed docs' text grows), so
     * changed docs genuinely change their contributions. */
   def q164IncrementalNb(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val v1 = SnapshotFixture.table(spark, dir, "documents_v1_growth")
     val v2 = SnapshotFixture.table(spark, dir, "documents_v2")
     weightsOf(incrementalNbCounts(classCountsOf(v1), v1, v2))
@@ -208,7 +207,6 @@ object Classify extends graft.QueryModule {
     * join IS the broadcast-free application path, which is what survives
     * a vocabulary that outgrows executor memory. */
   def q151NbQuality(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     nbReport(nbScores(spark, dir),
       Tables.documents(spark, dir).select("doc_id", "source"))
   }
@@ -318,7 +316,6 @@ object Classify extends graft.QueryModule {
     * partition-count scan; the report is a [[CalibBins]]-row
     * aggregate. */
   def q175NbCalibration(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     calibrationOf(nbScores(spark, dir))
   }
 
@@ -380,7 +377,6 @@ object Classify extends graft.QueryModule {
     * Scale shape: one label pass (shared [[labels]] stage), one
     * source-grain aggregate, a 1-row global broadcast. */
   def q180SourceQualityShrunk(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     shrunkReport(labels(spark, dir),
       Tables.documents(spark, dir).select("doc_id", "source"))
   }

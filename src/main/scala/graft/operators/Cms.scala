@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Count-Min sketch over the corpus' 5-gram shingles (SURVEY §2.9
   * sketch family, beside HLL distinct (q42), Misra-Gries heavy hitters
@@ -126,7 +126,6 @@ object Cms extends graft.QueryModule {
     * shingles with exact df, CMS estimate and overcount (collision
     * mass). `cms_est ≥ exact_df` by construction. */
   def q169CmsSketch(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     cmsAudit(Tables.documents(spark, dir))
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Incremental corpus management: content-level DIFF between two corpus
   * versions — the change-detection step of an incremental training-data
@@ -56,7 +56,6 @@ object Corpus extends graft.QueryModule {
 
   /** q66 — [[diff]] over the two fixture versions, ordered for the gate. */
   def q66CorpusDiff(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // both versions read from MATERIALIZED snapshot files
     // ([[SnapshotFixture]]): two real file sets with distinct contents,
     // the production recrawl shape — the oracle reconstructs them from
@@ -106,7 +105,6 @@ object Corpus extends graft.QueryModule {
   }
 
   def q71CompositionDrift(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // one map-side cell aggregate per snapshot file set, then a cell-grain
     // outer join — each snapshot scanned once, the honest shape when the
     // versions are distinct file sets rather than filters of one table
@@ -175,7 +173,6 @@ object Corpus extends graft.QueryModule {
     * compares against the oracle's DIRECT v2 aggregation, proving
     * change-sized maintenance lands on the exact full-recompute answer. */
   def q76IncrementalStats(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val v1 = SnapshotFixture.table(spark, dir, "documents_v1_growth")
     val v2 = SnapshotFixture.table(spark, dir, "documents_v2")
     incrementalStats(statsOf(v1), v1, v2).orderBy("source")
@@ -217,7 +214,6 @@ object Corpus extends graft.QueryModule {
   /** q86 — [[scd2]] over the materialized snapshot pair, ordered for the
     * gate (doc_id + valid_from is the natural unique key). */
   def q86Scd2Merge(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     scd2(
       SnapshotFixture.table(spark, dir, "documents_v1_edit"),
       SnapshotFixture.table(spark, dir, "documents_v2"))
@@ -254,7 +250,6 @@ object Corpus extends graft.QueryModule {
     * snapshot (the "old crawl"): changed/added docs surface with
     * non-zero novelty, unchanged docs score 0. */
   def q94Novelty(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import graft.operators.TextOps.BoilerK
     val docShingles = SignatureStage.stage(spark, dir, s"shingles_k$BoilerK")(
       Dedup.shingles(Tables.documents(spark, dir), BoilerK))
@@ -290,7 +285,6 @@ object Corpus extends graft.QueryModule {
     * oracle-checkable (doc_id, n_sh) grain; the oracle is the DIRECT v2
     * shingle count — incremental maintenance must land on the rebuild. */
   def q100IncrementalSigs(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val v1 = SnapshotFixture.table(spark, dir, "documents_v1_edit")
     val v2 = SnapshotFixture.table(spark, dir, "documents_v2")
     incrementalSigs(Dedup.sigsOf(v1), v1, v2)
@@ -326,7 +320,6 @@ object Corpus extends graft.QueryModule {
     * directly. Order- and content-sensitive: a dropped marker row, a
     * stale carried doc, or a shifted position changes the hash. */
   def q116IncrementalTokens(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val v1 = SnapshotFixture.table(spark, dir, "documents_v1_growth")
     val v2 = SnapshotFixture.table(spark, dir, "documents_v2")
     incrementalTokens(TextOps.tokenized(v1), v1, v2)
@@ -348,7 +341,6 @@ object Corpus extends graft.QueryModule {
     * one aggregate; one metadata-column scan of `documents` at any
     * corpus size. */
   def q115CorpusDatasheet(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val dls = TextOps.tokenStage(spark, dir)
       .groupBy("doc_id").agg(max(col("dl")).as("dl"))
     datasheetCore(
@@ -417,7 +409,6 @@ object Corpus extends graft.QueryModule {
     * single row, unpivoted to stage grain. No corpus-sized collect, no
     * all-pairs anything. */
   def q127AttritionReport(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val dls = TextOps.tokenStage(spark, dir)
       .groupBy("doc_id").agg(max(col("dl")).as("n_tok"))
     attritionReport(spark, Tables.documents(spark, dir), dls,
@@ -501,7 +492,6 @@ object Corpus extends graft.QueryModule {
     * xxhash64 shingles, the oracle on the strings (the accepted q26/
     * q120 collision convention). */
   def q231VersionContentDrift(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import org.apache.spark.sql.functions.xxhash64
     def srcShingles(df: DataFrame): DataFrame =
       Tables.fanout(spark, df)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** THE COMPOSED CURATION PIPELINE (round-11 verdict item 3): the one
   * job an actual 100 TB training-data run executes, chaining the
@@ -246,7 +246,6 @@ object Curation extends graft.QueryModule {
     * pair-graph closure and the mix-rate aggregate would re-run per
     * manifest aggregate (the q175 double-compute lesson). */
   def q228CurationManifest(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // text dropped before the checkpoint: the manifest's aggregates and
     // shard draws ride fp/n_tok, and materializing corpus text three
     // aggregates never read was most of the q228 checkpoint cost
@@ -259,7 +258,6 @@ object Curation extends graft.QueryModule {
     * manifest, and the answer to "why is doc X not in the training
     * set". */
   def q229CurationLedger(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     ledgerOutcomes(ledger(spark, dir))
   }
 
@@ -310,7 +308,6 @@ object Curation extends graft.QueryModule {
     * id-keyed presence join + one shard-grain aggregate; nothing after
     * the ledger is corpus-sized except the single groupBy shuffle. */
   def q247TrainingExport(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     exportOver(
       ledger(spark, dir).filter(col("alive5") && col("n_copies") > 0)
         .select("doc_id", "fp", "n_tok", "n_copies"),

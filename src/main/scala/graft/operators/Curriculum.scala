@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** CURRICULUM SHARDING (SURVEY §2.9 sampling/mixing family): order the
   * corpus by a quality signal and cut it into contiguous shards — the
@@ -30,7 +30,6 @@ object Curriculum extends graft.QueryModule {
 
   /** q189 — the shard manifest of the quality-ordered corpus. */
   def q189CurriculumShards(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     shardsOver(Tables.documents(spark, dir))
   }
 

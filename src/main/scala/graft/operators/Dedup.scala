@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Deduplication operators over the `documents` corpus (SURVEY §2.9):
   * exact (hash-groupBy), n-gram Jaccard, MinHash+LSH and SimHash near-dup.
@@ -86,7 +86,6 @@ object Dedup extends graft.QueryModule {
     * `sql/sample_athena_queries.sql:113-119`). One shuffle on the 128-bit
     * fingerprint — uniform by construction, skew-free at any scale. */
   def q24DedupExact(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.documents(spark, dir)
       .groupBy(TextOps.fingerprint(col("text")).as("fp"))
       .agg(count(lit(1)).as("copies"), min(col("doc_id")).as("keeper"))
@@ -110,7 +109,6 @@ object Dedup extends graft.QueryModule {
     * exactly the catches q24 misses. Map-only normalize+hash; the
     * groupBy shuffles 16-byte fingerprints. */
   def q160NormalizedDedup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         md5(normalized(col("text"))).as("fp"),
@@ -141,7 +139,6 @@ object Dedup extends graft.QueryModule {
     * hash-keyed pair join, sources²-bounded output; both directions
     * derive from the one undirected intersection count. */
   def q165SourceContainment(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val srcSh = Tables.fanout(spark, Tables.documents(spark, dir))
       .select(col("source"), explode(shingleArray(col("text"))).as("s"))
       .distinct()
@@ -166,7 +163,6 @@ object Dedup extends graft.QueryModule {
 
   /** Corpus-level dedup accounting: total vs content-distinct docs. */
   def q25DedupCounts(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.documents(spark, dir)
       .agg(
         count(lit(1)).as("total_docs"),
@@ -178,7 +174,6 @@ object Dedup extends graft.QueryModule {
     * count → |A∩B| / (|A|+|B|−|A∩B|). The shuffle is on shingle values
     * (high cardinality), then on (d1,d2) pairs (sparse) — both bounded. */
   def q26NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     jaccardPairs(shingleSigs(spark, dir), 0.6)
   }
 
@@ -276,7 +271,6 @@ object Dedup extends graft.QueryModule {
     * answer (the oracle IS q26's), produced without the full shingle
     * self-join. */
   def q99PrefixJoin(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     prefixJaccardPairs(shingleSigs(spark, dir), 0.6)
   }
 
@@ -291,7 +285,6 @@ object Dedup extends graft.QueryModule {
     * pair side is near-dup-pair-sized — sparse by definition, so AQE
     * broadcasts it and the doc-grain split frame never shuffles. */
   def q123SplitLeakage(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     splitLeakage(
       prefixJaccardPairs(shingleSigs(spark, dir), 0.6),
       Sampling.q58SplitAssign(spark, dir))
@@ -390,7 +383,6 @@ object Dedup extends graft.QueryModule {
     * probability below 1e-8), which is why this query can share the
     * exact-Jaccard oracle. */
   def q27MinhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     verifiedPairs(spark, dir)
   }
 
@@ -420,7 +412,6 @@ object Dedup extends graft.QueryModule {
     * [[q28Simhash]] gate compares it against the exact-Jaccard twin
     * in-plan instead of exposing the raw pairs to the oracle. */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // derived map-only from the cached signature table: the codegen'd
     // Simhash64 re-runs per reference below, but over cached `hs` arrays
     // that is one tight loop per doc — cheaper than holding (and leaking)
@@ -467,7 +458,6 @@ object Dedup extends graft.QueryModule {
     * arithmetic and asserts the verdicts literally (full hash-match
     * instead of rows-only). Production callers use [[simhashPairs]]. */
   def q28Simhash(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val sim = simhashPairs(spark, dir).select(col("d1"), col("d2"), lit(1L).as("hit"))
     val exact = verifiedPairs(spark, dir).select(col("d1"), col("d2"), col("jaccard"))
     val hi = exact.filter(col("jaccard") >= SimhashRecallJaccard)
@@ -537,7 +527,6 @@ object Dedup extends graft.QueryModule {
 
   /** q80 — [[spanDedup]] over the documents table at [[SpanWindow]]. */
   def q80SpanDedup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     spanDedup(Tables.documents(spark, dir), SpanWindow)
   }
 
@@ -576,7 +565,6 @@ object Dedup extends graft.QueryModule {
     * GROUP-BY duplicate detection; this is the near-dup extension's
     * verify tier. */
   def q171EditVerifiedDedup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     editVerify(verifiedPairs(spark, dir), Tables.documents(spark, dir))
   }
 
@@ -628,7 +616,6 @@ object Dedup extends graft.QueryModule {
     * δ ∈ [1, w] and joins back on rank, so no range-join or
     * self-cross; the O(L²) verify runs on exactly w·n pairs. */
   def q176SortedNeighborhood(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     snPairs(Tables.documents(spark, dir))
   }
 
@@ -735,7 +722,6 @@ object Dedup extends graft.QueryModule {
   }
 
   def q38DedupApply(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // pair detection via the MinHash-LSH path — output-identical to the
     // exact join (verified) at a fraction of the cost, and served from
     // the per-corpus SignatureStage cache (q27 and q38 in one session pay
@@ -756,7 +742,6 @@ object Dedup extends graft.QueryModule {
     * definition of "duplicate group" engine-wide); both aggregates after
     * it are group-grain then size-grain — tiny. */
   def q126ClusterHistogram(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     clusterHistogram(minLabelComponents(spark, verifiedPairs(spark, dir).select("d1", "d2")))
   }
 
@@ -776,7 +761,6 @@ object Dedup extends graft.QueryModule {
     * only for pair-graph nodes after the join prunes the corpus scan to
     * the two needed columns; the election is one window over groups. */
   def q131QualityKeeper(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val labels = minLabelComponents(spark, verifiedPairs(spark, dir).select("d1", "d2"))
       .select(col("doc_id"), col("keeper").as("grp"))
     electKeepers(labels, qualityMicroOf(Tables.documents(spark, dir)))
@@ -815,7 +799,6 @@ object Dedup extends graft.QueryModule {
     * shape: everything after the pair closure is pair-graph-sized; the
     * two elections are windows over the same grouped frame. */
   def q215PrefPairs(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val labels = minLabelComponents(spark, verifiedPairs(spark, dir).select("d1", "d2"))
       .select(col("doc_id"), col("keeper").as("grp"))
     prefPairsOver(labels, qualityMicroOf(Tables.documents(spark, dir)))
@@ -861,7 +844,6 @@ object Dedup extends graft.QueryModule {
     * label attach is a left join where the label side is the sparse
     * pair-graph membership — broadcast at any realistic dup rate. */
   def q216SoftDedupWeights(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val labels = minLabelComponents(spark, verifiedPairs(spark, dir).select("d1", "d2"))
     softWeightsOver(labels, Tables.documents(spark, dir))
   }
@@ -1082,7 +1064,6 @@ object Dedup extends graft.QueryModule {
     * production (shingle it with [[sigsOf]]) — the operator itself takes
     * the eval set as an input and never assumes it fits in a broadcast. */
   def q62Decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val isEval = col("doc_id") % EvalDocModulus === 0
     // train side from the exploded stage (bucket-partitioned on h when
     // persisted — a doc_id filter preserves that); eval side keeps the
@@ -1109,7 +1090,6 @@ object Dedup extends graft.QueryModule {
     * in (source-count-sized), and the Jaccard is an exact int64/int64
     * double division. */
   def q120SourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     sourceOverlap(shingleSigs(spark, dir),
       Tables.documents(spark, dir).select("doc_id", "source"))
   }
@@ -1154,7 +1134,6 @@ object Dedup extends graft.QueryModule {
   /** [[sourceSketchEst]] over the corpus at `dir` (the ScaleBench
     * production entry). */
   private[graft] def sourceSketchEstOf(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     sourceSketchEst(srcShingles(spark, dir))
   }
 
@@ -1179,7 +1158,6 @@ object Dedup extends graft.QueryModule {
     * (matches·10⁶/K and ⌊inter·10⁶/union⌋), the verdict an integer
     * comparison. */
   def q154SourceSketch(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val srcSh = srcShingles(spark, dir)
     val est = sourceSketchEst(srcSh)
     // exact side at the same string-shingle grain the oracle replays
@@ -1276,7 +1254,6 @@ object Dedup extends graft.QueryModule {
   /** q142 — subset/quote detection: [[containmentPairs]] at the
     * [[ContainMicros]] line over the shared shingle-signature stage. */
   def q142Containment(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     containmentPairs(shingleSigs(spark, dir), ContainMicros, ContainMinShingles)
   }
 
@@ -1294,7 +1271,6 @@ object Dedup extends graft.QueryModule {
     * join; the per-threshold rollup is a thresholds-sized explode of
     * the pair frame. */
   def q147DedupSensitivity(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import spark.implicits._
     val pairs = prefixJaccardPairs(shingleSigs(spark, dir), SweepThresholds.min)
     val e = pairs
@@ -1332,7 +1308,6 @@ object Dedup extends graft.QueryModule {
     * The corpus scan contributes only (doc_id, source) and the
     * non-keepers' token counts. */
   def q230CrossSourceDupMatrix(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val labels = minLabelComponents(spark, verifiedPairs(spark, dir).select("d1", "d2"))
     val docs = Tables.documents(spark, dir)
     val src = docs.select(col("doc_id"), col("source"))
@@ -1364,7 +1339,6 @@ object Dedup extends graft.QueryModule {
     * eval-sized. The totalizing left join keeps zero-leak eval docs —
     * "nothing leaked" is the report's success row, not an absence. */
   def q232EvalLeakReport(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val isEval = col("doc_id") % EvalDocModulus === 0
     evalLeakOver(
       shingleSigs(spark, dir).filter(isEval),

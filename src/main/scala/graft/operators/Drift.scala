@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
-
 /** SCORE-DISTRIBUTION DRIFT — PSI (SURVEY §2.9 audit family, beside
   * q71's composition drift and q163's filter correlations): the
   * Population Stability Index of the per-document quality score
@@ -57,7 +55,6 @@ object Drift extends graft.QueryModule {
   /** q196 — the bucket-grain PSI report between the fixture's two
     * snapshot versions (the q66/q71 snapshot machinery). */
   def q196ScoreDriftPsi(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     psiOver(
       SnapshotFixture.table(spark, dir, "documents_v1_edit"),
       SnapshotFixture.table(spark, dir, "documents_v2"))

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables, TableVersion}
+import graft.core.{Tables, TableVersion}
 
 /** THE EXPORT WRITER — the curation pipeline's true last mile (round-13
   * verdict item 1): q247 publishes the per-shard manifest, but a
@@ -173,7 +173,6 @@ object Export extends graft.QueryModule {
     * mangled text byte, a misrouted shard) flips a boolean and fails
     * the driver's hash gate loudly. */
   def q248ExportVerify(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val landed = readLanded(spark, landExport(spark, dir))
     reconcile(readbackRollup(landed),
       Curation.q247TrainingExport(spark, dir))

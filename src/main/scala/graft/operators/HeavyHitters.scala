@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 import graft.functions.MisraGriesAgg
 
 /** Guaranteed-floor frequency mining over an unbounded key space — the
@@ -45,7 +45,6 @@ object HeavyHitters extends graft.QueryModule {
     * Output: every shingle appearing in > N/SketchK shingle-rows'
     * documents, with its exact document frequency. */
   def q90HeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import TextOps.BoilerK
     val sh = SignatureStage.stage(spark, dir, s"shingles_k$BoilerK")(
       Dedup.shingles(Tables.documents(spark, dir), BoilerK))

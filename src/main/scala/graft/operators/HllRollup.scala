@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** HLL SKETCH RE-AGGREGABILITY GATE (SURVEY §2.9 sketch family): the
   * property the whole 100 TB sketch posture rests on — a sketch built
@@ -64,7 +64,6 @@ object HllRollup extends graft.QueryModule {
   /** q187 — shard-and-fold distinct users: per-event-type sketches,
     * their union vs the one-pass sketch, and the error audit. */
   def q187HllRollup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     rollupOver(Tables.events(spark, dir))
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Incremental ANN-index maintenance (SURVEY §2.9): the diff-sized
   * refresh story (q100 signatures / q116 tokens / q149 dhash / q164
@@ -45,7 +45,6 @@ object IvfMaintain extends graft.QueryModule {
     * after the delta lands: (cluster, n_v1, d_sum_v1_micro, n_added,
     * d_sum_added_micro, drift). */
   def q170IncrementalIvf(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val q = KMeans.quantized(spark, dir)
     // the frozen index: trained on v1 ONCE per corpus version (at
     // deployment this is the existing index — the maintenance path

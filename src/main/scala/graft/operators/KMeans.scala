@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Distributed Lloyd k-means over the FULL embedding corpus — the scale
   * path past [[IvfIndex]]'s capped-sample training: when the sample cap
@@ -117,7 +117,6 @@ object KMeans extends graft.QueryModule {
     * quantizer-training job publishes to decide whether the sample-
     * trained index needs full-data refinement. */
   def q130KmeansRefine(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     refine(quantized(spark, dir), K, Iters)
   }
 
@@ -205,7 +204,6 @@ object KMeans extends graft.QueryModule {
     * LITERALS (map-only scoring — the q135 posture); the only shuffle
     * is the k-row final aggregate. O(n·k·dim) work, no pairs. */
   def q177Silhouette(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val cents = trainedCentroids(spark, dir)
     val pairs = cents.map { case (j, c) => struct(dist2(col("em"), c).as("d"), lit(j).as("j")) }
     quantized(spark, dir)
@@ -251,7 +249,6 @@ object KMeans extends graft.QueryModule {
     * cluster's start offset — a k-row aggregate broadcast back. Output
     * is per-vector (vec_id, cluster, d, prune_rank, kept). */
   def q237ClusterPrune(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     pruneOver(quantized(spark, dir), trainedCentroids(spark, dir))
   }
 

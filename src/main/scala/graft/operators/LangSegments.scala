@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** CODE-SWITCH SEGMENTATION (SURVEY §2.9 text family, the window-level
   * refinement of q45/q179's document-level language ID): slice each
@@ -36,7 +36,6 @@ object LangSegments extends graft.QueryModule {
 
   /** q205 — per-document language-mixing profile. */
   def q205CodeSwitchSegments(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     segmentsOver(Tables.fanout(spark, Tables.documents(spark, dir)))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** CROSS-TABLE RECORD LINKAGE (SURVEY §2.9 dedup family, the entity-
   * resolution complement of the self-join near-dup operators): assign
@@ -51,7 +51,6 @@ object Linkage extends graft.QueryModule {
   /** q213 — link the current crawl against the previous-crawl registry;
     * one row per new doc that found a τ-passing match. */
   def q213RecordLinkage(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val reg = SnapshotFixture.table(spark, dir, "documents_v1_growth")
       .select(col("doc_id").as("old_id"), col("text"))
     val crawl = SnapshotFixture.table(spark, dir, "documents_v2")
@@ -119,7 +118,6 @@ object Linkage extends graft.QueryModule {
     * duplicates) resolves in tier 1 with is_true = false — the
     * irreducible content-collision case, now visible per tier. */
   def q220TieredLinkage(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val reg = SnapshotFixture.table(spark, dir, "documents_v1_growth")
       .select(col("doc_id").as("old_id"), col("text"))
     val crawl = SnapshotFixture.table(spark, dir, "documents_v2")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** MARGIN-BASED PAIR MINING (SURVEY §2.9 similarity family, beside
   * q156 hard negatives): mine aligned pairs across two halves of the
@@ -50,7 +50,6 @@ object Margin extends graft.QueryModule {
   /** q191 — mined pair report: each side-A anchor's best-margin side-B
     * partner, kept where the margin clears [[MarginTauMicro]]. */
   def q191MarginMining(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     minedPairs(Tables.embeddings(spark, dir))
   }
 
@@ -252,7 +251,6 @@ object Margin extends graft.QueryModule {
     * strict subset of the exact grid (the pruning fact). Production
     * callers use [[ivfMinedPairs]] directly. */
   def q200MarginIvf(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // the two miners are INDEPENDENT jobs until the recall join — and
     // each materializes its scored candidates ([[marginRankTail]]'s
     // eager checkpoint), so building them from one driver thread

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import VectorSearch.{NumProbes, TopK}
 
 /** EMBEDDING TRUNCATION ABLATION (Matryoshka-style): how much top-k
@@ -46,7 +45,6 @@ object Matryoshka extends graft.QueryModule {
     * top-[[TopK]] hits across [[NumProbes]] probes and the integer
     * recall. */
   def q174TruncationSweep(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     sweepOver(spark, KMeans.quantized(spark, dir))
   }
 

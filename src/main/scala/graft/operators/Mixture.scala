@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** DOMAIN MIXTURE REWEIGHTING (SURVEY §2.9 sampling/mixing family,
   * beside q64 temperature mixing and q189 curriculum sharding): turn a
@@ -44,7 +44,6 @@ object Mixture extends graft.QueryModule {
   /** q193 — the mixture-reweighting trajectory over `dir`'s documents,
     * domains = `source`. */
   def q193DomainReweight(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val docTok = TextOps.tokenStream(spark, dir)
       .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val total = TextOps.tokenStage(spark, dir)
@@ -128,7 +127,6 @@ object Mixture extends graft.QueryModule {
     * Parity: the ablated losses reuse q193's exact loss_e4 expression
     * over (Σs − sᵢ, N − nᵢ) with the q171 zero-guard. */
   def q226SourceAblation(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val docTok = TextOps.tokenStream(spark, dir)
       .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val total = TextOps.tokenStage(spark, dir)

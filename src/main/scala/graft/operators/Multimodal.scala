@@ -7,7 +7,7 @@ import javax.imageio.ImageIO
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Multimodal-column plumbing (SURVEY §2.9): media payloads as opaque
   * `binary` columns with a typed metadata struct, plus partition-wise
@@ -335,7 +335,6 @@ object Multimodal extends graft.QueryModule {
     * oracle is the DIRECT v2 rebuild: incremental maintenance must land
     * exactly on it. */
   def q149IncrementalDhash(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val v1 = SnapshotFixture.table(spark, dir, "documents_v1_growth")
     val v2 = SnapshotFixture.table(spark, dir, "documents_v2")
     incrementalDhash(dhashOfDocs(v1), v1, v2).orderBy("doc_id")
@@ -624,7 +623,6 @@ object Multimodal extends graft.QueryModule {
     * the opaque-payload table (payload size + derived metadata).
     * Exercises the binary column end-to-end independent of any codec. */
   def q32MultimodalMeta(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     assets(spark, dir).toDF()
       .select(
         col("doc_id"),
@@ -638,7 +636,6 @@ object Multimodal extends graft.QueryModule {
     * except the final mean, an exact int64/int64 division both engines
     * compute identically in binary64. */
   def q33DecodeStats(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     decodeImages(imageAssets(spark, dir)).toDF()
       .groupBy("format")
       .agg(
@@ -653,7 +650,6 @@ object Multimodal extends graft.QueryModule {
   /** q50 — real decode + nearest-neighbor resize: per-asset output
     * geometry and sampled-pixel stats from the decoded raster. */
   def q50Resize(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     resizeImages(imageAssets(spark, dir)).toDF()
       .select(col("doc_id"), col("format"),
         col("out_w").cast("long").as("out_w"), col("out_h").cast("long").as("out_h"),
@@ -665,7 +661,6 @@ object Multimodal extends graft.QueryModule {
   /** q51 — real decode + frame sampling (rows as frames, every 4th kept):
     * counts + rolling fingerprint of the sampled pixels. */
   def q51FrameSample(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     sampleFrames(imageAssets(spark, dir)).toDF()
       .orderBy("doc_id")
   }
@@ -676,7 +671,6 @@ object Multimodal extends graft.QueryModule {
     * The oracle replays `(31d + 7x + 13y + 41f) mod 256` over every frame
     * — hash-verifying the whole multi-frame encode→decode chain. */
   def q112VideoFrames(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     sampleVideo(videoAssets(spark, dir)).toDF()
       .orderBy("doc_id")
   }
@@ -694,7 +688,6 @@ object Multimodal extends graft.QueryModule {
     * arithmetic — any codec, geometry, or bit-order drift breaks the
     * hash. */
   def q139ImageDhash(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     dHashImages(imageAssets(spark, dir)).toDF()
       .groupBy("h_hi", "h_lo")
       .agg(count(lit(1)).as("n_images"), min(col("doc_id")).as("keeper_doc"))
@@ -712,7 +705,6 @@ object Multimodal extends graft.QueryModule {
     * arithmetic — any frame drop, reorder, or palette loss in the
     * decode chain breaks the hash. */
   def q158VideoFpDedup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     fingerprintVideo(videoAssets(spark, dir)).toDF()
       .groupBy("n_frames", "grad_bits")
       .agg(count(lit(1)).as("n_assets"), min(col("doc_id")).as("keeper_doc"))

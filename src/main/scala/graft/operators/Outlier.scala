@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** EMBEDDING OUTLIER AUDIT (SURVEY §2.9 similarity/embedding-analytics
   * family, beside q157 diversity and q177 silhouette): per-vector
@@ -47,7 +47,6 @@ object Outlier extends graft.QueryModule {
 
   /** q192 — the per-vector outlier audit over the embeddings corpus. */
   def q192EmbeddingOutliers(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     scoresOver(
       Tables.embeddings(spark, dir),
       Tables.documents(spark, dir)
@@ -143,7 +142,6 @@ object Outlier extends graft.QueryModule {
     * shuffles. Parity: counts are integers; norm stats are halfAway
     * milli; the avg is one truncating division. */
   def q212VectorHygiene(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val emb = Tables.embeddings(spark, dir)
     val nf = size(filter(col("embedding"),
       x => isnan(x) || abs(x) === lit(Float.PositiveInfinity)))

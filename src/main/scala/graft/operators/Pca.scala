@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
-
 /** Principal-component extraction over the embedding corpus: one
   * distributed mean pass, one distributed covariance pass, then power
   * iteration on the driver over the collected dim×dim matrix — the
@@ -54,7 +52,6 @@ object Pca extends graft.QueryModule {
     * dimension, the unit-ish (∞-norm = 1e6) dominant eigenvector of the
     * micro-covariance matrix. */
   def q133PcaPower(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val (_, v) = model(spark, dir)
     import spark.implicits._
     v.zipWithIndex.map { case (l, i) => (i + 1, l) }.toSeq
@@ -149,7 +146,6 @@ object Pca extends graft.QueryModule {
     * the final order) — the q132-style "model at scoring time" posture
     * applied to embedding post-processing. */
   def q134AllButTop(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val (mu, v) = model(spark, dir)
     val muLit = array(mu.map(lit(_)): _*)
     val vLit = array(v.map(lit(_)): _*)

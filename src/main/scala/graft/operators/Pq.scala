@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import VectorSearch.{NumProbes, TopK}
 
 /** Product-quantization codebook training + distortion audit — the PQ
@@ -124,7 +123,6 @@ object Pq extends graft.QueryModule {
     * codebook is balanced (no dead codes, no mega-cells) before
     * flipping the vector store to PQ codes. */
   def q136PqCodebook(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val q = subVectors(spark, dir).persist()
     try {
       val refined = updateBook(assigned(q, seedBook(KMeans.quantized(spark, dir))))
@@ -243,7 +241,6 @@ object Pq extends graft.QueryModule {
     * recall-floor verdict. Production callers use [[adcTopK]] — the
     * exact twin exists only inside the gate. */
   def q140PqAdc(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     recallPerProbe(adcTopK(spark, dir), exactTopK(spark, dir)).agg(
       count(lit(1)).as("n_probes"),
       sum(lit(TopK)).cast("long").as("n_exact_results"),
@@ -329,7 +326,6 @@ object Pq extends graft.QueryModule {
     * touches a bounded slice). Production callers use [[ivfPqSearch]]'s
     * topk; the exact twin exists only inside the gate. */
   def q143IvfPq(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val (topk, fracs) = ivfPqSearch(spark, dir)
     recallPerProbe(topk, exactTopK(spark, dir)).join(fracs, Seq("probe_id")).agg(
       count(lit(1)).as("n_probes"),

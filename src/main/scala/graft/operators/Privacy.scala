@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** PII detection + redaction over the documents corpus — the scrubbing
   * stage every training-data pipeline runs before anything else sees the
@@ -74,7 +74,6 @@ object Privacy extends graft.QueryModule {
   }
 
   def q67PiiRedact(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     redact(Tables.documents(spark, dir), withPlantedPii(col("text"), col("doc_id")))
   }
 
@@ -105,7 +104,6 @@ object Privacy extends graft.QueryModule {
   }
 
   def q101KAnonymity(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     kAnonymity(
       Tables.customer(spark, dir)
         .join(Tables.nation(spark, dir),
@@ -142,7 +140,6 @@ object Privacy extends graft.QueryModule {
     * non-negative before the integer division — negative-operand `div`
     * rounding is engine-defined, and acctbal goes to −999.99. */
   def q225LDiversity(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     lDiversity(
       Tables.customer(spark, dir)
         .join(Tables.nation(spark, dir),
@@ -186,7 +183,6 @@ object Privacy extends graft.QueryModule {
     * Scale shape: one partial-agged count shuffle; noise is a map over
     * the source-grain cell frame (tiny at any corpus size). */
   def q178DpRelease(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     dpRelease(Tables.documents(spark, dir))
   }
 

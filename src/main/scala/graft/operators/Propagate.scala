@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Score propagation over the near-dup graph (SURVEY §2.9 extension):
   * smooth a per-document signal across the exact-verified duplicate
@@ -95,7 +95,6 @@ object Propagate extends graft.QueryModule {
   /** Two-round smoothed quality over the near-dup graph: one row per
     * non-isolated doc — (doc_id, deg, s0_micro, s2_micro, shift_micro). */
   def q168QualityPropagation(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     qualityPropagation(Tables.documents(spark, dir),
       Dedup.verifiedPairs(spark, dir))
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** TOMBSTONE PURGE CASCADE (SURVEY §2.9 privacy/ops family, beside
   * q67's PII redaction and q178's DP release): the right-to-be-forgotten
@@ -73,7 +73,6 @@ object Purge extends graft.QueryModule {
 
   /** q202 — the purge-cascade audit over the three derived surfaces. */
   def q202PurgeCascade(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     auditOver(spark, Tables.documents(spark, dir), Tables.embeddings(spark, dir))
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 import graft.functions.QuantileSketchAgg
 
 /** q182 — the MERGEABLE-QUANTILE-SKETCH GATE (q42's HLL convention
@@ -47,7 +47,6 @@ object QuantileSketch extends graft.QueryModule {
   private def cents = floor(col("value") * 100 + lit(0.5)).cast("long").as("cents")
 
   def q182QuantileSketch(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     gateOver(Tables.events(spark, dir))
   }
 

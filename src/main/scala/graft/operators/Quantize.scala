@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Embedding quantization audit: per-vector symmetric int8 quantization
   * (the storage format that cuts a 100 TB float32 embedding store to a
@@ -49,7 +49,6 @@ object Quantize extends graft.QueryModule {
     * (max is order-free, unlike avg-of-double), and the RMS error in
     * original units. One embeddings scan, one tiny label-grain shuffle. */
   def q88QuantizeError(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     int8Error(Tables.embeddings(spark, dir), col("embedding"))
       .groupBy("label")
       .agg(
@@ -73,7 +72,6 @@ object Quantize extends graft.QueryModule {
     * aggregation — min/max/sum over BIGINT are order-free, so the gate
     * is exact. Map-only + one label-grain shuffle. */
   def q95NormAudit(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val emb = col("embedding")
     val norm2 = aggregate(emb, lit(0.0d),
       (acc, x) => acc + x.cast("double") * x.cast("double"))

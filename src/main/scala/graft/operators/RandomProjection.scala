@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** JOHNSON–LINDENSTRAUSS RANDOM PROJECTION (SURVEY §2.9 similarity
   * family): data-INDEPENDENT dimensionality reduction with a ±1 sign
@@ -57,7 +57,6 @@ object RandomProjection extends graft.QueryModule {
     * projected squared distance (micros) and the ratio against the √k
     * expectation, over the deterministic consecutive-id pair set. */
   def q217JlProjection(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     distortionOver(Tables.fanout(spark, Tables.embeddings(spark, dir)))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** The relational operator inventory of SURVEY §2 (projection / filter /
   * aggregation / sort / set ops / joins / window / scalar functions),
@@ -27,14 +27,12 @@ object Relational extends graft.QueryModule {
   /** q01 — ungrouped COUNT(*) (SURVEY A1; reference
     * `sql/sample_athena_queries.sql:6-7`, `test_pipeline.py:117`). */
   def q01Count(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.lineitem(spark, dir).agg(count(lit(1)).as("record_count"))
   }
 
   /** q02 — projection + conjunctive filter + ORDER BY + LIMIT
     * (SURVEY P1/F4/O2/O3; reference `sql:10-12`, `sql:53-60`). */
   def q02ProjFilterLimit(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.orders(spark, dir)
       .filter(col("o_orderstatus") === "F" && col("o_totalprice") > 100000.0)
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -47,7 +45,6 @@ object Relational extends graft.QueryModule {
     * `test_pipeline.py:129`, `README.md:137`). Catalyst rewrites this to
     * TakeOrderedAndProject — no global sort materialization. */
   def q03GroupTopK(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.customer(spark, dir)
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("user_count"))
@@ -62,7 +59,6 @@ object Relational extends graft.QueryModule {
     * HashAggregateExec — at 100 TB this is the canonical
     * shuffle-light aggregate. */
   def q04PricingSummary(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val disc = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
     Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
@@ -81,7 +77,6 @@ object Relational extends graft.QueryModule {
     * shim (SURVEY A4/X1/X2; reference domain-extraction
     * `sql:44-50`: `SUBSTR(email, STRPOS(email, '@') + 1)`). */
   def q05ExprGroup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.part(spark, dir)
       .groupBy(expr("substr(p_name, strpos(p_name, ' ') + 1)").as("word"))
       .agg(count(lit(1)).as("cnt"))
@@ -92,7 +87,6 @@ object Relational extends graft.QueryModule {
     * reference phone-format analysis `sql:62-80`). Both predicates are
     * codegen'd; the parquet scan sees the pushed-down conjuncts. */
   def q06FilterLike(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.part(spark, dir)
       .filter(col("p_name").like("small%") || col("p_brand").rlike("^Brand#1[0-9]$"))
       .select("p_partkey", "p_name", "p_brand")
@@ -103,7 +97,6 @@ object Relational extends graft.QueryModule {
     * (SURVEY X4/A7; reference `sql:63-80` phone-format buckets and
     * `sql:122-127` missing-field counts). */
   def q07CaseAgg(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val bucket = when(col("o_totalprice") < 50000.0, "small")
       .when(col("o_totalprice") < 150000.0, "medium")
       .otherwise("large")
@@ -119,7 +112,6 @@ object Relational extends graft.QueryModule {
   /** q08 — ungrouped MIN/MAX over timestamps: the reference's
     * data-freshness probe (SURVEY A5; reference `sql:14-19`). */
   def q08MinMax(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.orders(spark, dir)
       .agg(
         min(col("o_orderdate")).as("first_order"),
@@ -130,7 +122,6 @@ object Relational extends graft.QueryModule {
   /** q09 — duplicate detection via GROUP BY + HAVING (SURVEY A9/A11;
     * reference duplicate-email check `sql:113-119`). */
   def q09HavingDup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.lineitem(spark, dir)
       .groupBy("l_orderkey")
       .agg(count(lit(1)).as("line_count"))
@@ -142,7 +133,6 @@ object Relational extends graft.QueryModule {
     * UNION ALL'd, built by folding over the field list instead of
     * copy-pasting SQL (SURVEY U1/A6-A8; reference `sql:131-163`). */
   def q10Completeness(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val cust = Tables.customer(spark, dir)
     def branch(field: String): DataFrame =
       cust.agg(
@@ -161,7 +151,6 @@ object Relational extends graft.QueryModule {
     * `broadcast()` hints pin the strategy the optimizer would pick from
     * statistics anyway. */
   def q11JoinRegion(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.customer(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
@@ -178,7 +167,6 @@ object Relational extends graft.QueryModule {
     * customer joins on custkey; nation broadcasts. Filters sit below the
     * joins so Catalyst pushes them into the scans. */
   def q12RevenueByNation(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val li = Tables.lineitem(spark, dir)
     val ord = Tables.orders(spark, dir)
       .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp") &&
@@ -196,7 +184,6 @@ object Relational extends graft.QueryModule {
     * never materializes the right side's columns — at scale this is the
     * correct EXISTS plan, not a join+distinct. */
   def q13SemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.customer(spark, dir)
       .join(Tables.orders(spark, dir), col("c_custkey") === col("o_custkey"), "left_semi")
       .select("c_custkey", "c_name")
@@ -205,7 +192,6 @@ object Relational extends graft.QueryModule {
 
   /** q14 — left-anti join (NOT EXISTS): customers with no orders. */
   def q14AntiJoin(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.customer(spark, dir)
       .join(Tables.orders(spark, dir), col("c_custkey") === col("o_custkey"), "left_anti")
       .select("c_custkey", "c_name")
@@ -217,7 +203,6 @@ object Relational extends graft.QueryModule {
     * are the idiomatic Spark form of the reference's per-group-best
     * patterns). Single shuffle on the partition key. */
   def q15WindowTopPerKey(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
     Tables.orders(spark, dir)
       .withColumn("rn", row_number().over(w))
@@ -232,7 +217,6 @@ object Relational extends graft.QueryModule {
     * out of the oracle-checked surface because its result is
     * engine-specific. */
   def q16Distinct(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.lineitem(spark, dir)
       .agg(
         countDistinct(col("l_partkey")).as("distinct_parts"),
@@ -242,7 +226,6 @@ object Relational extends graft.QueryModule {
   /** q17 — global top-k by value (SURVEY O4): TakeOrderedAndProject, no
     * full sort. */
   def q17TopOrders(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.orders(spark, dir)
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -254,7 +237,6 @@ object Relational extends graft.QueryModule {
     * STRING_AGG of names per group). Runs through spark.sql to prove the
     * SQL-dialect surface end-to-end. */
   def q18StringAgg(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.registerAll(spark, dir)
     spark.sql(
       """SELECT r_name, string_agg(n_name, ', ') AS nations
@@ -267,7 +249,6 @@ object Relational extends graft.QueryModule {
     * (batch form; the streaming form with watermarking lives in
     * graft.streaming). `window()` buckets align to the epoch in UTC. */
   def q19EventWindows(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.events(spark, dir)
       .groupBy(
         window(col("ts"), "10 minutes").getField("start").as("window_start"),
@@ -283,7 +264,6 @@ object Relational extends graft.QueryModule {
     * variant; this is the scalar form the reference's Athena SQL would
     * use). regexp_extract stays inside codegen. */
   def q20JsonExtract(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.events(spark, dir)
       .groupBy("event_type")
       .agg(
@@ -296,7 +276,6 @@ object Relational extends graft.QueryModule {
     * reference `sql:176-187`: `CONCAT(address_street, ', ', address_city)
     * AS full_address` + ORDER BY name). */
   def q35ComputedProjection(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.customer(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
       .select(
@@ -310,7 +289,6 @@ object Relational extends graft.QueryModule {
   /** q36 — three-column GROUP BY: the geographic-distribution shape
     * (SURVEY A3; reference `sql:33-40` groups by lat, lng, city). */
   def q36GeoGroup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.customer(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
@@ -335,7 +313,6 @@ object Relational extends graft.QueryModule {
     * `sql:166-174`: extraction counts per DATE(extraction_timestamp)).
     * Groups the order log by calendar month. */
   def q37DateBuckets(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.orders(spark, dir)
       .groupBy(
         year(col("o_orderdate")).cast("long").as("order_year"),
@@ -353,7 +330,6 @@ object Relational extends graft.QueryModule {
     * twin (q42 path) is the right default; exact percentile requires a
     * per-group sort. */
   def q41Percentiles(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.orders(spark, dir)
       .groupBy("o_orderpriority")
       .agg(
@@ -378,7 +354,6 @@ object Relational extends graft.QueryModule {
     * alone; the exact twin here is the gate's evidence, same pattern as
     * q43. */
   def q42ApproxDistinct(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     def gated(c: String, name: String): Seq[Column] = {
       val exact = countDistinct(col(c))
       val est = approx_count_distinct(col(c))
@@ -425,7 +400,6 @@ object Relational extends graft.QueryModule {
     * (ParseToTimestamp/Cast/StringInstr — no UDF), one partial-agg
     * shuffle at event_type grain. */
   def q253PrestoDialect(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.registerAll(spark, dir)
     spark.sql(
       s"""WITH parsed AS (
@@ -467,7 +441,6 @@ object Relational extends graft.QueryModule {
     * shape works on any sidecar-JSON column. Buckets the extracted value
     * and profiles event counts per bucket. */
   def q74JsonExtract(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.events(spark, dir)
       .select(
         col("event_type"),
@@ -486,7 +459,6 @@ object Relational extends graft.QueryModule {
     * disambiguates subtotal rows; explicit NULLS FIRST ordering keeps
     * both engines' output order identical. */
   def q75Rollup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.lineitem(spark, dir)
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -509,7 +481,6 @@ object Relational extends graft.QueryModule {
     * `grouping_id` disambiguates; NULLS FIRST keeps engine order
     * identical. */
   def q81Cube(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.lineitem(spark, dir)
       .cube(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -529,7 +500,6 @@ object Relational extends graft.QueryModule {
     * only) + one partial-agged aggregation; the shuffle carries one
     * partial row per (set × cell), never the fact table. */
   def q91GroupingSets(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.lineitem(spark, dir)
       .groupingSets(
         Seq(
@@ -561,7 +531,6 @@ object Relational extends graft.QueryModule {
     * `sql/sample_athena_queries.sql:113-119` (the duplicate check an
     * Athena user would equally phrase with EXISTS). */
   def q243ExistsSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.registerAll(spark, dir)
     spark.sql(
       """SELECT c.c_custkey, c.c_name,
@@ -582,7 +551,6 @@ object Relational extends graft.QueryModule {
     * side could carry nulls). Both decorrelate to key-hashed joins; the
     * plan gate asserts no nested loop survives. */
   def q244InSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.registerAll(spark, dir)
     spark.sql(
       """SELECT o_orderkey, o_custkey, o_totalprice
@@ -601,7 +569,6 @@ object Relational extends graft.QueryModule {
     * All-integer/exact comparisons (max equality, count) so the filter
     * cannot flip on float summation order across engines. */
   def q245ScalarSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.registerAll(spark, dir)
     spark.sql(
       """SELECT o.o_orderkey, o.o_custkey, o.o_totalprice,
@@ -631,7 +598,6 @@ object Relational extends graft.QueryModule {
     * plan gate in `PlanAuditSpec` asserts both. All values are BIGINT
     * counts — order-free, oracle-exact. */
   def q249UnnestUnpivot(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.registerAll(spark, dir)
     spark.sql(
       """WITH tok AS (
@@ -660,7 +626,6 @@ object Relational extends graft.QueryModule {
     * identical in both engines. One window shuffle; the top-3 filter
     * keeps the gate output group-bounded. */
   def q103WindowFamily(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("o_orderpriority")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -686,7 +651,6 @@ object Relational extends graft.QueryModule {
     * physical machinery, which is the point of expressing them
     * declaratively. */
   def q104SetOps(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val urgent = Tables.orders(spark, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_custkey").as("custkey")).distinct()
@@ -714,7 +678,6 @@ object Relational extends graft.QueryModule {
     * aggregate and the rank recount — the honest cost of auditing a
     * sketch against its own data. */
   def q105ApproxPercentileGate(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val o = Tables.orders(spark, dir)
       .select(col("o_orderpriority"), col("o_totalprice"))
     val agg = o.groupBy("o_orderpriority").agg(

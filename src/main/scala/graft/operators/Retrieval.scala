@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Full-text retrieval over the corpus: BM25-ranked top-k per query — the
   * inverted-index search shape (Lucene/Elasticsearch scoring; Robertson &
@@ -122,7 +122,6 @@ object Retrieval extends graft.QueryModule {
     * avgdl exact over the full corpus). [[bm25TopK]] stays as the
     * generic any-frame entry point for the `bm25` TVF. */
   def q70Bm25(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val stage = TextOps.tokenStage(spark, dir)
     val perDoc = stage.groupBy("doc_id").agg(max(col("dl")).as("dl"))
     val stats = perDoc.agg(
@@ -153,7 +152,6 @@ object Retrieval extends graft.QueryModule {
     * integer sum — order-free, so engine aggregation order can never
     * shift it, and the oracle replays it exactly. */
   def q117InvertedIndex(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     invertedIndexAudit(TextOps.tokenStage(spark, dir).filter(col("token").isNotNull))
   }
 
@@ -195,7 +193,6 @@ object Retrieval extends graft.QueryModule {
     * engines compute identically — q29/q70-proven), and RRF micros are
     * integer division — the oracle replays the whole pipeline. */
   def q113HybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // sparse side from the shared token stage, same scoring core as q70
     val stage = TextOps.tokenStage(spark, dir)
     val perDoc = stage.groupBy("doc_id").agg(max(col("dl")).as("dl"))
@@ -279,7 +276,6 @@ object Retrieval extends graft.QueryModule {
     * candidate-sized), the ranking is q70's own plan, and everything
     * after is |queries|-grain. */
   def q199RetrievalEval(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     evalOver(spark,
       q70Bm25(spark, dir).select(col("query_id"), col("rnk"), col("doc_id")),
       TextOps.tokenStage(spark, dir)
@@ -370,7 +366,6 @@ object Retrieval extends graft.QueryModule {
     * literal join. The ideal ranking windows per query over the
     * candidate set only. */
   def q251RetrievalQuality(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val stage = TextOps.tokenStage(spark, dir)
     val perDoc = stage.groupBy("doc_id").agg(max(col("dl")).as("dl"))
     val stats = perDoc.agg(
@@ -526,7 +521,6 @@ object Retrieval extends graft.QueryModule {
     * filter before the shuffle, the q70 plan); the pack is one
     * per-query window cumsum over it and a |queries|-row report. */
   def q211ContextPack(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val stage = TextOps.tokenStage(spark, dir)
     val perDoc = stage.groupBy("doc_id").agg(max(col("dl")).as("dl"))
     val stats = perDoc.agg(
@@ -578,7 +572,6 @@ object Retrieval extends graft.QueryModule {
     * are integer aggregates; the phrase list is deterministic (integer
     * micro-PMI, bigram tie-break). */
   def q214PhraseSearch(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val phrases = TextOps.pmiScored(spark, dir)
       .orderBy(desc("pmi_micro"), col("bigram"))
       .limit(PhraseTopK)

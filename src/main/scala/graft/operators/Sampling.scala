@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Deterministic sampling / split assignment over the `documents` corpus
   * (SURVEY §2.9 adjacent — the dataset-mixing half of a training-data
@@ -33,7 +33,6 @@ object Sampling extends graft.QueryModule {
   /** q58 — content-hash split assignment: train/val/test = 90/5/5 by
     * md5 bucket. A document's split is a pure function of its content. */
   def q58SplitAssign(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     splitAssign(Tables.documents(spark, dir))
   }
 
@@ -66,7 +65,6 @@ object Sampling extends graft.QueryModule {
     * broadcasts the sparse side at fixture scale; at 100 TB both are
     * hash joins on uniform keys). */
   def q233ClusterSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     clusterSafeSplitOver(spark, Tables.documents(spark, dir),
       Dedup.verifiedPairs(spark, dir).select("d1", "d2"))
   }
@@ -143,7 +141,6 @@ object Sampling extends graft.QueryModule {
 
   /** q59 — [[sourceCap]] over the documents corpus at [[SourceCap]]. */
   def q59SourceCap(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     sourceCap(Tables.documents(spark, dir), SourceCap)
   }
 
@@ -157,7 +154,6 @@ object Sampling extends graft.QueryModule {
     * ("upsample high quality, thin the tail") done without randomness.
     * Map-only; the keep decision is a pure function of the row. */
   def q60QualitySample(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val toks = TextOps.tokens(col("text"))
     val scored = Tables.documents(spark, dir)
       .select(
@@ -221,7 +217,6 @@ object Sampling extends graft.QueryModule {
     * the window never sees a skewed partition, unlike partitioning by a
     * natural key. */
   def q63SequencePack(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val toks = TextOps.tokens(col("text"))
     val w = Window.partitionBy("shard").orderBy("ch", "doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -259,7 +254,6 @@ object Sampling extends graft.QueryModule {
     * counts are ceil-divisions of per-shard totals. One int-derived
     * double (the split share) per row. */
   def q146PackingSweep(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val toks = TextOps.tokens(col("text"))
     val w = Window.partitionBy("shard").orderBy("ch", "doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -330,7 +324,6 @@ object Sampling extends graft.QueryModule {
   }
 
   def q64TemperatureMix(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     temperatureMix(Tables.documents(spark, dir), MixAlpha)
   }
 
@@ -368,7 +361,6 @@ object Sampling extends graft.QueryModule {
   }
 
   def q106WeightedSample(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     weightedSample(Tables.documents(spark, dir), WeightedSampleK)
   }
 
@@ -403,7 +395,6 @@ object Sampling extends graft.QueryModule {
     * decimal(38,0) (the q193 width contract) and each mean is ONE
     * integer division. */
   def q227BootstrapCi(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     bootstrapCi(Tables.fanout(spark, Tables.documents(spark, dir)))
   }
 
@@ -476,7 +467,6 @@ object Sampling extends graft.QueryModule {
     * budget across sub-sources first (the q52 salting lever applied to
     * budget quotas). Everything downstream is doc-grain. */
   def q121TokenBudget(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val dls = TextOps.tokenStage(spark, dir)
       .groupBy("doc_id").agg(max(col("dl")).as("n_tok"))
     tokenBudgetFill(
@@ -514,7 +504,6 @@ object Sampling extends graft.QueryModule {
     * α/normalization math runs on the sources-sized frame (a few-row
     * single-partition window, same as q64's rates frame). */
   def q125MixManifest(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val dls = TextOps.tokenStage(spark, dir)
       .groupBy("doc_id").agg(max(col("dl")).as("n_tok"))
     mixManifest(
@@ -573,7 +562,6 @@ object Sampling extends graft.QueryModule {
     * output is shard-count-sized. The companion [[exportShards]] does
     * the actual partitioned write. */
   def q128ShardManifest(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val dls = TextOps.tokenStage(spark, dir)
       .groupBy("doc_id").agg(max(col("dl")).as("n_tok"))
     shardManifest(
@@ -646,7 +634,6 @@ object Sampling extends graft.QueryModule {
     * 64) and attach as broadcasts; the result is a bounded top-k
     * (TakeOrderedAndProject, never a global sort). */
   def q129DsirSelect(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     dsirSelect(dsirFeatures(spark, dir),
       Tables.documents(spark, dir).select(col("doc_id"), col("source")),
       DsirTargetSources, DsirBuckets, DsirTopK)
@@ -768,7 +755,6 @@ object Sampling extends graft.QueryModule {
     * arithmetic after that is |sources|-sized with two broadcast
     * scalars. */
   def q210EpochPlan(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val occ = TextOps.tokenStream(spark, dir)
       .join(Tables.documents(spark, dir).select("doc_id", "source"), Seq("doc_id"))
     val perSource = occ.groupBy("source")
@@ -828,7 +814,6 @@ object Sampling extends graft.QueryModule {
     * aggregate broadcast back onto the sources frame. Nothing after
     * the first aggregate is corpus-sized. */
   def q236BudgetWaterfill(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     waterfillOver(Tables.fanout(spark, Tables.documents(spark, dir)))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** CROSS-SOURCE SCORE NORMALIZATION (SURVEY §2.9 quality family): map
   * every document's quality score to its PERCENTILE WITHIN ITS SOURCE —
@@ -36,7 +36,6 @@ object ScoreNorm extends graft.QueryModule {
 
   /** q218 — per-doc within-source percentile of the q23 quality score. */
   def q218ScorePercentiles(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     percentilesOver(Tables.fanout(spark, Tables.documents(spark, dir)))
   }
 
@@ -93,7 +92,6 @@ object ScoreNorm extends graft.QueryModule {
     * compares ks²·n1·n2 against 1844164e6·(n1+n2) in decimal(38,0)
     * (1358² = 1844164 — no square root ever computed). */
   def q221ScoreKsDrift(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     ksOver(
       Tables.fanout(spark, SnapshotFixture.table(spark, dir, "documents_v1_growth")),
       Tables.fanout(spark, SnapshotFixture.table(spark, dir, "documents_v2")))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** CONSISTENT-HASH SHARD PLACEMENT + REBALANCE AUDIT (SURVEY §2.9
   * layout/ops family): assign every document a shard under (a) naive
@@ -70,7 +70,6 @@ object Sharding extends graft.QueryModule {
 
   /** q222 — the K → K+1 rebalance audit over the corpus. */
   def q222ShardRebalance(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     rebalanceOver(Tables.fanout(spark, Tables.documents(spark, dir)))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 import VectorSearch.{NumProbes, TopK}
 
 /** Similarity search over the `embeddings` table (SURVEY §2.9): exact
@@ -61,7 +61,6 @@ object Similarity extends graft.QueryModule {
     * nearest neighbors by cosine over the whole corpus. The probe side
     * is broadcast (tiny); ranking is a window per probe. */
   def q29CosineTopK(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val emb = Tables.embeddings(spark, dir)
     // size-gated corpus-side fanout (see Tables.fanoutIfHeavy): a
     // one-row-group embeddings scan runs this kernel on ONE task; past
@@ -97,7 +96,6 @@ object Similarity extends graft.QueryModule {
     * Approximate by construction — recall is spec-checked against q29,
     * not oracle-checked. Output shape matches q29 for comparability. */
   def annLshTopK(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val emb = Tables.embeddings(spark, dir)
     val planes = hyperplanes(NumPlanes, 64)
     // the bucket assignment + scoring kernel parallelize together off
@@ -126,7 +124,6 @@ object Similarity extends graft.QueryModule {
     * query is a full hash-match instead of rows-only. Production callers
     * use [[annLshTopK]]. */
   def q30AnnLsh(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     recallOf(q29CosineTopK(spark, dir), annLshTopK(spark, dir))
       .select(col("n_probes"), col("n_exact_results"),
         (col("recall") >= LshRecallFloor).as("recall_ok"))
@@ -156,7 +153,6 @@ object Similarity extends graft.QueryModule {
     * bucket prefilter of [[q30AnnLsh]] (bucket join first, exact cosine
     * only within buckets), turning n² into Σ bucket². */
   def q31CosineNearDup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val emb = Tables.embeddings(spark, dir)
     // fanout the STREAM side (the q191 lesson): the broadcast-NL cross
     // join parallelizes by stream-side partitions, and a one-row-group
@@ -208,7 +204,6 @@ object Similarity extends graft.QueryModule {
     * hash-matches a literal oracle. Production callers use
     * [[nearDupLshPairs]] — no O(n²) twin in that path. */
   def q49NearDupLsh(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val exact = q31CosineNearDup(spark, dir)
       .select(col("v1"), col("v2"), lit(1L).as("ex"))
     val lsh = nearDupLshPairs(
@@ -302,7 +297,6 @@ object Similarity extends graft.QueryModule {
     * gate query ([[q43AnnIvf]]) wraps it in a recall verdict against the
     * exact twin. */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val emb = Tables.embeddings(spark, dir)
     val centers = IvfIndex.centroids(spark, dir, NumLists)
     // spill assignment: each vector appears in its SpillAssign nearest
@@ -360,7 +354,6 @@ object Similarity extends graft.QueryModule {
     * probe/result counts and asserts the verdict literally. Production
     * callers use [[ivfTopK]] directly (no exact twin, no verdict). */
   def q43AnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     recallOf(q29CosineTopK(spark, dir), ivfTopK(spark, dir))
       .select(col("n_probes"), col("n_exact_results"),
         (col("recall") >= IvfRecallFloor).as("recall_ok"))
@@ -427,7 +420,6 @@ object Similarity extends graft.QueryModule {
     * not. Both counts are per-corpus-version facts (the quantizer's
     * cache key), never per-query work. */
   private[graft] def ivfFilteredTopK(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val emb = Tables.embeddings(spark, dir)
     val centers = IvfIndex.centroids(spark, dir, NumLists)
     val store = metaStore(spark, dir).filter(col("source") === FilterSource)
@@ -445,7 +437,6 @@ object Similarity extends graft.QueryModule {
     * and that the predicate actually prunes (strict subset of the
     * corpus). Production callers use [[ivfFilteredTopK]] directly. */
   def q209FilteredAnn(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val facts = metaStore(spark, dir)
       .agg(
         count(lit(1)).as("n_vectors"),
@@ -558,7 +549,6 @@ object Similarity extends graft.QueryModule {
     * in-plan instead. Exact-twin parity + planted-duplicate recall
     * spec'd in `SimilaritySpec`. */
   def semDedupStatuses(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val emb = Tables.embeddings(spark, dir)
     // size the quantizer to the corpus (index-build-time metadata read,
     // same lifecycle as the centroid training itself)
@@ -580,7 +570,6 @@ object Similarity extends graft.QueryModule {
     * never reach the output → full hash-match instead of rows-only.
     * Production callers use [[semDedupStatuses]]. */
   def q69SemDedup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // both gate inputs materialized once (eager localCheckpoint, the
     // q175/q251 lesson): statuses feeds FOUR consumers (the count agg,
     // the bad-drop anti-join and both sides of the survived join) and
@@ -626,7 +615,6 @@ object Similarity extends graft.QueryModule {
     * per-cell mean is a double sum whose partition-order wobble is
     * ~1e-13 relative, far inside the rounding. */
   def q82CentroidDrift(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val src = Tables.documents(spark, dir)
       .select(col("doc_id").as("vec_id"), col("source"))
     val cells = Tables.embeddings(spark, dir)
@@ -680,7 +668,6 @@ object Similarity extends graft.QueryModule {
     * max is order-free (no double sums cross the engines); one
     * round(·, 6) on the comparison-stable max. */
   def q137SemDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     semDecontaminate(Tables.embeddings(spark, dir), Tables.documents(spark, dir))
   }
 
@@ -729,7 +716,6 @@ object Similarity extends graft.QueryModule {
     * q29→q30/q43 relationship. Band edges compare the bit-identical
     * cosine fold in both engines, so no boundary tie can flip. */
   def q156HardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     hardNegatives(Tables.embeddings(spark, dir), HnLoCos, HnHiCos, HnK)
   }
 
@@ -769,7 +755,6 @@ object Similarity extends graft.QueryModule {
     * both engines sum exact integers in any order; the published mean
     * is one sign-split integer division. */
   def q157EmbeddingDiversity(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     embeddingDiversity(
       Tables.embeddings(spark, dir),
       Tables.documents(spark, dir).select(col("doc_id").as("vec_id"), col("source")))
@@ -827,7 +812,6 @@ object Similarity extends graft.QueryModule {
     * (capped-sample trained), so this is a q43-style verdict gate;
     * the measured recalls themselves are spec-pinned. */
   def q162NprobeSweep(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val emb = Tables.embeddings(spark, dir)
     val corpusN = emb.count()
     val centers = IvfIndex.centroids(spark, dir, NumLists)

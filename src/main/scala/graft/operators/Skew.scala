@@ -3,11 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Explicit skew handling: key salting (SURVEY §4 scale posture).
   *
-  * AQE's runtime skew-join splitting (on in `Sessions.prepare`) handles
+  * AQE's runtime skew-join splitting (on in every prepared session) handles
   * most skew transparently, but it only splits SORT-MERGE join partitions
   * after they materialize. Salting is the PLAN-level tool for the cases
   * AQE can't reach — aggregate hot keys, skewed shuffle joins where the
@@ -74,7 +74,6 @@ object Skew extends graft.QueryModule {
     * 4 reducers instead of 1. (Salt factor trades replication cost for
     * spread: size it to the observed hot-key fan-out, not higher.) */
   def q52SkewJoin(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
     val orders = Tables.orders(spark, dir)
@@ -107,7 +106,6 @@ object Skew extends graft.QueryModule {
     * sized ever coalesces or sorts globally. Integer arithmetic
     * throughout (truncating share, ceil-by-division salt). */
   def q198SkewReport(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     skewReport(Tables.events(spark, dir), "user_id")
   }
 

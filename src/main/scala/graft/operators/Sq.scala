@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import VectorSearch.{NumProbes, TopK}
 
 /** SCALAR-QUANTIZED (SQ8) similarity search — the third leg of the
@@ -78,7 +77,6 @@ object Sq extends graft.QueryModule {
     * SQ result set (the error-mass fact q88 predicts). Everything in
     * the row is recomputed verbatim by the oracle. */
   def q173SqAdc(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     sqGateOver(spark, KMeans.quantized(spark, dir))
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Lexicon-based TAXONOMY TAGGING (SURVEY §2.9 text-analysis family):
   * assign every document a topic from small curated keyword lexicons —
@@ -70,7 +70,6 @@ object Taxonomy extends graft.QueryModule {
     * reported at (source, topic) grain with doc counts and total hits —
     * the table a mixing step reads to enforce domain quotas. */
   def q184TopicTag(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     tagged(Tables.documents(spark, dir))
       .groupBy("source", "topic")
       .agg(count(lit(1)).as("n_docs"), sum(col("topic_hits")).as("sum_hits"))
@@ -104,7 +103,6 @@ object Taxonomy extends graft.QueryModule {
     * frame so the report is total. The firehose never shuffles at
     * occurrence grain. */
   def q206PhraseTags(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     phraseTagsOver(spark, Tables.fanout(spark, Tables.documents(spark, dir)))
   }
 

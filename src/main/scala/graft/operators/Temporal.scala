@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Temporal operators over the event log: as-of join and gap-based
   * sessionization — the two time-series primitives a training-data
@@ -55,7 +55,6 @@ object Temporal extends graft.QueryModule {
     * proves the union-formulation is the real operator, not an
     * approximation. */
   def q39AsofJoin(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val ev = Tables.events(spark, dir)
     val errors = ev.filter(col("event_type") === "error")
       .select("event_id", "user_id", "ts")
@@ -80,7 +79,6 @@ object Temporal extends graft.QueryModule {
     * rolled up per user. One shuffle (user), one sort (ts) — the batch
     * twin of the streaming `flatMapGroupsWithState` form. */
   def q40Sessionize(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val byUser = Window.partitionBy("user_id").orderBy("ts")
     val cum = Window.partitionBy("user_id").orderBy("ts")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -147,7 +145,6 @@ object Temporal extends graft.QueryModule {
     * assignment is 1:1 — row count equals the event count (spec-checked);
     * the oracle is the relationally-recomputed BETWEEN join. */
   def q57RangeJoin(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val byUser = Window.partitionBy("user_id").orderBy("ts")
     val cum = Window.partitionBy("user_id").orderBy("ts")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Text-analysis operators over the `documents` corpus (the north-star
   * LLM-data-pipeline surface, SURVEY §2.9): token statistics, document
@@ -130,7 +130,6 @@ object TextOps extends graft.QueryModule {
     * length, md5 fingerprint. All integer-derived arithmetic, so the
     * oracle matches bit-for-bit. */
   def q21TextStats(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val toks = tokens(col("text"))
     Tables.documents(spark, dir)
       .select(
@@ -148,7 +147,6 @@ object TextOps extends graft.QueryModule {
     * stopword-incidence measure (the reference's per-group profiling
     * shape, `sql/sample_athena_queries.sql:84-90`, applied to text). */
   def q22LangProfile(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.documents(spark, dir)
       .groupBy("lang")
       .agg(
@@ -163,7 +161,6 @@ object TextOps extends graft.QueryModule {
     * bucketed into quality tiers. Integer-derived doubles keep the
     * oracle exact. */
   def q23QualityScore(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val toks = tokens(col("text"))
     val scored = Tables.documents(spark, dir)
       .select(
@@ -195,7 +192,6 @@ object TextOps extends graft.QueryModule {
     * is the plumbing + exact argmax/tie-break semantics, which the oracle
     * reproduces as an ordered CASE over per-language stopword scores. */
   def q45LangId(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.documents(spark, dir)
       .groupBy(languageId(col("text")).as("predicted_lang"))
       .agg(count(lit(1)).as("n_docs"))
@@ -212,7 +208,6 @@ object TextOps extends graft.QueryModule {
     * One aggregate over the corpus scan; the cell frame is
     * |langs|²-bounded. */
   def q179LangidConfusion(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     langidConfusion(Tables.documents(spark, dir))
   }
 
@@ -260,7 +255,6 @@ object TextOps extends graft.QueryModule {
     * collision grouping (same shape as the md5 exact-dedup q24, over the
     * order-sensitive hash). */
   def q46RollingFp(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), rollingFingerprint(trim(col("text"))).as("rolling_fp"))
       .orderBy("doc_id")
@@ -278,7 +272,6 @@ object TextOps extends graft.QueryModule {
     * tokens per document, with the inflation ratio (tokens-per-word
     * estimate). Map-only over documents; pure codegen'd built-ins. */
   def q47TokenBpe(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.documents(spark, dir)
       .select(
         col("doc_id"),
@@ -302,7 +295,6 @@ object TextOps extends graft.QueryModule {
     * occurrence — the shape that survives a 100 TB corpus (vocabulary
     * is sublinear in corpus size). */
   def q53VocabTop(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     tokenStream(spark, dir)
       .groupBy("token")
       .agg(
@@ -319,7 +311,6 @@ object TextOps extends graft.QueryModule {
     * so the order is reproducible across engines regardless of
     * last-ulp differences in ln. */
   def q54TfIdf(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import org.apache.spark.sql.expressions.Window
     // corpus size as a broadcast 1-row aggregate over the shared token
     // stage — a driver-side count() would be an eager second action, a
@@ -351,7 +342,6 @@ object TextOps extends graft.QueryModule {
     * gate checks it against an oracle-computable entropy proxy instead of
     * exposing the raw ratios. */
   def compressionRatios(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         round(graft.functions.VectorFunctions.deflate_ratio(col("text")), 4)
@@ -377,7 +367,6 @@ object TextOps extends graft.QueryModule {
     * hash-match instead of rows-only). Production callers use
     * [[compressionRatios]]. */
   def q61CompressRatio(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val toks = tokens(col("text"))
     Tables.documents(spark, dir)
       .select(
@@ -426,7 +415,6 @@ object TextOps extends graft.QueryModule {
   }
 
   def q65ChunkOverlap(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     chunkOverlap(Tables.documents(spark, dir), ChunkSize, ChunkStride)
       .orderBy("doc_id", "chunk_idx")
   }
@@ -446,7 +434,6 @@ object TextOps extends graft.QueryModule {
     * the same count relationally (unnest → group → max), which is equal
     * by definition. */
   def q68Repetition(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val toks = tokens(col("text"))
     // max run in sorted order == max occurrence count of any token
     val maxRun = aggregate(
@@ -501,7 +488,6 @@ object TextOps extends graft.QueryModule {
     * vocabulary, never the corpus token stream. The final report is a
     * bounded top-k. */
   def q73Boilerplate(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // the exploded per-doc-distinct shingle table is a SignatureStage:
     // built once per corpus version, cached/persisted, shared by every
     // report over the same corpus (the k=3 sibling of the k=5 near-dup
@@ -573,7 +559,6 @@ object TextOps extends graft.QueryModule {
       .orderBy("doc_id")
 
   def q78UnigramLogprob(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // both inputs from the shared token stage: per-doc term frequencies
     // and the corpus token total (= the stage's occurrence-row count) —
     // no corpus re-tokenize ([[unigramLogprob]] stays as the generic
@@ -610,7 +595,6 @@ object TextOps extends graft.QueryModule {
     * division. */
   def q159BigramLm(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    Sessions.prepare(spark)
     val st = tokenStream(spark, dir)
     // (history, word) pairs derived MAP-SIDE from the token array (the
     // q129 move): the previous lag() window shuffled AND sorted the
@@ -664,7 +648,6 @@ object TextOps extends graft.QueryModule {
     * pure integer division, the only doubles are the /1e4 range
     * displays. */
   def q144PerplexityBuckets(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import org.apache.spark.sql.expressions.Window
     val db = unigramBitsE4(
       tokenStream(spark, dir).groupBy("doc_id", "token").agg(count(lit(1)).as("tf")),
@@ -711,7 +694,6 @@ object TextOps extends graft.QueryModule {
     * as integer micro-bits (round(log\u2082\u00b71e6), the q78 contract) so
     * ordering and the gate are ulp-proof. */
   def q92PmiCollocations(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     pmiScored(spark, dir)
       .orderBy(desc("pmi_micro"), col("bigram"))
       .limit(30)
@@ -805,7 +787,6 @@ object TextOps extends graft.QueryModule {
     * no eager driver action, no second corpus scan; the token stream
     * comes from the shared [[tokenStage]]. */
   def q109Cooccurrence(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     cooccurrenceCore(
       tokenStream(spark, dir).select(col("doc_id"), col("token").as("w")),
       corpusSize(spark, dir).select(col("n_docs").as("nd")),
@@ -868,7 +849,6 @@ object TextOps extends graft.QueryModule {
     * oracle-exact; the oracle counts the same pairs per occurrence,
     * which is identical by distributivity. */
   def q118BpeMerges(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     bpeMergeCounts(tokenStream(spark, dir))
   }
 
@@ -919,7 +899,6 @@ object TextOps extends graft.QueryModule {
     * without it the plan doubles per round because the election subtree
     * embeds the frame it elects over). */
   def q250BpeTrain(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // the PERSISTED per-version merge table (round-14 verdict item 5):
     // a warm corpus serves the artifact; only a content change retrains
     bpeTrainedStages(spark, dir)._1.orderBy("merge_ord")
@@ -1004,7 +983,6 @@ object TextOps extends graft.QueryModule {
     * occurrence counts against the vocab frame — the corpus is never
     * re-segmented row by row. */
   def q252BpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val occ = tokenStream(spark, dir)
     // apply the PERSISTED trained segmentation — the encode pass is a
     // token-keyed vocab join + doc-grain reduce, never a retrain
@@ -1154,7 +1132,6 @@ object TextOps extends graft.QueryModule {
     * cell-grain roll-up. The rate is an exact int64/int64 double
     * division. */
   def q119VocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     vocabCoverage(tokenStream(spark, dir),
       Tables.documents(spark, dir).select("doc_id", "source", "lang"))
   }
@@ -1197,7 +1174,6 @@ object TextOps extends graft.QueryModule {
     * (Exchange-free on the stage side), a top-K take, then all math on a
     * K-row frame. */
   def q122ZipfSlope(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     zipfSlope(tokenStream(spark, dir))
   }
 
@@ -1250,7 +1226,6 @@ object TextOps extends graft.QueryModule {
     * gram-vocabulary-sized and the result is a TakeOrdered top-k.
     * Fan-out opted in ([[Tables.fanout]]) for the per-row gram work. */
   def q201TemplateSpans(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     templateSpansOver(Tables.fanout(spark, Tables.documents(spark, dir)))
   }
 
@@ -1317,7 +1292,6 @@ object TextOps extends graft.QueryModule {
     * languages-grain report. Integer sums (order-free), then one
     * int-derived double division per ratio — the q122 contract. */
   def q138TokenFertility(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     tokenFertility(Tables.documents(spark, dir))
   }
 

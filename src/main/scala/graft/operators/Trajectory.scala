@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** SESSION-TRAJECTORY ASSEMBLY (SURVEY §2.9 corpus-construction
   * family, beside q63's sequence packing): turn the raw event firehose
@@ -72,7 +72,6 @@ object Trajectory extends graft.QueryModule {
 
   /** q207 — assembled trajectories of `dir`'s event stream. */
   def q207SessionTrajectories(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     assembled(Tables.events(spark, dir)
       .select("user_id", "ts", "event_id", "event_type"))
   }
@@ -95,7 +94,6 @@ object Trajectory extends graft.QueryModule {
     * contract: a 100 TB firehose's transition count would wrap an
     * int64 ×1e6). */
   def q239TransitionMatrix(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     transitionsOver(Tables.events(spark, dir)
       .select("user_id", "ts", "event_id", "event_type"))
   }
@@ -157,7 +155,6 @@ object Trajectory extends graft.QueryModule {
     * (flow)-grain, and the report is a TakeOrderedAndProject top-k,
     * never a global sort. */
   def q240FlowMining(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     flowsOver(Tables.events(spark, dir)
       .select("user_id", "ts", "event_id", "event_type"))
   }
@@ -199,7 +196,6 @@ object Trajectory extends graft.QueryModule {
     * planned once and reused; the matrix attaches as a
     * \|types\|²-row broadcast; output is flagged-transition-sized. */
   def q241RareTransitions(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     rareOver(Tables.events(spark, dir)
       .select("user_id", "ts", "event_id", "event_type"))
   }

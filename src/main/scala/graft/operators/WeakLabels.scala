@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** WEAK-SUPERVISION LABEL MODEL (SURVEY §2.9 classifier family, the
   * step BEFORE q151's trained classifier exists): combine several
@@ -83,7 +83,6 @@ object WeakLabels extends graft.QueryModule {
     * vote (agreement is measured where both the LF and the vote
     * decided). */
   def q203WeakLabelMatrix(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     matrixOver(Tables.fanout(spark, Tables.documents(spark, dir)))
   }
 
@@ -127,7 +126,6 @@ object WeakLabels extends graft.QueryModule {
     * nine marginals are conditional sums in a single 1-row aggregate;
     * the three output rows are driver-free literal pivots of it. */
   def q223LfAgreement(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     agreementOver(Tables.fanout(spark, Tables.documents(spark, dir)))
   }
 

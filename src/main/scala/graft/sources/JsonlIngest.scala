@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Sessions, Tables, TableVersion}
+import graft.core.{Tables, TableVersion}
 
 /** JSON-lines corpus ingest with corrupt-record quarantine — the
   * semi-structured face of the ingest family (the reference's source is
@@ -100,7 +100,6 @@ object JsonlIngest extends graft.QueryModule {
     * nothing lost, everything accounted for (valid + corrupt = lines
     * written). One scan, one tiny source-grain shuffle. */
   def q107JsonlIngest(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     read(spark, dir)
       .groupBy(coalesce(col("source"), lit("_corrupt")).as("source"))
       .agg(

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 import graft.functions.VectorFunctions
 import graft.operators.{Admission, Dedup}
 
@@ -52,7 +52,6 @@ object AdmissionStream extends graft.QueryModule {
   /** q235 — the q234 admission verdicts produced by the streaming
     * screen: identical rows, identical oracle. */
   def q235StreamAdmission(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // the store-side artifacts below are INDEPENDENT until the drain
     // consumes them, but each is an eager materialization — built from
     // one driver thread they serialize four jobs back to back (the

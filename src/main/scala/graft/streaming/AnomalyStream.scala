@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.Analytics
 
 /** STREAMING INGEST-ANOMALY MONITOR: the q155 volume tripwire run the
@@ -26,7 +25,6 @@ object AnomalyStream extends graft.QueryModule {
 
   /** q161 — streamed day counts (closed days only) → q155 verdicts. */
   def q161StreamAnomaly(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val daily = EventStream.eventsStream(spark, dir)
       .withWatermark("ts", EventStream.WatermarkDelay)
       .groupBy(window(col("ts"), "1 day"), col("event_type"))

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.KMeans
 
 /** STREAMING centroid assignment: the trained k-means quantizer
@@ -31,7 +30,6 @@ object AssignStream extends graft.QueryModule {
   /** q135 — each arriving embedding quantized and assigned to its
     * nearest trained centroid: (vec_id, cluster, d). */
   def q135StreamAssign(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // batch-train once per corpus version (cached); the stream only
     // ever sees the k×dim literal
     val cents = KMeans.trainedCentroids(spark, dir)

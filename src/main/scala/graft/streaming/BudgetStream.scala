@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.Sessions
 import graft.operators.{Sampling, TextOps}
 
 /** STREAMING token-budget admission: the q121 budget fill run
@@ -73,7 +72,6 @@ object BudgetStream extends graft.QueryModule {
     * (the spec additionally proves equality with the batch fill). */
   def q124StreamTokenBudget(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Sessions.prepare(spark)
     val stream = EventStream.documentsStream(spark, dir)
     val admitted = graft.core.Tables.fanout(spark, stream)
       .select(col("doc_id"), col("source"),

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.Sessions
-
 /** STREAMING CDC APPLY: q185's latest-wins changelog fold maintained AT
   * INGEST — each arriving op folds into its key's one-record state, so
   * the materialized "current table" is always live instead of rebuilt
@@ -57,7 +55,6 @@ object CdcStream extends graft.QueryModule {
   /** q186 — the live materialized table after draining the changelog:
     * exactly q185's batch answer (shared latest-wins contract). */
   def q186StreamCdc(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import spark.implicits._
     val ops = EventStream.eventsStream(spark, dir)
       .select(

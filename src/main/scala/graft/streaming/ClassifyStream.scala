@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.{Classify, TextOps}
 
 /** STREAMING QUALITY ADMISSION: the q151 Naive Bayes classifier run at
@@ -39,7 +38,6 @@ object ClassifyStream extends graft.QueryModule {
     * has no literal fast path); at the 10× fixture that scan measured
     * as this drain's dominant cost. */
   def q152StreamNbQuality(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // batch-train, truncate to the K largest-|w| tokens (bounded collect
     // by construction), ship hashed keys + weights + prior. Trained once
     // per corpus version (ArtifactStore), never per drain.
@@ -85,7 +83,6 @@ object ClassifyStream extends graft.QueryModule {
     * so multi-batch drains converge by keeping each token's
     * largest-total emission (monotone versioning, the q145 move). */
   def q166StreamNbTrain(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val stream = EventStream.documentsStream(spark, dir)
     val toks = TextOps.tokens(coalesce(col("text"), lit("")))
     val filler = size(filter(toks,

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.Sessions
 import graft.operators.{Cms, Dedup}
 
 /** STREAMING Count-Min sketch: q169's 5-gram-frequency sketch maintained
@@ -75,7 +74,6 @@ object CmsStream extends graft.QueryModule {
     * document firehose: (r, b, cell), one row per non-empty counter,
     * equal to the batch sketch ([[Cms.exactCells]]) by the cell monoid. */
   def q172StreamCms(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import spark.implicits._
     val stream = EventStream.documentsStream(spark, dir)
     val increments = graft.core.Tables.fanout(spark, stream)

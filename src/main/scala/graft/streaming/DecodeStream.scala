@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.Multimodal
 import graft.operators.Multimodal.{ImageAsset, ImageFixture}
 
@@ -31,7 +30,6 @@ object DecodeStream extends graft.QueryModule {
     * width, height, n_pixels, sum_gray) from the real decoded raster. */
   def q148StreamDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Sessions.prepare(spark)
     val stream = EventStream.documentsStream(spark, dir)
     val decoded = graft.core.Tables.fanout(spark, stream)
       .select(col("doc_id"), col("n_chars"))

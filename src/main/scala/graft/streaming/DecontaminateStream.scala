@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.functions.VectorFunctions
 import graft.operators.Dedup
 
@@ -72,7 +71,6 @@ object DecontaminateStream extends graft.QueryModule {
 
   /** q167 — at-ingest contamination screen over `dir`'s documents. */
   def q167StreamDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val evalBc = spark.sparkContext.broadcast(evalProbe(spark, dir))
     val stream = EventStream.documentsStream(spark, dir)
     // fan out before the per-doc shingle+hash+binary-search screen (the

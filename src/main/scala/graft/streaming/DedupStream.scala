@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.Sessions
 import graft.operators.Dedup
 
 /** STREAMING near-dup screening: the MinHash-LSH candidate stage of the
@@ -125,7 +124,6 @@ object DedupStream extends graft.QueryModule {
     * oracle-checkable facts — the corpus size (SQL-recomputable) and the
     * set-equality verdict (literal TRUE the oracle asserts). */
   def q114StreamLshScreen(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val streamed = streamScreen(spark, dir)
     val batch = batchScreen(spark, dir)
     val mismatches = streamed.join(batch, Seq("doc_id"), "full_outer")

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.Sessions
 import graft.operators.{Corpus, Drift, KMeans, SnapshotFixture}
 
 /** STREAMING SCORE-DRIFT MONITOR: q196's PSI maintained AT INGEST —
@@ -62,7 +61,6 @@ object DriftStream extends graft.QueryModule {
     * reference = the v1 snapshot's bucket distribution, live = the
     * ingest-maintained histogram. */
   def q197StreamScoreDrift(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import spark.implicits._
     val stream = EventStream.documentsStream(spark, dir)
     val hits = graft.core.Tables.fanout(spark, stream)

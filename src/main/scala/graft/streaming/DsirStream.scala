@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.{Sampling, TextOps}
 
 /** STREAMING DSIR admission: the q129 importance scorer run at ingest —
@@ -44,7 +43,6 @@ object DsirStream extends graft.QueryModule {
     * arriving doc against the batch-trained model, keep target-like
     * ones. AvailableNow drain (the shared graft streaming pattern). */
   def q132StreamDsir(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // batch-train, then ship: B rows collected once per corpus version
     // (ArtifactStore), never per query run or microbatch
     val model: Map[Long, Long] =

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 
 /** Structured-Streaming face of the event log (SURVEY §2.8: the reference
   * is batch-append only, so streaming is the idiomatic incremental
@@ -231,7 +231,6 @@ object EventStream extends graft.QueryModule {
     * (AvailableNow) and return the emitted (closed) windows as a
     * DataFrame. */
   def q34StreamWindows(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     drainToFiles(spark, windowedAgg(eventsStream(spark, dir))).orderBy("window_start", "event_type")
   }
 
@@ -243,7 +242,6 @@ object EventStream extends graft.QueryModule {
     * emitted set is exactly the sessions whose last event is at least
     * gap+delay before the stream's max timestamp. */
   def q44StreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val sessions = eventsStream(spark, dir)
       .withWatermark("ts", WatermarkDelay)
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
@@ -270,7 +268,6 @@ object EventStream extends graft.QueryModule {
     * fingerprint is emitted: "first doc_id to arrive" is micro-batch
     * scheduling order, which no deterministic oracle should depend on. */
   def q48StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val deduped = documentsStream(spark, dir)
       .select(md5(trim(col("text"))).as("fp"))
       .dropDuplicates("fp")
@@ -292,7 +289,6 @@ object EventStream extends graft.QueryModule {
     * carry an exact oracle while still exercising the bounded-state
     * operator. */
   def q56StreamDedupBounded(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val deduped = eventsStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .select(col("ts"), md5(concat_ws("#", col("user_id"), col("event_type"))).as("fp"))
@@ -317,7 +313,6 @@ object EventStream extends graft.QueryModule {
     * AvailableNow input ⇒ no late drops), which is why this streaming
     * query can be ORACLE-checked, not just spec-compared. */
   def q77StreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     def side(eventType: String, prefix: String): DataFrame =
       eventsStream(spark, dir)
         .filter(col("event_type") === eventType)
@@ -352,7 +347,6 @@ object EventStream extends graft.QueryModule {
     * enriched event — identical to the batch join, hence oracle-checked
     * like q77. */
   def q79StreamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val stream = eventsStream(spark, dir)
     val cust = graft.core.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_nationkey"))

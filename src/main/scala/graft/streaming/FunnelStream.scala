@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
-import graft.core.Sessions
-
 /** STREAMING ordered funnel (the stateful-streaming twin of
   * [[graft.operators.Analytics.q84Funnel]]): per-user
   * view→click→purchase progression maintained as `mapGroupsWithState`
@@ -60,7 +58,6 @@ object FunnelStream extends graft.QueryModule {
     * update-mode ([[EventStream.drainToFiles]]); the read-back keeps
     * each user's furthest emission (stage flags only ever advance). */
   def q98StreamFunnel(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import spark.implicits._
     val events = EventStream.eventsStream(spark, dir)
       .select(unix_micros(col("ts")).as("ts"), col("user_id"), col("event_type"))

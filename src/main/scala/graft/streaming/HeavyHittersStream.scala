@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.Sessions
 import graft.operators.TextOps
 
 /** STREAMING heavy hitters: Misra-Gries (1982) summaries over the token
@@ -105,7 +104,6 @@ object HeavyHittersStream extends graft.QueryModule {
     * the shared token stage, is a streamed candidate) and the sketch
     * bound (candidates ≤ shards·k). */
   def q145StreamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val cands = streamCandidates(spark, dir).select(col("token")).distinct()
     val counts = TextOps.tokenStage(spark, dir)
       .groupBy("token").agg(count(lit(1)).as("cnt"))

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.sources.JsonlIngest
 
 /** STREAMING JSONL ingest with corrupt-record quarantine — the always-on
@@ -24,7 +23,6 @@ object IngestStream extends graft.QueryModule {
     * consumes every shard once, so the report equals q107's batch read
     * exactly — the oracle is q107's SQL verbatim. */
   def q108StreamJsonlIngest(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val path = new HPath(JsonlIngest.ensure(spark, dir), "documents.jsonl")
     val stream = spark.readStream
       .schema(JsonlIngest.schema)

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.RandomProjection
 
 /** STREAMING JL encode: the q217 ±1 random projection applied to
@@ -26,7 +25,6 @@ object JlEncodeStream extends graft.QueryModule {
   /** q219 — each arriving embedding's k-dim JL sketch, one row per
     * output dimension. */
   def q219StreamJlEncode(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val stream = EventStream.embeddingsStream(spark, dir)
     val sketched = graft.core.Tables.fanout(spark, stream)
       .select(col("vec_id"),

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.Outlier
 
 /** STREAMING EMBEDDING-OUTLIER SCREEN: q192's source-centroid audit
@@ -29,7 +28,6 @@ object OutlierStream extends graft.QueryModule {
 
   /** q195 — streamed outlier screen over `dir`'s embeddings. */
   def q195StreamOutlierScreen(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // keyed on BOTH inputs: the centroids depend on embeddings AND the
     // vec_id→source mapping in documents — a documents-only refresh
     // must invalidate the artifact too

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.{ScoreNorm, TextOps}
 
 /** STREAMING PERCENTILE SCREEN: the q218 cross-source score calibration
@@ -27,7 +26,6 @@ object PercentileStream extends graft.QueryModule {
 
   /** q224 — each arriving document's within-source score percentile. */
   def q224StreamPercentileScreen(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val cdf: Map[String, Long] =
       graft.core.ArtifactStore.value(spark, dir, Seq("documents.parquet"), "scoreCdf") { _ =>
         ScoreNorm.cdfOf(graft.core.Tables.documents(spark, dir))

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.{KMeans, Pq}
 
 /** STREAMING PQ encode: the trained product-quantization codebook
@@ -35,7 +34,6 @@ object PqEncodeStream extends graft.QueryModule {
     * form is sortable/hashable by any downstream harness and unpacks
     * exactly (code_i = (packed >> 4*(M-1-i)) & 15). */
   def q141StreamPqEncode(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // batch-train once per corpus version (cached); the stream only
     // ever sees the codebook literal
     val book = Pq.trainedBook(spark, dir)

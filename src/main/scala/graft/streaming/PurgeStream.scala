@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 import graft.operators.Purge
 
 /** PURGE AT INGEST — the q202 tombstone set enforced at the door: a
@@ -27,7 +27,6 @@ object PurgeStream extends graft.QueryModule {
   /** q238 — at-ingest tombstone screen over `dir`'s documents: the
     * surviving (doc_id, source, n_chars) rows. */
   def q238StreamPurge(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val tomb = graft.core.Materialize.once(Purge.tombstones(spark, dir))
     val stream = EventStream.documentsStream(spark, dir)
     val screened = Tables.fanout(spark, stream)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.{Sessions, Tables}
+import graft.core.Tables
 import graft.functions.QuantileSketchAgg
 import graft.operators.QuantileSketch
 
@@ -56,7 +56,6 @@ object QuantileStream extends graft.QueryModule {
   /** q183 — drain the event firehose through the sketch state, then
     * verify the final streamed estimates with q182's batch recount. */
   def q183StreamQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import spark.implicits._
     val rows = EventStream.eventsStream(spark, dir)
       .select(col("event_type"),

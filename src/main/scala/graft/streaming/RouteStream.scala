@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.Taxonomy
 
 /** STREAMING TOPIC ROUTER: q184's lexicon taxonomy run AT INGEST — each
@@ -23,7 +22,6 @@ object RouteStream extends graft.QueryModule {
 
   /** q190 — streamed routing over `dir`'s documents table. */
   def q190StreamTopicRoute(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val stream = EventStream.documentsStream(spark, dir)
     val routed = Taxonomy.tagged(graft.core.Tables.fanout(spark, stream))
       .filter(col("topic") =!= "none")

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Sessions
 import graft.operators.Trajectory
 
 /** STREAMING TRAJECTORY ASSEMBLY: q207's session-sequence construction
@@ -23,7 +22,6 @@ object TrajectoryStream extends graft.QueryModule {
 
   /** q208 — streamed session assembly over `dir`'s event firehose. */
   def q208StreamTrajectories(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val sessions = EventStream.eventsStream(spark, dir)
       .withWatermark("ts", EventStream.WatermarkDelay)
       .groupBy(

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.Sessions
 import graft.operators.Trajectory
 
 /** RARE-TRANSITION SCREEN AT INGEST — q241 on the live event firehose:
@@ -103,7 +102,6 @@ object TransitionStream extends graft.QueryModule {
 
   /** q242 — the q241 flagged-transition rows produced at ingest. */
   def q242StreamTransitionScreen(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     // the frozen model: |types|²-bounded by construction, cached per
     // corpus version, shipped as one broadcast
     val model: Map[String, Long] =

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
-import graft.core.Sessions
-
 /** Custom streaming state via `mapGroupsWithState` (SURVEY §2.8
   * extension surface): per-user running statistics maintained across
   * micro-batches — the pattern for state that `session_window` /
@@ -46,7 +44,6 @@ object UserStatsStream {
     * ([[EventStream.drainToFiles]]) whose read-back keeps the latest
     * emission per key. */
   def run(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     import spark.implicits._
     val events = EventStream.eventsStream(spark, dir)
       .select(col("event_id"), unix_micros(col("ts")).as("ts"),

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.Sessions
 import graft.operators.WeakLabels
 
 /** STREAMING WEAK-SUPERVISION LABELER: q203's labeling functions run AT
@@ -21,7 +20,6 @@ object WeakLabelStream extends graft.QueryModule {
 
   /** q204 — streamed LF voting over `dir`'s documents table. */
   def q204StreamWeakLabels(spark: SparkSession, dir: String): DataFrame = {
-    Sessions.prepare(spark)
     val stream = EventStream.documentsStream(spark, dir)
     val voted = WeakLabels.labeled(graft.core.Tables.fanout(spark, stream))
     EventStream.drainToFiles(spark, voted).orderBy("doc_id")

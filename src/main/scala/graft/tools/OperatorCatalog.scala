@@ -30,11 +30,18 @@ object OperatorCatalog {
     finally s.close()
   }
 
-  /** Files (repo-relative) whose text contains `needle`. */
-  private def filesMentioning(files: Seq[(Path, String)], needle: String): Seq[String] =
-    files.collect { case (p, text) if text.contains(needle) =>
+  /** Files (repo-relative) whose text satisfies `hit`. */
+  private def filesWhere(files: Seq[(Path, String)])(hit: String => Boolean): Seq[String] =
+    files.collect { case (p, text) if hit(text) =>
       Paths.get("").toAbsolutePath.relativize(p.toAbsolutePath).toString
     }
+
+  /** Whether a text cites query prefix `q16` as a whole word:
+    * `q16_distinct` and `q16(` do, `q160` and `sq16` do not. */
+  private def cites(prefix: String): String => Boolean = {
+    val word = ("(?<![A-Za-z0-9])" + java.util.regex.Pattern.quote(prefix) + "(?![0-9])").r
+    text => word.findFirstIn(text).isDefined
+  }
 
   def generate(): String = {
     val mains = scalaFiles(mainRoot).map(p => p -> Files.readString(p))
@@ -43,12 +50,12 @@ object OperatorCatalog {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val rows = names.map { name =>
       // the defining module: the main file that declares the map entry
-      val definedIn = filesMentioning(mains, "\"" + name + "\"")
+      val definedIn = filesWhere(mains)(_.contains("\"" + name + "\""))
         .filterNot(_.endsWith("SparkEntry.scala"))
-      val specs = filesMentioning(tests, name.split("_").head)
+      val specs = filesWhere(tests)(cites(name.split("_").head))
         .map(_.replaceAll(".*/", ""))
       val planGate =
-        if (filesMentioning(tests, name).exists(_.endsWith("PlanAuditSpec.scala")))
+        if (filesWhere(tests)(_.contains(name)).exists(_.endsWith("PlanAuditSpec.scala")))
           " + plan gate" else ""
       val oracle =
         if (oracles.contains(name)) "DuckDB oracle"

@@ -42,12 +42,12 @@ object ScaleDataGen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft-sf1")
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
+    val spark = graft.core.Sessions.prepare(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false")
       .appName("graft-scale-datagen")
-      .getOrCreate()
+      .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, src, out)
     spark.stop()
@@ -106,8 +106,8 @@ object ScaleDataGen {
 
     // events: layout-agnostic ts handling (TIMESTAMP(NANOS) fixtures
     // read as raw longs and shifted in nanos; TIMESTAMP(MICROS)/NTZ
-    // fixtures shifted with an interval) — each copy lands +c minutes
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // fixtures shifted with an interval) — each copy lands +c minutes;
+    // the raw read relies on the prepared session's nanosAsLong
     val ev = spark.read.parquet(s"$src/events.parquet")
     val evSpan = ev.agg(max(col("event_id"))).head.getLong(0) + 1L
     val userSpan = ev.agg(max(col("user_id"))).head.getLong(0) + 1L

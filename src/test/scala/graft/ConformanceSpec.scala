@@ -20,7 +20,6 @@ class ConformanceSpec extends SparkSpec {
     val r = ExtractJob.run(spark, root, fetcher = _ => Right(graft.jobs.PipelineDemo.FixtureBody))
     assert(r.statusCode == 200)
     TableRegistry.crawl(spark, root, "data_pipeline_db", "conformance_raw")
-    graft.functions.Dialect.register(spark)
     "data_pipeline_db.conformance_raw"
   }
 

@@ -68,6 +68,21 @@ class DialectPackSpec extends SparkSpec {
       Seq((1, "a"), (2, "b")))
   }
 
+  test("a wrong-arity call fails with the function's signature, not an internal error") {
+    graft.core.Sessions.prepare(spark)
+    Seq(
+      "SELECT strpos('a')" -> "strpos expects (str, substr)",
+      "SELECT strpos('a', 'b', 'c')" -> "strpos expects (str, substr)",
+      "SELECT cosine_sim(array(CAST(1.0 AS FLOAT)))" -> "cosine_sim expects (a, b)",
+      "SELECT simhash64()" -> "simhash64 expects (hash_array)",
+      "SELECT string_agg(x, ',', ',') FROM VALUES ('a') t(x)" -> "string_agg expects (expr, [sep])",
+      "SELECT minhash_sigs(array(1L), NULL)" -> "minhash_sigs expects (array<bigint>, int literal)"
+    ).foreach { case (sql, msg) =>
+      val e = intercept[IllegalArgumentException](spark.sql(sql).collect())
+      assert(e.getMessage.contains(msg), s"$sql: ${e.getMessage}")
+    }
+  }
+
   test("names Presto and Spark already share stay available un-shimmed") {
     graft.core.Sessions.prepare(spark)
     val r = spark.sql(

@@ -190,6 +190,14 @@ class TableFunctionsSpec extends SparkSpec {
     assert(e.getMessage.contains("at least one term"))
     val e2 = intercept[Exception](spark.sql("SELECT * FROM corpus_diff('docs_v1')").collect())
     assert(e2.getMessage.toLowerCase.contains("expects"))
+    // an integer argument outside the Int range is rejected, not narrowed
+    // (2^32 would run as source_cap(0), 2^32+1 as weighted_sample(1))
+    Seq("source_cap(4294967296)" -> "source_cap expects (cap)",
+        "weighted_sample(4294967297)" -> "weighted_sample expects (k)").foreach { case (call, msg) =>
+      val e3 = intercept[IllegalArgumentException](spark.sql(s"SELECT * FROM $call").collect())
+      assert(e3.getMessage.contains(msg) && e3.getMessage.contains("outside the Int range"),
+        e3.getMessage)
+    }
   }
 
   test("scd2 / quantize_error TVFs match their Scala twins") {

@@ -160,7 +160,6 @@ class TextOpsSpec extends SparkSpec {
       .count()
     assert(mismatches == 0)
     // and the SQL surface sees it
-    graft.functions.Dialect.register(spark)
     val viaSql = spark.sql("SELECT rolling_hash('hello world')").head().getLong(0)
     val ref = "hello world".getBytes("UTF-8")
       .foldLeft(0L)((acc, b) => (acc * 31 + (b & 0xff)) % 1000000007L)
@@ -181,7 +180,6 @@ class TextOpsSpec extends SparkSpec {
     val expect = graft.functions.DeflateUtil.ratio(repetitive.getBytes("UTF-8"))
     assert(rows(1L) == expect)
     // SQL surface
-    graft.functions.Dialect.register(spark)
     assert(spark.sql("SELECT deflate_ratio('')").head().getDouble(0) == 1.0)
   }
 
