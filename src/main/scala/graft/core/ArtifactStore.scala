@@ -4,7 +4,7 @@ import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentH
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one store for artifacts derived from a corpus: signature stages,
@@ -60,17 +60,24 @@ object ArtifactStore {
     get[DataFrame](spark, dir, tables, name, _.unpersist(blocking = true))(build)
 
   /** A fresh local temp directory (prefix `graft-<name>`) that `build`
-    * fills; returns its path. Deleted on release, and when `build` throws. */
+    * fills; returns its path. Deleted on release, when `build` throws, and
+    * at JVM exit if neither happened first. */
   def tempDir(spark: SparkSession, dir: String, tables: Seq[String], name: String)(
-      build: String => Unit): String =
-    get[String](spark, dir, tables, name, deleteLocal) { _ =>
-      val out = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
-      try { build(out); out }
-      catch { case t: Throwable => scala.util.Try(deleteLocal(out)); throw t }
+      build: String => Unit): String = {
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    // a released dir leaves the exit set too, so a long-lived JVM does
+    // not keep one dead path per build
+    def delete(out: String): Unit = {
+      fs.cancelDeleteOnExit(new HPath(out))
+      graft.exec.Retention.deleteRecursively(java.nio.file.Paths.get(out))
     }
-
-  private def deleteLocal(path: String): Unit =
-    graft.exec.Retention.deleteRecursively(java.nio.file.Paths.get(path))
+    get[String](spark, dir, tables, name, delete) { _ =>
+      val out = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+      fs.deleteOnExit(new HPath(out))
+      try { build(out); out }
+      catch { case t: Throwable => scala.util.Try(delete(out)); throw t }
+    }
+  }
 
   private def get[T](spark: SparkSession, dir: String, tables: Seq[String], name: String,
       release: T => Unit)(build: String => T): T = {

@@ -171,16 +171,17 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
   private[exec] def pageFrame(id: String, start: Int, maxRows: Int): Option[DataFrame] = {
     val pages = Paths.get(resultsDir, s"$id$PagesSuffix")
     val csv = Paths.get(resultsDir, s"$id.csv")
-    // the sidecar is written last: pages without one are not a finished
-    // execution's
-    if (Files.exists(pages)) metadata(id).map { meta =>
-      val schema = DataType.fromJson(meta.get("schema").toString).asInstanceOf[StructType]
-      inRowOrder(readPages(pages.toString, schema)
-        .filter(col(RowIdx) >= start.toLong && col(RowIdx) < start.toLong + maxRows))
-    } else if (Files.exists(csv)) {
-      val df = spark.read.options(CsvHeader).csv(csv.toString)
-      Some(df.offset(start).limit(maxRows))
-    } else None
+    // the sidecar is written last: artifacts without one are not a
+    // finished execution's (still RUNNING, or cancelled before cleanup)
+    metadata(id).flatMap { meta =>
+      if (Files.exists(pages)) {
+        val schema = DataType.fromJson(meta.get("schema").toString).asInstanceOf[StructType]
+        Some(inRowOrder(readPages(pages.toString, schema)
+          .filter(col(RowIdx) >= start.toLong && col(RowIdx) < start.toLong + maxRows)))
+      } else if (Files.exists(csv))
+        Some(spark.read.options(CsvHeader).csv(csv.toString).offset(start).limit(maxRows))
+      else None
+    }
   }
 
   /** Per-execution engine metrics parsed from the `.metadata` sidecar —

@@ -269,10 +269,10 @@ object Classify extends graft.QueryModule {
       }
       val schema = StructType(sorted.schema.fields :+ StructField(rankCol, LongType, nullable = false))
       val out = sorted.sparkSession.createDataFrame(ranked, schema)
-      // lineage truncated in every materialize mode: a recomputed sort
-      // could land different range boundaries, and the collected offsets
-      // would then be stale; after this the ranks can never silently shift
-      graft.core.Materialize.truncated(out)
+      // lineage truncated: a recomputed sort could land different range
+      // boundaries, and the collected offsets would then be stale; after
+      // this the ranks can never silently shift
+      graft.core.Materialize.once(out)
     } finally sorted.unpersist()
   }
 
@@ -329,7 +329,7 @@ object Classify extends graft.QueryModule {
     * made q175 the slowest bench entry at 4.4 s; the q193/q168
     * checkpoint pattern). */
   private[graft] def calibrationOf(scores: DataFrame): DataFrame = {
-    val snap = graft.core.Materialize.truncated(scores)
+    val snap = graft.core.Materialize.once(scores)
     val n = snap.count()
     withGlobalRank(snap, Seq(col("score_micro"), col("doc_id")), "rk")
       .withColumn("decile", ntileOfRank(col("rk"), n, CalibBins))

@@ -693,8 +693,7 @@ object Dedup extends graft.QueryModule {
     * bound the collect is ≤ ~1.6 MB — cheaper than even one distributed
     * iteration's scheduling. Above it, the distributed pointer-jumping
     * loop runs (unbounded scale, O(1) driver). Same labels either way
-    * (spec-checked); override with `spark.graft.cc.localThreshold`
-    * (0 forces the distributed path). */
+    * (spec-checked). */
   val LocalCcEdgeThreshold = 100000L
 
   /** Driver-local min-label CC: path-compressing union-find keeping the
@@ -721,12 +720,18 @@ object Dedup extends graft.QueryModule {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  def q38DedupApply(spark: SparkSession, dir: String): DataFrame = {
+  def q38DedupApply(spark: SparkSession, dir: String): DataFrame =
+    dedupApply(spark, dir, LocalCcEdgeThreshold)
+
+  /** [[q38DedupApply]] with the driver-local CC bound as a parameter (0
+    * forces the distributed loop). */
+  private[graft] def dedupApply(spark: SparkSession, dir: String,
+      localThreshold: Long): DataFrame = {
     // pair detection via the MinHash-LSH path — output-identical to the
     // exact join (verified) at a fraction of the cost, and served from
     // the per-corpus SignatureStage cache (q27 and q38 in one session pay
     // for the LSH pipeline once); the CC step only needs the pair list
-    minLabelComponents(spark, verifiedPairs(spark, dir).select("d1", "d2"))
+    minLabelComponents(spark, verifiedPairs(spark, dir).select("d1", "d2"), localThreshold)
       .select(col("doc_id"), col("keeper"),
         (col("doc_id") === col("keeper")).as("is_keeper"))
       .orderBy("doc_id")
@@ -909,11 +914,11 @@ object Dedup extends graft.QueryModule {
     * (SemDeDup keeper election), so every graft operator agrees on what
     * a "duplicate group" means: the transitive closure of pairs, keeper
     * = minimum id. Returns (doc_id, keeper) for every node that appears
-    * in a pair. Hybrid execution: graphs under
-    * `spark.graft.cc.localThreshold` edges solve on the driver with
-    * union-find; larger graphs run distributed min-label propagation
-    * with pointer jumping. */
-  private[graft] def minLabelComponents(spark: SparkSession, pairs: DataFrame): DataFrame = {
+    * in a pair. Hybrid execution: graphs of at most `localThreshold`
+    * edges solve on the driver with union-find; larger graphs run
+    * distributed min-label propagation with pointer jumping. */
+  private[graft] def minLabelComponents(spark: SparkSession, pairs: DataFrame,
+      localThreshold: Long = LocalCcEdgeThreshold): DataFrame = {
     val nEdges = pairs.count()
     if (nEdges == 0) {
       // no pairs → no groups; return the empty (typed) result instead of
@@ -921,9 +926,6 @@ object Dedup extends graft.QueryModule {
       // frame yields null)
       return pairs.select(col("d1").as("doc_id"), col("d1").as("keeper"))
     }
-    val localThreshold = spark.conf.getOption("spark.graft.cc.localThreshold")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(LocalCcEdgeThreshold)
     if (nEdges <= localThreshold) {
       // sub-threshold graph: solve on the driver. The collect is bounded
       // by the threshold (≤ ~16 bytes/edge), the solve is near-linear
@@ -1004,8 +1006,7 @@ object Dedup extends graft.QueryModule {
 
   /** Broadcast guard for [[decontaminate]]: above this many distinct
     * eval shingles (~16 MB of 64-bit hashes at the default) the join
-    * falls back to a shuffle. Override with
-    * `spark.graft.decontam.broadcastShingleLimit`. */
+    * falls back to a shuffle. */
   val BroadcastShingleLimit = 2000000L
 
   /** Benchmark DECONTAMINATION: find training documents sharing any
@@ -1025,19 +1026,21 @@ object Dedup extends graft.QueryModule {
     * shared shingles (the triage signal: 1 shared 5-gram is noise, 20
     * is a leak). */
   def decontaminate(spark: SparkSession, trainSigs: DataFrame, evalSigs: DataFrame): DataFrame =
+    decontaminate(spark, trainSigs, evalSigs, BroadcastShingleLimit)
+
+  /** [[decontaminate]] with its broadcast guard at `broadcastLimit`. */
+  private[operators] def decontaminate(spark: SparkSession, trainSigs: DataFrame,
+      evalSigs: DataFrame, broadcastLimit: Long): DataFrame =
     decontaminateExploded(spark,
-      trainSigs.select(col("doc_id"), explode(col("hs")).as("h")), evalSigs)
+      trainSigs.select(col("doc_id"), explode(col("hs")).as("h")), evalSigs, broadcastLimit)
 
   /** [[decontaminate]] over an ALREADY-exploded (doc_id, h) train side —
     * the entry the bucketed [[shingleHashes]] stage feeds, so the
-    * corpus-side join key arrives pre-partitioned. */
-  private[operators] def decontaminateExploded(
-      spark: SparkSession, trainH: DataFrame, evalSigs: DataFrame): DataFrame = {
-    val limit = math.min(
-      spark.conf.getOption("spark.graft.decontam.broadcastShingleLimit")
-        .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-        .getOrElse(BroadcastShingleLimit),
-      Int.MaxValue - 1L).toInt
+    * corpus-side join key arrives pre-partitioned. Above `broadcastLimit`
+    * distinct eval shingles the join shuffles. */
+  private[operators] def decontaminateExploded(spark: SparkSession, trainH: DataFrame,
+      evalSigs: DataFrame, broadcastLimit: Long = BroadcastShingleLimit): DataFrame = {
+    val limit = math.min(broadcastLimit, Int.MaxValue - 1L).toInt
     val evalSh = evalSigs.select(explode(col("hs")).as("h")).distinct()
     // one eval pass, not two: collect up to limit+1 distinct hashes — if
     // they all fit, the collected set IS the broadcast side (a

@@ -4,16 +4,16 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables, TableVersion}
+import graft.core.{ArtifactStore, Tables}
 
 /** Materialized two-snapshot corpus fixture: the deterministic version
   * rules of [[Corpus]] (q66/q71/q76) written out as REAL parquet
   * snapshot tables, so the incremental-corpus operators run against
   * distinct file sets the way a production recrawl pipeline does —
-  * exercising file-level versioning end-to-end (snapshot paths are keyed
-  * by the source corpus' [[TableVersion]] content signature; a corpus
-  * rewrite re-materializes under a new key and deletes the stale one)
-  * instead of two filters over one in-memory frame.
+  * exercising file-level versioning end-to-end (the snapshot directory is
+  * keyed by the source corpus' [[graft.core.TableVersion]] content
+  * signature; a corpus rewrite re-materializes it and deletes the stale
+  * one) instead of two filters over one in-memory frame.
   *
   * The DERIVATION stays the deterministic modulus rules: the DuckDB
   * oracle cannot see extra parquet files, so it reconstructs each
@@ -30,21 +30,6 @@ import graft.core.{Tables, TableVersion}
   *  - `documents_v2`       — the shared current snapshot
   */
 object SnapshotFixture {
-
-  /** Snapshot tables under `<root>/graft_snapshots/<mask>/<name>`; root
-    * defaults to the JVM temp dir, overridable with
-    * `spark.graft.snapshotDir`. */
-  private def base(spark: SparkSession): HPath = {
-    val root = spark.conf.getOption("spark.graft.snapshotDir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    new HPath(root, "graft_snapshots")
-  }
-
-  // full digest key: a 31-bit hashCode could collide across
-  // corpora/versions and silently reuse another corpus's snapshots
-  // (same contract as JsonlIngest.ensure and BucketedLayout)
-  private def mask(dir: String, version: String): String =
-    TableVersion.md5Hex(dir + "#" + version)
 
   /** The derived snapshot frames, in dependency on the live corpus. */
   private def derivations(docs: DataFrame): Seq[(String, DataFrame)] = {
@@ -63,54 +48,16 @@ object SnapshotFixture {
         col("doc_id") % DroppedFromV1Mod =!= DroppedFromV1Rem))
   }
 
-  /** Ensure the snapshot tables for the corpus at `dir` exist on storage
-    * and return the directory holding them. Materialized once per
-    * (corpus dir, content version); a rewritten corpus misses the lookup,
-    * re-materializes under the new version mask, and stale masks for the
-    * SAME corpus are deleted (other corpora's snapshots are untouched —
-    * their masks differ in the dir component too, so deletion keys on a
-    * sidecar marker naming the source dir). */
-  def ensure(spark: SparkSession, dir: String): HPath = synchronized {
-    val version = TableVersion.signature(spark, dir, "documents.parquet")
-    val root = base(spark)
-    val target = new HPath(root, mask(dir, version))
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new HPath(target, "_graft_source")
-    if (fs.exists(marker)) {
-      // verify provenance BEFORE reuse, not only before eviction (the
-      // JsonlIngest.ensure contract): a foreign marker under our key
-      // means a collision or tampering — reusing the other corpus's
-      // snapshots would be silent corruption
-      val in = fs.open(marker)
-      val owner = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      if (owner != dir)
-        throw new IllegalStateException(
-          s"snapshot fixture at $target belongs to corpus '$owner', not '$dir'")
-    }
-    if (!fs.exists(marker)) {
-      val docs = Tables.documents(spark, dir)
-      derivations(docs).foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(new HPath(target, name).toString)
+  /** The local directory holding the three snapshot tables of the corpus
+    * at `dir`: built once per corpus content version in [[ArtifactStore]],
+    * which deletes the previous version's directory when the corpus is
+    * rewritten. */
+  def ensure(spark: SparkSession, dir: String): String =
+    ArtifactStore.tempDir(spark, dir, Seq("documents.parquet"), "snapshots") { out =>
+      derivations(Tables.documents(spark, dir)).foreach { case (name, df) =>
+        df.write.mode("overwrite").parquet(new HPath(out, name).toString)
       }
-      // marker written LAST: its presence means every table is complete
-      val out = fs.create(marker, true)
-      try out.write(dir.getBytes("UTF-8")) finally out.close()
-      // evict stale versions of THIS corpus (marker content == dir)
-      if (fs.exists(root)) fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName != target.getName)
-        .filter { st =>
-          val m = new HPath(st.getPath, "_graft_source")
-          scala.util.Try {
-            fs.exists(m) && {
-              val in = fs.open(m)
-              try new String(in.readAllBytes(), "UTF-8") == dir finally in.close()
-            }
-          }.getOrElse(false)
-        }
-        .foreach(st => fs.delete(st.getPath, true))
     }
-    target
-  }
 
   /** Read one materialized snapshot table for the corpus at `dir`. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =

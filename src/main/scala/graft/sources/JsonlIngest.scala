@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Tables, TableVersion}
+import graft.core.{ArtifactStore, Tables}
 
 /** JSON-lines corpus ingest with corrupt-record quarantine — the
   * semi-structured face of the ingest family (the reference's source is
@@ -35,31 +35,11 @@ object JsonlIngest extends graft.QueryModule {
 
   /** Materialized JSONL rendering of the corpus with deterministically
     * corrupted lines (doc_id ≡ CorruptRem mod CorruptMod gets a broken
-    * prefix) — same versioned-fixture contract as
-    * [[graft.operators.SnapshotFixture]]: keyed by corpus content
-    * version, rebuilt on rewrite, stale versions evicted. */
-  def ensure(spark: SparkSession, dir: String): HPath = synchronized {
-    val version = TableVersion.signature(spark, dir, "documents.parquet")
-    val root = new HPath(
-      spark.conf.getOption("spark.graft.snapshotDir")
-        .getOrElse(System.getProperty("java.io.tmpdir")),
-      "graft_jsonl")
-    // full digest key: a 31-bit hashCode could collide across
-    // corpora/versions and silently reuse another corpus's files
-    val target = new HPath(root, TableVersion.md5Hex(dir + "#" + version))
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new HPath(target, "_graft_source")
-    if (fs.exists(marker)) {
-      // verify provenance BEFORE reuse, not only before eviction: a
-      // foreign marker under our key means a collision or tampering —
-      // reusing (or clobbering) the other corpus's materialization would
-      // be silent corruption either way
-      val in = fs.open(marker)
-      val owner = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      if (owner != dir)
-        throw new IllegalStateException(
-          s"jsonl fixture at $target belongs to corpus '$owner', not '$dir'")
-    } else {
+    * prefix), in the local directory returned: built once per corpus
+    * content version in [[ArtifactStore]], like
+    * [[graft.operators.SnapshotFixture]]. */
+  def ensure(spark: SparkSession, dir: String): String =
+    ArtifactStore.tempDir(spark, dir, Seq("documents.parquet"), "jsonl") { out =>
       val line = to_json(struct(
         col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars")))
       Tables.documents(spark, dir)
@@ -67,24 +47,8 @@ object JsonlIngest extends graft.QueryModule {
           when(col("doc_id") % CorruptMod === CorruptRem,
             concat(lit("{broken "), line))
             .otherwise(line).as("value"))
-        .write.mode("overwrite").text(new HPath(target, "documents.jsonl").toString)
-      val out = fs.create(marker, true)
-      try out.write(dir.getBytes("UTF-8")) finally out.close()
-      fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName != target.getName)
-        .filter { st =>
-          val m = new HPath(st.getPath, "_graft_source")
-          scala.util.Try {
-            fs.exists(m) && {
-              val in = fs.open(m)
-              try new String(in.readAllBytes(), "UTF-8") == dir finally in.close()
-            }
-          }.getOrElse(false)
-        }
-        .foreach(st => fs.delete(st.getPath, true))
+        .write.mode("overwrite").text(new HPath(out, "documents.jsonl").toString)
     }
-    target
-  }
 
   /** Read the JSONL corpus: valid rows parsed against [[schema]],
     * corrupt lines quarantined into `_corrupt_record`. */

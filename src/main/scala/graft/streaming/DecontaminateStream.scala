@@ -47,15 +47,13 @@ object DecontaminateStream extends graft.QueryModule {
     * probe set is the shipped artifact of an offline job in production,
     * so rebuilding the explode+distinct+sort per drain was fixture-only
     * overhead. Shared with [[AdmissionStream]], whose contamination
-    * screen is this same probe. */
-  private[streaming] def evalProbe(spark: SparkSession, dir: String): Array[Long] = {
+    * screen is this same probe. The store key carries the limit, so a
+    * smaller guard never reuses a probe built under the default. */
+  private[streaming] def evalProbe(spark: SparkSession, dir: String,
+      broadcastLimit: Long = Dedup.BroadcastShingleLimit): Array[Long] = {
     import spark.implicits._
     val isEval = col("doc_id") % Dedup.EvalDocModulus === 0
-    val limit = math.min(
-      spark.conf.getOption("spark.graft.decontam.broadcastShingleLimit")
-        .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-        .getOrElse(Dedup.BroadcastShingleLimit),
-      Int.MaxValue - 1L).toInt
+    val limit = math.min(broadcastLimit, Int.MaxValue - 1L).toInt
     graft.core.ArtifactStore.value(spark, dir, Seq("documents.parquet"),
         s"decontamProbe-$limit") { _ =>
       val hs = Dedup.shingleSigs(spark, dir).filter(isEval)
@@ -70,8 +68,13 @@ object DecontaminateStream extends graft.QueryModule {
   }
 
   /** q167 — at-ingest contamination screen over `dir`'s documents. */
-  def q167StreamDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val evalBc = spark.sparkContext.broadcast(evalProbe(spark, dir))
+  def q167StreamDecontaminate(spark: SparkSession, dir: String): DataFrame =
+    screen(spark, dir, Dedup.BroadcastShingleLimit)
+
+  /** [[q167StreamDecontaminate]] under an explicit broadcast guard. */
+  private[streaming] def screen(spark: SparkSession, dir: String,
+      broadcastLimit: Long): DataFrame = {
+    val evalBc = spark.sparkContext.broadcast(evalProbe(spark, dir, broadcastLimit))
     val stream = EventStream.documentsStream(spark, dir)
     // fan out before the per-doc shingle+hash+binary-search screen (the
     // micro-batch's dominant cost — see Tables.fanout)

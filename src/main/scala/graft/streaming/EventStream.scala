@@ -6,6 +6,10 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.{Offset => SourceOffset}
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
+import org.apache.spark.sql.execution.streaming.runtime.{CompactibleFileStreamLog,
+  FileStreamSourceLog, FileStreamSourceOffset}
 import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -118,6 +122,39 @@ object EventStream extends graft.QueryModule {
     spark.read.schema(frame.schema).parquet(data)
   }
 
+  /** Make a checkpoint's file-source logs agree with its offset log, for
+    * a query about to RESUME from `checkpoint`. A file source logs the
+    * files of its next batch before the query logs that batch's offsets,
+    * so a stop between the two leaves a source-log entry that no batch
+    * refers to. A restart then reads that entry's files together with
+    * the next new file as ONE batch, and every emission shaped by batch
+    * boundaries (per-batch counter updates, running minima, sketch
+    * versions) differs from an uninterrupted run's. Deleting the entries
+    * after each file source's logged offset makes the restart plan the
+    * interrupted batch again, exactly as an uninterrupted run planned it.
+    * An unreferenced compaction entry is left in place (the entries it
+    * folds may already be deleted), and so is a checkpoint that logged no
+    * offsets yet. Returns the number of source-log entries deleted. */
+  def reconcileSourceLogs(spark: SparkSession, checkpoint: String): Int = {
+    val fs = new Path(checkpoint).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val offsetsDir = new Path(checkpoint, "offsets")
+    val latest =
+      if (fs.exists(offsetsDir)) new OffsetSeqLog(spark, offsetsDir.toString).getLatest()
+      else None
+    latest.toSeq.flatMap(_._2.offsets.zipWithIndex).map {
+      case (Some(o: SourceOffset), i) if fs.exists(new Path(checkpoint, s"sources/$i")) =>
+        Try(FileStreamSourceOffset(o).logOffset).toOption.fold(0) { logged =>
+          val log = new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark,
+            new Path(checkpoint, s"sources/$i").toString)
+          val orphans = log.listBatchesOnDisk.filter(_ > logged)
+          if (orphans.exists(log.batchIdToPath(_).getName
+              .endsWith(CompactibleFileStreamLog.COMPACT_FILE_SUFFIX))) 0
+          else { log.purgeAfter(logged); orphans.length }
+        }
+      case _ => 0
+    }.sum
+  }
+
   /** Run `body` (a stream start + drain) with the STATE partition count
     * set independently of the session's batch shuffle setting, restoring
     * it afterwards. Stateful operators keep one state store per shuffle
@@ -125,10 +162,10 @@ object EventStream extends graft.QueryModule {
     * tracks STATE volume, not batch parallelism — inheriting the batch
     * setting over-partitions small state and pays ~per-partition commit
     * IO every batch (measured 2.4 s → 1.6 s per drain at sf0.1 going
-    * 32 → 8). A real deployment sizes `spark.graft.streamStatePartitions`
-    * UP with key cardinality; the partition count is fixed at the
-    * stream's first checkpoint, which is also why it must be a deliberate
-    * knob rather than whatever the session happened to have.
+    * 32 → 8). The partition count is fixed at the stream's first
+    * checkpoint, which is why it is a deliberate per-drain choice rather
+    * than whatever the session happened to have: a drain whose state
+    * outgrows the default passes its own hint.
     *
     * Default 4: a stream-stream join keeps FOUR state stores per
     * partition and commits each per micro-batch, so per-batch commit IO
@@ -142,12 +179,10 @@ object EventStream extends graft.QueryModule {
     * inside heap-provider comfort. */
   private[streaming] def withStreamStatePartitions[T](spark: SparkSession,
       drainHint: Option[String] = None)(body: => T): T = {
-    // precedence: explicit session conf (a deployment's global sizing) >
     // the drain's own hint (a per-operator optimum: q114's ~0.5M-key
     // state measured best at 8 where the join/trajectory drains plateau
-    // at 4) > the default 4.
-    val parts = spark.conf.getOption("spark.graft.streamStatePartitions")
-      .orElse(drainHint).getOrElse("4")
+    // at 4), else the default 4
+    val parts = drainHint.getOrElse("4")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val provider = providerClass(spark)
     val prevProvider = spark.conf.getOption(ProviderClassConf)

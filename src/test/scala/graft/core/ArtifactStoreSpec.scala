@@ -128,6 +128,9 @@ class ArtifactStoreSpec extends SparkSpec {
       assert(oldDf.storageLevel == StorageLevel.NONE, "the replaced frame is unpersisted")
       assert(newDf.storageLevel != StorageLevel.NONE)
       assert(!Files.exists(Paths.get(oldTmp)), "the replaced temp dir is deleted")
+      val localFs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      assert(!localFs.cancelDeleteOnExit(new org.apache.hadoop.fs.Path(oldTmp)),
+        "the replaced temp dir leaves the delete-on-exit set")
       assert(Files.exists(Paths.get(newTmp)))
     } finally { ArtifactStore.release(spark, dir); rm(dir) }
   }
@@ -144,16 +147,15 @@ class ArtifactStoreSpec extends SparkSpec {
 
   test("no cache map or synchronized cache outside the store in core, operators, layout") {
     val MapField = """^  (private(\[\w+\])? )?(val|var) .*(mutable\.\w*Map|ConcurrentHashMap|TrieMap)""".r
-    // SnapshotFixture serializes writers of an on-disk fixture; it holds no map
-    val allowedSync = Set("SnapshotFixture.scala")
-    val offenders = Seq("core", "operators", "layout").flatMap { pkg =>
+    // scans sources and streaming too: the on-disk fixtures live in the store
+    val offenders = Seq("core", "operators", "layout", "sources", "streaming").flatMap { pkg =>
       Files.list(Paths.get("src/main/scala/graft", pkg)).iterator().asScala.toSeq
         .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "ArtifactStore.scala")
         .flatMap { f =>
           val name = f.getFileName.toString
           Files.readAllLines(f).asScala.zipWithIndex.collect {
             case (l, i) if MapField.findFirstIn(l).nonEmpty ||
-                (!allowedSync(name) && """\bsynchronized\b""".r.findFirstIn(l).nonEmpty) =>
+                """\bsynchronized\b""".r.findFirstIn(l).nonEmpty =>
               s"$pkg/$name:${i + 1}: ${l.trim}"
           }
         }

@@ -120,6 +120,22 @@ class QueryExecutionManagerSpec extends SparkSpec {
       s"row-index predicate not pushed\n$plan")
   }
 
+  test("a csv artifact without its metadata sidecar is not served") {
+    val dir = Files.createTempDirectory("graft_results_nosidecar").toString
+    val mgr = new QueryExecutionManager(spark, dir)
+    // what a RUNNING CSV-only execution (or a cancelled one before its
+    // cleanup) leaves: rows on disk, no sidecar yet
+    val id = "partial-csv"
+    val csv = Paths.get(dir, s"$id.csv")
+    Files.createDirectories(csv)
+    Files.writeString(csv.resolve("part-00000.csv"), "x,y\n1,a\n2,b\n")
+    assert(mgr.resultsPage(id).isEmpty, "a result without its sidecar is not finished")
+    // the sidecar, written last, is what makes the same rows servable
+    Files.writeString(Paths.get(dir, s"$id.csv.metadata"), "{}")
+    val Some(page) = mgr.resultsPage(id)
+    assert(page.header == Seq("x", "y") && page.rows.size == 2)
+  }
+
   test("workgroup pools: a saturating workgroup cannot starve another") {
     // round-14 verdict item 4 (reference workgroup semantics,
     // data_pipeline_stack.py:152-163): submissions map to FAIR pools,

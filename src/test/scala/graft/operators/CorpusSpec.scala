@@ -31,17 +31,16 @@ class CorpusSpec extends SparkSpec {
     val src = new java.io.File(sf, "documents.parquet")
     val dst = new java.io.File(tmp, "documents.parquet")
     java.nio.file.Files.copy(src.toPath, dst.toPath)
-    val snapBase = java.nio.file.Files.createTempDirectory("graft_snapbase").toFile
-    spark.conf.set("spark.graft.snapshotDir", snapBase.getPath)
     try {
       val first = SnapshotFixture.ensure(spark, tmp.getPath)
-      val names = new java.io.File(first.toUri.getPath).listFiles().map(_.getName).toSet
+      val names = new java.io.File(first).listFiles().map(_.getName).toSet
       assert(Set("documents_v1_edit", "documents_v1_growth", "documents_v2")
         .subsetOf(names), s"all three snapshot tables materialized: $names")
-      // second call reuses the files (marker mtime unchanged)
-      val marker = new java.io.File(first.toUri.getPath, "_graft_source")
+      // second call reuses the files (commit marker mtime unchanged)
+      val marker = new java.io.File(first, "documents_v2/_SUCCESS")
       val stamp = marker.lastModified()
-      assert(SnapshotFixture.ensure(spark, tmp.getPath).toString == first.toString)
+      assert(stamp > 0L, s"no commit marker at $marker")
+      assert(SnapshotFixture.ensure(spark, tmp.getPath) == first)
       assert(marker.lastModified() == stamp, "re-ensure must not rewrite")
       // the materialized v2 equals the rule-derived v2 (the files are
       // faithful — the property the oracle agreement rests on)
@@ -56,15 +55,14 @@ class CorpusSpec extends SparkSpec {
       // deletes the stale one — file-level versioning end-to-end
       assert(dst.setLastModified(dst.lastModified() + 120000))
       val second = SnapshotFixture.ensure(spark, tmp.getPath)
-      assert(second.toString != first.toString, "new corpus version, new snapshot key")
-      assert(!new java.io.File(first.toUri.getPath).exists(),
-        "stale snapshot version must be deleted")
+      assert(second != first, "new corpus version, new snapshot key")
+      assert(!new java.io.File(first).exists(), "stale snapshot version must be deleted")
     } finally {
-      spark.conf.unset("spark.graft.snapshotDir")
+      graft.core.ArtifactStore.release(spark, tmp.getPath)
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }
-      rm(tmp); rm(snapBase)
+      rm(tmp)
     }
   }
 

@@ -78,13 +78,10 @@ class DedupSpec extends SparkSpec {
   test("driver-local union-find CC equals the distributed pointer-jumping loop") {
     val local = Dedup.q38DedupApply(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    spark.conf.set("spark.graft.cc.localThreshold", "0") // force distributed
-    try {
-      val distributed = Dedup.q38DedupApply(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      assert(local.nonEmpty)
-      assert(local == distributed)
-    } finally spark.conf.unset("spark.graft.cc.localThreshold")
+    val distributed = Dedup.dedupApply(spark, sf, localThreshold = 0).collect() // force distributed
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    assert(local.nonEmpty)
+    assert(local == distributed)
   }
 
   test("q38 cluster labels are identical under the reliable-checkpoint flag") {
@@ -92,19 +89,15 @@ class DedupSpec extends SparkSpec {
     // change only fault tolerance, never the labels. Force the DISTRIBUTED
     // path — the driver-local fast path never checkpoints, and this spec
     // exists to exercise the checkpointing loop.
-    spark.conf.set("spark.graft.cc.localThreshold", "0")
     val cpDir = java.nio.file.Files.createTempDirectory("graft_cc_cp").toString
     try {
-      val default = Dedup.q38DedupApply(spark, sf).collect()
+      val default = Dedup.dedupApply(spark, sf, localThreshold = 0).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
       spark.conf.set("spark.graft.checkpointDir", cpDir)
-      val reliable = Dedup.q38DedupApply(spark, sf).collect()
+      val reliable = Dedup.dedupApply(spark, sf, localThreshold = 0).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
       assert(reliable == default)
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      spark.conf.unset("spark.graft.cc.localThreshold")
-    }
+    } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
   test("signature-stage caches are shared across the family and fully released") {
@@ -163,8 +156,6 @@ class DedupSpec extends SparkSpec {
     val dst = new java.io.File(tmp, "documents.parquet")
     java.nio.file.Files.copy(src.toPath, dst.toPath)
     spark.conf.set("spark.graft.signatures.persist", "true")
-    // force the shuffle-join fallback — the path bucketing exists for
-    spark.conf.set("spark.graft.decontam.broadcastShingleLimit", "0")
     // the fixture eval side is tiny, so AQE would broadcast it and hide
     // the shuffle join this test exists to exercise — force the SMJ the
     // production regime (eval set over the broadcast limit) would plan
@@ -190,9 +181,11 @@ class DedupSpec extends SparkSpec {
       flatten(p).count(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
     try {
       // baseline twin BEFORE the bucketed stage exists: explode inline,
-      // unbucketed — both sides of the h-join shuffle
+      // unbucketed — both sides of the h-join shuffle. Broadcast limit 0
+      // forces the shuffle-join fallback, the path bucketing exists for.
       val sigs = Dedup.shingleSigs(spark, tmp.getPath)
-      val flat = Dedup.decontaminate(spark, sigs.filter(!isEval), sigs.filter(isEval))
+      val flat = Dedup.decontaminate(spark, sigs.filter(!isEval), sigs.filter(isEval),
+        broadcastLimit = 0)
       val expected = flat.collect().map(_.toString).sorted.toSeq
       smjSides(flat).foreach(side => assert(shuffles(side) > 0,
         "unbucketed fallback must shuffle both join sides"))
@@ -206,7 +199,7 @@ class DedupSpec extends SparkSpec {
         throw new AssertionError("bucketed stage must reload, not rebuild")
       }
       val bucketed = Dedup.decontaminateExploded(spark,
-        reloaded.filter(!isEval), sigs.filter(isEval))
+        reloaded.filter(!isEval), sigs.filter(isEval), broadcastLimit = 0)
       assert(bucketed.collect().map(_.toString).sorted.toSeq == expected,
         "bucketing must change the plan, never the values")
       val plan = bucketed.queryExecution.explainString(
@@ -223,7 +216,6 @@ class DedupSpec extends SparkSpec {
         "the eval side still shuffles to match the bucket layout")
     } finally {
       spark.conf.unset("spark.graft.signatures.persist")
-      spark.conf.unset("spark.graft.decontam.broadcastShingleLimit")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       graft.core.ArtifactStore.release(spark, tmp.getPath)
@@ -350,14 +342,12 @@ class DedupSpec extends SparkSpec {
       val expected = hinted.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
       assert(hinted.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
         "under the limit the eval side must broadcast")
-      spark.conf.set("spark.graft.decontam.broadcastShingleLimit", "1")
-      val fallback = Dedup.decontaminate(spark, trainSigs, evalDocs)
+      val fallback = Dedup.decontaminate(spark, trainSigs, evalDocs, broadcastLimit = 1)
       val rows = fallback.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
       assert(rows == expected, "join strategy must not change results")
       assert(!fallback.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
         "an over-limit eval set must not be broadcast")
     } finally {
-      spark.conf.unset("spark.graft.decontam.broadcastShingleLimit")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       prevAuto.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(

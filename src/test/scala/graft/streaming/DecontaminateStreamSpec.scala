@@ -39,16 +39,9 @@ class DecontaminateStreamSpec extends SparkSpec {
   }
 
   test("q167 refuses an eval set beyond the broadcast guard instead of degrading") {
-    val prev = spark.conf.getOption("spark.graft.decontam.broadcastShingleLimit")
-    spark.conf.set("spark.graft.decontam.broadcastShingleLimit", "1")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        DecontaminateStream.q167StreamDecontaminate(spark, sf).collect()
-      }
-      assert(e.getMessage.contains("batch path"))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.decontam.broadcastShingleLimit", v)
-      case None => spark.conf.unset("spark.graft.decontam.broadcastShingleLimit")
+    val e = intercept[IllegalArgumentException] {
+      DecontaminateStream.screen(spark, sf, broadcastLimit = 1).collect()
     }
+    assert(e.getMessage.contains("batch path"))
   }
 }

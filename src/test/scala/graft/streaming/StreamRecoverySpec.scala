@@ -19,9 +19,10 @@ import graft.operators.{Cms, Dedup}
   * the same recovery path a process crash exercises: the sink's
   * transaction log hides uncommitted files, the state store resumes
   * from the last committed version), restarts it from the SAME
-  * checkpoint, and asserts the drained output is row-multiset-identical
-  * to an uninterrupted run — for BOTH state-store backends (heap
-  * default and RocksDB).
+  * checkpoint (reconciled first: [[EventStream.reconcileSourceLogs]]),
+  * and asserts the drained output is row-multiset-identical to an
+  * uninterrupted run — for BOTH state-store backends (heap default and
+  * RocksDB).
   *
   * Reads of the sink go through `_spark_metadata` (the FileStreamSink
   * log), so orphaned files from the killed run are invisible exactly as
@@ -97,6 +98,7 @@ class StreamRecoverySpec extends SparkSpec {
             System.currentTimeMillis() < deadline) Thread.sleep(25)
         q.stop() // the kill: in-flight batch rolls back, committed state survives
         val before = q.recentProgress.map(_.numInputRows).sum
+        EventStream.reconcileSourceLogs(spark, s"$root/checkpoint")
         val q2 = cmsStream().writeStream
           .outputMode("append").format("parquet")
           .option("path", s"$root/data")
@@ -230,6 +232,7 @@ class StreamRecoverySpec extends SparkSpec {
             while (q.recentProgress.map(_.numInputRows).sum < 1 &&
                 System.currentTimeMillis() < deadline) Thread.sleep(25)
             q.stop()
+            EventStream.reconcileSourceLogs(spark, s"$root/checkpoint")
             val q2 = transitionStream(model).writeStream
               .outputMode("append").format("parquet")
               .option("path", s"$root/data")
@@ -285,6 +288,7 @@ class StreamRecoverySpec extends SparkSpec {
             while (q.recentProgress.map(_.numInputRows).sum < 1 &&
                 System.currentTimeMillis() < deadline) Thread.sleep(25)
             q.stop()
+            EventStream.reconcileSourceLogs(spark, s"$root/checkpoint")
             val q2 = lshScreenStream().writeStream
               .outputMode("append").format("parquet")
               .option("path", s"$root/data")
@@ -359,6 +363,7 @@ class StreamRecoverySpec extends SparkSpec {
             while (q.recentProgress.map(_.numInputRows).sum < 1 &&
                 System.currentTimeMillis() < deadline) Thread.sleep(25)
             q.stop()
+            EventStream.reconcileSourceLogs(spark, s"$root/checkpoint")
             val q2 = quantileStream().writeStream
               .outputMode("append").format("parquet")
               .option("path", s"$root/data")
@@ -463,5 +468,36 @@ class StreamRecoverySpec extends SparkSpec {
     drainTransitions(orderedEvFiles(Seq(
       (1L, 3L, t, "view"),
       (1L, 5L, t, "click"))))
+  }
+
+  test("a resume replans the batch a stop interrupted between the source and offset logs") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val src = orderedEvFiles((0 until 3).map(i => (1L, i.toLong, ts, "view")))
+    val schema = spark.read.parquet(src).schema
+    val root = Files.createTempDirectory("graft-resume-window").toString
+    /** One-file-per-trigger pass from `checkpoint`: rows per batch. */
+    def run(checkpoint: String): Seq[Long] = {
+      val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        .writeStream.format("noop")
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    }
+    assert(run(s"$root/cp") == Seq(1L, 1L, 1L))
+    // roll the checkpoint back into the stop window: batch 0 committed,
+    // the file source already logged batch 1's file, no batch-1 offsets
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    Seq("offsets/1", "offsets/2", "commits/1", "commits/2", "sources/0/2")
+      .foreach(p => assert(fs.delete(new Path(s"$root/cp/$p"), false), p))
+    assert(FileUtil.copy(fs, new Path(s"$root/cp"), fs, new Path(s"$root/as_left"), false, conf))
+    assert(run(s"$root/as_left") == Seq(2L),
+      "a restart from the unreconciled checkpoint folds two files into one batch")
+    assert(EventStream.reconcileSourceLogs(spark, s"$root/cp") == 1)
+    assert(EventStream.reconcileSourceLogs(spark, s"$root/cp") == 0)
+    assert(run(s"$root/cp") == Seq(1L, 1L), "the resume replans one file per batch")
   }
 }
