@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Contract:
   *  - Key: `(applicationId, dir, tables, name)`. An entry carries the
-  *    version it was built at: the `#`-joined [[TableVersion.signature]]
+  *    version it was built at: the `_`-joined [[TableVersion.signature]]
   *    of `tables` under `dir`. A call at another version rebuilds.
   *  - One build per key at a time. No lock shared across keys is held
   *    while a build runs: builds of different keys run concurrently, and
@@ -28,9 +28,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    deleted, a [[value]] is dropped. An entry still building is
   *    released when its build finishes. [[release]] drops one corpus,
   *    [[releaseAll]] everything (`CleanupJob` calls it).
-  *  - On disk: an artifact persisted next to its corpus (switch
-  *    `spark.graft.signatures.persist`) lives under [[persistRoot]] in one
-  *    directory per version; [[keepOnlyVersion]] deletes the others.
+  *  - On disk: a [[durable]] artifact outlives the session. It lives at
+  *    `<root>/<version>/<name>`; a completed write is marked by
+  *    `<root>/<version>/_SUCCESS.<name>`, which gates reuse; writing
+  *    version V deletes every other version under the root.
   */
 object ArtifactStore {
 
@@ -82,7 +83,7 @@ object ArtifactStore {
   private def get[T](spark: SparkSession, dir: String, tables: Seq[String], name: String,
       release: T => Unit)(build: String => T): T = {
     val key = Key(spark.sparkContext.applicationId, dir, tables, name)
-    val version = tables.map(TableVersion.signature(spark, dir, _)).mkString("#")
+    val version = versionOf(spark, dir, tables)
     val fresh = new Entry(version, v => release(v.asInstanceOf[T]))
     var replaced: Option[Entry] = None
     val live = entries.compute(key, (_, prev) =>
@@ -107,6 +108,10 @@ object ArtifactStore {
     }
   }
 
+  /** The version of `dir`'s `tables`: their joined signatures. */
+  private def versionOf(spark: SparkSession, dir: String, tables: Seq[String]): String =
+    tables.map(TableVersion.signature(spark, dir, _)).mkString("_")
+
   private def evict(p: ((Key, Entry)) => Boolean): Unit =
     entries.asScala.toSeq.filter(p).foreach { case (k, e) =>
       if (entries.remove(k, e)) e.dispose()
@@ -128,21 +133,41 @@ object ArtifactStore {
   def persistEnabled(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.signatures.persist").exists(_.trim.toBoolean)
 
-  /** Root for the persisted artifacts of one `kind` of `dir`:
-    * `<dir>/_graft/<kind>`, or `<spark.graft.signatures.dir>/corpus_<md5(dir)>/<kind>`
-    * for corpora on read-only storage. Each kind and corpus owns its root,
-    * so [[keepOnlyVersion]] on it never touches another's files. */
-  def persistRoot(spark: SparkSession, dir: String, kind: String): HPath =
-    spark.conf.getOption("spark.graft.signatures.dir")
-      .map(r => new HPath(r, s"corpus_${TableVersion.md5Hex(dir)}/$kind"))
-      .getOrElse(new HPath(dir, s"_graft/$kind"))
+  /** Where one kind of a corpus's durable artifacts lives. Each kind and
+    * corpus owns its root, so a replacement under it never touches
+    * another's files. */
+  sealed trait Root
+  /** Next to the corpus, `<dir>/_graft/<kind>`, or
+    * `<spark.graft.signatures.dir>/corpus_<md5(dir)>/<kind>` for corpora on
+    * read-only storage. */
+  final case class Persisted(kind: String) extends Root
+  /** A deployment path of its own: `<base>/corpus_<md5(dir)>`. */
+  final case class Under(base: String) extends Root
 
-  /** Delete every directory under `root` except `version`'s. */
-  def keepOnlyVersion(spark: SparkSession, root: HPath, version: String): Unit = {
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root))
-      fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName != version)
+  /** The durable artifact `name` of `dir`: `write` fills
+    * `<root>/<version>/<name>` (a file or a directory) unless a completed
+    * write of this version is already there; `read` then opens it. The
+    * version is the joined signature of `tables`, the tables the artifact
+    * reads. Writing version V deletes every other version under the root.
+    * IO failures propagate; the caller chooses its posture. */
+  def durable[T](spark: SparkSession, dir: String, tables: Seq[String], root: Root,
+      name: String)(write: String => Unit)(read: String => T): T = {
+    val base = root match {
+      case Persisted(kind) => spark.conf.getOption("spark.graft.signatures.dir")
+        .map(r => new HPath(r, s"corpus_${TableVersion.md5Hex(dir)}/$kind"))
+        .getOrElse(new HPath(dir, s"_graft/$kind"))
+      case Under(b) => new HPath(b, s"corpus_${TableVersion.md5Hex(dir)}")
+    }
+    val version = versionOf(spark, dir, tables)
+    val path = new HPath(new HPath(base, version), name)
+    val done = new HPath(new HPath(base, version), s"_SUCCESS.$name")
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(done)) {
+      write(path.toString)
+      fs.create(done, true).close()
+      fs.listStatus(base).filter(st => st.isDirectory && st.getPath.getName != version)
         .foreach(st => fs.delete(st.getPath, true))
+    }
+    read(path.toString)
   }
 }

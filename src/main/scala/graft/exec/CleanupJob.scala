@@ -31,9 +31,9 @@ object CleanupJob {
       leftovers: Seq[String])
 
   /** Tear down everything the engine created for `db`/`resultsDir`/
-    * `warehouseDirs`, and release every [[graft.core.ArtifactStore]]
-    * entry — a teardown that strands them leaks block-manager memory
-    * and layout temp dirs. */
+    * `warehouseDirs`, release every [[graft.core.ArtifactStore]] entry and
+    * delete this application's drain roots — a teardown that strands
+    * them leaks block-manager memory, layout temp dirs and drain output. */
   def run(
       spark: SparkSession,
       db: Option[String] = None,
@@ -85,7 +85,9 @@ object CleanupJob {
     }
 
     // derived per-corpus artifacts (cached stages, models, layout copies)
+    // and this application's drain results
     graft.core.ArtifactStore.releaseAll()
+    scala.util.Try(graft.streaming.EventStream.releaseDrains(spark))
 
     // 5. verify — list survivors, never assume
     val leftovers =

@@ -1,7 +1,6 @@
 package graft.jobs
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** The runnable end-to-end curation job (round-11 verdict item 3): the
   * command a user of the engine actually executes over a corpus tree —
@@ -41,11 +40,7 @@ object CurationPipeline {
     val led = graft.core.Materialize.once(
       graft.operators.Curation.ledger(spark, dir))
 
-    led.filter(col("alive5") && col("n_copies") > 0)
-      .select(col("doc_id"), col("source"), col("text"),
-        col("n_tok").as("n_tokens"), col("n_copies"),
-        (conv(substring(md5(trim(col("text"))), 15, 4), 16, 10).cast("long")
-          % graft.operators.Sampling.ExportShards).as("shard"))
+    graft.operators.Export.exportRecords(led).withColumnRenamed("n_tok", "n_tokens")
       .write.mode("overwrite").partitionBy("shard").parquet(s"$out/corpus")
 
     led.write.mode("overwrite").parquet(s"$out/ledger")

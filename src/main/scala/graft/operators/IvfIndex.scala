@@ -21,8 +21,8 @@ import graft.core.{ArtifactStore, Tables}
   * distributed top-k (heap per partition, no full sort, no shuffle of the
   * corpus).
   *
-  * The trained quantizer lives in the [[graft.core.ArtifactStore]];
-  * this object keeps its centroid text format (see [[centroids]]).
+  * The trained quantizer lives in the [[graft.core.ArtifactStore]]
+  * (see [[centroids]] for its file format).
   */
 object IvfIndex {
 
@@ -32,58 +32,27 @@ object IvfIndex {
 
   /** The trained quantizer for (corpus dir, nlist), held in the
     * [[graft.core.ArtifactStore]] and versioned on the embeddings table.
-    * With `spark.graft.signatures.persist=true` it is also written under
-    * the store's `ivf` root as `<version>/centroids_<k>.txt`, one line per
-    * centroid of comma-separated `Double.toString` components (exact
-    * round-trip), and loaded from there before refitting, so a fresh
-    * session or another cluster skips the sample + Lloyd fit. IO
-    * failures degrade to the in-memory entry. */
+    * With `spark.graft.signatures.persist=true` it is also a durable
+    * artifact of kind `ivf`, the file `<version>/centroids_<k>.txt`: one
+    * line per centroid of comma-separated `Double.toString` components
+    * (exact round-trip). Disk failures degrade to the in-memory entry. */
   def centroids(spark: SparkSession, dir: String, k: Int): Array[Array[Double]] =
-    ArtifactStore.value(spark, dir, Seq("embeddings.parquet"), s"ivf_centroids_$k") { version =>
-      loadPersisted(spark, dir, version, k).getOrElse {
-        val c = build(spark, dir, k)
-        persistCentroids(spark, dir, version, k, c)
-        c
-      }
-    }
-
-  private def ivfRoot(spark: SparkSession, dir: String): HPath =
-    ArtifactStore.persistRoot(spark, dir, "ivf")
-
-  private def loadPersisted(
-      spark: SparkSession, dir: String, version: String, k: Int): Option[Array[Array[Double]]] = {
-    if (!ArtifactStore.persistEnabled(spark)) return None
-    scala.util.Try {
-      val p = new HPath(ivfRoot(spark, dir), s"$version/centroids_$k.txt")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
+    ArtifactStore.value(spark, dir, Seq("embeddings.parquet"), s"ivf_centroids_$k") { _ =>
+      lazy val built = centroidsOf(Tables.embeddings(spark, dir), k)
+      def fs(path: String) = new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!ArtifactStore.persistEnabled(spark)) built
+      else scala.util.Try(ArtifactStore.durable(spark, dir, Seq("embeddings.parquet"),
+        ArtifactStore.Persisted("ivf"), s"centroids_$k.txt") { path =>
+        val out = fs(path).create(new HPath(path), true)
+        try out.write(built.map(_.mkString(",")).mkString("\n").getBytes("UTF-8")) finally out.close()
+      } { path =>
+        val in = fs(path).open(new HPath(path))
         val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        val rows = text.split("\n").filter(_.nonEmpty)
-          .map(_.split(",").map(java.lang.Double.parseDouble))
-        if (rows.nonEmpty) Some(rows) else None
-      }
-    }.toOption.flatten
-  }
-
-  private def persistCentroids(
-      spark: SparkSession, dir: String, version: String, k: Int,
-      cs: Array[Array[Double]]): Unit = {
-    if (!ArtifactStore.persistEnabled(spark)) return
-    scala.util.Try {
-      val root = ivfRoot(spark, dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(new HPath(root, s"$version/centroids_$k.txt"), true)
-      try out.write(cs.map(_.mkString(",")).mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      ArtifactStore.keepOnlyVersion(spark, root, version)
+        val rows = text.split("\n").filter(_.nonEmpty).map(_.split(",").map(java.lang.Double.parseDouble))
+        require(rows.nonEmpty, s"empty quantizer file $path")
+        rows
+      }).getOrElse(built)
     }
-    ()
-  }
-
-  private def build(spark: SparkSession, dir: String, k: Int): Array[Array[Double]] =
-    centroidsOf(Tables.embeddings(spark, dir), k)
 
   /** Centroids for ANY (vec_id, embedding) frame — the uncached entry the
     * SQL table-function surface uses (no corpus dir to version-key on).

@@ -4,7 +4,7 @@ import java.util.UUID
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => SourceOffset}
 import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
@@ -76,19 +76,17 @@ object EventStream extends graft.QueryModule {
     * the driver).
     *
     * Lifetime: each drain writes `<root>/{data,checkpoint}` under a fresh
-    * `<spark.graft.streamResultsDir>/graft_stream_<uuid>` root (default:
-    * the JVM temp dir). The root is registered with the Hadoop
-    * FileSystem's delete-on-exit before the query starts, so it goes when
-    * the JVM exits. The checkpoint is one-shot (a fresh root is never
-    * resumed), so it is deleted as soon as the query ends; `data` backs
-    * the returned frame and lives until exit. */
+    * `<spark.graft.streamResultsDir>/graft_stream_<applicationId>_<uuid>`
+    * root (default: the JVM temp dir). The root is registered with the
+    * Hadoop FileSystem's delete-on-exit before the query starts, so it
+    * goes when the JVM exits at the latest. The checkpoint is one-shot (a
+    * fresh root is never resumed), so it is deleted as soon as the query
+    * ends; `data` backs the returned frame and lives until
+    * [[releaseDrains]] or exit. */
   private[streaming] def drainToFiles(spark: SparkSession, frame: DataFrame,
       statePartsHint: Option[String] = None, update: Boolean = false): DataFrame = {
-    val base = spark.conf.getOption("spark.graft.streamResultsDir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val unqualified = new Path(base, s"graft_stream_${UUID.randomUUID().toString.replace("-", "")}")
-    val fs = unqualified.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(unqualified)
+    val (fs, base, prefix) = drainRoots(spark)
+    val root = new Path(base, prefix + UUID.randomUUID().toString.replace("-", ""))
     fs.mkdirs(root)
     fs.deleteOnExit(root)
     val data = new Path(root, "data").toString
@@ -120,6 +118,29 @@ object EventStream extends graft.QueryModule {
     // explicit schema: a drain that emits zero rows leaves no data files,
     // and the read must still return an empty, correctly-typed frame
     spark.read.schema(frame.schema).parquet(data)
+  }
+
+  /** The drains' file system, their qualified results dir, and the name
+    * prefix of this application's drain roots. */
+  private def drainRoots(spark: SparkSession): (FileSystem, Path, String) = {
+    val base = new Path(spark.conf.getOption("spark.graft.streamResultsDir")
+      .getOrElse(System.getProperty("java.io.tmpdir")))
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, fs.makeQualified(base), s"graft_stream_${spark.sparkContext.applicationId}_")
+  }
+
+  /** Delete every drain root of this application, and its exit
+    * registration: the frames its drains returned can no longer be read.
+    * `CleanupJob` calls it, so a long-lived JVM does not keep one root per
+    * drain until exit. */
+  private[graft] def releaseDrains(spark: SparkSession): Unit = {
+    val (fs, base, prefix) = drainRoots(spark)
+    if (fs.exists(base))
+      fs.listStatus(base).map(st => fs.makeQualified(st.getPath))
+        .filter(_.getName.startsWith(prefix)).foreach { root =>
+          fs.cancelDeleteOnExit(root)
+          fs.delete(root, true)
+        }
   }
 
   /** Make a checkpoint's file-source logs agree with its offset log, for

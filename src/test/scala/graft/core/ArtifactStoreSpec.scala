@@ -163,4 +163,21 @@ class ArtifactStoreSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"derived artifacts belong in graft.core.ArtifactStore:\n${offenders.mkString("\n")}")
   }
+
+  test("only the store spells out the durable rule") {
+    val Rule = """"_SUCCESS"|keepOnlyVersion|persistRoot""".r
+    val main = Paths.get("src/main/scala/graft")
+    val store = main.resolve("core/ArtifactStore.scala")
+    val offenders = Files.walk(main).iterator().asScala.toSeq
+      .filter(f => f.toString.endsWith(".scala") && f != store)
+      .flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (l, i) if !Seq("//", "*", "/*").exists(l.trim.startsWith) &&
+              Rule.findFirstIn(l).nonEmpty =>
+            s"${main.relativize(f)}:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(offenders.isEmpty, "artifacts that outlive a session go through " +
+      s"ArtifactStore.durable:\n${offenders.mkString("\n")}")
+  }
 }

@@ -1,5 +1,6 @@
 package graft.layout
 
+import java.io.File
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -57,37 +58,99 @@ class BucketedLayoutSpec extends SparkSpec {
     }
   }
 
-  test("bucketize over existing files re-registers without rewriting") {
-    val path = Files.createTempDirectory("graft_bucketed_reuse").toString
-    try {
-      BucketedLayout.bucketize(spark, sf, "graft_layout_r", path, buckets = 4)
-      def mtimes: Map[String, Long] = {
-        val d = new java.io.File(s"$path/lineitem_b")
-        d.listFiles().map(f => f.getName -> f.lastModified()).toMap
-      }
+  /** Run `body` over a temp copy of `orders` and `lineitem` whose layouts
+    * land under a temp `spark.graft.bucketDir`; `drop` names a database
+    * to drop afterwards. */
+  private def withCorpus(body: (File, File, String => Unit) => Unit): Unit = {
+    val dir = Files.createTempDirectory("graft_bucketed_corpus").toFile
+    Seq("orders.parquet", "lineitem.parquet").foreach(t =>
+      Files.copy(new File(sf, t).toPath, new File(dir, t).toPath))
+    val buckets = Files.createTempDirectory("graft_bucket_dir").toFile
+    val dbs = scala.collection.mutable.Set[String]()
+    spark.conf.set("spark.graft.bucketDir", buckets.getPath)
+    try body(dir, buckets, dbs += _) finally {
+      spark.conf.unset("spark.graft.bucketDir")
+      graft.core.ArtifactStore.release(spark, dir.getPath)
+      dbs.foreach(db => spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE"))
+      Seq(dir, buckets).foreach(rm)
+    }
+  }
+
+  private def rm(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+  }
+
+  /** Every directory named `name` under `root`. */
+  private def dirsNamed(root: File, name: String): Seq[File] =
+    Option(root.listFiles()).toSeq.flatten.filter(_.isDirectory)
+      .flatMap(d => (if (d.getName == name) Seq(d) else Nil) ++ dirsNamed(d, name))
+
+  test("ensure over existing files re-registers without rewriting") {
+    withCorpus { (dir, buckets, drop) =>
+      val db = BucketedLayout.ensure(spark, dir.getPath)
+      drop(db)
+      val Seq(lineitemB) = dirsNamed(buckets, "lineitem_b")
+      def mtimes: Map[String, Long] =
+        lineitemB.listFiles().map(f => f.getName -> f.lastModified()).toMap
       val before = mtimes
-      // simulate a fresh session's empty in-memory catalog: drop the DDL,
-      // keep the files — the next bucketize must re-register (pure DDL),
+      // simulate a fresh session: an empty in-memory store and catalog,
+      // the files kept — the next ensure must re-register (pure DDL),
       // not pay the layout write again
-      spark.sql("DROP TABLE graft_layout_r.lineitem_b")
-      spark.sql("DROP TABLE graft_layout_r.orders_b")
-      spark.sql("DROP DATABASE graft_layout_r")
-      BucketedLayout.bucketize(spark, sf, "graft_layout_r", path, buckets = 4)
+      graft.core.ArtifactStore.release(spark, dir.getPath)
+      spark.sql(s"DROP DATABASE $db CASCADE")
+      assert(BucketedLayout.ensure(spark, dir.getPath) == db)
       assert(mtimes == before, "re-registration must not rewrite the bucket files")
       // and the re-registered tables still join shuffle-free
       val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
-        val joined = BucketedLayout.colocatedOrderRevenue(spark, "graft_layout_r")
+        val joined = BucketedLayout.colocatedOrderRevenue(spark, db)
         joined.collect()
         val exchanges = BucketedLayout.collectExchanges(joined.queryExecution.executedPlan)
         assert(exchanges.isEmpty,
           s"expected shuffle-free join over re-registered layout, found: $exchanges")
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_layout_r.lineitem_b")
-      spark.sql("DROP TABLE IF EXISTS graft_layout_r.orders_b")
-      spark.sql("DROP DATABASE IF EXISTS graft_layout_r")
+    }
+  }
+
+  test("a bucketed pair rebuilt after a corpus rewrite leaves one version on disk") {
+    withCorpus { (dir, buckets, drop) =>
+      val orders = new File(dir, "orders.parquet")
+      val first = BucketedLayout.ensure(spark, dir.getPath)
+      drop(first)
+      assert(orders.setLastModified(orders.lastModified() + 120000))
+      val second = BucketedLayout.ensure(spark, dir.getPath)
+      drop(second)
+      assert(second != first, "a rewritten corpus gets a new layout")
+      val versions = dirsNamed(buckets, "lineitem_b")
+      assert(versions.size == 1, s"the replaced layout version stays on disk: $versions")
+    }
+  }
+
+  test("q55 reflects a rewrite of lineitem alone") {
+    import org.apache.spark.sql.functions._
+    withCorpus { (dir, _, drop) =>
+      def q55: Map[Long, Double] = {
+        val df = BucketedLayout.q55ColocatedJoin(spark, dir.getPath)
+        drop(BucketedLayout.ensure(spark, dir.getPath))
+        df.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      }
+      val before = q55
+      // raise one line item's price by 100: only its order's revenue moves
+      val lineitem = new File(dir, "lineitem.parquet")
+      val key = before.keys.min
+      val staged = new File(dir, "lineitem_staged")
+      val rows = spark.read.parquet(lineitem.getPath)
+      val line = rows.filter(col("l_orderkey") === key).agg(min("l_linenumber")).head().getInt(0)
+      rows
+        .withColumn("l_extendedprice",
+          when(col("l_orderkey") === key && col("l_linenumber") === line,
+            col("l_extendedprice") + 100.0).otherwise(col("l_extendedprice")))
+        .coalesce(1).write.parquet(staged.getPath)
+      assert(lineitem.delete() && staged.renameTo(lineitem))
+      val after = q55
+      assert(after(key) > before(key), s"q55 joined stale lineitem rows for order $key")
+      assert(after - key == before - key, "only the rewritten order's revenue moves")
     }
   }
 

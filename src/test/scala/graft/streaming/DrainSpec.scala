@@ -51,6 +51,22 @@ class DrainSpec extends SparkSpec {
     }
   }
 
+  test("CleanupJob deletes this application's drain roots and their exit registrations") {
+    withResultsDir { dir =>
+      EventStream.q34StreamWindows(spark, sf)
+      FunnelStream.q98StreamFunnel(spark, sf)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val roots = fs.listStatus(dir).map(s => fs.makeQualified(s.getPath)).toSeq
+      assert(roots.size == 2, s"one root per drain: $roots")
+      graft.exec.CleanupJob.run(spark)
+      roots.foreach { root =>
+        assert(!fs.exists(root), s"$root survived CleanupJob")
+        // false: the root no longer waits in the delete-on-exit set
+        assert(!fs.cancelDeleteOnExit(root), s"$root is still registered for deletion at exit")
+      }
+    }
+  }
+
   test("update drains stop the state store's maintenance when they return") {
     withResultsDir { _ =>
       Seq[(String, () => Unit)](
