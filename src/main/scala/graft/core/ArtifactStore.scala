@@ -25,9 +25,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    its `(applicationId, dir, tables)` group at another version, so a
   *    rewritten corpus keeps one live version of each artifact.
   *  - Release by kind: a [[frame]] is unpersisted, a [[tempDir]] is
-  *    deleted, a [[value]] is dropped. An entry still building is
-  *    released when its build finishes. [[release]] drops one corpus,
-  *    [[releaseAll]] everything (`CleanupJob` calls it).
+  *    deleted, a [[database]] is dropped from the catalog, a [[value]]
+  *    is dropped. An entry still building is released when its build
+  *    finishes. [[release]] drops one corpus, [[releaseAll]] everything
+  *    (`CleanupJob` calls it).
   *  - On disk: a [[durable]] artifact outlives the session. It lives at
   *    `<root>/<version>/<name>`; a completed write is marked by
   *    `<root>/<version>/_SUCCESS.<name>`, which gates reuse; writing
@@ -54,6 +55,14 @@ object ArtifactStore {
   def value[T](spark: SparkSession, dir: String, tables: Seq[String], name: String)(
       build: String => T): T =
     get[T](spark, dir, tables, name, _ => ())(build)
+
+  /** A session-catalog database that `build` registers; returns its
+    * name. Dropped with its tables on release: they must be external, so
+    * the drop deletes no data. */
+  def database(spark: SparkSession, dir: String, tables: Seq[String], name: String)(
+      build: String => String): String =
+    get[String](spark, dir, tables, name,
+      db => { spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE"); () })(build)
 
   /** A cached DataFrame: unpersisted on release. */
   def frame(spark: SparkSession, dir: String, tables: Seq[String], name: String)(

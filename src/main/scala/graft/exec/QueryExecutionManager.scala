@@ -28,10 +28,11 @@ import graft.core.Plans.planNodes
   *
   * Internally there is no polling: submission is a driver-side Future and
   * Spark executes the plan; the poll-shaped API exists for parity with
-  * the reference's clients. Results are materialized through the engine
-  * (collect) ONLY for the stringified-results call — the CSV artifact is
-  * written distributed then coalesced, so a big result never transits the
-  * driver as rows.
+  * the reference's clients. One Spark job per execution writes both
+  * artifacts — the row-indexed parquet pages and the CSV twin, from the
+  * same task under one job commit ([[ResultArtifactFormat]]) — so a big
+  * result never transits the driver as rows. Rows reach the driver only
+  * one page at a time, for the stringified-results call.
   */
 final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     implicit ec: ExecutionContext) {
@@ -176,8 +177,8 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     metadata(id).flatMap { meta =>
       if (Files.exists(pages)) {
         val schema = DataType.fromJson(meta.get("schema").toString).asInstanceOf[StructType]
-        Some(inRowOrder(readPages(pages.toString, schema)
-          .filter(col(RowIdx) >= start.toLong && col(RowIdx) < start.toLong + maxRows)))
+        Some(ResultArtifactFormat.asCells(inRowOrder(readPages(pages.toString, schema)
+          .filter(col(RowIdx) >= start.toLong && col(RowIdx) < start.toLong + maxRows))))
       } else if (Files.exists(csv))
         Some(spark.read.options(CsvHeader).csv(csv.toString).offset(start).limit(maxRows))
       else None
@@ -222,31 +223,36 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     Files.deleteIfExists(Paths.get(resultsDir, s"$id.csv.metadata"))
   }
 
-  /** One execution of the query's plan, and no shuffle after it. The
-    * row-indexed parquet page artifact is written as a command whose
-    * executed plan is kept ([[writeOnce]]): that write IS the execution.
-    * Its write node's `numOutputRows` is the metadata rowCount — the
-    * rows actually written, so a non-deterministic query (LIMIT without
-    * ORDER BY) cannot disagree with its own artifact — and `scanBytes`
-    * over the same executed plan is bytesScanned. The CSV twin is read
-    * back from the pages with the known schema and ordered within its
-    * one partition: a local sort over the artifact, not a second run of
-    * the plan. Nothing is cached between the two, so a result set is
-    * never pinned in executor memory. A query whose own schema uses the
-    * index column name is written CSV-only, through the same one write. */
+  /** One Spark job per execution, and no shuffle after the plan. The
+    * artifacts are written as one command whose executed plan is kept
+    * ([[writeOnce]]): that write IS the execution. Its one task writes
+    * the row-indexed parquet page file and the CSV twin of the same rows
+    * side by side ([[ResultArtifactFormat]]), and the job's commit
+    * publishes both; the CSV part is then moved from the page directory
+    * to `<id>.csv/`, before the sidecar, because a page read lists the
+    * page directory as parquet. The write node's `numOutputRows` is the
+    * metadata rowCount — the rows actually written, so a
+    * non-deterministic query (LIMIT without ORDER BY) cannot disagree
+    * with its own artifact — and `scanBytes` over the same executed plan
+    * is bytesScanned. Nothing is cached, so a result set is never pinned
+    * in executor memory. A query whose own schema uses the index column
+    * name is written CSV-only, through the same one write. */
   private def writeArtifacts(id: String, sql: String, df: DataFrame): Unit = {
     val t0 = System.nanoTime()
-    val target = Paths.get(resultsDir, s"$id.csv").toString
+    val target = Paths.get(resultsDir, s"$id.csv")
     val written = if (df.columns.contains(RowIdx)) {
-      writeOnce(df.coalesce(1), "csv", target, CsvHeader)
+      writeOnce(df.coalesce(1), "csv", target.toString, CsvHeader)
     } else {
       // single partition ⇒ monotonically_increasing_id is 0..n-1 in
       // artifact row order, the paging key
-      val pages = Paths.get(resultsDir, s"$id$PagesSuffix").toString
-      val write = writeOnce(
-        df.coalesce(1).withColumn(RowIdx, monotonically_increasing_id()), "parquet", pages)
-      inRowOrder(readPages(pages, df.schema))
-        .write.options(CsvHeader).mode("overwrite").csv(target)
+      val pages = Paths.get(resultsDir, s"$id$PagesSuffix")
+      val write = writeOnce(df.coalesce(1).withColumn(RowIdx, monotonically_increasing_id()),
+        classOf[ResultArtifactFormat].getName, pages.toString)
+      Files.createDirectories(target)
+      // each CSV part goes with its checksum sidecar
+      Retention.listed(pages).map(_.getFileName.toString).filter(_.endsWith(".csv"))
+        .flatMap(n => Seq(n, s".$n.crc")).map(pages.resolve).filter(Files.exists(_))
+        .foreach(p => Files.move(p, target.resolve(p.getFileName)))
       write
     }
     val n = planNodes(written).collectFirst {
@@ -276,12 +282,12 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
   }
 
   /** The page artifact, read with the schema its execution recorded. */
-  private def readPages(pages: String, schema: StructType): DataFrame =
+  private[exec] def readPages(pages: String, schema: StructType): DataFrame =
     spark.read.schema(schema.add(RowIdx, LongType)).parquet(pages)
 
   /** Page-artifact rows in artifact order, index column dropped: one
     * partition sorted locally, so no range-sampling job and no exchange. */
-  private def inRowOrder(pages: DataFrame): DataFrame =
+  private[exec] def inRowOrder(pages: DataFrame): DataFrame =
     pages.coalesce(1).sortWithinPartitions(RowIdx).drop(RowIdx)
 }
 
@@ -290,7 +296,7 @@ object QueryExecutionManager {
   /** Row-index column of the parquet page artifact. */
   private[exec] val RowIdx = "__graft_row"
   private[exec] val PagesSuffix = ".pages.parquet"
-  private val CsvHeader = Map("header" -> "true")
+  private[exec] val CsvHeader = Map("header" -> "true")
   private val Json = new ObjectMapper()
 
   /** Workgroup a submission lands in when none is named — the
@@ -351,28 +357,21 @@ object Retention {
     val root = Paths.get(resultsDir)
     if (!Files.exists(root)) return Nil
     val cutoff = now - maxAgeDays.toLong * 24 * 3600 * 1000
-    val deleted = {
-      val s = Files.list(root)
-      try s.iterator().asScala
-        .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-        .toList
-      finally s.close()
-    }
+    val deleted = listed(root).filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
     deleted.foreach(deleteRecursively)
     deleted.map(_.getFileName.toString)
   }
 
-  // graft-wide: also used by the layout lifecycles (IvfLayout /
-  // PartitionedEventsLayout / ZOrderLayout) to drop superseded
-  // per-corpus-version copies
+  /** The entries of directory `p`. */
+  private[exec] def listed(p: Path): List[Path] = {
+    val s = Files.list(p)
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  // graft-wide: callers are QueryExecutionManager, CleanupJob and
+  // ArtifactStore (a released temp dir)
   private[graft] def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val children = {
-        val s = Files.list(p)
-        try s.iterator().asScala.toList finally s.close()
-      }
-      children.foreach(deleteRecursively)
-    }
+    if (Files.isDirectory(p)) listed(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
 }

@@ -106,11 +106,12 @@ object BucketedLayout extends graft.QueryModule {
       Pair.foreach { case (t, key, _) => Bucketing(Seq(key), Buckets).register(spark, db, t, s"$path/$t") }
     }
 
-  /** One bucketed layout of `sfDir`: an in-memory entry over the durable
-    * artifact of `kind`, versioned on `tables`; returns its database. */
+  /** One bucketed layout of `sfDir`: a catalog entry over the durable
+    * artifact of `kind`, versioned on `tables`; returns its database,
+    * which is dropped when the entry is released or replaced. */
   private def layout(spark: SparkSession, sfDir: String, tables: Seq[String], kind: String)(
       write: (String, String) => Unit)(register: (String, String) => Unit): String =
-    ArtifactStore.value(spark, sfDir, tables, s"bucketed_$kind") { _ =>
+    ArtifactStore.database(spark, sfDir, tables, s"bucketed_$kind") { _ =>
       val base = spark.conf.getOption("spark.graft.bucketDir")
         .getOrElse(System.getProperty("java.io.tmpdir"))
       def db(path: String) = s"graft_b_${graft.core.TableVersion.md5Hex(path)}"

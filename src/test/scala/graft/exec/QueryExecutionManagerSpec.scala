@@ -26,6 +26,26 @@ class QueryExecutionManagerSpec extends SparkSpec {
     assert(rows.map(_(1).get).contains("AFRICA"))
   }
 
+  test("array, map and struct columns are served as their string cast, in pages and CSV alike") {
+    val dir = Files.createTempDirectory("graft_results_complex").toString
+    val mgr = new QueryExecutionManager(spark, dir)
+    val id = mgr.submit(
+      """SELECT if(id = 0, array(1, 2), NULL) AS a, if(id = 0, map('k', 1), NULL) AS m,
+        |  if(id = 0, named_struct('x', 1), NULL) AS s, id AS b
+        |FROM range(2) ORDER BY id""".stripMargin)
+    val st = mgr.await(id)
+    assert(st.status == Status.Succeeded, st.reason)
+    val Some((header, rows)) = mgr.results(id)
+    assert(header == Seq("a", "m", "s", "b"))
+    assert(rows == Seq(
+      Seq(Some("[1, 2]"), Some("{k -> 1}"), Some("{1}"), Some("0")),
+      Seq(None, None, None, Some("1"))))
+    val csv = spark.read.option("header", "true").csv(Paths.get(dir, s"$id.csv").toString)
+    assert(csv.columns.toSeq == header)
+    assert(csv.collect().toSeq.map(_.toSeq.map(Option(_).map(_.toString))) == rows,
+      "each page cell equals its CSV cell")
+  }
+
   test("bad SQL → FAILED with a reason (StateChangeReason shape)") {
     val dir = Files.createTempDirectory("graft_results_f").toString
     val mgr = new QueryExecutionManager(spark, dir)

@@ -5,6 +5,8 @@ import scala.concurrent.Future
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.JobExecutionStatus
+
 import graft.SparkSpec
 import graft.exec.QueryExecutionManager.Status
 import graft.layout.BucketedLayout
@@ -56,6 +58,47 @@ class SingleExecutionSpec extends SparkSpec {
     frame.collect()
     assert(BucketedLayout.collectExchanges(frame.queryExecution.executedPlan).isEmpty,
       s"a page must not shuffle\n${frame.queryExecution.executedPlan}")
+  }
+
+  /** Blocks until the status store has seen every job that ended before
+    * the call: the listener bus delivers in order, so once a marker job's
+    * end is visible, every earlier job's is too. */
+  private def settled(): Unit = {
+    val sc = spark.sparkContext
+    val group = s"graft-settle-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "status-store marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val t0 = System.currentTimeMillis()
+    def done = sc.statusTracker.getJobIdsForGroup(group).exists(j =>
+      sc.statusTracker.getJobInfo(j).exists(_.status == JobExecutionStatus.SUCCEEDED))
+    while (!done && System.currentTimeMillis() - t0 < 30000) Thread.sleep(20L)
+    assert(done, "the marker job never reached the status store")
+  }
+
+  test("one Spark job writes the pages and the CSV twin, byte-identical to a read-back write") {
+    val dir = Files.createTempDirectory("graft_results_one_job").toString
+    val mgr = new QueryExecutionManager(spark, dir)
+    countingUdf("graft_once_f")
+    for ((sql, n) <- Seq("SELECT graft_once_f(id) AS v FROM range(1000)" -> 1000,
+        "SELECT graft_once_f(id) AS v FROM range(0)" -> 0)) {
+      val id = mgr.submit(sql)
+      val st = mgr.await(id)
+      assert(st.status == Status.Succeeded, st.reason)
+      settled()
+      val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(id)
+      assert(jobs.length == 1, s"$sql ran ${jobs.length} jobs")
+      val pages = Paths.get(dir, s"$id${QueryExecutionManager.PagesSuffix}")
+      assert(!Retention.listed(pages).exists(_.toString.endsWith(".csv")))
+      val lines = csvLines(dir, id)
+      assert(lines == "v" +: (0 until n).map(_.toString), sql)
+      // the CSV as the pages read back and written through their own job
+      val out = Files.createTempDirectory("graft_results_readback").toString
+      mgr.inRowOrder(mgr.readPages(pages.toString, spark.sql(sql).schema))
+        .write.options(QueryExecutionManager.CsvHeader).mode("overwrite").csv(out)
+      def part(d: java.nio.file.Path) = Files.readAllBytes(
+        Retention.listed(d).filter(_.getFileName.toString.startsWith("part-")).head)
+      assert(part(Paths.get(dir, s"$id.csv")).sameElements(part(Paths.get(out))), sql)
+    }
   }
 
   test("a query projecting the row-index column is served CSV-only from one execution") {

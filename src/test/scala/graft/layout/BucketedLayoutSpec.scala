@@ -97,7 +97,7 @@ class BucketedLayoutSpec extends SparkSpec {
       // the files kept — the next ensure must re-register (pure DDL),
       // not pay the layout write again
       graft.core.ArtifactStore.release(spark, dir.getPath)
-      spark.sql(s"DROP DATABASE $db CASCADE")
+      assert(!spark.catalog.databaseExists(db), "release drops the layout's database")
       assert(BucketedLayout.ensure(spark, dir.getPath) == db)
       assert(mtimes == before, "re-registration must not rewrite the bucket files")
       // and the re-registered tables still join shuffle-free
@@ -122,6 +122,7 @@ class BucketedLayoutSpec extends SparkSpec {
       val second = BucketedLayout.ensure(spark, dir.getPath)
       drop(second)
       assert(second != first, "a rewritten corpus gets a new layout")
+      assert(!spark.catalog.databaseExists(first), "the replaced layout's database stays")
       val versions = dirsNamed(buckets, "lineitem_b")
       assert(versions.size == 1, s"the replaced layout version stays on disk: $versions")
     }
