@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.CommandResult
 import org.apache.spark.sql.execution.SparkPlan
@@ -32,7 +33,9 @@ import graft.core.Plans.planNodes
   * artifacts — the row-indexed parquet pages and the CSV twin, from the
   * same task under one job commit ([[ResultArtifactFormat]]) — so a big
   * result never transits the driver as rows. Rows reach the driver only
-  * one page at a time, for the stringified-results call.
+  * one page at a time, for the stringified-results call. Every cell, in
+  * a page and in the CSV twin alike, is its `CAST(… AS STRING)`; a result
+  * column named [[RowIdx]] in any letter case fails the execution.
   */
 final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     implicit ec: ExecutionContext) {
@@ -77,6 +80,10 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
       spark.sparkContext.setLocalProperty("spark.scheduler.pool", poolName(workgroup))
       try {
         val df = spark.sql(sql)
+        // analysis only: a reserved name fails before any Spark job runs
+        df.columns.find(_.equalsIgnoreCase(RowIdx)).foreach(c =>
+          throw new IllegalArgumentException(
+            s"result column `$c` uses the name $RowIdx, reserved for the row index of the pages"))
         if (Option(states.get(id)).forall(_.status == Status.Running))
           writeArtifacts(id, sql, df)
         states.computeIfPresent(id, (_, s) =>
@@ -144,11 +151,11 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     * pushes to the parquet row-group statistics, so page N reads only
     * the row groups covering its range — a full P-page walk is one pass
     * over the artifact, not the O(P²) rescans that `offset(start)` over
-    * a CSV costs (each page re-reading every row before it). Pre-parquet
-    * artifacts (or a query whose own schema uses the index column name)
-    * fall back to the CSV offset path. Each page is one Spark job: the
-    * page schema comes from the metadata sidecar (no footer inference)
-    * and its rows are ordered within one partition (no range sort). */
+    * a CSV costs (each page re-reading every row before it). Each page is
+    * one Spark job: the page schema comes from the metadata sidecar (no
+    * footer inference), its rows are ordered within one partition (no
+    * range sort), and each cell is the same string cast the CSV twin
+    * holds. */
   def resultsPage(id: String, maxRows: Int = 1000, pageToken: Option[String] = None)
       : Option[ResultPage] = {
     // malformed/negative tokens are invalid requests, not crashes —
@@ -160,28 +167,27 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     if (maxRows <= 0 || start < 0) return None
     pageFrame(id, start, maxRows).map { df =>
       val header = df.schema.fieldNames.toSeq
-      val rows = df.collect().toSeq.map(r =>
-        header.indices.map(i => Option(r.get(i)).map(_.toString)))
+      val rows = df.collect().toSeq.map(r => header.indices.map(i => Option(r.getString(i))))
       val next = if (rows.size < maxRows) None else Some((start + maxRows).toString)
       ResultPage(header, rows, next)
     }
   }
 
-  /** The lazy frame for one page — exposed for plan-shape specs (the
-    * O(P)-walk property IS the pushed row-index predicate). */
+  /** The lazy frame for one page, every cell a string — exposed for
+    * plan-shape specs (the O(P)-walk property IS the pushed row-index
+    * predicate). The page artifact is read with the schema its execution
+    * recorded, and its rows come in artifact order: one partition sorted
+    * locally, so no range-sampling job and no exchange. */
   private[exec] def pageFrame(id: String, start: Int, maxRows: Int): Option[DataFrame] = {
     val pages = Paths.get(resultsDir, s"$id$PagesSuffix")
-    val csv = Paths.get(resultsDir, s"$id.csv")
-    // the sidecar is written last: artifacts without one are not a
-    // finished execution's (still RUNNING, or cancelled before cleanup)
-    metadata(id).flatMap { meta =>
-      if (Files.exists(pages)) {
-        val schema = DataType.fromJson(meta.get("schema").toString).asInstanceOf[StructType]
-        Some(ResultArtifactFormat.asCells(inRowOrder(readPages(pages.toString, schema)
-          .filter(col(RowIdx) >= start.toLong && col(RowIdx) < start.toLong + maxRows))))
-      } else if (Files.exists(csv))
-        Some(spark.read.options(CsvHeader).csv(csv.toString).offset(start).limit(maxRows))
-      else None
+    // the sidecar is written last: pages without one are not a finished
+    // execution's (still RUNNING, or cancelled before cleanup)
+    metadata(id).filter(_ => Files.exists(pages)).map { meta =>
+      val schema = DataType.fromJson(meta.get("schema").toString).asInstanceOf[StructType]
+      ResultArtifactFormat.asCells(spark.read.schema(schema.add(RowIdx, LongType))
+        .parquet(pages.toString)
+        .filter(col(RowIdx) >= start.toLong && col(RowIdx) < start.toLong + maxRows)
+        .coalesce(1).sortWithinPartitions(RowIdx).drop(RowIdx))
     }
   }
 
@@ -235,60 +241,43 @@ final class QueryExecutionManager(spark: SparkSession, resultsDir: String)(
     * non-deterministic query (LIMIT without ORDER BY) cannot disagree
     * with its own artifact — and `scanBytes` over the same executed plan
     * is bytesScanned. Nothing is cached, so a result set is never pinned
-    * in executor memory. A query whose own schema uses the index column
-    * name is written CSV-only, through the same one write. */
+    * in executor memory. The sidecar is one JSON object: the metrics, the
+    * query text and the result schema. */
   private def writeArtifacts(id: String, sql: String, df: DataFrame): Unit = {
     val t0 = System.nanoTime()
     val target = Paths.get(resultsDir, s"$id.csv")
-    val written = if (df.columns.contains(RowIdx)) {
-      writeOnce(df.coalesce(1), "csv", target.toString, CsvHeader)
-    } else {
-      // single partition ⇒ monotonically_increasing_id is 0..n-1 in
-      // artifact row order, the paging key
-      val pages = Paths.get(resultsDir, s"$id$PagesSuffix")
-      val write = writeOnce(df.coalesce(1).withColumn(RowIdx, monotonically_increasing_id()),
-        classOf[ResultArtifactFormat].getName, pages.toString)
-      Files.createDirectories(target)
-      // each CSV part goes with its checksum sidecar
-      Retention.listed(pages).map(_.getFileName.toString).filter(_.endsWith(".csv"))
-        .flatMap(n => Seq(n, s".$n.crc")).map(pages.resolve).filter(Files.exists(_))
-        .foreach(p => Files.move(p, target.resolve(p.getFileName)))
-      write
-    }
+    val pages = Paths.get(resultsDir, s"$id$PagesSuffix")
+    // single partition ⇒ monotonically_increasing_id is 0..n-1 in
+    // artifact row order, the paging key
+    val written = writeOnce(
+      df.coalesce(1).withColumn(RowIdx, monotonically_increasing_id()), pages.toString)
+    Files.createDirectories(target)
+    // each CSV part goes with its checksum sidecar
+    Retention.listed(pages).map(_.getFileName.toString).filter(_.endsWith(".csv"))
+      .flatMap(n => Seq(n, s".$n.crc")).map(pages.resolve).filter(Files.exists(_))
+      .foreach(p => Files.move(p, target.resolve(p.getFileName)))
     val n = planNodes(written).collectFirst {
       case w: DataWritingCommandExec => w.metrics("numOutputRows").value
     }.getOrElse(throw new IllegalStateException(s"no write node in\n$written"))
     val bytesScanned = scanBytes(written)
     val durationMs = (System.nanoTime() - t0) / 1000000L
-    val schemaJson = df.schema.json
-    val meta =
-      s"""{"executionId":"$id","rowCount":$n,
-         |"durationMs":$durationMs,"bytesScanned":$bytesScanned,
-         |"query":${jsonString(sql)},
-         |"schema":$schemaJson,
-         |"completedAt":"${java.time.Instant.now()}"}""".stripMargin
-    Files.writeString(Paths.get(resultsDir, s"$id.csv.metadata"), meta)
+    val meta = Json.createObjectNode().put("executionId", id).put("rowCount", n)
+      .put("durationMs", durationMs).put("bytesScanned", bytesScanned).put("query", sql)
+      .set[ObjectNode]("schema", Json.readTree(df.schema.json))
+      .put("completedAt", java.time.Instant.now().toString)
+    Files.writeString(Paths.get(resultsDir, s"$id.csv.metadata"), Json.writeValueAsString(meta))
   }
 
   /** Runs `df`'s plan exactly once, as an overwrite of `path` in
-    * `format`, and returns the executed write plan — its SQLMetrics are
-    * populated by that one run. */
-  private def writeOnce(df: DataFrame, format: String, path: String,
-      options: Map[String, String] = Map.empty): SparkPlan = {
-    val cmd = DataSource(spark, format, options = options + ("path" -> path))
+    * [[ResultArtifactFormat]], and returns the executed write plan — its
+    * SQLMetrics are populated by that one run. */
+  private def writeOnce(df: DataFrame, path: String): SparkPlan = {
+    val cmd = DataSource(spark, classOf[ResultArtifactFormat].getName,
+      options = Map("path" -> path))
       .planForWriting(SaveMode.Overwrite, df.queryExecution.commandExecuted)
     spark.sessionState.executePlan(cmd).commandExecuted
       .asInstanceOf[CommandResult].commandPhysicalPlan
   }
-
-  /** The page artifact, read with the schema its execution recorded. */
-  private[exec] def readPages(pages: String, schema: StructType): DataFrame =
-    spark.read.schema(schema.add(RowIdx, LongType)).parquet(pages)
-
-  /** Page-artifact rows in artifact order, index column dropped: one
-    * partition sorted locally, so no range-sampling job and no exchange. */
-  private[exec] def inRowOrder(pages: DataFrame): DataFrame =
-    pages.coalesce(1).sortWithinPartitions(RowIdx).drop(RowIdx)
 }
 
 object QueryExecutionManager {
@@ -296,7 +285,6 @@ object QueryExecutionManager {
   /** Row-index column of the parquet page artifact. */
   private[exec] val RowIdx = "__graft_row"
   private[exec] val PagesSuffix = ".pages.parquet"
-  private[exec] val CsvHeader = Map("header" -> "true")
   private val Json = new ObjectMapper()
 
   /** Workgroup a submission lands in when none is named — the
@@ -334,17 +322,6 @@ object QueryExecutionManager {
       header: Seq[String],
       rows: Seq[Seq[Option[String]]],
       nextToken: Option[String])
-
-  private[exec] def jsonString(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }
 
 /** Retention job (SURVEY §2.1 S7 TTL): the S3 lifecycle rule

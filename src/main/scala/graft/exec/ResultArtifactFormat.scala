@@ -8,16 +8,17 @@ import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFac
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{StringType, StructType}
 
-import QueryExecutionManager.{CsvHeader, RowIdx}
+import QueryExecutionManager.RowIdx
 
 /** The lifecycle's one artifact write. Each task writes the row-indexed
   * parquet page file and, beside it in the same task-attempt directory,
   * the CSV twin of the same rows: a `.csv` part with a header, the index
-  * column dropped and every column CSV cannot hold rendered by
-  * `CAST(… AS STRING)`. The job's commit publishes both files at once,
-  * so the plan runs in one Spark job and no task reads the pages back. */
+  * column dropped and every cell rendered by `CAST(… AS STRING)`, as
+  * [[ResultArtifactFormat.asCells]] renders a page. The job's commit
+  * publishes both files at once, so the plan runs in one Spark job and
+  * no task reads the pages back. */
 class ResultArtifactFormat extends ParquetFileFormat {
 
   override def prepareWrite(spark: SparkSession, job: Job, options: Map[String, String],
@@ -25,32 +26,22 @@ class ResultArtifactFormat extends ParquetFileFormat {
     val pages = super.prepareWrite(spark, job, options, dataSchema)
     val tz = Some(SQLConf.get.sessionLocalTimeZone)
     val cells = dataSchema.zipWithIndex.collect { case (f, i) if f.name != RowIdx =>
-      val cell = BoundReference(i, f.dataType, f.nullable)
-      if (ResultArtifactFormat.asString(f.dataType)) Cast(cell, StringType, tz) else cell
+      Cast(BoundReference(i, f.dataType, f.nullable), StringType, tz)
     }
-    val csvSchema = StructType(dataSchema.filter(_.name != RowIdx).map(f =>
-      if (ResultArtifactFormat.asString(f.dataType)) f.copy(dataType = StringType) else f))
-    val csv = new CSVFileFormat().prepareWrite(spark, job, CsvHeader, csvSchema)
+    val csvSchema = StructType(
+      dataSchema.filter(_.name != RowIdx).map(_.copy(dataType = StringType)))
+    val csv = new CSVFileFormat().prepareWrite(spark, job, Map("header" -> "true"), csvSchema)
     new ResultArtifactFormat.TeeFactory(pages, csv, csvSchema, cells)
   }
 }
 
 object ResultArtifactFormat {
 
-  private val Csv = new CSVFileFormat()
-
-  /** Whether a column of `dt` is served as its `CAST(… AS STRING)`: true
-    * for the types CSV cannot hold (arrays, maps, structs). */
-  private def asString(dt: DataType): Boolean = !Csv.supportDataType(dt)
-
-  /** `page` as the CSV twin holds it: each column CSV cannot hold
-    * replaced by its string cast. */
+  /** `page` as the CSV twin holds it: every column replaced by its
+    * `CAST(… AS STRING)`. */
   private[exec] def asCells(page: DataFrame): DataFrame =
-    if (!page.schema.exists(f => asString(f.dataType))) page
-    else page.select(page.schema.map { f =>
-      val c = page.col(s"`${f.name.replace("`", "``")}`")
-      if (asString(f.dataType)) c.cast(StringType).as(f.name) else c
-    }: _*)
+    page.select(page.columns.toSeq.map(c =>
+      page.col(s"`${c.replace("`", "``")}`").cast(StringType).as(c)): _*)
 
   private final class TeeFactory(pages: OutputWriterFactory, csv: OutputWriterFactory,
       csvSchema: StructType, cells: Seq[Expression]) extends OutputWriterFactory {

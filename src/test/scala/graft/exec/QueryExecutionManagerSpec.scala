@@ -2,6 +2,7 @@ package graft.exec
 
 import java.nio.file.{Files, Paths}
 import scala.concurrent.ExecutionContext.Implicits.global
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.exec.QueryExecutionManager.Status
@@ -26,24 +27,32 @@ class QueryExecutionManagerSpec extends SparkSpec {
     assert(rows.map(_(1).get).contains("AFRICA"))
   }
 
-  test("array, map and struct columns are served as their string cast, in pages and CSV alike") {
+  test("every column type is served as its string cast, in pages and CSV alike") {
     val dir = Files.createTempDirectory("graft_results_complex").toString
     val mgr = new QueryExecutionManager(spark, dir)
     val id = mgr.submit(
       """SELECT if(id = 0, array(1, 2), NULL) AS a, if(id = 0, map('k', 1), NULL) AS m,
-        |  if(id = 0, named_struct('x', 1), NULL) AS s, id AS b
+        |  if(id = 0, named_struct('x', 1), NULL) AS s, id AS b,
+        |  if(id = 0, TIMESTAMP'2024-01-15 10:30:00.123', NULL) AS ts,
+        |  if(id = 0, DATE'2024-01-15', NULL) AS d, if(id = 0, 1.50BD, NULL) AS dec,
+        |  if(id = 0, 1.0E7D, NULL) AS dbl, if(id = 0, true, NULL) AS bool,
+        |  if(id = 0, X'4142', NULL) AS bin, if(id = 0, 'a,b', '') AS str
         |FROM range(2) ORDER BY id""".stripMargin)
     val st = mgr.await(id)
     assert(st.status == Status.Succeeded, st.reason)
     val Some((header, rows)) = mgr.results(id)
-    assert(header == Seq("a", "m", "s", "b"))
+    assert(header == Seq("a", "m", "s", "b", "ts", "d", "dec", "dbl", "bool", "bin", "str"))
     assert(rows == Seq(
-      Seq(Some("[1, 2]"), Some("{k -> 1}"), Some("{1}"), Some("0")),
-      Seq(None, None, None, Some("1"))))
-    val csv = spark.read.option("header", "true").csv(Paths.get(dir, s"$id.csv").toString)
-    assert(csv.columns.toSeq == header)
-    assert(csv.collect().toSeq.map(_.toSeq.map(Option(_).map(_.toString))) == rows,
-      "each page cell equals its CSV cell")
+      Seq("[1, 2]", "{k -> 1}", "{1}", "0", "2024-01-15 10:30:00.123", "2024-01-15", "1.50",
+        "1.0E7", "true", "AB", "a,b").map(Some(_)),
+      Seq(None, None, None, Some("1"), None, None, None, None, None, None, Some(""))))
+    // each page cell equals its CSV cell: null is empty, "" is quoted
+    val part = Retention.listed(Paths.get(dir, s"$id.csv"))
+      .filter(_.getFileName.toString.startsWith("part-"))
+    assert(Files.readAllLines(part.head).asScala.toSeq == Seq(
+      header.mkString(","),
+      "\"[1, 2]\",{k -> 1},{1},0,2024-01-15 10:30:00.123,2024-01-15,1.50,1.0E7,true,AB,\"a,b\"",
+      ",,,1,,,,,,,\"\""))
   }
 
   test("bad SQL → FAILED with a reason (StateChangeReason shape)") {
@@ -114,9 +123,15 @@ class QueryExecutionManagerSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_results_m").toString
     val mgr = new QueryExecutionManager(spark, dir)
     graft.core.Tables.registerAll(spark, sf)
-    val id = mgr.submit(
-      "SELECT o_orderpriority, count(*) AS n FROM orders GROUP BY o_orderpriority")
+    // the query text round-trips through the sidecar's JSON intact
+    val sql = "SELECT o_orderpriority, count(*) AS n FROM orders\n\t-- \"q\" \\ \u0001\n" +
+      "GROUP BY o_orderpriority"
+    val id = mgr.submit(sql)
     assert(mgr.await(id).status == Status.Succeeded)
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readString(Paths.get(dir, s"$id.csv.metadata")))
+    assert(meta.get("query").asText == sql)
+    assert(meta.get("schema").isObject)
     val Some(st) = mgr.stats(id)
     assert(st.rowCount == 5)
     assert(st.durationMs > 0)
@@ -140,20 +155,22 @@ class QueryExecutionManagerSpec extends SparkSpec {
       s"row-index predicate not pushed\n$plan")
   }
 
-  test("a csv artifact without its metadata sidecar is not served") {
+  test("a page artifact without its metadata sidecar is not served") {
     val dir = Files.createTempDirectory("graft_results_nosidecar").toString
     val mgr = new QueryExecutionManager(spark, dir)
-    // what a RUNNING CSV-only execution (or a cancelled one before its
-    // cleanup) leaves: rows on disk, no sidecar yet
-    val id = "partial-csv"
-    val csv = Paths.get(dir, s"$id.csv")
-    Files.createDirectories(csv)
-    Files.writeString(csv.resolve("part-00000.csv"), "x,y\n1,a\n2,b\n")
+    // what a RUNNING execution (or a cancelled one before its cleanup)
+    // leaves: pages on disk, no sidecar yet
+    val id = "partial-pages"
+    val rows = spark.sql(
+      s"SELECT id AS x, char(97 + id) AS y, id AS ${QueryExecutionManager.RowIdx} FROM range(2)")
+    rows.write.parquet(Paths.get(dir, s"$id${QueryExecutionManager.PagesSuffix}").toString)
     assert(mgr.resultsPage(id).isEmpty, "a result without its sidecar is not finished")
     // the sidecar, written last, is what makes the same rows servable
-    Files.writeString(Paths.get(dir, s"$id.csv.metadata"), "{}")
+    val schema = rows.drop(QueryExecutionManager.RowIdx).schema.json
+    Files.writeString(Paths.get(dir, s"$id.csv.metadata"), s"""{"schema":$schema}""")
     val Some(page) = mgr.resultsPage(id)
-    assert(page.header == Seq("x", "y") && page.rows.size == 2)
+    assert(page.header == Seq("x", "y"))
+    assert(page.rows == Seq(Seq(Some("0"), Some("a")), Seq(Some("1"), Some("b"))))
   }
 
   test("workgroup pools: a saturating workgroup cannot starve another") {

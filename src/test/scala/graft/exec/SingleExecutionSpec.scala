@@ -91,31 +91,28 @@ class SingleExecutionSpec extends SparkSpec {
       assert(!Retention.listed(pages).exists(_.toString.endsWith(".csv")))
       val lines = csvLines(dir, id)
       assert(lines == "v" +: (0 until n).map(_.toString), sql)
-      // the CSV as the pages read back and written through their own job
+      // the CSV as the page path reads the rows back, written through its own job
       val out = Files.createTempDirectory("graft_results_readback").toString
-      mgr.inRowOrder(mgr.readPages(pages.toString, spark.sql(sql).schema))
-        .write.options(QueryExecutionManager.CsvHeader).mode("overwrite").csv(out)
+      mgr.pageFrame(id, 0, n).get.write.option("header", "true").mode("overwrite").csv(out)
       def part(d: java.nio.file.Path) = Files.readAllBytes(
         Retention.listed(d).filter(_.getFileName.toString.startsWith("part-")).head)
       assert(part(Paths.get(dir, s"$id.csv")).sameElements(part(Paths.get(out))), sql)
     }
   }
 
-  test("a query projecting the row-index column is served CSV-only from one execution") {
+  test("a result column with the row-index name fails in any case, before any job") {
     val dir = Files.createTempDirectory("graft_results_collide").toString
     val mgr = new QueryExecutionManager(spark, dir)
-    val calls = countingUdf("graft_collide_f")
-    val id = mgr.submit(
-      s"SELECT id AS ${QueryExecutionManager.RowIdx}, graft_collide_f(id) AS v FROM range(1000)")
-    val st = mgr.await(id)
-    assert(st.status == Status.Succeeded, st.reason)
-    assert(calls.value == 1000L, "the query's plan ran more than once")
-    assert(!Files.exists(Paths.get(dir, s"$id${QueryExecutionManager.PagesSuffix}")))
-    val Some(stats) = mgr.stats(id)
-    val rows = walk(mgr, id, maxRows = 400)
-    assert(stats.rowCount == rows.size.toLong)
-    assert(rows.size == 1000)
-    assert(rows.map(_(1).get.toLong) == (0L until 1000L))
+    for (name <- Seq(QueryExecutionManager.RowIdx, QueryExecutionManager.RowIdx.toUpperCase)) {
+      val id = mgr.submit(s"SELECT id AS $name, id AS v FROM range(3)")
+      val st = mgr.await(id)
+      assert(st.status == Status.Failed, name)
+      assert(st.reason.exists(_.contains(name)), st.reason)
+      settled()
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(id).isEmpty, name)
+      assert(!Retention.listed(Paths.get(dir)).exists(_.getFileName.toString.startsWith(id)))
+      assert(mgr.resultsPage(id).isEmpty)
+    }
   }
 
   test("await wakes when a running execution is cancelled") {
